@@ -28,7 +28,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from coldata_spark.functions import vector as V
-from coldata_spark.operators.similarity import knn_join
+from coldata_spark.operators.similarity import (
+    _estimated_bytes,
+    _knn_scored_arrow,
+    knn_join,
+    rank_top_k,
+)
 
 
 def build_ivf(
@@ -180,6 +185,12 @@ def append_to_index(
     )
 
 
+# Query batches whose optimizer size estimate is at most this many bytes
+# take search_ivf's collect side; larger (or unestimated) batches take the
+# join side.
+COLLECT_PROBE_MAX_BYTES = 1 << 20
+
+
 def search_ivf(
     spark: SparkSession,
     index_path: str,
@@ -188,39 +199,30 @@ def search_ivf(
     k: int = 4,
     nprobe: int = 4,
     metric: str = "COSINE",
-    probe_strategy: str = "auto",
-    score_strategy: str = "auto",
 ) -> DataFrame:
     """ANN top-k: probe the nprobe best cells per query, exact search inside.
 
-    The centroid scoring runs on the tiny centroid table; the resulting
-    cell set prunes index partitions at scan time via one of two paths:
+    The centroid probe (the first knn_join) scores the queries against the
+    tiny centroid table.  The query side's size estimate then picks one of
+    two plans, which return identical rows:
 
-    * ``collect``: materialize the distinct cell ids on the driver and push
-      a static ``centroid_id IN (...)`` filter — fastest for interactive
-      query batches (the list is tiny and the filter prunes at planning).
-    * ``join``: keep the cell set distributed and broadcast-semi-join the
-      index against it; Spark's dynamic partition pruning skips the
-      non-probed partition directories at runtime.  This is the path for
-      large (1e4+) query batches, where collecting probe lists would
-      funnel the batch through the driver.
-    * ``auto``: picks by the optimizer's size estimate of the query side.
+    * collect side (estimate <= ``COLLECT_PROBE_MAX_BYTES``): the probe
+      rows are collected ONCE.  Their distinct cells become a static
+      ``centroid_id IN (...)`` filter, which prunes index partitions at
+      planning; the per-query cell sets feed knn_join's Arrow kernel,
+      which masks each query to its own cells.  The scan never joins or
+      shuffles.
+    * join side (anything larger, or with no estimate — search.search's
+      embedded query frame has none): nothing touches the driver.  The
+      probed cell set is broadcast-semi-joined to the index, and in-cell
+      scores come from Catalyst expressions over a broadcast probe join.
+      Dynamic partition pruning does not fire on this plan, so the scan
+      reads every cell (SCALE.md "IVF probe sides").
 
-    In-cell scoring follows knn_join's two engines: ``'arrow'`` closes the
-    query matrix + per-query probed-cell sets over one mapInArrow pass
-    with a per-batch partial top-k (numpy matmul, no join, scan rows never
-    shuffle); ``'expr'`` scores via Catalyst higher-order functions over a
-    broadcast probe join.  ``'auto'`` pairs with the probe resolution:
-    a driver-boundable query batch (collect probe) takes the arrow engine;
-    the join probe path — whose contract is that NOTHING touches the
-    driver, however large the batch — keeps the collect-free expr engine.
+    Measured (SCALE.md "IVF probe sides"): the join side is faster at
+    sf0.1, the collect side from the 64x embeddings tier up.
     """
-    if probe_strategy == "auto":
-        from coldata_spark.operators.similarity import _estimated_bytes
-
-        probe_strategy = (
-            "collect" if _estimated_bytes(queries) <= 1 * 1024 * 1024 else "join"
-        )
+    collect = _estimated_bytes(queries) <= COLLECT_PROBE_MAX_BYTES
     probe = knn_join(
         queries,
         centroids.select(
@@ -229,42 +231,35 @@ def search_ivf(
         k=nprobe,
         metric=metric,
         score_decimals=None,
-        # the join-probe contract is that NOTHING touches the driver and no
-        # size gate applies, however large the query batch — so the probe
-        # scoring itself must take the collect-free expr engine (the arrow
-        # engine collects the query side and enforces the 64 MB gate)
-        strategy="expr" if probe_strategy == "join" else "auto",
-        force=probe_strategy == "join",
+        # the join side's contract is that NOTHING touches the driver and no
+        # size gate applies, however large the query batch — so its probe
+        # must take the collect-free expr engine (the arrow engine collects
+        # the query side and enforces the 64 MB gate)
+        strategy="auto" if collect else "expr",
+        force=not collect,
     ).select(F.col("q_id"), F.col("vec_id").alias("centroid_id"))
-    if probe_strategy == "collect":
-        cells = [
-            r.centroid_id for r in probe.select("centroid_id").distinct().collect()
-        ]
-        index = spark.read.parquet(index_path).filter(
-            F.col("centroid_id").isin(cells)
+    index = spark.read.parquet(index_path)
+    if collect:
+        cells: dict = {}
+        for r in probe.collect():
+            cells.setdefault(r.q_id, set()).add(r.centroid_id)
+        probed = sorted(set().union(*cells.values()))
+        scored, _ = _knn_scored_arrow(
+            queries,
+            index.filter(F.col("centroid_id").isin(probed)),
+            k, metric, "q_id", "q_vec", "vec_id", "embedding",
+            score_decimals=6, exclude_self=False, cells=cells,
         )
-    elif probe_strategy == "join":
-        cell_set = probe.select("centroid_id").distinct()
-        index = spark.read.parquet(index_path).join(
-            F.broadcast(cell_set), "centroid_id", "left_semi"
-        )
-    else:
-        raise ValueError(f"unknown probe_strategy {probe_strategy!r}")
-
-    from pyspark.sql import Window as W
-
-    desc = V.METRIC_DESCENDING[metric.upper()]
-    if score_strategy == "auto":
-        score_strategy = "arrow" if probe_strategy == "collect" else "expr"
-    if score_strategy == "arrow":
-        scored = _ivf_scored_arrow(index, probe, queries, k, metric)
         scored = scored.withColumn("score", F.round(F.col("score"), 6))
-    elif score_strategy == "expr":
+    else:
         # exact distance within each query's own probed cells only: the
         # (q_id, centroid_id) probe table is tiny -> broadcast equi-join
         # keys the scan rows to exactly the queries probing that cell.
-        pairs = index.join(F.broadcast(probe), "centroid_id").join(
-            F.broadcast(queries), "q_id"
+        cell_set = probe.select("centroid_id").distinct()
+        pairs = (
+            index.join(F.broadcast(cell_set), "centroid_id", "left_semi")
+            .join(F.broadcast(probe), "centroid_id")
+            .join(F.broadcast(queries), "q_id")
         )
         score = F.round(
             V.score_expr(
@@ -273,128 +268,7 @@ def search_ivf(
             6,
         )
         scored = pairs.select("q_id", "vec_id", score.alias("score"))
-    else:
-        raise ValueError(f"unknown score_strategy {score_strategy!r}")
-    order = [
-        F.col("score").desc() if desc else F.col("score").asc(),
-        F.col("vec_id").asc(),
-    ]
-    w = W.partitionBy("q_id").orderBy(*order)
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
-
-
-def _ivf_scored_arrow(
-    index: DataFrame,
-    probe: DataFrame,
-    queries: DataFrame,
-    k: int,
-    metric: str,
-    vec_id: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Arrow-matmul in-cell scoring: each scan batch is scored against the
-    (collected, gate-bounded) query matrix, each query restricted to its
-    own probed cells, with an exact-under-rounding partial top-k per batch
-    (the slack-band argument in similarity._knn_scored_arrow).  The scan
-    side never joins or shuffles; output is ~tasks x queries x k rows."""
-    import numpy as np
-    import pyarrow as pa
-    from pyspark.sql import types as T
-    from pyspark.sql.pandas.types import to_arrow_type
-
-    from coldata_spark.operators.similarity import _sized_for_arrow_stage
-
-    m = metric.upper()
-    desc = V.METRIC_DESCENDING[m]
-    slack = 1e-6 + 1e-9  # scores are rounded to 6 dp by the caller
-
-    q_rows = queries.select("q_id", "q_vec").collect()
-    q_ids = [r[0] for r in q_rows]
-    nq = len(q_ids)
-    Q = (
-        np.asarray([list(r[1]) for r in q_rows], dtype=np.float64)
-        if q_rows
-        else np.zeros((0, 1))
-    )
-    q_norm = np.linalg.norm(Q, axis=1) if nq else np.zeros(0)
-    q_id_arr = np.asarray(q_ids)
-    pos = {qid: j for j, qid in enumerate(q_ids)}
-    cells_by_q: list[set] = [set() for _ in range(nq)]
-    for r in probe.collect():
-        cells_by_q[pos[r.q_id]].add(r.centroid_id)
-
-    out_schema = T.StructType(
-        [
-            T.StructField("q_id", queries.schema["q_id"].dataType),
-            T.StructField(vec_id, index.schema[vec_id].dataType),
-            T.StructField("score", T.DoubleType()),
-        ]
-    )
-    pa_types = [to_arrow_type(f.dataType) for f in out_schema.fields]
-
-    def score_batches(batches):
-        for batch in batches:
-            n = batch.num_rows
-            if n == 0 or nq == 0:
-                continue
-            cols = {name: i for i, name in enumerate(batch.schema.names)}
-            emb = batch.column(cols[vec_col])
-            X = (
-                emb.flatten()
-                .to_numpy(zero_copy_only=False)
-                .reshape(n, -1)
-                .astype(np.float64, copy=False)
-            )
-            vids = batch.column(cols[vec_id]).to_numpy(zero_copy_only=False)
-            cents = batch.column(cols["centroid_id"]).to_numpy(
-                zero_copy_only=False
-            )
-            if m == "COSINE":
-                S = X @ Q.T
-                S /= np.linalg.norm(X, axis=1, keepdims=True)
-                S /= q_norm[None, :]
-            elif m == "IP":
-                S = X @ Q.T
-            else:  # L2
-                S = np.empty((n, nq))
-                for j in range(nq):
-                    d = X - Q[j]
-                    S[:, j] = np.sqrt(np.einsum("ij,ij->i", d, d))
-            sel_q, sel_v, sel_s = [], [], []
-            for j in range(nq):
-                idx = np.nonzero(np.isin(cents, list(cells_by_q[j])))[0]
-                if not len(idx):
-                    continue
-                s = S[:, j]
-                sv = s[idx]
-                if len(sv) > k:
-                    if desc:
-                        kth = np.partition(sv, len(sv) - k)[len(sv) - k]
-                        idx = idx[sv >= kth - slack]
-                    else:
-                        kth = np.partition(sv, k - 1)[k - 1]
-                        idx = idx[sv <= kth + slack]
-                sel_q.append(np.full(len(idx), j, dtype=np.int64))
-                sel_v.append(idx)
-                sel_s.append(s[idx])
-            if not sel_q:
-                continue
-            qi = np.concatenate(sel_q)
-            vi = np.concatenate(sel_v)
-            yield pa.record_batch(
-                [
-                    pa.array(q_id_arr[qi]).cast(pa_types[0]),
-                    pa.array(vids[vi]).cast(pa_types[1]),
-                    pa.array(np.concatenate(sel_s), type=pa_types[2]),
-                ],
-                names=["q_id", vec_id, "score"],
-            )
-
-    src = _sized_for_arrow_stage(index.select(vec_id, vec_col, "centroid_id"))
-    return src.mapInArrow(score_batches, schema=out_schema)
+    return rank_top_k(scored, k, metric)
 
 
 def search_exact(
@@ -597,10 +471,7 @@ def search_ivf_pq(
     import numpy as np
     import pandas as pd
 
-    from pyspark.sql import Window as W
-
     m, kc, sub = codebook.shape
-    desc = V.METRIC_DESCENDING[metric.upper()]
 
     probe = knn_join(
         queries,
@@ -679,16 +550,9 @@ def search_ivf_pq(
     scored = with_vec.select("q_id", "vec_id", "pq_codes", "q_vec").mapInPandas(
         adc, schema=f"q_id {q_id_t}, vec_id {vec_id_t}, approx double"
     )
-    order_a = [
-        F.col("approx").desc() if desc else F.col("approx").asc(),
-        F.col("vec_id").asc(),
-    ]
-    wa = W.partitionBy("q_id").orderBy(*order_a)
-    cands = (
-        scored.withColumn("_r", F.row_number().over(wa))
-        .filter(F.col("_r") <= k * overfetch)
-        .select("q_id", "vec_id")
-    )
+    cands = rank_top_k(
+        scored, k * overfetch, metric, score="approx", rank="_r"
+    ).select("q_id", "vec_id")
 
     rerank = (
         cands.join(index.select("vec_id", "embedding"), "vec_id")
@@ -700,15 +564,8 @@ def search_ivf_pq(
         ),
         6,
     )
-    order_e = [
-        F.col("score").desc() if desc else F.col("score").asc(),
-        F.col("vec_id").asc(),
-    ]
-    we = W.partitionBy("q_id").orderBy(*order_e)
-    return (
-        rerank.select("q_id", "vec_id", exact.alias("score"))
-        .withColumn("rank", F.row_number().over(we))
-        .filter(F.col("rank") <= k)
+    return rank_top_k(
+        rerank.select("q_id", "vec_id", exact.alias("score")), k, metric
     )
 
 

@@ -114,7 +114,6 @@ def knn_join(
         gate_bytes,
     )
 
-    desc = V.METRIC_DESCENDING[metric.upper()]
     if strategy not in ("auto", "arrow", "expr"):
         raise ValueError(f"unknown knn_join strategy {strategy!r}")
     if strategy in ("auto", "arrow"):
@@ -153,15 +152,7 @@ def knn_join(
         par = queries.sparkSession.sparkContext.defaultParallelism
         n_merge = max(1, min(nq, par))
         scored = scored.repartition(n_merge, F.col(query_id))
-        order = [
-            F.col("score").desc() if desc else F.col("score").asc(),
-            F.col(vec_id).asc(),
-        ]
-        w = W.partitionBy(query_id).orderBy(*order)
-        return (
-            scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-        )
+        return rank_top_k(scored, k, metric, by=query_id, tie=vec_id)
 
     from coldata_spark.tables import fan_out
 
@@ -180,10 +171,6 @@ def knn_join(
         pairs.select(query_id, vec_id, score.alias("score")), score_range
     )
 
-    order = [
-        F.col("score").desc() if desc else F.col("score").asc(),
-        F.col(vec_id).asc(),
-    ]
     # Two-stage top-k for LARGE vector tables.  A single window on q_id
     # funnels every scored pair into #queries reducers — with few queries
     # that is catastrophic skew (a handful of reducers sort the whole
@@ -195,18 +182,30 @@ def knn_join(
     if _estimated_bytes(vectors) > 256 * 1024 * 1024:
         n_salts = 64
         salt = F.pmod(F.hash(F.col(vec_id)), F.lit(n_salts))
-        w_local = W.partitionBy(query_id, "_salt").orderBy(*order)
-        scored = (
-            scored.withColumn("_salt", salt)
-            .withColumn("_lr", F.row_number().over(w_local))
-            .filter(F.col("_lr") <= k)
-            .drop("_lr", "_salt")
-        )
-    w = W.partitionBy(query_id).orderBy(*order)
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+        scored = rank_top_k(
+            scored.withColumn("_salt", salt), k, metric,
+            by=(query_id, "_salt"), tie=vec_id, rank="_lr",
+        ).drop("_lr", "_salt")
+    return rank_top_k(scored, k, metric, by=query_id, tie=vec_id)
+
+
+def rank_top_k(
+    df: DataFrame,
+    k: int,
+    metric: str = "COSINE",
+    by: str | tuple[str, ...] = "q_id",
+    score: str = "score",
+    tie: str = "vec_id",
+    rank: str = "rank",
+) -> DataFrame:
+    """Per-``by`` top-k: ``rank`` = row_number over ``score`` in the
+    metric's direction (V.METRIC_DESCENDING), ``tie`` ascending breaking
+    ties so the ranking is deterministic; keeps rank <= k."""
+    s = F.col(score)
+    order = s.desc() if V.METRIC_DESCENDING[metric.upper()] else s.asc()
+    by = (by,) if isinstance(by, str) else by
+    w = W.partitionBy(*by).orderBy(order, F.col(tie).asc())
+    return df.withColumn(rank, F.row_number().over(w)).filter(F.col(rank) <= k)
 
 
 def _apply_score_range(scored: DataFrame, score_range) -> DataFrame:
@@ -233,14 +232,19 @@ def _knn_scored_arrow(
     score_decimals: int | None,
     exclude_self: bool,
     score_range=None,
+    cells: dict | None = None,
 ) -> tuple[DataFrame, int]:
-    """Score (query x vector) pairs with numpy inside mapInPandas, keeping a
+    """Score (query x vector) pairs with numpy inside mapInArrow, keeping a
     per-batch partial top-k per query.  Returns (scored, #queries) — the
     caller sizes the merge exchange from the exact query count.
 
     The query side is collected to the driver — bounded by the same gate
     that makes the expression path's broadcast legal — and closed over by
     the UDF (Spark ships the closure once per task, like a broadcast var).
+
+    ``cells`` ({query id: probed centroid ids}) is the IVF form: the
+    vectors then carry ``centroid_id`` and each query's candidates are
+    masked to its own probed cells before the partial top-k.
 
     Correctness of the partial top-k under post-hoc rounding: F.round moves
     a score by at most ``0.5 * 10^-d``, so two rows can swap order after
@@ -276,6 +280,11 @@ def _knn_scored_arrow(
         np.maximum(np.linalg.norm(Q, axis=1), 1e-12) if nq else np.zeros(0)
     )
     q_id_arr = np.asarray(q_ids)
+    q_cells = (
+        None
+        if cells is None
+        else [np.asarray(sorted(cells.get(q, ()))) for q in q_ids]
+    )
     # the exact band filter runs Spark-side on the rounded score; here the
     # slack-widened raw band only guards the partial top-k from cutting
     # boundary rows the exact filter would keep
@@ -309,6 +318,8 @@ def _knn_scored_arrow(
             flat = emb.flatten().to_numpy(zero_copy_only=False)
             X = flat.reshape(n, -1).astype(np.float64, copy=False)
             vids = batch.column(0).to_numpy(zero_copy_only=False)
+            if q_cells is not None:
+                cents = batch.column(2).to_numpy(zero_copy_only=False)
             if m == "COSINE":
                 S = X @ Q.T
                 S /= np.maximum(
@@ -325,7 +336,10 @@ def _knn_scored_arrow(
             sel_q, sel_v, sel_s = [], [], []
             for j in range(nq):
                 s = S[:, j]
-                idx = np.arange(n)
+                if q_cells is None:
+                    idx = np.arange(n)
+                else:
+                    idx = np.flatnonzero(np.isin(cents, q_cells[j]))
                 if exclude_self:
                     idx = idx[vids != q_ids[j]]
                 if band_lo is not None:
@@ -354,7 +368,8 @@ def _knn_scored_arrow(
                 names=[query_id, vec_id, "score"],
             )
 
-    scored = _sized_for_arrow_stage(vectors.select(vec_id, vec_col)).mapInArrow(
+    cols = [vec_id, vec_col] + ([] if cells is None else ["centroid_id"])
+    scored = _sized_for_arrow_stage(vectors.select(*cols)).mapInArrow(
         score_batches, schema=out_schema
     )
     return scored, nq

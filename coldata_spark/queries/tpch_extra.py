@@ -252,15 +252,9 @@ def q68_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the per-partition build fits, sort-merge beyond.  Measured at 64x
     # (tools/probe_flat_shj_r15.py, value-gated): SMJ 3.96 s,
     # shuffle_hash 2.89 s.
-    from coldata_spark.operators.similarity import _estimated_bytes
+    from coldata_spark.operators.joins import choose_build
 
-    est = _estimated_bytes(load(spark, sf_dir, "orders"))
-    if 0 < est <= (256 << 20):
-        orders = F.broadcast(orders)
-    else:
-        parts = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-        if 0 < est // max(parts, 1) <= (64 << 20):
-            orders = orders.hint("shuffle_hash")
+    orders = choose_build(spark, load(spark, sf_dir, "orders"), orders)
     vol = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     return (
         li.join(F.broadcast(supp), F.col("l_suppkey") == F.col("s_suppkey"))
@@ -724,15 +718,9 @@ def q77_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     # does the spill-safe sort-merge return.  Measured at 64x
     # (tools/probe_flat_shj_r15.py, value-gated): SMJ 4.36 s,
     # shuffle_hash 2.58 s, explicit broadcast 2.35 s.
-    from coldata_spark.operators.similarity import _estimated_bytes
+    from coldata_spark.operators.joins import choose_build
 
-    est = _estimated_bytes(load(spark, sf_dir, "orders"))
-    if 0 < est <= (256 << 20):
-        ord_eu = F.broadcast(ord_eu)
-    else:
-        parts = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-        if 0 < est // max(parts, 1) <= (64 << 20):
-            ord_eu = ord_eu.hint("shuffle_hash")
+    ord_eu = choose_build(spark, load(spark, sf_dir, "orders"), ord_eu)
     return (
         li.select("l_orderkey", "l_suppkey", "l_extendedprice", "l_discount")
         .join(ord_eu, F.col("l_orderkey") == F.col("o_orderkey"))

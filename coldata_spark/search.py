@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 from coldata_spark import embed as E
 from coldata_spark.functions import text as TX
 from coldata_spark.operators import ivf
-from coldata_spark.operators.similarity import group_best
+from coldata_spark.operators.similarity import group_best, rank_top_k
 
 
 @dataclass
@@ -89,8 +89,6 @@ def search(
     the parent document's fields, best chunk score, and a text preview —
     the reference's OrderedDict-of-records result (vdb.py:101-122,
     main.py:48-58) as a DataFrame."""
-    from coldata_spark.functions import vector as V
-
     # `is None`, not truthiness: an explicit nprobe=0 must not silently
     # become probe-all
     nprobe = index.nlist if nprobe is None else nprobe
@@ -124,19 +122,7 @@ def search(
         "parent_id", F.regexp_replace("vec_id", "_[0-9]+$", "")
     )
     best = group_best(parents, "parent_id", metric=metric)
-    from pyspark.sql import Window as W
-
-    # one source of truth for sort direction (group_best uses the same map)
-    desc = (
-        F.col("best_score").desc()
-        if V.METRIC_DESCENDING[metric.upper()]
-        else F.col("best_score").asc()
-    )
-    w = W.partitionBy("q_id").orderBy(desc, F.col("parent_id"))
-    ranked = (
-        best.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    ranked = rank_top_k(best, k, metric, score="best_score", tie="parent_id")
     return (
         ranked.join(qdf.select("q_id", "q_text"), "q_id")
         .join(documents, ranked.parent_id == documents[id_col])

@@ -126,18 +126,46 @@ def test_topk_is_take_ordered(spark, sf_dir):
     assert "TakeOrderedAndProject" in plan
 
 
-def test_partition_pruning_on_ivf_index(spark, sf_dir, tmp_path):
-    """Scanning 2 of 8 IVF cells must prune partitions at the source."""
+def _file_scans(node):
+    """FileSourceScanExec nodes of an executed physical plan, descending
+    through AQE wrappers and query stages."""
+    name = node.getClass().getSimpleName()
+    if name == "FileSourceScanExec":
+        return [node]
+    if name == "AdaptiveSparkPlanExec":
+        return _file_scans(node.executedPlan())
+    if name.endswith("QueryStageExec"):
+        return _file_scans(node.plan())
+    kids = node.children()
+    return [s for i in range(kids.size()) for s in _file_scans(kids.apply(i))]
+
+
+def test_partition_pruning_on_ivf_index(spark, sf_dir, tmp_path, monkeypatch):
+    """search_ivf's collect side must prune the index scan to the probed
+    cells: a static centroid_id IN (...) partition filter, and fewer
+    partitions read than the index has cells."""
     from coldata_spark.operators import ivf
 
+    nlist = 8
     emb = load(spark, sf_dir, "embeddings")
-    assigned, _ = ivf.build_ivf(emb, nlist=8)
+    assigned, centroids = ivf.build_ivf(emb, nlist=nlist)
     path = str(tmp_path / "prune_index")
     ivf.write_ivf(assigned, path)
-    pruned = spark.read.parquet(path).filter(F.col("centroid_id").isin([0, 1]))
-    plan = plan_of(pruned)
-    assert "PartitionFilters" in plan
-    assert "centroid_id" in plan.split("PartitionFilters")[1].splitlines()[0]
+    qs = emb.filter(F.col("vec_id") < 2).select(
+        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
+    )
+    monkeypatch.setattr(ivf, "COLLECT_PROBE_MAX_BYTES", float("inf"))
+    out = ivf.search_ivf(spark, path, qs, centroids, k=4, nprobe=2)
+    assert out.collect()  # the metrics below are this execution's
+    (scan,) = [
+        s
+        for s in _file_scans(out._jdf.queryExecution().executedPlan())
+        if "centroid_id" in s.toString()
+    ]
+    filters = scan.toString().split("PartitionFilters: [")[1].split("]")[0]
+    assert "centroid_id" in filters and " IN (" in filters, filters
+    read = scan.metrics().apply("numPartitions").value()
+    assert 0 < read < nlist, f"read {read} of {nlist} cells"
 
 
 def test_no_cartesian_in_oracle_queries(spark, sf_dir):

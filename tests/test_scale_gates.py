@@ -31,26 +31,30 @@ def _queries(spark, sf_dir, n):
     )
 
 
-def test_join_probe_matches_collect_probe(spark, sf_dir, ivf_index):
+def _force_side(monkeypatch, side):
+    """Pin search_ivf's side: collect for any query batch, or join."""
+    limit = float("inf") if side == "collect" else -1
+    monkeypatch.setattr(ivf, "COLLECT_PROBE_MAX_BYTES", limit)
+
+
+def test_join_probe_matches_collect_probe(spark, sf_dir, ivf_index, monkeypatch):
     path, centroids = ivf_index
     qdf = _queries(spark, sf_dir, 20).cache()
     try:
-        a = ivf.search_ivf(
-            spark, path, qdf, centroids, k=3, nprobe=2, probe_strategy="collect"
-        )
-        b = ivf.search_ivf(
-            spark, path, qdf, centroids, k=3, nprobe=2, probe_strategy="join"
-        )
-        ra = sorted(map(tuple, a.collect()))
-        rb = sorted(map(tuple, b.collect()))
-        assert ra == rb
-        assert 20 <= len(ra) <= 60  # k=3 x 20 queries, sparse cells may under-fill
+        rows = {}
+        for side in ("collect", "join"):
+            _force_side(monkeypatch, side)
+            out = ivf.search_ivf(spark, path, qdf, centroids, k=3, nprobe=2)
+            rows[side] = sorted(map(tuple, out.collect()))
+        assert rows["collect"] == rows["join"]
+        # k=3 x 20 queries, sparse cells may under-fill
+        assert 20 <= len(rows["collect"]) <= 60
     finally:
         qdf.unpersist()
 
 
 def test_join_probe_never_materializes_on_driver(spark, sf_dir, ivf_index, monkeypatch):
-    """Building the join-strategy plan must not collect() anything: a 1e6-row
+    """Building the join-side plan must not collect() anything: a 1e6-row
     query batch should plan exactly like a 10-row one."""
     from pyspark.sql import DataFrame
 
@@ -60,11 +64,10 @@ def test_join_probe_never_materializes_on_driver(spark, sf_dir, ivf_index, monke
     def _banned(self, *a, **kw):
         raise AssertionError("driver-side collect during join-probe planning")
 
+    _force_side(monkeypatch, "join")
     monkeypatch.setattr(DataFrame, "collect", _banned)
     monkeypatch.setattr(DataFrame, "toPandas", _banned)
-    out = ivf.search_ivf(
-        spark, path, qdf, centroids, k=3, nprobe=2, probe_strategy="join"
-    )
+    out = ivf.search_ivf(spark, path, qdf, centroids, k=3, nprobe=2)
     monkeypatch.undo()
     assert out.count() > 0
 
@@ -119,20 +122,6 @@ def test_neardup_pairs_gate(spark, sf_dir, monkeypatch):
     with pytest.raises(ValueError, match="embedding_neardup_lsh"):
         DD.embedding_neardup_pairs(emb)
     assert DD.embedding_neardup_pairs(emb.limit(20), force=True).count() >= 0
-
-
-def test_ivf_arrow_scoring_matches_expr(spark, sf_dir, ivf_index):
-    """Both in-cell scoring engines must return identical rows+scores."""
-    path, centroids = ivf_index
-    qdf = _queries(spark, sf_dir, 12).cache()
-    try:
-        a = ivf.search_ivf(spark, path, qdf, centroids, k=3, nprobe=3,
-                           score_strategy="arrow")
-        e = ivf.search_ivf(spark, path, qdf, centroids, k=3, nprobe=3,
-                           score_strategy="expr")
-        assert sorted(map(tuple, a.collect())) == sorted(map(tuple, e.collect()))
-    finally:
-        qdf.unpersist()
 
 
 def test_scan_shaped_rejects_limit_plans(spark, sf_dir):
