@@ -10,6 +10,15 @@ plan runs; rows are produced and discarded like a real writer, and no
 measurement-only global-count exchange is appended — count() added one extra
 stage per query, ~25% of total at sf0.1).  A warmup pass on the smallest SF
 absorbs JVM/codegen startup so numbers reflect steady-state throughput.
+
+The sf0.1 headline seconds are bound by Spark's scheduling latency (the
+per-stage and per-job floor), not by per-row work: they track the
+driver's round-over-round per-query comparison, but evidence about how a
+plan SCALES comes from the replicated-tier seconds (SECTIONS below),
+where per-row work dominates.
+
+After the headline, main runs SECTIONS, one ordered table of (detail
+key, section function), and writes BENCH_DETAIL.json after each section.
 """
 
 from __future__ import annotations
@@ -121,155 +130,132 @@ def main() -> None:
     # each query's own oracle SQL on the SAME files.  The sf0.1 fixtures are
     # ~15 MB — Spark's fixed per-stage latency dominates there; as the
     # replication factor grows the per-row work dominates and the ratio
-    # converges to actual plan efficiency.  The 64x tier re-measures the
-    # queries that were ratio-weak at 16x so the amortization is a measured
-    # curve, not an assertion.
-    # Each tier gets a FRESH SparkSession: a JVM that has already run a few
-    # hundred jobs carries heap pressure, shuffle files and broadcast refs
-    # that inflate later tiers' timings by 2-3x (measured: q01 at 64x was
-    # 1.91 s late in a shared session vs 0.67 s in a clean one) — the
-    # contamination is harness state, not plan cost, so it must not be
-    # attributed to the queries.  Fixtures are materialized up front with
-    # the headline session; the marker file makes that a no-op on re-runs.
-    tiers = [
-        (16, REPL_QUERIES, "replicated_16x", "SPARK_GRAFT_BENCH_16X"),
-        (64, REPL_64X_QUERIES, "replicated_64x", "SPARK_GRAFT_BENCH_64X"),
-        (256, REPL_256X_QUERIES, "replicated_256x", "SPARK_GRAFT_BENCH_256X"),
-    ]
-    wanted = [t for t in tiers if os.environ.get(t[3], "1") != "0"]
-    clustered_on = os.environ.get("SPARK_GRAFT_BENCH_256C", "1") != "0"
+    # converges to actual plan efficiency.  Fixtures are materialized up
+    # front with the headline session; the marker file makes that a no-op
+    # on re-runs.
+    from tools.clustered import build_clustered_fixture
     from tools.replicate import replicate_fixture
 
-    for times, _, _, _ in wanted:
+    for times in (16, 64, 256):
         replicate_fixture(spark, sf_dir, _tier_dir(sf_dir, times), times=times)
-    if clustered_on:
-        # the co-clustered layout rewrites the 256x flat tier once
-        from tools.clustered import build_clustered_fixture
-
-        tier256 = _tier_dir(sf_dir, 256)
-        replicate_fixture(spark, sf_dir, tier256, times=256)
-        build_clustered_fixture(spark, tier256, tier256 + "_clustered")
+    # the co-clustered layout rewrites the 256x flat tier once
+    tier256 = _tier_dir(sf_dir, 256)
+    build_clustered_fixture(spark, tier256, tier256 + "_clustered")
     _write_detail(result)  # progressive: a killed run still leaves a record
-    for times, queries, key, _ in wanted:
-        spark.stop()
-        spark = get_spark(app_name=f"coldata_spark_bench_{times}x")
-        result[key] = bench_replicated(
-            spark, sf_dir, specs, times=times, queries=queries
-        )
-        if times > 16:
-            # the deeper tiers deliberately re-measure ONLY the queries that
-            # were ratio-weak at 16x (the amortization curve), so their
-            # aggregate ratio is a worst-case subset, not the engine ratio
-            result[key]["note"] = (
-                "weak-at-16x subset only — aggregate ratio is worst-case; "
-                "see SCALE.md for the per-query amortization curve"
-            )
-        _write_detail(result)
-    if clustered_on:
-        spark.stop()
-        spark = get_spark(app_name="coldata_spark_bench_256c")
-        result["replicated_256x_clustered"] = bench_clustered(
-            spark, sf_dir, specs
-        )
-        _write_detail(result)
-        # round-14 additive block (r13 verdict asks #3/#5): the
-        # worsening-at-64x join family (q56/q68/q77 + q148) measured on the
-        # SAME clustered fixture, where their fact-fact orderkey join runs
-        # exchange-free — kept separate so replicated_256x_clustered stays
-        # composition-comparable across rounds
-        result["clustered_joins_256x"] = bench_clustered_joins(
-            spark, sf_dir, specs
-        )
-        _write_detail(result)
-    if os.environ.get("SPARK_GRAFT_BENCH_1024E", "1") != "0":
-        spark.stop()
-        spark = get_spark(app_name="coldata_spark_bench_1024e")
-        # build-before-measure: a fresh build hands back a clean session
-        # (the function inside then cache-hits) — see _ensure_deep_tier
-        spark = _ensure_deep_tier(spark, sf_dir, "events", 1024)
-        result["q83_amortization_1024x"] = bench_q83_events_tier(
-            spark, sf_dir, specs, times=1024
-        )
-        _write_detail(result)
-    if os.environ.get("SPARK_GRAFT_BENCH_4096E", "1") != "0":
-        spark.stop()
-        spark = get_spark(app_name="coldata_spark_bench_4096e")
-        spark = _ensure_deep_tier(spark, sf_dir, "events", 4096)
-        result["q83_amortization_4096x"] = bench_q83_events_tier(
-            spark, sf_dir, specs, times=4096
-        )
-        _write_detail(result)
-    if os.environ.get("SPARK_GRAFT_BENCH_Q30S", "1") != "0" and _tier_ok(
-        _tier_dir(sf_dir, 256)
-    ):
-        # q30 under the serving entry: the per-round self-maintaining
-        # record of "the 256x straddle is the plan-construction floor,
-        # removed by registry.serve" (round-9; creates its own fresh
-        # session; skipped when the 256x tier was env-disabled and absent)
-        spark.stop()
-        from tools.probe_q30_serve import measure_serve
-
-        result["q30_256x_serve"] = measure_serve(
-            "256x",
-            repeats=5,
-            # the SAME env-overridable path the gate above checked — gate
-            # and measurement must not disagree
-            tier_dir=_tier_dir(sf_dir, 256),
-            # honest context: spark.stop() does not kill the py4j JVM
-            session_note="bench-process JVM after tier sections "
-            "(fresh SparkSession)",
-        )
-        # no resume session here: measure_serve stops its own, and every
-        # later section begins with an (idempotent) spark.stop() before
-        # creating the session it needs
-        _write_detail(result)
-    if os.environ.get("SPARK_GRAFT_BENCH_Q44S", "1") != "0":
-        # third serve shape (round-10 verdict ask #5): q44 (sub-second
-        # as-of window family, at the HEADLINE sf dir where it is
-        # sub-second — at 256x its 3M-row client materialization would
-        # swamp the floor being measured) pins the serving floor's
-        # query-independence: q30 is the floor-bound query serve rescues,
-        # q02 the execution-bound control, q44 the window shape
-        spark.stop()
-        from tools.probe_q30_serve import measure_serve
-
-        result["q44_headline_serve"] = measure_serve(
-            "headline",
-            repeats=5,
-            name="q44_asof_last_click_before_purchase",
-            tier_dir=sf_dir,
-            session_note="bench-process JVM after tier sections "
-            "(fresh SparkSession)",
-        )
-        _write_detail(result)
-    if os.environ.get("SPARK_GRAFT_BENCH_1024V", "1") != "0":
-        spark.stop()
-        spark = get_spark(app_name="coldata_spark_bench_1024v")
-        spark = _ensure_deep_tier(spark, sf_dir, "emb", 1024)
-        result["q30_amortization_1024x"] = bench_q30_embeddings_tier(
-            spark, sf_dir, specs
-        )
-        _write_detail(result)
-    spark.stop()
-    spark = get_spark(
-        app_name="coldata_spark_bench_concurrent",
-        extra_conf={"spark.scheduler.mode": "FAIR"},
-    )
-    tune_for_input(spark, dir_bytes(sf_dir))
-
-    # Batch-throughput operating point: wall-clock to complete ALL headline
-    # queries with concurrent submission, each engine at its best client
-    # concurrency (Spark local overlaps stage-scheduling gaps across jobs;
-    # DuckDB already saturates cores per query, so its optimum is lower).
-    # This is the "N concurrent users" number a serving deployment quotes —
-    # the sequential per-query timings above remain the primary metric.
-    result["concurrent_batch"] = bench_concurrent(spark, sf_dir, specs)
+    spark = run_sections(spark, sf_dir, specs, result)
 
     # stop the JVM BEFORE printing the driver line: the JVM writes GC/alloc
     # warnings straight to fd 1, and one landing after (or inside) the JSON
     # line would corrupt the driver's stdout-tail parse
     spark.stop()
     emit(result)
+
+
+def run_sections(spark, sf_dir: str, specs, result: dict):
+    """Run every SECTIONS entry in order, writing the detail file after
+    each so a killed run still leaves the sections it finished.  Returns
+    the session the last section left running."""
+    for key, section in SECTIONS:
+        result[key], spark = section(spark, sf_dir, specs)
+        _write_detail(result)
+    return spark
+
+
+# Each section gets a FRESH SparkSession (except where noted): a JVM that
+# has already run a few hundred jobs carries heap pressure, shuffle files
+# and broadcast refs that inflate later sections' timings by 2-3x
+# (measured: q01 at 64x was 1.91 s late in a shared session vs 0.67 s in a
+# clean one) — the contamination is harness state, not plan cost.  A
+# section takes (spark, sf_dir, specs) and returns (record, session).
+def _restart(spark, app_name: str, **kwargs):
+    spark.stop()
+    return get_spark(app_name=app_name, **kwargs)
+
+
+def _tier_section(times: int, queries: list[str]):
+    def section(spark, sf_dir, specs):
+        spark = _restart(spark, f"coldata_spark_bench_{times}x")
+        rec = bench_replicated(spark, sf_dir, specs, times=times, queries=queries)
+        if times > 16:
+            # the deeper tiers deliberately re-measure ONLY the queries that
+            # were ratio-weak at 16x (the amortization curve), so their
+            # aggregate ratio is a worst-case subset, not the engine ratio
+            rec["note"] = (
+                "weak-at-16x subset only — aggregate ratio is worst-case; "
+                "see SCALE.md for the per-query amortization curve"
+            )
+        return rec, spark
+
+    return section
+
+
+def _clustered_section(spark, sf_dir, specs):
+    spark = _restart(spark, "coldata_spark_bench_256c")
+    return bench_clustered(spark, sf_dir, specs), spark
+
+
+def _clustered_joins_section(spark, sf_dir, specs):
+    # the worsening-at-64x join family (q56/q68/q77 + q148) on the SAME
+    # clustered fixture and session, where their fact-fact orderkey join
+    # runs exchange-free — kept separate so replicated_256x_clustered
+    # stays composition-comparable across rounds
+    return bench_clustered_joins(spark, sf_dir, specs), spark
+
+
+def _q83_section(times: int):
+    def section(spark, sf_dir, specs):
+        spark = _restart(spark, f"coldata_spark_bench_{times}e")
+        # build-before-measure: a fresh build hands back a clean session
+        # (the function inside then cache-hits) — see _ensure_deep_tier
+        spark = _ensure_deep_tier(spark, sf_dir, "events", times)
+        return bench_q83_events_tier(spark, sf_dir, specs, times=times), spark
+
+    return section
+
+
+def _serve_section(tier: str, name: str):
+    """A query under the serving entry (tools/serve.py).  measure_serve
+    creates and stops its own session; the next section's _restart stop
+    of the returned, already-stopped one is idempotent."""
+
+    def section(spark, sf_dir, specs):
+        from tools.serve import measure_serve
+
+        spark.stop()
+        rec = measure_serve(
+            tier,
+            repeats=5,
+            name=name,
+            tier_dir=sf_dir if tier == "headline" else _tier_dir(sf_dir, 256),
+            # honest context: spark.stop() does not kill the py4j JVM
+            session_note="bench-process JVM after tier sections "
+            "(fresh SparkSession)",
+        )
+        return rec, spark
+
+    return section
+
+
+def _q30_vector_section(spark, sf_dir, specs):
+    spark = _restart(spark, "coldata_spark_bench_1024v")
+    spark = _ensure_deep_tier(spark, sf_dir, "emb", 1024)
+    return bench_q30_embeddings_tier(spark, sf_dir, specs), spark
+
+
+def _concurrent_section(spark, sf_dir, specs):
+    # Batch-throughput operating point: wall-clock to complete ALL headline
+    # queries with concurrent submission, each engine at its best client
+    # concurrency (Spark local overlaps stage-scheduling gaps across jobs;
+    # DuckDB already saturates cores per query, so its optimum is lower).
+    # This is the "N concurrent users" number a serving deployment quotes —
+    # the sequential per-query timings remain the primary metric.
+    spark = _restart(
+        spark,
+        "coldata_spark_bench_concurrent",
+        extra_conf={"spark.scheduler.mode": "FAIR"},
+    )
+    tune_for_input(spark, dir_bytes(sf_dir))
+    return bench_concurrent(spark, sf_dir, specs), spark
 
 
 def _write_detail(result: dict) -> None:
@@ -299,26 +285,13 @@ def _write_detail(result: dict) -> None:
     except (FileNotFoundError, json.JSONDecodeError):
         existing = {}
     merged = dict(result)
-    # Section entries (tiers, amortization, serve, concurrent) from a
-    # previous run are carried when THIS run skipped them (env-gated
-    # partial runs exist as a debugging tool and must not silently erase
-    # the latest full record) — marked "carried": true so a reader can
-    # tell them from this run's fresh sections.  A full run measures
-    # every section, so it overwrites everything and the mark vanishes.
-    _SECTIONS = (
-        "replicated_16x",
-        "replicated_64x",
-        "replicated_256x",
-        "replicated_256x_clustered",
-        "clustered_joins_256x",
-        "q83_amortization_1024x",
-        "q83_amortization_4096x",
-        "q30_amortization_1024x",
-        "q30_256x_serve",
-        "q44_headline_serve",
-        "concurrent_batch",
-    )
-    for k in _SECTIONS:
+    # Section entries from a previous run are carried when THIS run has
+    # not (yet) measured them: a killed or timed-out run's partial record
+    # must not erase the latest full record's later sections.  They are
+    # marked "carried": true so a reader can tell them from this run's
+    # fresh sections; a finished run measures every section, so it
+    # overwrites everything and the mark vanishes.
+    for k, _ in SECTIONS:
         if k not in merged and isinstance(existing.get(k), dict):
             # same staleness rule as spreads: a section whose fixture
             # stamp no longer matches the on-disk marker (regenerated
@@ -1085,6 +1058,30 @@ REPL_256X_QUERIES = [
     "q116_time_weighted_avg",
 ]
 
+# Every section bench.main runs after the headline, in run order, keyed by
+# its BENCH_DETAIL.json entry.  _write_detail carries exactly these keys.
+SECTIONS = (
+    ("replicated_16x", _tier_section(16, REPL_QUERIES)),
+    ("replicated_64x", _tier_section(64, REPL_64X_QUERIES)),
+    ("replicated_256x", _tier_section(256, REPL_256X_QUERIES)),
+    ("replicated_256x_clustered", _clustered_section),
+    ("clustered_joins_256x", _clustered_joins_section),
+    ("q83_amortization_1024x", _q83_section(1024)),
+    ("q83_amortization_4096x", _q83_section(4096)),
+    # q30 under the serving entry: the per-round record of "the 256x
+    # straddle is the plan-construction floor, removed by registry.serve"
+    ("q30_256x_serve", _serve_section("256x", "q30_knn_cosine_topk")),
+    # the window-shape serve control, at the headline sf dir where q44 is
+    # sub-second (at 256x its 3M-row client materialization would swamp
+    # the floor being measured): pins the floor's query-independence
+    (
+        "q44_headline_serve",
+        _serve_section("headline", "q44_asof_last_click_before_purchase"),
+    ),
+    ("q30_amortization_1024x", _q30_vector_section),
+    ("concurrent_batch", _concurrent_section),
+)
+
 
 def _pretouch(path: str) -> float:
     """Pinned cache-state protocol for every replicated tier (round-5
@@ -1105,16 +1102,6 @@ def _pretouch(path: str) -> float:
             except OSError:
                 pass
     return round(time.perf_counter() - t0, 3)
-
-
-def _tier_ok(tier_dir: str) -> bool:
-    """A tier dir is usable only when a build marker validates it
-    (tools.spread.fixture_stamp_of) — an interrupted replicate leaves a
-    partial dir that os.path.isdir alone would wrongly accept, while
-    every rebuild path goes through the builders' marker discipline."""
-    from tools.spread import fixture_stamp_of
-
-    return os.path.isdir(tier_dir) and fixture_stamp_of(tier_dir) is not None
 
 
 def _tier_dir(sf_dir: str, times: int) -> str:

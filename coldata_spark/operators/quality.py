@@ -358,9 +358,9 @@ def audit(df: DataFrame, rules: list) -> DataFrame:
     # deterministic behavior a publish gate wants anyway.
     hll_cnt: int | None = None
     # Unique rules are one full-cardinality groupBy each — measured the
-    # honest floor, not a plan defect (round-13, tools/probe_q174.py at
-    # 64x): the plain groupBy is 10.6 s; repartition-by-key-first reads
-    # 12.9 s; a shared-prefix exchange feeding both unique rules reads
+    # honest floor, not a plan defect (round-13 at 64x, SCALE.md "q174
+    # decomposed"): the plain groupBy is 10.6 s; repartition-by-key-first
+    # reads 12.9 s; a shared-prefix exchange feeding both unique rules reads
     # 20.3 s for the pair (vs 21.3 for two plain ones); countDistinct is
     # 10.0 s.  The cost is the hash-aggregate CPU constant on ~unique
     # keys (partial agg sees no combine reduction — its worst case),

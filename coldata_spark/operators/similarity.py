@@ -91,7 +91,7 @@ def knn_join(
         oracle-parity baseline; zero Python in the plan).
 
     WHY ``auto`` == ``arrow`` AT EVERY SIZE (measured, round 7 — see
-    tools/bench_knn_strategy.py and SCALE.md "kNN strategy crossover"):
+    SCALE.md "kNN strategy crossover"):
     the hypothesized small-input crossover to ``expr`` does not exist for
     this operator.  Warm-JVM best-of-3 at q30's shape (8 queries, 64-dim),
     expr vs arrow seconds: sf0.1 0.69/0.44, 16x 0.77/0.29, 64x 1.65/0.43,
@@ -143,7 +143,7 @@ def knn_join(
         # session's shuffle.partitions is sized for the big-side scan,
         # and letting AQE coalesce the tiny merge instead costs an extra
         # planning round per stage — measured ~0.3 s/run at the 256x tier
-        # (tools/probe_q30e.py), a third of q30's latency.  Width: one
+        # (SCALE.md "q30's floor"), a third of q30's latency.  Width: one
         # partition per query up to the cluster's parallelism — a window
         # partitioned by q_id can never use more reducers than distinct
         # queries, and capping at defaultParallelism keeps a 1000-query

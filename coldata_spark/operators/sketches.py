@@ -122,7 +122,7 @@ def hll_registers(
     The whole fold+mix chain is nested into ONE projection: chaining one
     .select per mix step cost ~0.14 s of per-projection overhead at the
     16x tier (register build 0.45 -> 0.31 s collapsed, identical
-    registers; tools/probe_q114_hash.py, round 10) — whole-stage codegen
+    registers; SCALE.md "q114-family per-row gap", round 10) — codegen
     CSE evaluates each intermediate once regardless of the textual
     nesting, so the depth-per-projection trade was pure cost on the
     Spark side.  The DuckDB twin keeps the step-per-CTE chain

@@ -1016,7 +1016,7 @@ def q125_hourly_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
     key narrows; the timestamp is reconstructed AFTER the aggregate
     (at most #hours rows).  In the UTC session date_trunc('hour', ts)
     == timestamp_seconds(3600 * (epoch div 3600)) exactly; value-gated
-    identical at the 16x/64x tiers (tools/probe_q135_q125_r15.py,
+    identical at the 16x/64x tiers (OPTIMIZATION_r15.md ask #5,
     0.36 -> 0.26 s at 16x, flat at 64x) and oracle-parity green."""
     ev = load(spark, sf_dir, "events")
     hourly = (
@@ -1305,7 +1305,7 @@ def q135_weekday_hour_heatmap(spark: SparkSession, sf_dir: str) -> DataFrame:
     keys and one int hash instead of two long hashes per row.  Explicit
     two-level form (count per (cell, user) -> sum/count per cell) keeps
     the planner from re-deriving the distinct; measured 0.84 -> 0.68 s
-    at 64x, 0.43 -> 0.37 s at 16x (tools/probe_q135_q125_r15.py, both
+    at 64x, 0.43 -> 0.37 s at 16x (OPTIMIZATION_r15.md ask #5, both
     variants value-gated identical first).  Integer `div` keeps the
     truncation semantics of the previous cast-of-double on the
     non-negative epochs the schema guarantees."""

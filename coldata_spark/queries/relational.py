@@ -137,7 +137,7 @@ def q02_top_orders_by_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # Round 15: past the broadcast gate the planner sort-merged, sorting
     # the 5x-larger lineitem stream — at 256x SMJ 7.60/7.92 s vs
-    # shuffled-hash 5.02/6.08 s (tools/probe_q02_r15.py).  Runtime
+    # shuffled-hash 5.02/6.08 s (SCALE.md "Flat-256x tier").  Runtime
     # bloom-filter injection measured NEGATIVE (9.89 s SMJ+bloom).
     o = choose_build(spark, load(spark, sf_dir, "orders"), o)
     li = load(spark, sf_dir, "lineitem").filter(F.col("l_shipdate") > cutoff)

@@ -250,7 +250,7 @@ def q68_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     # so the fact-fact join sort-merged.  Broadcast the pruned side while
     # the raw orders estimate is <=256 MiB, hash-build past that while
     # the per-partition build fits, sort-merge beyond.  Measured at 64x
-    # (tools/probe_flat_shj_r15.py, value-gated): SMJ 3.96 s,
+    # (OPTIMIZATION_r15.md "Flat family follow-on", value-gated): SMJ 3.96 s,
     # shuffle_hash 2.89 s.
     from coldata_spark.operators.joins import choose_build
 
@@ -716,7 +716,7 @@ def q77_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     # past the gate, hash-build it per partition while the estimated
     # build fits execution memory; only at a scale where neither holds
     # does the spill-safe sort-merge return.  Measured at 64x
-    # (tools/probe_flat_shj_r15.py, value-gated): SMJ 4.36 s,
+    # (OPTIMIZATION_r15.md "Flat family follow-on", value-gated): SMJ 4.36 s,
     # shuffle_hash 2.58 s, explicit broadcast 2.35 s.
     from coldata_spark.operators.joins import choose_build
 

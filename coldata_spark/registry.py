@@ -255,7 +255,8 @@ def interactive(spark: SparkSession):
 
     AQE's per-stage replanning is a measured ~0.06-0.08 s of the ~0.18 s
     per-submission floor on q44's single-table sub-second plan
-    (tools/probe_serve_floor.py, headline sf0.1, best-of-7: full
+    (SCALE.md "q30@256x under the SERVING entry", round 11, headline
+    sf0.1, best-of-7: full
     0.167-0.216 vs 0.107-0.130 with AQE off; the optimizer+codegen
     replan is ~0.08 s, measured as plan_only) — while AQE's benefit
     (runtime re-plan of BIG shuffles: coalesce, skew split) cannot apply
@@ -268,7 +269,7 @@ def interactive(spark: SparkSession):
     is LIFO-nesting-safe but NOT thread-safe — a concurrent job sharing
     this SparkSession would briefly plan with AQE off, and if it also
     toggles the conf the restore can clobber it.  Serve bursts own
-    their session (the deployment shape tools/bench_concurrent.py
+    their session (the deployment shape bench.bench_concurrent
     measures: one session per serving thread via newSession());
     same assumption in quality._aggregate_pushdown."""
     old = spark.conf.get("spark.sql.adaptive.enabled")

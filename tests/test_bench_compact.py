@@ -11,6 +11,8 @@ under 1800 bytes with comfortable margin below the 2 KB truncation point.
 
 import json
 
+import pytest
+
 import bench
 
 
@@ -215,10 +217,10 @@ def test_fresh_exec_same_plan_fresh_execution(spark):
 
 
 def test_write_detail_carries_skipped_sections(tmp_path, monkeypatch):
-    """An env-gated partial bench run must not silently erase the latest
-    full record's section entries (round-9: a Q30S-only validation run
-    dropped every tier entry from BENCH_DETAIL).  Skipped sections are
-    carried with an explicit mark; re-measured sections shed it."""
+    """A killed or timed-out bench run writes a partial record; it must
+    not erase the section entries the previous full record has and this
+    run never reached.  Those sections are carried with an explicit mark;
+    re-measured sections shed it."""
     import bench
 
     detail = tmp_path / "BENCH_DETAIL.json"
@@ -238,6 +240,56 @@ def test_write_detail_carries_skipped_sections(tmp_path, monkeypatch):
     assert got["replicated_16x"]["ratio"] == 1.3
     assert got["replicated_16x"]["carried"] is True
     assert got["q30_256x_serve"] == {"ratio": 1.4}  # fresh: no mark
+
+
+class _Killed(BaseException):
+    """Stands in for the signal that stops a bench run mid-way."""
+
+
+def test_section_loop_order_and_killed_run_carry(tmp_path, monkeypatch):
+    """bench.run_sections over the SECTIONS table, every section stubbed
+    and the session faked: sections land in table order, and a run killed
+    after section i keeps sections i+1.. from the previous record, marked
+    carried."""
+    import bench
+
+    detail = tmp_path / "BENCH_DETAIL.json"
+    monkeypatch.setattr(bench, "DETAIL_PATH", str(detail))
+    keys = [k for k, _ in bench.SECTIONS]
+    assert len(keys) == len(set(keys)) == 11
+    session = object()
+
+    def table(run, kill_at=None):
+        def stub(i):
+            def section(spark, sf_dir, specs):
+                assert spark is session
+                if i == kill_at:
+                    raise _Killed
+                return {"run": run}, spark
+
+            return section
+
+        return tuple((k, stub(i)) for i, k in enumerate(keys))
+
+    for i in range(len(keys)):
+        detail.unlink(missing_ok=True)
+        monkeypatch.setattr(bench, "SECTIONS", table(1))
+        assert bench.run_sections(session, "sf", {}, {"value": 1.0}) is session
+        got = json.loads(detail.read_text())
+        assert [k for k in got if k in keys] == keys
+        monkeypatch.setattr(bench, "SECTIONS", table(2, kill_at=i + 1))
+        if i + 1 < len(keys):
+            with pytest.raises(_Killed):
+                bench.run_sections(session, "sf", {}, {"value": 2.0})
+        else:
+            bench.run_sections(session, "sf", {}, {"value": 2.0})
+        got = json.loads(detail.read_text())
+        assert got["value"] == 2.0
+        assert [k for k in got if k in keys] == keys
+        for k in keys[: i + 1]:
+            assert got[k] == {"run": 2}, k
+        for k in keys[i + 1 :]:
+            assert got[k] == {"run": 1, "carried": True}, k
 
 
 def test_stamp_inequality_drops_stale_records(tmp_path, monkeypatch):

@@ -1,8 +1,8 @@
 """The fact-join strategy ladder (operators/joins.py) on its real callers.
 
-The join-shape gates in test_r15_plan_shapes.py need a materialized
-replicated tier; this table runs on sf0.001 by faking the raw orders
-estimate, so the ladder is gated on every checkout.
+Each row fakes the raw orders estimate on sf0.001, so every strategy of
+the ladder is gated on every checkout without a materialized replicated
+tier.
 """
 
 from __future__ import annotations
@@ -62,6 +62,8 @@ def test_fact_join_ladder(spark, sf_dir, monkeypatch, est, parts, strategy):
         assert ("ShuffledHashJoin" in plan) == (strategy == "shuffle_hash"), (
             f"{name}:\n{plan}"
         )
+        if strategy == "broadcast":
+            assert "BroadcastHashJoin" in plan, f"{name}:\n{plan}"
 
 
 @pytest.mark.parametrize("value, want", [("32", 32), ("0", 1), ("auto", 200)])

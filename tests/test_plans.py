@@ -22,6 +22,12 @@ def plan_of(df) -> str:
     )
 
 
+def executed_plan(df) -> str:
+    """The simple-mode executed plan: one line per node, with each node's
+    expressions on its own line (formatted mode splits them apart)."""
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
 def test_filter_pushdown_reaches_scan(spark, sf_dir):
     """q01's shipdate predicate must appear in PushedFilters of the scan."""
     q = registry.specs()["q01_pricing_summary"]
@@ -113,7 +119,7 @@ def test_whole_stage_codegen_on_hot_path(spark, sf_dir):
     df = q.fn(spark, sf_dir)
     # AQE wraps the plan until execution; run it, then inspect the final plan
     df.collect()
-    executed = df._jdf.queryExecution().executedPlan().toString()
+    executed = executed_plan(df)
     assert "isFinalPlan=true" in executed
     assert "*(" in executed  # WholeStageCodegen stage markers
 
@@ -459,7 +465,7 @@ def test_curation_pipeline_materializes_once(spark, sf_dir):
     # window check needs SIMPLE explain: formatted mode puts the node name
     # and its windowspecdefinition arguments on different lines, which
     # would make a line-wise co-occurrence check vacuously pass
-    simple = df._jdf.queryExecution().executedPlan().toString()
+    simple = executed_plan(df)
     saw_window = False
     for line in simple.splitlines():
         if "Window" in line and "windowspecdefinition" in line:
@@ -494,3 +500,143 @@ def test_drift_plans_stay_bounded(spark, sf_dir):
     below = "\n".join(tree[w_line + 1 : w_line + 4])
     assert "HashAggregate" in below or "Sort" in below, below
     assert "SortMergeJoin" not in plan178
+
+
+# Gates for the operator rewrites of optimization rounds 14 and 15
+# (OPTIMIZATION_r14.md, OPTIMIZATION_r15.md): each pins the structure a
+# rewrite bought, so a later refactor can't silently bring back the term
+# it removed.  Value parity stays pinned by tests/test_oracle.py.
+
+PY_NODES = ("BatchEvalPython", "ArrowEvalPython", "MapInArrow", "MapInPandas")
+
+
+def test_cms_build_has_no_python_boundary(spark, sf_dir):
+    """cms_build's distinct-first engine is all-JVM, and its digest
+    expressions sit ABOVE the per-key aggregate (hash distinct keys, not
+    rows)."""
+    from coldata_spark.operators.sketches import cms_build
+
+    li = load(spark, sf_dir, "lineitem")
+    plan = executed_plan(cms_build(li, "l_partkey"))
+    for node in PY_NODES:
+        assert node not in plan, f"{node} reappeared in cms_build's plan"
+    # distinct-first: md5 runs above an aggregate, so the expression must
+    # reference the aggregate's key alias (_k), not the raw fact column
+    import re
+
+    assert re.search(r"md5\(cast\(cast\(_k#\d+", plan), (
+        "cms digest no longer computed over the distinct-key alias _k — "
+        "the per-row hashing term is back"
+    )
+    assert "md5(cast(cast(l_partkey" not in plan.replace(" ", "")
+
+
+def test_q143_bands_derive_map_side(spark, sf_dir):
+    """q143's band keys derive map-side from the wide signature frame."""
+    df = registry.specs()["q143_lsh_bucket_balance"].fn(spark, sf_dir)
+    plan = executed_plan(df)
+    assert "collect_list" not in plan, (
+        "q143's groupBy(doc_id, band) + collect_list re-aggregation is back"
+    )
+
+
+def test_minhash_pairs_reuse_one_signature_pipeline(spark, sf_dir):
+    """The q26 engine's band self-join: both sides are one reused
+    exchange, not two builds of the signature pipeline."""
+    from coldata_spark.operators.dedup import minhash_neardup_pairs
+
+    docs = load(spark, sf_dir, "documents")
+    # ReuseExchange is applied by the STATIC planner; with AQE on, the
+    # initial plan prints duplicate subtrees that stage-level reuse dedupes
+    # only at runtime (the tools/gen_plans.py --out rationale) — so gate
+    # with AQE off, like the sub-2GiB bench tiers run anyway
+    # (tune_for_input).
+    prev = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        plan = executed_plan(minhash_neardup_pairs(docs, "text", "doc_id"))
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", prev)
+    assert plan.count("shingle") > 0
+    assert "ReusedExchange" in plan, (
+        "the band self-join no longer shares one exchange — the signature "
+        "pipeline is being built once per side again"
+    )
+
+
+def test_q133_profiles_all_columns_from_one_scan(spark, sf_dir):
+    """q133: one fact scan feeds every profiled column's moments."""
+    df = registry.specs()["q133_join_key_skew_profile"].fn(spark, sf_dir)
+    plan = executed_plan(df)
+    # one exploded scan: the lineitem parquet relation appears once
+    assert plan.count("Scan parquet") == 1, (
+        f"q133 re-grew a per-column scan: {plan.count('Scan parquet')} scans"
+    )
+
+
+def _q141_shingles(spark, sf_dir):
+    from coldata_spark.tables import fan_out
+
+    docs = load(spark, sf_dir, "documents")
+    return fan_out(docs).select(
+        "doc_id",
+        F.explode(
+            F.array_distinct(
+                F.expr(
+                    "transform(sequence(1, greatest(1, length(text) - 4)),"
+                    " i -> substring(text, i, 5))"
+                )
+            )
+        ).alias("shingle"),
+    )
+
+
+def test_q141_count_prefilter_feeds_collect(spark, sf_dir):
+    """q141's bucket build decides the <=64 doc-frequency cap with a
+    WINDOW COUNT (disk-spillable per-key state) BEFORE any collect_list —
+    collecting every shingle's full doc list first is an unbounded
+    in-memory buffer on a hot (boilerplate) shingle at scale."""
+    from coldata_spark.queries.text_queries import _q141_capped_buckets
+
+    plan = executed_plan(_q141_capped_buckets(_q141_shingles(spark, sf_dir)))
+    # the Window count must appear BELOW the collect_list aggregate: the
+    # plan string prints top-down, so the aggregate's collect_list must
+    # come before (above) the Window node
+    i_collect = plan.find("collect_list")
+    i_window = plan.find("Window")
+    assert i_collect != -1, "bucket build lost its collect_list aggregate"
+    assert i_window != -1, (
+        "the window count prefilter is gone — collect_list is buffering "
+        "uncapped doc lists again (r14 OOM-risk shape)"
+    )
+    assert i_collect < i_window, (
+        "collect_list no longer sits above the window count prefilter"
+    )
+    # exactly one row exchange between the explode and the collect: the
+    # collect aggregation must REUSE the window's shingle partitioning
+    gen = plan.find("Generate explode")
+    assert gen != -1
+    assert plan[:gen].count("Exchange") <= 1, (
+        "the collect aggregation stopped reusing the window's exchange"
+    )
+
+
+def test_q141_capped_buckets_value_identity(spark, sf_dir):
+    """The prefilter must compute exactly the r14 collect-then-filter
+    buckets (order-insensitively within each doc list)."""
+    from coldata_spark.queries.text_queries import _q141_capped_buckets
+
+    sh0 = _q141_shingles(spark, sf_dir)
+    new = {
+        r["shingle"]: sorted(r["ds"])
+        for r in _q141_capped_buckets(sh0).collect()
+    }
+    old = {
+        r["shingle"]: sorted(r["ds"])
+        for r in (
+            sh0.groupBy("shingle")
+            .agg(F.collect_list("doc_id").alias("ds"))
+            .filter(F.size("ds") <= 64)
+        ).collect()
+    }
+    assert new == old

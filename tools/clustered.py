@@ -358,7 +358,7 @@ def q77_clustered(spark: SparkSession, out_dir: str) -> DataFrame:
     the merge walk pays ordering comparisons per streamed lineitem row
     and degrades far worse under heap pressure: measured 11.80 s vs
     3.14 s (noop protocol) and 3.14/3.17/3.77 vs 2.79/3.11/3.29 (bench
-    protocol, warm best-of-3) — tools/probe_q77_r15.py, value-gated
+    protocol, warm best-of-3) — OPTIMIZATION_r15.md ask #4, value-gated
     identical first.  The verdict's named pre-aggregation lever
     (partial volume per (l_orderkey, s_nationkey) before the join) was
     probed and REJECTED: the supplier co-nation key breaks the bucket

@@ -16,13 +16,13 @@ protocol as tools/spread.py (pretouch, tune, warm, best-of-N; DuckDB
 re-parses its SQL per run, but its parse+plan is ~ms, so the
 comparison stays symmetric for the serve mode).
 
-``measure_serve`` is called by bench.py's main loop every round (env
-``SPARK_GRAFT_BENCH_Q30S``) so the serving record self-maintains as a
-tier-style entry (``q30_256x_serve``); running this file standalone
+``measure_serve`` backs bench.py's two serve sections
+(``q30_256x_serve``, ``q44_headline_serve``) so the serving record
+self-maintains as a tier-style entry; running this file standalone
 additionally merges the record into BENCH_DETAIL.json under
-``q30_256x_serve_spread`` for ad-hoc re-measurement.
+``<query>_<tier>_serve_spread`` for ad-hoc re-measurement.
 
-Usage: python tools/probe_q30_serve.py [tier] [repeats] [query_name]
+Usage: python tools/serve.py [tier] [repeats] [query_name]
 """
 from __future__ import annotations
 
@@ -44,11 +44,11 @@ def measure_serve(
     repeats: int = 7,
     name: str = NAME,
     tier_dir: str | None = None,
-    session_note: str = "fresh probe process (one new JVM)",
+    session_note: str = "fresh process (one new JVM)",
 ) -> dict:
     """``tier_dir`` overrides the default REPO/.bench_cache/<tier> path so
-    bench.py passes the SAME _tier_dir(sf_dir, 256) its gate checks (the
-    env-overridable form) — gate and measurement must not disagree.
+    bench.py passes the SAME _tier_dir(sf_dir, 256) it built (the
+    env-overridable form).
     ``session_note`` states the JVM context honestly: spark.stop() does
     not kill the py4j gateway JVM, so an in-bench call is a fresh
     SparkSession in a long-lived JVM, not a fresh JVM."""
@@ -76,7 +76,7 @@ def measure_serve(
             tier_dir = os.path.join(REPO, ".bench_cache", tier)
     spec = registry.specs()[name]
     pretouch_s = _pretouch(tier_dir)
-    spark = get_spark(app_name="probe_q30_serve")
+    spark = get_spark(app_name="serve")
     tune_for_input(spark, dir_bytes(tier_dir))
 
     warmup_dir = "/root/testdata/sf0.001"

@@ -1,7 +1,8 @@
 #!/usr/bin/env python
 """Best-of-N spread for ONE registry query at ONE replicated tier — the
-generic form of tools/spread_q163.py (which resolved q163's at-the-bar 16x
-entry in round 6/7).  A single-run tier entry near the 2x bar is noise
+generic form of the q163 spread that resolved q163's at-the-bar 16x entry
+in round 6/7 (SCALE.md; `python tools/spread.py q163_bloom_decontaminate
+16x` re-takes it).  A single-run tier entry near the 2x bar is noise
 until a spread puts it on one side (q83@64x read 2.93 in round 7 while its
 16x improved and its 256x-4096x entries stayed excellent); this tool
 re-measures under the pinned protocol — fixture pre-touched so both

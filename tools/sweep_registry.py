@@ -100,14 +100,16 @@ def _fresh_spark():
     )
 
 
-def _time_spark(spark, fn, tier_dir: str) -> tuple[float, int]:
+def _time_spark(
+    spark, fn, tier_dir: str, repeats: int = REPEATS
+) -> tuple[float, int]:
     df = fn(spark, tier_dir).toPandas()  # warm: codegen + FS cache
     nrows = len(df)
     del df
     gc.collect()
     spark._jvm.System.gc()
     best = float("inf")
-    for _ in range(REPEATS):
+    for _ in range(repeats):
         t0 = time.perf_counter()
         pdf = fn(spark, tier_dir).toPandas()
         best = min(best, time.perf_counter() - t0)
@@ -263,7 +265,7 @@ FLAGS: dict[str, str] = {
     # register-bounded q181 (round-12 verdict #4)
     "q123_profile_orders": "exact-variant(sketched twin: q181)",
     "q74_distinct_counts": "exact-variant(sketched twin: q114)",
-    # decomposed round 13 (tools/probe_q174.py -> SCALE.md): the unique
+    # decomposed round 13 (SCALE.md "q174 decomposed"): the unique
     # rules' full-cardinality hash-agg constant; scheduled gate =
     # audit_table_stats footers (0.28 s at 64x) + q179 HLL monitor
     "q174_quality_audit": "exact-variant(scheduled gate: footers+q179)",
