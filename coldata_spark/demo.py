@@ -11,8 +11,9 @@ surface always exists.
 
 Builds (or reuses) an IVF index over the documents fixture, embeds the
 queries, searches, and prints ranked results with previews.  Pass
---sf-dir to point at another corpus; --rebuild to renew the index
-(vdb.py:199-201's renew flag).
+--sf-dir to point at another corpus.  The index is renewed (vdb.py:199-201)
+whenever the fixture's content stamp changes; a same-content rebuild would
+reproduce the same index, since the KMeans seed is fixed.
 """
 
 from __future__ import annotations
@@ -20,13 +21,35 @@ from __future__ import annotations
 import argparse
 import html as _html
 import os
-import tempfile
+
+from coldata_spark import search as S
+from coldata_spark.session import get_spark
+from coldata_spark.tables import build_once, load
+
+NLIST = 8
+
+
+def load_index(spark, sf_dir: str) -> S.SearchIndex:
+    """Build the documents index once per fixture content and reload it
+    on later calls: the stored vectors AND the centroids that placed them
+    (re-fitting centroids on the stored vectors would probe cells the
+    vectors were never assigned to)."""
+
+    def build(root):
+        idx = S.build_index(
+            load(spark, sf_dir, "documents"), os.path.join(root, "index"), nlist=NLIST
+        )
+        idx.centroids.write.mode("overwrite").parquet(os.path.join(root, "centroids"))
+
+    root = build_once(f"demo-index|{NLIST}", build, sf_dir)
+    centroids = spark.read.parquet(os.path.join(root, "centroids"))
+    return S.SearchIndex(
+        path=os.path.join(root, "index"), centroids=centroids, nlist=centroids.count()
+    )
 
 
 def _search_rows(spark, idx, docs, query: str, k: int, nprobe):
     """One query -> list of (rank, doc_id, score, preview) tuples."""
-    from coldata_spark import search as S
-
     rows = S.search(spark, idx, docs, [query], k=k, nprobe=nprobe).collect()
     return [
         (r.rank, r.doc_id, float(r.score), r.preview)
@@ -115,29 +138,11 @@ def main() -> None:
     )
     ap.add_argument("--k", type=int, default=4, help="results per query")
     ap.add_argument("--nprobe", type=int, default=None, help="IVF cells to probe")
-    ap.add_argument("--rebuild", action="store_true", help="force index rebuild")
     args = ap.parse_args()
-
-    from coldata_spark import search as S
-    from coldata_spark.session import get_spark
-    from coldata_spark.tables import load
 
     spark = get_spark(app_name="coldata_spark_demo")
     docs = load(spark, args.sf_dir, "documents")
-
-    index_dir = os.path.join(
-        tempfile.gettempdir(), f"coldata_demo_idx_{os.path.basename(args.sf_dir)}"
-    )
-    if args.rebuild or not os.path.isdir(index_dir):
-        print(f"building index at {index_dir} ...")
-        idx = S.build_index(docs, index_dir, nlist=8)
-    else:
-        from coldata_spark.operators import ivf as _ivf
-
-        # reload centroids by re-deriving from the stored assignment
-        stored = spark.read.parquet(index_dir)
-        _, centroids = _ivf.build_ivf(stored.drop("centroid_id"), nlist=8)
-        idx = S.SearchIndex(path=index_dir, centroids=centroids, nlist=8)
+    idx = load_index(spark, args.sf_dir)
 
     if args.serve:
         serve(spark, idx, docs, args.k, args.nprobe, args.port)

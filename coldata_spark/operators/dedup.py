@@ -165,10 +165,10 @@ def minhash_neardup_pairs(
     table.  The previous shape referenced the signature pipeline four
     times in one plan (banded a/b + verification sa/sb), and Spark
     re-scanned + re-aggregated the corpus for each: 4 parquet scans and
-    4 shingle explodes where one suffices (plans/r14/
-    q26_minhash_neardup_pairs_{before,after}.txt).  The self-join's two
-    sides are byte-identical subtrees, so the band exchange plans once and
-    the second side reads it as ReusedExchange."""
+    4 shingle explodes where one suffices (OPTIMIZATION_r14.md §
+    q26/q25/q29).  The self-join's two sides are byte-identical subtrees,
+    so the band exchange plans once and the second side reads it as
+    ReusedExchange."""
     wide = minhash_signatures_wide(df, text_col, id_col, n_hashes)
     banded = _banded_from_wide(wide, n_hashes, band_size, carry_sigs=True)
     if max_bucket_size is not None:
@@ -533,7 +533,7 @@ def connected_components(
     DOUBLED per round, and although the cache kept row data warm, every
     per-round convergence count re-analyzed and re-optimized the whole
     exponentially-grown tree driver-side: q59's explain carried 1,877
-    Exchange nodes (plans/r14/q59_dedup_groups_before.txt) and q59/q140
+    Exchange nodes (OPTIMIZATION_r14.md § q59_dedup_groups) and q59/q140
     spent 28/47 s at the 16x tier almost entirely in the optimizer.
     Checkpointing keeps every round's plan constant-size (guide §3.3 /
     §7.3 — very large plans make planning itself the bottleneck).  The

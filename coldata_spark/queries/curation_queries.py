@@ -655,7 +655,7 @@ def q110_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # explode), so the corpus was re-scanned and the graph re-generated per
     # round; checkpointed, every round's edges⋈ranks exchange on src is
     # byte-identical and plans as ReusedExchange
-    # (plans/r14/q110_pagerank_{before,after}.txt)
+    # (OPTIMIZATION_r14.md § q110_pagerank)
     edges = edges.localCheckpoint(eager=True)
     ids = docs.select("doc_id").localCheckpoint(eager=True)
     ranks = ids.select("doc_id", F.lit(1000000).cast("long").alias("r"))

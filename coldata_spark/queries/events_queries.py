@@ -73,7 +73,7 @@ def q41_events_json_props(spark: SparkSession, sf_dir: str) -> DataFrame:
     # count/avg ignore the NULLed-out non-matching rows, groups with no
     # matching row (n = 0) are dropped after the fact, exactly the original
     # group set.  Codegen CSE evaluates the shared parse once
-    # (plans/r14/q41_events_json_props_{before,after}.txt: 2
+    # (OPTIMIZATION_r14.md § q41_events_json_props: 2
     # get_json_object sites -> 1).
     # the explicit projection materializes k once per row — the aggregate
     # expressions below reference the column, not the parse, so single
@@ -1255,8 +1255,8 @@ def q131_conversion_delay_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     # which ROW carried the median, never the VALUE.  The window form moved
     # every conversion into ONE partition ("No Partition Defined" global
     # sort); the aggregate builds partial value counts in parallel
-    # (3.2 -> measured below at the 16x tier; plans/r14/
-    # q131_conversion_delay_median_{before,after}.txt).
+    # (3.2 -> measured below at the 16x tier; OPTIMIZATION_r14.md §
+    # q131_conversion_delay_median).
     return delays.agg(
         # nullif keeps the empty-input row identical to the window form
         # (max(n) over zero rows was NULL, count(*) would be 0)

@@ -193,47 +193,38 @@ _MEDIA_FIXTURE_VER = "media-v1|wav:n=32,sr=8000,ns=800|ppm:n=64,8x8"
 
 def _media_fixture_cached(spark: SparkSession) -> tuple[str, str]:
     """Build-or-reuse the real-file media fixture: WAV and PPM tar shards
-    under a version-keyed cache dir (same _OK-marker discipline as
-    vector_queries._ivf_index_cached).  The bytes are pure functions of
-    the formula version — no sf_dir dependence — so one build serves
-    every invocation; a formula change mints a new key."""
-    import hashlib
+    in a tables.build_once dir keyed on the formula version.  The bytes
+    are pure functions of that version — no sf_dir dependence — so one
+    build serves every invocation; a formula change mints a new key."""
     import os
-    import tempfile
 
     from coldata_spark.sources import io as IO
+    from coldata_spark.tables import build_once
 
-    key = hashlib.md5(_MEDIA_FIXTURE_VER.encode()).hexdigest()[:12]
-    root = os.path.join(tempfile.gettempdir(), "coldata_media_cache", key)
-    wav_dir = os.path.join(root, "wav")
-    ppm_dir = os.path.join(root, "ppm")
-    ok = os.path.join(root, "_OK")
-    if os.path.exists(ok):
-        return wav_dir, ppm_dir
-    os.makedirs(root, exist_ok=True)
-    # encode real WAV files from the q52 sample formula and tar-shard them
-    audio = MM.synthetic_audio(spark, n=32)
-    IO.export_tar_shards(
-        MM.encode_wav_column(audio),
-        wav_dir,
-        n_shards=4,
-        key_col="item_id",
-        payload_col="payload",
-        ext="wav",
-    )
-    # encode real PPM files from the q50 pixel formula
-    imgs = MM.synthetic_images(spark, n=64)
-    IO.export_tar_shards(
-        MM.encode_ppm_column(imgs),
-        ppm_dir,
-        n_shards=4,
-        key_col="item_id",
-        payload_col="payload",
-        ext="ppm",
-    )
-    with open(ok, "w") as f:
-        f.write(_MEDIA_FIXTURE_VER)
-    return wav_dir, ppm_dir
+    def build(root):
+        # encode real WAV files from the q52 sample formula and tar-shard them
+        audio = MM.synthetic_audio(spark, n=32)
+        IO.export_tar_shards(
+            MM.encode_wav_column(audio),
+            os.path.join(root, "wav"),
+            n_shards=4,
+            key_col="item_id",
+            payload_col="payload",
+            ext="wav",
+        )
+        # encode real PPM files from the q50 pixel formula
+        imgs = MM.synthetic_images(spark, n=64)
+        IO.export_tar_shards(
+            MM.encode_ppm_column(imgs),
+            os.path.join(root, "ppm"),
+            n_shards=4,
+            key_col="item_id",
+            payload_col="payload",
+            ext="ppm",
+        )
+
+    root = build_once(_MEDIA_FIXTURE_VER, build)
+    return os.path.join(root, "wav"), os.path.join(root, "ppm")
 
 
 @register(

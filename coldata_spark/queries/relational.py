@@ -875,7 +875,7 @@ def q60_price_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     # two window passes); the aggregate builds per-task partial value
     # maps in parallel and sorts only per-group distinct values once
     # (4.3 -> measured below at 16x;
-    # plans/r14/q60_price_percentiles_{before,after}.txt: Window+Sort
+    # OPTIMIZATION_r14.md § q60_price_percentiles: Window+Sort
     # pipeline -> single ObjectHashAggregate).
     joined = orders.join(
         F.broadcast(cust), orders.o_custkey == cust.c_custkey

@@ -1173,7 +1173,7 @@ def q108_fuzzy_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     # max_bucket_size shape): the previous groupBy + join-back referenced
     # dch twice, so the doc-side chunk explode ran twice and paid an extra
     # join; the window shares the exchange the candidate join needs anyway
-    # (plans/r14/q108_fuzzy_match_{before,after}.txt)
+    # (OPTIMIZATION_r14.md § q108_fuzzy_match)
     from pyspark.sql import Window as _W
 
     dk = (
@@ -1283,7 +1283,7 @@ def q120_bm25_search(spark, sf_dir):
     # to join and contribute nothing to sum_dl.  The two dl consumers each
     # re-run the (map-only, stage-fused) expression; materializing it was
     # measured slower than recomputing
-    # (plans/r14/q120_bm25_search_{before,after}.txt).
+    # (OPTIMIZATION_r14.md § q120_bm25_search).
     dl = fan_out(docs).select(
         "doc_id",
         F.expr(
@@ -1386,7 +1386,7 @@ def q132_source_keyness(spark, sf_dir):
     # materialize the vocabulary table ONCE: tf is referenced four times
     # below (totals, term_tot, grand, scored) and Spark re-ran the corpus
     # regexp-explode for each — 4 scans + 4 explodes where one suffices
-    # (plans/r14/q132_source_keyness_{before,after}.txt).  tf is the
+    # (OPTIMIZATION_r14.md § q132_source_keyness).  tf is the
     # rolled-up (source x term) table, orders of magnitude smaller than the
     # token stream, so checkpointing it is the scale-correct trade
     # (localCheckpoint spills to disk past memory).
@@ -1694,7 +1694,7 @@ def q141_shingle_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     # generate the ordered co-occurrence pairs in-expression: per-bucket
     # fan-out is bounded by the 64-doc cap (<= 4032 pairs per bucket), the
     # per-bucket array by the same cap times 8 bytes.  One corpus pass, one
-    # wide exchange (plans/r14/q141_shingle_containment_{before,after}.txt).
+    # wide exchange (OPTIMIZATION_r14.md § q141_shingle_containment).
     #
     # Round 15 (guide §5 / §2.5 — bounded per-key state): r14 collected
     # every shingle's FULL doc list before the <=64 cap filter, so one
@@ -1795,7 +1795,7 @@ def q143_lsh_bucket_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     the per-seed minhashes in seed order), so the bucket populations are
     string-identical.  2 shuffles -> 1 (the bucket-size combine agg); one
     tiny per-band agg on top
-    (plans/r14/q143_lsh_bucket_balance_{before,after}.txt)."""
+    (OPTIMIZATION_r14.md § q143_lsh_bucket_balance)."""
     docs = load(spark, sf_dir, "documents")
     wide = DD.minhash_signatures_wide(docs, "text", "doc_id")
     banded = DD._banded_from_wide(wide, DD.N_HASHES, DD.BAND_SIZE)
@@ -1861,7 +1861,7 @@ def q153_unigram_logprob_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     # identity, so deriving it from the (tiny) vocab aggregate instead of a
     # third scan+explode of the corpus cannot move a single bit of the nll
     # arithmetic; this drops the token pipeline from 3 runs per query to 2
-    # (plans/r14/q153_unigram_logprob_quality_{before,after}.txt)
+    # (OPTIMIZATION_r14.md § q153_unigram_logprob_quality)
     total = vocab.agg(F.sum("cnt").alias("n"))
     scored = (
         toks.join(vocab, "term")

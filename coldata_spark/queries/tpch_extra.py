@@ -130,7 +130,7 @@ def q67_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     orderkey shuffle carries ~8% of the orders side instead of the full
     table; previously the full orders table crossed the exchange and the
     customer filter ran after it
-    (plans/r14/q67_volume_shipping_{before,after}.txt).  The aggregate is
+    (OPTIMIZATION_r14.md § q67_volume_shipping).  The aggregate is
     still the single-level round(sum(volume), 2) over the identical row
     multiset — only join order changed, not the summation structure.
     """
@@ -234,7 +234,7 @@ def q68_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (one region of five), so the orderkey shuffle carries a fifth of the
     # order rows — previously li ⋈ orders joined the FULL orders table and
     # the cust filter ran after the big exchange
-    # (plans/r14/q68_market_share_{before,after}.txt).  Projecting orders
+    # (OPTIMIZATION_r14.md § q68_market_share).  Projecting orders
     # to the three needed columns keeps the exchange narrow.
     orders = (
         load(spark, sf_dir, "orders")
@@ -575,7 +575,7 @@ def q74_distinct_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     # hashed four times); three single-distinct aggregates joined on the
     # 3-row flag key skip the Expand entirely — each is a plain two-phase
     # distinct whose partial agg dedupes map-side.  Measured 3.7 -> 2.3 s
-    # at the 16x tier (plans/r14/q74_distinct_counts_{before,after}.txt).
+    # at the 16x tier (OPTIMIZATION_r14.md § q74_distinct_counts).
     li = load(spark, sf_dir, "lineitem")
     n_orders = li.groupBy("l_returnflag").agg(
         F.countDistinct("l_orderkey").alias("n_orders")
@@ -697,7 +697,7 @@ def q77_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     # exchange meets an orders side already filtered by BOTH predicates —
     # previously the customer join keyed a second wide exchange of the
     # li ⋈ orders output and the region filter only applied at the end
-    # (plans/r14/q77_local_supplier_volume_{before,after}.txt).  All joins
+    # (OPTIMIZATION_r14.md § q77_local_supplier_volume).  All joins
     # are inner, so the reorder is value-identical.
     cust_eu = cust.select("c_custkey", "c_nationkey").join(
         F.broadcast(nat.select("n_nationkey", "n_name")),
@@ -1136,7 +1136,7 @@ def q123_profile_orders(spark, sf_dir):
     # two-phase distinct path, and the two low-cardinality columns each
     # cost a dictionary-friendly single-column scan.  Measured 2.05 ->
     # 1.04 s at the 16x tier for the aggregate
-    # (plans/r14/q123_profile_orders_{before,after}.txt: Expand removed).
+    # (OPTIMIZATION_r14.md § q123_profile_orders: Expand removed).
     prof = (
         o.agg(
             F.count("*").alias("n_rows"),
@@ -1333,7 +1333,7 @@ def q133_join_key_skew_profile(spark, sf_dir):
     moments come out of one tiny re-agg by tag.  Previously each profiled
     column re-scanned the fact table and ran its own shuffle + single-row
     agg (2 scans + 4 Exchanges -> 1 scan + 2, see
-    plans/r14/q133_join_key_skew_profile_{before,after}.txt); counts are
+    OPTIMIZATION_r14.md § q133_join_key_skew_profile); counts are
     integer-identical since every row still contributes exactly one
     instance per profiled column."""
     li = load(spark, sf_dir, "lineitem")

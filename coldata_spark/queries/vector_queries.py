@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 from coldata_spark.operators import dedup as DD
 from coldata_spark.operators.similarity import group_best, knn_join
 from coldata_spark.registry import register
-from coldata_spark.tables import load
+from coldata_spark.tables import build_once, load
 
 # Fixed query set: the first 8 vectors play the role of embedded user queries
 # (vdb.py:88-89 embeds query strings; fixtures ship vectors directly).
@@ -449,31 +449,6 @@ def q183_embedding_neardup_lsh_wide(
     )
 
 
-def _emb_content_stamp(sf_dir: str) -> str:
-    """Content fingerprint of the embeddings fixture (file names, sizes,
-    mtimes) for index cache keys: a regenerated fixture at the SAME path
-    must not serve a previous fixture's index/centroids."""
-    import glob
-    import os
-
-    emb_path = os.path.join(os.path.abspath(sf_dir), "embeddings.parquet")
-    if os.path.isdir(emb_path):  # multi-file parquet directory
-        parts = sorted(
-            p
-            for p in glob.glob(
-                os.path.join(glob.escape(emb_path), "**"), recursive=True
-            )
-            if os.path.isfile(p)
-        )
-    else:
-        parts = [emb_path] if os.path.isfile(emb_path) else []
-    return "|".join(
-        f"{p}:{st.st_size}:{st.st_mtime_ns}"
-        for p in parts
-        for st in [os.stat(p)]
-    )
-
-
 def _label_mean_centroids(emb: DataFrame) -> DataFrame:
     """Per-label mean vectors as (centroid_id, cvec array<double>) — the
     DETERMINISTIC centroid stand-in q33 oracle-checks (the KMeans fit is
@@ -510,97 +485,23 @@ def _ivf_index_cached(
     every q35/q150 invocation — the old per-invocation tempfile.mkdtemp
     left a full index copy behind on EVERY driver/bench run and rebuilt
     identical KMeans each time."""
-    import hashlib
-    import os
-    import tempfile
-
     from coldata_spark.operators import ivf
 
-    stamp = _emb_content_stamp(sf_dir)
-    # two-level key: <fixture-key>/<content-key>.  A regenerated fixture
-    # mints a new content key; pruning the fixture-key's OTHER content
-    # dirs keeps at most one live index per (sf_dir, nlist) — otherwise
-    # every regeneration would strand a full index copy in /tmp (the exact
-    # leak this cache was introduced to stop).  The kmeans flavor keeps
-    # the legacy key so existing caches survive the flavor parameter.
-    fix_src = f"{os.path.abspath(sf_dir)}|{nlist}" + (
-        "" if flavor == "kmeans" else f"|{flavor}"
+    def build(root):
+        emb = load(spark, sf_dir, "embeddings")
+        if flavor == "labelmean":
+            centroids = _label_mean_centroids(emb)
+            assigned = ivf.assign_to_centroids(emb, centroids, metric="COSINE")
+        else:
+            assigned, centroids = ivf.build_ivf(emb, nlist=nlist)
+        ivf.write_ivf(assigned, os.path.join(root, "index"))
+        centroids.write.mode("overwrite").parquet(os.path.join(root, "centroids"))
+
+    root = build_once(f"ivf|{nlist}|{flavor}", build, sf_dir)
+    return (
+        os.path.join(root, "index"),
+        spark.read.parquet(os.path.join(root, "centroids")),
     )
-    fix_key = hashlib.md5(fix_src.encode()).hexdigest()[:12]
-    key = hashlib.md5(stamp.encode()).hexdigest()[:12]
-    group = os.path.join(tempfile.gettempdir(), "coldata_ivf_cache", fix_key)
-    root = os.path.join(group, key)
-
-    def _prune_siblings():
-        # Pruning runs only AFTER the current key is known-good (_OK
-        # present): deleting the superseded index before the replacement
-        # exists would yank files from under a concurrent reader of the
-        # old key AND leave nothing cached if this build then failed.  A
-        # reader that raced the fixture regeneration itself can still
-        # lose its old files — that is inherent to regenerating a fixture
-        # in place, not to the cache.  Only _OK-marked (completed)
-        # siblings are pruned: one without the marker is a concurrent
-        # IN-PROGRESS build of another content key, not a stale copy.
-        import shutil
-
-        for sibling in os.listdir(group):
-            sib = os.path.join(group, sibling)
-            if sibling != key and os.path.exists(os.path.join(sib, "_OK")):
-                shutil.rmtree(sib, ignore_errors=True)
-
-    path = os.path.join(root, "index")
-    cpath = os.path.join(root, "centroids")
-    if os.path.exists(os.path.join(root, "_OK")):
-        _prune_siblings()
-        centroids = spark.read.parquet(cpath)
-        return path, centroids
-    emb = load(spark, sf_dir, "embeddings")
-    if flavor == "labelmean":
-        centroids = _label_mean_centroids(emb)
-        assigned = ivf.assign_to_centroids(emb, centroids, metric="COSINE")
-    else:
-        assigned, centroids = ivf.build_ivf(emb, nlist=nlist)
-    os.makedirs(root, exist_ok=True)
-    ivf.write_ivf(assigned, path)
-    centroids.write.mode("overwrite").parquet(cpath)
-    open(os.path.join(root, "_OK"), "w").close()
-    _prune_siblings()
-    return path, spark.read.parquet(cpath)
-
-
-def _ann_cache_root(fix_src: str, sf_dir: str) -> tuple[str, str, bool]:
-    """(root, group, hit): the two-level content-keyed cache dir shared by
-    every prebuilt-ANN-artifact cache (<md5(fix_src)>/<md5(content_stamp)>
-    under /tmp/coldata_ivf_cache — _ivf_index_cached's scheme, factored
-    out so the PQ caches below don't re-derive it)."""
-    import hashlib
-    import tempfile
-
-    stamp = _emb_content_stamp(sf_dir)
-    fix_key = hashlib.md5(fix_src.encode()).hexdigest()[:12]
-    key = hashlib.md5(stamp.encode()).hexdigest()[:12]
-    group = os.path.join(tempfile.gettempdir(), "coldata_ivf_cache", fix_key)
-    root = os.path.join(group, key)
-    return root, group, os.path.exists(os.path.join(root, "_OK"))
-
-
-def _ann_cache_commit(root: str, group: str) -> None:
-    """Mark a cache dir complete and prune superseded content keys (the
-    _prune_siblings contract: only after _OK exists).  Only siblings that
-    THEMSELVES carry an _OK marker are pruned (round-14 advice): a
-    sibling without one is a concurrent in-progress build of a different
-    content key (e.g. sweep and ann_bench racing across a fixture
-    regeneration) — deleting it mid-write would corrupt that build; a
-    completed superseded sibling is safe to drop, and failed builds are
-    cleaned up by their own retry re-entering the build path."""
-    import shutil
-
-    open(os.path.join(root, "_OK"), "w").close()
-    key = os.path.basename(root)
-    for sibling in os.listdir(group):
-        sib = os.path.join(group, sibling)
-        if sibling != key and os.path.exists(os.path.join(sib, "_OK")):
-            shutil.rmtree(sib, ignore_errors=True)
 
 
 def _ivf_pq_index_cached(
@@ -615,9 +516,7 @@ def _ivf_pq_index_cached(
     measured BUILD, not search — while the oracle replays only search
     math.  The production operating point builds once per corpus version
     and serves many query batches (the reference splits the same way:
-    renew/build vdb.py:196-212 vs search vdb.py:88-100).  Same
-    content-stamp key discipline as _ivf_index_cached: a regenerated
-    fixture mints a new key and the stale index is pruned.  Build
+    renew/build vdb.py:196-212 vs search vdb.py:88-100).  Build
     throughput for this path is recorded separately (tools/ann_bench.py
     -> SCALE.md), so caching here hides nothing — it moves the build to
     where the reference puts it."""
@@ -627,38 +526,24 @@ def _ivf_pq_index_cached(
 
     from coldata_spark.operators import ivf
 
-    fix_src = f"{os.path.abspath(sf_dir)}|ivfpq|{nlist}|{m}|{k_codes}"
-    root, group, hit = _ann_cache_root(fix_src, sf_dir)
-    ipath = os.path.join(root, "index")
-    cpath = os.path.join(root, "centroids")
-    cbpath = os.path.join(root, "codebook.npy")
-    mpath = os.path.join(root, "meta.json")
-    if hit:
-        _ann_cache_commit(root, group)
-        with open(mpath) as fh:
-            n = json.load(fh)["n"]
-        return (
-            spark.read.parquet(ipath),
-            spark.read.parquet(cpath),
-            np.load(cbpath),
-            n,
+    def build(root):
+        emb = load(spark, sf_dir, "embeddings")
+        index, centroids, codebook = ivf.build_ivf_pq(
+            emb, nlist=nlist, m=m, k_codes=k_codes
         )
-    emb = load(spark, sf_dir, "embeddings")
-    index, centroids, codebook = ivf.build_ivf_pq(
-        emb, nlist=nlist, m=m, k_codes=k_codes
-    )
-    n = emb.count()
-    os.makedirs(root, exist_ok=True)
-    ivf.write_ivf(index, ipath)
-    centroids.write.mode("overwrite").parquet(cpath)
-    np.save(cbpath, codebook)
-    with open(mpath, "w") as fh:
-        json.dump({"n": n}, fh)
-    _ann_cache_commit(root, group)
+        ivf.write_ivf(index, os.path.join(root, "index"))
+        centroids.write.mode("overwrite").parquet(os.path.join(root, "centroids"))
+        np.save(os.path.join(root, "codebook.npy"), codebook)
+        with open(os.path.join(root, "meta.json"), "w") as fh:
+            json.dump({"n": emb.count()}, fh)
+
+    root = build_once(f"ivfpq|{nlist}|{m}|{k_codes}", build, sf_dir)
+    with open(os.path.join(root, "meta.json")) as fh:
+        n = json.load(fh)["n"]
     return (
-        spark.read.parquet(ipath),
-        spark.read.parquet(cpath),
-        np.load(cbpath),
+        spark.read.parquet(os.path.join(root, "index")),
+        spark.read.parquet(os.path.join(root, "centroids")),
+        np.load(os.path.join(root, "codebook.npy")),
         n,
     )
 
@@ -676,48 +561,36 @@ def _quantized_pq_index_cached(spark, sf_dir):
 
     from coldata_spark.operators import ivf
 
-    fix_src = f"{os.path.abspath(sf_dir)}|q151pq"
-    root, group, hit = _ann_cache_root(fix_src, sf_dir)
-    ipath = os.path.join(root, "index")
-    cpath = os.path.join(root, "centroids")
-    cbpath = os.path.join(root, "codebook.npy")
-    if hit:
-        _ann_cache_commit(root, group)
-        return (
-            spark.read.parquet(ipath),
-            spark.read.parquet(cpath),
-            np.load(cbpath),
+    def build(root):
+        emb_q = _quantized_emb(spark, sf_dir)
+        w = W.partitionBy("label").orderBy("vec_id")
+        cents = (
+            emb_q.withColumn("rn", F.row_number().over(w))
+            .filter(F.col("rn") == 1)
+            .select(
+                F.col("label").cast("int").alias("centroid_id"),
+                F.col("embedding").alias("cvec"),
+            )
         )
-    emb_q = _quantized_emb(spark, sf_dir)
-    w = W.partitionBy("label").orderBy("vec_id")
-    cents = (
-        emb_q.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select(
-            F.col("label").cast("int").alias("centroid_id"),
-            F.col("embedding").alias("cvec"),
+        assigned = ivf.assign_to_centroids(emb_q, cents, metric="L2")
+        rows = sorted(
+            emb_q.filter(F.col("vec_id") < 16)
+            .select("vec_id", "embedding")
+            .collect(),
+            key=lambda r: r["vec_id"],
         )
-    )
-    assigned = ivf.assign_to_centroids(emb_q, cents, metric="L2")
-    rows = sorted(
-        emb_q.filter(F.col("vec_id") < 16)
-        .select("vec_id", "embedding")
-        .collect(),
-        key=lambda r: r["vec_id"],
-    )
-    X = np.array([r["embedding"] for r in rows], dtype=np.float64)
-    codebook = np.stack([X[:, j * 8 : (j + 1) * 8] for j in range(8)])
-    codes = ivf.pq_encode(emb_q, codebook, id_col="vec_id")
-    index = assigned.join(codes, "vec_id")
-    os.makedirs(root, exist_ok=True)
-    ivf.write_ivf(index, ipath)
-    cents.write.mode("overwrite").parquet(cpath)
-    np.save(cbpath, codebook)
-    _ann_cache_commit(root, group)
+        X = np.array([r["embedding"] for r in rows], dtype=np.float64)
+        codebook = np.stack([X[:, j * 8 : (j + 1) * 8] for j in range(8)])
+        codes = ivf.pq_encode(emb_q, codebook, id_col="vec_id")
+        ivf.write_ivf(assigned.join(codes, "vec_id"), os.path.join(root, "index"))
+        cents.write.mode("overwrite").parquet(os.path.join(root, "centroids"))
+        np.save(os.path.join(root, "codebook.npy"), codebook)
+
+    root = build_once("q151pq", build, sf_dir)
     return (
-        spark.read.parquet(ipath),
-        spark.read.parquet(cpath),
-        np.load(cbpath),
+        spark.read.parquet(os.path.join(root, "index")),
+        spark.read.parquet(os.path.join(root, "centroids")),
+        np.load(os.path.join(root, "codebook.npy")),
     )
 
 
@@ -1691,25 +1564,20 @@ def _semdedup_census_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     cell-partitioned parquet, the persist layout semdedup_census's
     docstring specifies.  Deterministic given the fixture (md5 centroids,
     integer quantization), so the cached copy is bit-identical to a
-    fresh build; a regenerated fixture mints a new key (the
-    _ivf_index_cached discipline)."""
+    fresh build; a regenerated fixture mints a new key
+    (tables.build_once)."""
     from coldata_spark.functions import vector as V
 
-    fix_src = f"{os.path.abspath(sf_dir)}|semdedup_census"
-    root, group, hit = _ann_cache_root(fix_src, sf_dir)
-    cpath = os.path.join(root, "census")
-    if not hit:
+    def build(root):
         emb = load(spark, sf_dir, "embeddings").select(
             "vec_id", V.as_double(F.col("embedding")).alias("e")
         )
-        os.makedirs(root, exist_ok=True)
         DD.semdedup_census(emb, vec_col="e").write.mode(
             "overwrite"
-        ).partitionBy("cell").parquet(cpath)
-        _ann_cache_commit(root, group)
-    else:
-        _ann_cache_commit(root, group)
-    return spark.read.parquet(cpath)
+        ).partitionBy("cell").parquet(os.path.join(root, "census"))
+
+    root = build_once("semdedup_census", build, sf_dir)
+    return spark.read.parquet(os.path.join(root, "census"))
 
 
 def _maintained_ivf_cached(spark: SparkSession, sf_dir: str):
@@ -1718,58 +1586,36 @@ def _maintained_ivf_cached(spark: SparkSession, sf_dir: str):
     reproducible ingest stream), nlist=4 build, appends through the
     production assign path, then a maintain_ivf pass with an aggressive
     threshold (every above-average cell splits — deterministic under the
-    fixed KMeans seed) and vacuum.  Same two-level content-keyed /tmp
-    cache discipline as _ivf_index_cached."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
+    fixed KMeans seed) and vacuum.  Cached per fixture content by
+    tables.build_once."""
     from coldata_spark.operators import ivf
 
-    stamp = _emb_content_stamp(sf_dir)
-    fix_key = hashlib.md5(
-        f"{os.path.abspath(sf_dir)}|maintained-v1".encode()
-    ).hexdigest()[:12]
-    key = hashlib.md5(stamp.encode()).hexdigest()[:12]
-    group = os.path.join(tempfile.gettempdir(), "coldata_ivf_cache", fix_key)
-    root = os.path.join(group, key)
-
-    def _prune_siblings():
-        # prune only completed (_OK) siblings — see _ann_cache_commit
-        for sibling in os.listdir(group):
-            sib = os.path.join(group, sibling)
-            if sibling != key and os.path.exists(os.path.join(sib, "_OK")):
-                shutil.rmtree(sib, ignore_errors=True)
-
-    path = os.path.join(root, "index")
-    cpath = os.path.join(root, "centroids")
-    if os.path.exists(os.path.join(root, "_OK")):
-        _prune_siblings()
-        return path, spark.read.parquet(cpath)
-
-    emb = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    assigned, centroids = ivf.build_ivf(emb, nlist=4)
-    os.makedirs(root, exist_ok=True)
-    ivf.write_ivf(assigned, path)
-    seed_slice = emb.filter(F.col("vec_id") < 200)
-    for i in range(1, 4):
-        batch = seed_slice.select(
-            (F.col("vec_id") + 1_000_000 * i).alias("vec_id"), "embedding"
+    def build(root):
+        path = os.path.join(root, "index")
+        emb = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+        assigned, centroids = ivf.build_ivf(emb, nlist=4)
+        ivf.write_ivf(assigned, path)
+        seed_slice = emb.filter(F.col("vec_id") < 200)
+        for i in range(1, 4):
+            batch = seed_slice.select(
+                (F.col("vec_id") + 1_000_000 * i).alias("vec_id"), "embedding"
+            )
+            ivf.append_to_index(batch, centroids, path)
+        centroids, _report = ivf.maintain_ivf(
+            spark,
+            path,
+            centroids,
+            max_cell_ratio=1.0,  # every above-average cell splits: the pass
+            min_cell_rows=1,  # always exercises a real split at any sf
         )
-        ivf.append_to_index(batch, centroids, path)
-    centroids, _report = ivf.maintain_ivf(
-        spark,
-        path,
-        centroids,
-        max_cell_ratio=1.0,  # every above-average cell splits: the pass
-        min_cell_rows=1,  # always exercises a real split at any sf
+        ivf.vacuum_ivf(spark, path, centroids)
+        centroids.write.mode("overwrite").parquet(os.path.join(root, "centroids"))
+
+    root = build_once("maintained-v1", build, sf_dir)
+    return (
+        os.path.join(root, "index"),
+        spark.read.parquet(os.path.join(root, "centroids")),
     )
-    ivf.vacuum_ivf(spark, path, centroids)
-    centroids.write.mode("overwrite").parquet(cpath)
-    open(os.path.join(root, "_OK"), "w").close()
-    _prune_siblings()
-    return path, spark.read.parquet(cpath)
 
 
 @register(

@@ -121,6 +121,61 @@ def data_version(sf_dir: str) -> tuple:
     return (newest, count, size)
 
 
+# Derived-artifact cache: an IVF index, a PQ codebook, a census, a media
+# fixture — anything deterministic in a fixture's content that a query
+# would otherwise rebuild on every call (the reference builds once and
+# searches many times: renew/build vdb.py:196-212, search vdb.py:88-100).
+import hashlib  # noqa: E402
+import shutil  # noqa: E402
+import tempfile  # noqa: E402
+
+ARTIFACT_ROOT = os.path.join(tempfile.gettempdir(), "coldata_artifacts")
+
+
+def _md5_12(s: str) -> str:
+    return hashlib.md5(s.encode()).hexdigest()[:12]
+
+
+def build_once(kind: str, build, sf_dir: str | None = None) -> str:
+    """Return a directory holding ``build``'s artifacts for ``kind`` over
+    the current content of ``sf_dir``, calling ``build(root)`` only when
+    no completed copy exists.
+
+    Layout: ``ARTIFACT_ROOT/<md5(kind|abspath(sf_dir))>/<md5(data_version)>/``
+    — a regenerated fixture at the same path mints a new content key, so
+    it never serves the previous fixture's artifacts.  ``sf_dir=None``
+    (artifacts that depend on ``kind`` alone) uses a constant content key.
+
+    ``_OK`` is written only after ``build`` returns, so a build that
+    raises leaves no marker and the next call rebuilds in the same dir
+    (builders overwrite).  After a hit or a build, completed siblings —
+    superseded content keys — are pruned, which keeps at most one live
+    copy per (kind, sf_dir) instead of stranding a full copy per
+    regeneration.  Pruning waits for this key's ``_OK``: deleting the old
+    copy before the replacement exists would leave nothing cached if the
+    build failed.  (A reader still using the old copy while the fixture
+    is regenerated in place can lose its files; that is inherent to
+    in-place regeneration, not to the cache.)  A sibling WITHOUT ``_OK``
+    is a concurrent in-progress build of another content key (e.g. two
+    tools racing across a fixture regeneration) and is left alone;
+    deleting it mid-write would corrupt that build."""
+    src, stamp = kind, ""
+    if sf_dir is not None:
+        src = f"{kind}|{os.path.abspath(sf_dir)}"
+        stamp = repr(data_version(sf_dir))
+    group = os.path.join(ARTIFACT_ROOT, _md5_12(src))
+    root = os.path.join(group, _md5_12(stamp))
+    if not os.path.exists(os.path.join(root, "_OK")):
+        os.makedirs(root, exist_ok=True)
+        build(root)
+        open(os.path.join(root, "_OK"), "w").close()
+    for sibling in os.listdir(group):
+        sib = os.path.join(group, sibling)
+        if sib != root and os.path.exists(os.path.join(sib, "_OK")):
+            shutil.rmtree(sib, ignore_errors=True)
+    return root
+
+
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")

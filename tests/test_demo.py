@@ -32,3 +32,54 @@ def test_demo_serve_search_roundtrip(spark, sf_dir, tmp_path):
         assert "<ol>" in body and "doc " in body
     finally:
         srv.shutdown()
+
+
+def test_load_index_hit_reuses_built_centroids(spark, sf_dir, tmp_path, monkeypatch):
+    """The second load_index is a cache hit that serves the index exactly
+    as built: same centroids, same nprobe-2 results.  Re-fitting KMeans
+    on the stored vectors (the old reuse path) moves the centroids, so
+    pruned probes miss the cells the vectors were assigned to."""
+    import os
+    import shutil
+
+    from coldata_spark import demo
+    from coldata_spark import search as S
+    from coldata_spark import tables
+
+    monkeypatch.setattr(tables, "ARTIFACT_ROOT", str(tmp_path / "artifacts"))
+    copy = str(tmp_path / "sf")
+    os.makedirs(copy)
+    shutil.copy(os.path.join(sf_dir, "documents.parquet"), copy)
+
+    built = []
+    real_build_index = S.build_index
+
+    def spy(*a, **kw):
+        built.append(real_build_index(*a, **kw))
+        return built[-1]
+
+    monkeypatch.setattr(S, "build_index", spy)
+    fresh = demo.load_index(spark, copy)
+    ok = os.path.join(os.path.dirname(fresh.path), "_OK")
+    ok_mtime = os.stat(ok).st_mtime_ns
+    hit = demo.load_index(spark, copy)
+    assert len(built) == 1
+    assert os.stat(ok).st_mtime_ns == ok_mtime
+    assert hit.path == fresh.path and hit.nlist == built[0].nlist
+
+    def cents(idx):
+        return sorted((r.centroid_id, list(r.cvec)) for r in idx.centroids.collect())
+
+    assert cents(hit) == cents(built[0])
+
+    docs = load(spark, copy, "documents")
+    queries = [
+        " ".join(r.text.split()[:6])
+        for r in docs.orderBy("doc_id").limit(16).collect()
+    ]
+
+    def rows(idx):
+        out = S.search(spark, idx, docs, queries, k=4, nprobe=2).collect()
+        return sorted((r.q_id, r.rank, r.doc_id) for r in out)
+
+    assert rows(hit) == rows(built[0])

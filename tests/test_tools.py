@@ -2,7 +2,9 @@
 
 - Every ``tools/<name>.py`` path the code cites (in the package, bench.py,
   the tests and the tools themselves) names a file that exists, so a
-  deleted or renamed tool cannot leave a dangling pointer behind.
+  deleted or renamed tool cannot leave a dangling pointer behind.  The
+  same holds for cited plan dumps under ``plans/`` (brace alternatives
+  such as ``_{before,after}.txt`` are each checked).
 - Every tool imports without running its command-line entry (each keeps
   it behind ``if __name__ == "__main__"``): a kept tool that imports a
   deleted one fails here, not the next time someone runs it.
@@ -18,7 +20,8 @@ import pytest
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 TOOLS = os.path.join(REPO, "tools")
-CITED = re.compile(r"tools/(\w+)\.py")
+CITED = re.compile(r"tools/\w+\.py")
+CITED_PLAN = re.compile(r"\bplans/\w[\w./{},-]*")
 
 
 def _sources():
@@ -30,16 +33,45 @@ def _sources():
                     yield os.path.join(root, f)
 
 
-def test_cited_tool_paths_exist():
-    dangling = []
+def _dangling(pattern, exists) -> list[str]:
+    out = []
     for path in _sources():
         with open(path, encoding="utf-8") as fh:
             for lineno, line in enumerate(fh, 1):
-                for name in CITED.findall(line):
-                    if not os.path.isfile(os.path.join(TOOLS, f"{name}.py")):
+                for cited in pattern.findall(line):
+                    if not exists(cited):
                         rel = os.path.relpath(path, REPO)
-                        dangling.append(f"{rel}:{lineno}: tools/{name}.py")
+                        out.append(f"{rel}:{lineno}: {cited}")
+    return out
+
+
+def _brace_expand(path: str) -> list[str]:
+    m = re.search(r"\{([^{}]*)\}", path)
+    if m is None:
+        return [path]
+    return [
+        p
+        for alt in m.group(1).split(",")
+        for p in _brace_expand(path[: m.start()] + alt + path[m.end() :])
+    ]
+
+
+def test_cited_tool_paths_exist():
+    dangling = _dangling(CITED, lambda p: os.path.isfile(os.path.join(REPO, p)))
     assert not dangling, "cited tools that do not exist:\n" + "\n".join(dangling)
+
+
+def test_cited_plan_paths_exist():
+    def exists(cited):
+        return all(
+            os.path.exists(os.path.join(REPO, p.rstrip(".,")))
+            for p in _brace_expand(cited)
+        )
+
+    dangling = _dangling(CITED_PLAN, exists)
+    assert not dangling, "cited plan dumps that do not exist:\n" + "\n".join(
+        dangling
+    )
 
 
 @pytest.mark.parametrize(

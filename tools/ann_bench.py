@@ -30,7 +30,6 @@ import json
 import os
 import shutil
 import sys
-import tempfile
 import time
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -49,10 +48,9 @@ FAMILY = [
 
 
 def _drop_ann_caches() -> None:
-    shutil.rmtree(
-        os.path.join(tempfile.gettempdir(), "coldata_ivf_cache"),
-        ignore_errors=True,
-    )
+    from coldata_spark import tables
+
+    shutil.rmtree(tables.ARTIFACT_ROOT, ignore_errors=True)
 
 
 def _time_once(fn) -> float:
@@ -91,7 +89,6 @@ def main() -> None:
     stamp = _marker_content(tier_dir)
     _pretouch(tier_dir)
 
-    from coldata_spark.operators import ivf
     from coldata_spark.queries import vector_queries as VQ
 
     emb = load(spark, tier_dir, "embeddings")
