@@ -1,5 +1,5 @@
-"""Batch embedding (SURVEY.md §2.8 V1/V2) as an iterator-of-batches
-mapInPandas operator.
+"""Batch embedding (SURVEY.md §2.8 V1/V2): documents through an
+iterator-of-batches mapInPandas operator, query batches on the driver.
 
 The reference embeds 128-text micro-batches through a HuggingFace encoder
 loaded once per process (/root/reference/src/coldata/vdb/embed.py:16-39,
@@ -19,6 +19,12 @@ Scale notes: embedding is embarrassingly parallel — zero shuffles; Arrow
 batch size is the only throughput knob (matches the reference's
 batch_size=128 config.yml:86 when set to 128).  On GPU clusters, pin one
 model per executor via the same iterator hook.
+
+Queries (V2) take the other shape: a search batch is a handful of
+strings, so ``embed_queries`` encodes them on the driver with the same
+encoder and hands Spark a JVM-local relation: a Spark job that starts a
+Python worker costs about 3x a JVM-only one even at 32 rows (SCALE.md
+"IVF probe sides"), far more than encoding 32 strings.
 """
 
 from __future__ import annotations
@@ -30,7 +36,6 @@ import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 DEFAULT_DIM = 64  # matches the embeddings fixture; reference uses 1024 (e5-large)
@@ -140,23 +145,34 @@ def _default_encoder_factory() -> Callable[[list[str]], np.ndarray]:
         return hash_embed_texts
 
 
+def _sized(encoder_factory: EncoderFactory, dim: int) -> EncoderFactory:
+    """Thread ``dim`` into the DEFAULT hash encoder; a custom
+    encoder_factory (or a real transformer) owns its own output width."""
+    if encoder_factory is not _default_encoder_factory or dim == DEFAULT_DIM:
+        return encoder_factory
+
+    def factory():
+        base = _default_encoder_factory()
+        if base is hash_embed_texts:
+            return lambda texts: hash_embed_texts(texts, dim=dim)
+        return base
+
+    return factory
+
+
 def embed_documents(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
     dim: int = DEFAULT_DIM,
     encoder_factory: EncoderFactory = _default_encoder_factory,
-    spread: bool = True,
 ) -> DataFrame:
     """(id, text) -> (id, embedding array<float>) via iterator mapInPandas.
 
     The encoder is constructed once per task and reused across all Arrow
     batches in that task — the executor-lifecycle pattern for model state.
     ``dim`` reaches the DEFAULT hash encoder (a custom encoder_factory
-    owns its own output width); ``spread=False`` skips the fan_out
-    repartition for deliberately-tiny inputs (query batches), where
-    spreading 3 strings across the cluster would construct one model per
-    near-empty task.
+    owns its own output width).
     """
     schema = T.StructType(
         [
@@ -164,14 +180,7 @@ def embed_documents(
             T.StructField("embedding", T.ArrayType(T.FloatType())),
         ]
     )
-    if encoder_factory is _default_encoder_factory and dim != DEFAULT_DIM:
-        # thread the requested width into the default encoder — previously
-        # a non-default dim was accepted and silently ignored
-        def encoder_factory():  # noqa: F811 - deliberate rebind
-            base = _default_encoder_factory()
-            if base is hash_embed_texts:
-                return lambda texts: hash_embed_texts(texts, dim=dim)
-            return base
+    encoder_factory = _sized(encoder_factory, dim)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         encode = encoder_factory()
@@ -183,10 +192,7 @@ def embed_documents(
 
     from coldata_spark.tables import fan_out
 
-    src = df.select(id_col, text_col)
-    if spread:
-        src = fan_out(src)
-    return src.mapInPandas(run, schema=schema)
+    return fan_out(df.select(id_col, text_col)).mapInPandas(run, schema=schema)
 
 
 def embed_queries(
@@ -197,21 +203,21 @@ def embed_queries(
 ) -> DataFrame:
     """V2: embed a (tiny) list of query strings -> (q_id, q_text, q_vec).
 
-    Runs through the same encoder path as documents (vdb.py:88-89 applies
-    the same model to queries)."""
-    df = spark.createDataFrame(
-        [(i, q) for i, q in enumerate(queries)], ["q_id", "q_text"]
-    ).coalesce(1)  # query batches are tiny — one Arrow batch, one worker
-    emb = embed_documents(
-        df,
-        text_col="q_text",
-        id_col="q_id",
-        dim=dim,
-        encoder_factory=encoder_factory,
-        spread=False,  # fan_out would undo the coalesce and build one
-        # encoder per near-empty task just to embed a handful of strings
-    )
-    return (
-        df.join(emb, "q_id")
-        .select("q_id", "q_text", F.col("embedding").alias("q_vec"))
+    Same encoder as documents (vdb.py:88-89 applies one model to both),
+    but run on the driver, as the reference embeds its query batch in
+    its own process (vdb.py:88-100): one encoder per call, one encode
+    over the whole list.  The result is a JVM-local relation
+    (tables.local_frame), so reading it starts no Python worker and its
+    size estimate is exact — which is what sends search.search's batches
+    to search_ivf's pruned collect side.
+    """
+    from coldata_spark.tables import local_frame
+
+    texts = list(queries)
+    encode = _sized(encoder_factory, dim)()
+    vecs = list(encode(texts)) if texts else []  # no model call for an empty search
+    return local_frame(
+        spark,
+        {"q_id": range(len(texts)), "q_text": texts, "q_vec": vecs},
+        "q_id long, q_text string, q_vec array<float>",
     )

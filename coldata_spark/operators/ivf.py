@@ -64,10 +64,22 @@ def build_ivf(
         k=nlist, seed=seed, featuresCol="_features", predictionCol="centroid_id"
     ).fit(fit_df)
     assigned = model.transform(ml_df).drop("_features")
-    centroids = [(i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())]
-    spark = vectors.sparkSession
-    cdf = spark.createDataFrame(centroids, ["centroid_id", "cvec"])
-    return assigned, cdf
+    centers = dict(enumerate(model.clusterCenters()))
+    return assigned, _centroid_frame(vectors.sparkSession, centers)
+
+
+def _centroid_frame(spark: SparkSession, centers: dict) -> DataFrame:
+    """The centroid table (centroid_id bigint, cvec array<double>) from
+    {centroid id: center}, as a JVM-local relation: every probe scans it,
+    and a local relation's scans start no Python worker."""
+    from coldata_spark.tables import local_frame
+
+    ids = sorted(centers)
+    return local_frame(
+        spark,
+        {"centroid_id": ids, "cvec": [centers[i] for i in ids]},
+        "centroid_id bigint, cvec array<double>",
+    )
 
 
 def write_ivf(assigned: DataFrame, path: str) -> None:
@@ -211,16 +223,18 @@ def search_ivf(
       ``centroid_id IN (...)`` filter, which prunes index partitions at
       planning; the per-query cell sets feed knn_join's Arrow kernel,
       which masks each query to its own cells.  The scan never joins or
-      shuffles.
-    * join side (anything larger, or with no estimate — search.search's
-      embedded query frame has none): nothing touches the driver.  The
-      probed cell set is broadcast-semi-joined to the index, and in-cell
-      scores come from Catalyst expressions over a broadcast probe join.
-      Dynamic partition pruning does not fire on this plan, so the scan
-      reads every cell (SCALE.md "IVF probe sides").
+      shuffles.  search.search's query batches take this side: its
+      driver-embedded local relation carries an exact estimate.
+    * join side (anything larger, or with no estimate, such as an RDD
+      scan): nothing touches the driver.  The probed cell set is
+      broadcast-semi-joined to the index, and in-cell scores come from
+      Catalyst expressions over a broadcast probe join.  Dynamic
+      partition pruning does not fire on this plan, so the scan reads
+      every cell (SCALE.md "IVF probe sides").
 
-    Measured (SCALE.md "IVF probe sides"): the join side is faster at
-    sf0.1, the collect side from the 64x embeddings tier up.
+    Measured (SCALE.md "IVF probe sides"): on a pre-embedded parquet
+    query side the join side is faster at sf0.1 and the collect side
+    from the 64x embeddings tier up.
     """
     collect = _estimated_bytes(queries) <= COLLECT_PROBE_MAX_BYTES
     probe = knn_join(
@@ -710,10 +724,7 @@ def maintain_ivf(
         report["splits"][cid] = new_ids
         report["rows_resharded"] += sizes[cid]
 
-    new_centroids = spark.createDataFrame(
-        [(cid, [float(x) for x in v]) for cid, v in sorted(cent_rows.items())],
-        ["centroid_id", "cvec"],
-    )
+    new_centroids = _centroid_frame(spark, cent_rows)
     # post-split profile for the report (audit against the NEW table so
     # the superseded hot cells don't count)
     after = {

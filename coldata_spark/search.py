@@ -12,6 +12,13 @@ main.py):
 Spark shape: build is one batch job writing a centroid-partitioned parquet
 index; search is a small-broadcast plan over the pruned index.  Index
 "renew" (vdb.py:199-201) = overwrite, as in the reference.
+
+A search embeds its queries on the driver into a local relation
+(embed.embed_queries), like the reference's in-process query embed.  The
+batch's exact size estimate sends ivf.search_ivf to its collect side, so
+the index scan reads only the probed cells (a static ``centroid_id IN
+(...)`` partition filter).  The only Python workers a search starts are
+that side's two Arrow kernels: the centroid probe and the in-cell scoring.
 """
 
 from __future__ import annotations
@@ -69,8 +76,11 @@ def build_index(
     ivf.write_ivf(assigned, path)
     # EFFECTIVE nlist: build_ivf clamps k to the training-point count, so
     # a small fresh collection gets fewer cells than requested — callers
-    # reasoning about nprobe fractions need the real number
-    return SearchIndex(path=path, centroids=centroids, nlist=centroids.count())
+    # reasoning about nprobe fractions need the real number.  The centroid
+    # table is a local relation: collecting its rows runs no Spark job,
+    # where count() runs two.
+    nlist = len(centroids.collect())
+    return SearchIndex(path=path, centroids=centroids, nlist=nlist)
 
 
 def search(
@@ -92,12 +102,11 @@ def search(
     # `is None`, not truthiness: an explicit nprobe=0 must not silently
     # become probe-all
     nprobe = index.nlist if nprobe is None else nprobe
-    # cache: the embed stage (per-task encoder construction) would
-    # otherwise re-run for the probe, the in-cell scoring AND the final
-    # q_text join — three model loads per search with a real transformer
-    qdf = E.embed_queries(
-        spark, queries, encoder_factory=encoder_factory
-    ).cache()
+    # embedded once, on the driver, into a local relation: the probe, the
+    # in-cell scoring and the q_text join below all read the same rows
+    # with no re-embed and no cache, and its exact size estimate sends
+    # search_ivf to its pruned collect side
+    qdf = E.embed_queries(spark, queries, encoder_factory=encoder_factory)
     hits = ivf.search_ivf(
         spark,
         index.path,

@@ -235,6 +235,23 @@ def fan_out(df: DataFrame, parts: int | None = None) -> DataFrame:
     return df
 
 
+def local_frame(spark: SparkSession, columns: dict, schema: str) -> DataFrame:
+    """A small driver-side table as a JVM-local relation (``LocalRelation``).
+
+    ``createDataFrame(list)`` plans an RDD scan that a Python worker
+    deserializes on every read, and the optimizer has no size for it.
+    Going through Arrow puts the rows in the plan itself: scanning it
+    starts no Python worker, and its size estimate is exact, so size
+    rules such as ``ivf.COLLECT_PROBE_MAX_BYTES`` see the real bytes.
+    A pyarrow Table rather than pandas, because ``createDataFrame`` falls
+    back to the RDD path for an empty pandas frame; an empty table stays
+    local.  ``columns`` maps column name to values, in ``schema`` order.
+    """
+    import pyarrow as pa
+
+    return spark.createDataFrame(pa.table(columns), schema)
+
+
 def register_views(spark: SparkSession, sf_dir: str, prefix: str = "") -> list[str]:
     """Register every fixture table as a temp view so the full surface is
     reachable from ``spark.sql`` — the engine is DataFrame-first, but a

@@ -98,6 +98,34 @@ def test_query_and_doc_paths_share_encoder(spark):
     np.testing.assert_allclose(by_id[1], direct[1], rtol=1e-6)
 
 
+def test_embed_queries_contract(spark):
+    """V2 embeds on the driver: one encoder per call, and the result is a
+    local relation whose exact size estimate fits search_ivf's collect
+    side."""
+    from coldata_spark.operators import ivf
+    from coldata_spark.operators.similarity import _estimated_bytes
+
+    loads = []
+    queries = [f"query {i} about sensor data" for i in range(32)]
+    out = E.embed_queries(
+        spark,
+        queries,
+        encoder_factory=lambda: E.TinyNumpyEncoder(init_hook=lambda: loads.append(1)),
+    )
+    assert out.schema.simpleString() == (
+        "struct<q_id:bigint,q_text:string,q_vec:array<float>>"
+    )
+    optimized = out._jdf.queryExecution().optimizedPlan()
+    assert optimized.getClass().getSimpleName() == "LocalRelation"
+    assert 0 < _estimated_bytes(out) <= ivf.COLLECT_PROBE_MAX_BYTES
+    rows = out.collect()
+    assert [r.q_text for r in sorted(rows, key=lambda r: r.q_id)] == queries
+    assert loads == [1]  # reading the frame does not re-embed
+
+    wide = E.embed_queries(spark, ["alpha beta", "gamma"], dim=32).collect()
+    assert [len(r.q_vec) for r in wide] == [32, 32]
+
+
 def test_q124_matches_hash_encoder_buckets(spark):
     """The declarative fingerprint (q124) must reproduce the mapInPandas
     hashing encoder's pre-normalization accumulation bucket-for-bucket —

@@ -54,11 +54,17 @@ def test_full_search_pipeline(spark, sf_dir, tmp_path):
     results = (
         best.join(docs, best.parent_id == docs.doc_id)
         .select("q_id", "parent_id", "best_score", "source")
-        .orderBy(F.col("best_score").desc())
+        .orderBy(F.col("best_score").desc(), "parent_id")
     )
-    top = results.first()
+    top, runner_up = results.take(2)
+    # a real tie: the runner-up's first 128-char chunk IS the target's
+    # whole text, so both score the same under the bag-of-words encoder;
+    # parent_id breaks it, as search() does (rank_top_k tie="parent_id")
+    assert runner_up.best_score == top.best_score
+    twin = docs.filter(F.col("doc_id") == runner_up.parent_id).first()
+    assert twin.text[:128] == target.text
     # querying with a document's own text must retrieve that document
-    assert top.parent_id == target.doc_id
+    assert top.parent_id == target.doc_id < runner_up.parent_id
     assert top.best_score > 0.9
 
 

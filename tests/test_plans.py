@@ -174,6 +174,59 @@ def test_partition_pruning_on_ivf_index(spark, sf_dir, tmp_path, monkeypatch):
     assert 0 < read < nlist, f"read {read} of {nlist} cells"
 
 
+SEARCH_NLIST = 8
+
+
+@pytest.fixture(scope="module")
+def search_index(spark, sf_dir, tmp_path_factory):
+    from coldata_spark import search as S
+
+    docs = load(spark, sf_dir, "documents")
+    path = str(tmp_path_factory.mktemp("search_plan") / "index")
+    idx = S.build_index(docs, path, nlist=SEARCH_NLIST)
+    assert idx.nlist == SEARCH_NLIST
+    return docs, idx
+
+
+def test_search_prunes_index_scan_without_python_rdd_stages(spark, search_index):
+    """search() embeds its queries on the driver into a local relation,
+    so search_ivf takes its collect side: the index scan carries a static
+    centroid_id IN (...) partition filter and reads fewer cells than the
+    index has.  The final plan has no pandas UDF, no row-at-a-time Python
+    UDF and no RDD scan, and the call leaves no RDD persisted."""
+    from coldata_spark import search as S
+
+    docs, idx = search_index
+    texts = [r.text for r in docs.orderBy("doc_id").limit(4).collect()]
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    before = persistent().size()
+    out = S.search(spark, idx, docs, texts, k=3, nprobe=2)
+    assert out.collect()  # the metrics below are this execution's
+    assert persistent().size() == before
+    plan = executed_plan(out)
+    for node in ("MapInPandas", "BatchEvalPython", "ExistingRDD"):
+        assert node not in plan, node
+    (scan,) = [
+        s
+        for s in _file_scans(out._jdf.queryExecution().executedPlan())
+        if "centroid_id" in s.toString()
+    ]
+    filters = scan.toString().split("PartitionFilters: [")[1].split("]")[0]
+    assert "centroid_id" in filters and " IN (" in filters, filters
+    read = scan.metrics().apply("numPartitions").value()
+    assert 0 < read < SEARCH_NLIST, f"read {read} of {SEARCH_NLIST} cells"
+
+
+def test_search_empty_query_batch(spark, search_index):
+    """No queries -> an empty frame with the result schema."""
+    from coldata_spark import search as S
+
+    docs, idx = search_index
+    empty = S.search(spark, idx, docs, [], k=3, nprobe=2)
+    assert empty.collect() == []
+    assert empty.schema == S.search(spark, idx, docs, ["x"], k=3, nprobe=2).schema
+
+
 def test_no_cartesian_in_oracle_queries(spark, sf_dir):
     """No registered query may compile to an unbounded CartesianProduct —
     the one pattern guaranteed to die at scale.  (Broadcast nested-loop

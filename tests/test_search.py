@@ -194,6 +194,36 @@ def test_search_parent_ids_with_underscores(spark, sf_dir, tmp_path):
         assert t.doc_id in got, f"query {qid}: {t.doc_id} not in {got}"
 
 
+def _jobs_run(spark, action) -> int:
+    """Number of Spark jobs ``action()`` starts."""
+    sc = spark.sparkContext
+    group = f"count-jobs-{id(action)}"
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # job events arrive async
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_build_index_effective_nlist_without_spark_job(spark, sf_dir, tmp_path):
+    """build_ivf clamps nlist to the training points (3 chunks here), and
+    build_index reads the effective nlist from the centroid table's local
+    rows, which costs no Spark job (count() costs two)."""
+    docs = (
+        load(spark, sf_dir, "documents")
+        .orderBy("doc_id")
+        .limit(3)
+        .select("doc_id", F.substring("text", 1, 60).alias("text"))  # 1 chunk each
+    )
+    idx = S.build_index(docs, str(tmp_path / "tiny_idx"), nlist=16)
+    assert idx.nlist == 3
+    assert _jobs_run(spark, lambda: len(idx.centroids.collect())) == 0
+    assert _jobs_run(spark, idx.centroids.count) > 0  # the counter counts
+
+
 def test_pq_train_ragged_vectors_clear_error(spark):
     """Round-8 ADVICE: np.stack raises numpy's bare 'all input arrays must
     have the same shape' on mixed-length vectors, losing the guarded
