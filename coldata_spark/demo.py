@@ -13,7 +13,7 @@ Builds (or reuses) an IVF index over the documents fixture, embeds the
 queries, searches, and prints ranked results with previews.  Pass
 --sf-dir to point at another corpus.  The index is renewed (vdb.py:199-201)
 whenever the fixture's content stamp changes; a same-content rebuild would
-reproduce the same index, since the KMeans seed is fixed.
+reproduce the same index, since the k-means seed is fixed.
 """
 
 from __future__ import annotations
@@ -41,7 +41,7 @@ def load_index(spark, sf_dir: str) -> S.SearchIndex:
         )
         idx.centroids.write.mode("overwrite").parquet(os.path.join(root, "centroids"))
 
-    root = build_once(f"demo-index|{NLIST}", build, sf_dir)
+    root = build_once(f"demo-index-v2|{NLIST}", build, sf_dir)
     centroids = spark.read.parquet(os.path.join(root, "centroids"))
     return S.SearchIndex(
         path=os.path.join(root, "index"), centroids=centroids, nlist=centroids.count()

@@ -4,8 +4,9 @@ The reference builds a Milvus IVF_FLAT index (nlist=128 k-means cells,
 /root/reference/src/coldata/vdb/vdb.py:196-212, config.yml:79-82) and probes
 nprobe cells per search (vdb.py:88-100).  Spark-native re-expression:
 
-  build:  MLlib KMeans fit on (a sample of) the vectors -> assign every
-          vector its centroid_id -> write the vector table AS PARQUET
+  build:  numpy k-means fit on a bounded driver sample of the vectors ->
+          assign every vector its metric-nearest centroid_id (the same
+          rule append and probe use) -> write the vector table AS PARQUET
           PARTITIONED BY centroid_id.  Milvus's in-memory cell skip becomes
           parquet partition pruning — the scan literally never reads the
           cells a query doesn't probe.  Rebuild (renew, vdb.py:199-201) is
@@ -16,8 +17,9 @@ nprobe cells per search (vdb.py:88-100).  Spark-native re-expression:
           (pushed-down centroid_id IN (...) filter) -> exact distance
           within cells -> per-query top-k window.
 
-At 100 TB: the KMeans fit runs on a bounded sample (not the full corpus);
-the assign pass is one shuffle-free map; search IO drops by ~nprobe/nlist.
+At 100 TB: the k-means fit reads at most SAMPLE_PER_CENTROID x nlist
+vectors (not the full corpus); the assign pass is one shuffle-free map;
+search IO drops by ~nprobe/nlist.
 nprobe == nlist degenerates to the exact path, matching the reference's own
 operating point (config.yml:81-82) — recall 1.0 by construction.
 """
@@ -36,36 +38,86 @@ from coldata_spark.operators.similarity import (
 )
 
 
+# Driver sample rows per centroid a k-means fit reads at most (the Faiss
+# max_points_per_centroid guideline): a fit costs O(nlist), not O(corpus).
+SAMPLE_PER_CENTROID = 256
+
+
 def build_ivf(
     vectors: DataFrame,
     nlist: int = 16,
     vec_col: str = "embedding",
-    sample_fraction: float = 1.0,
+    metric: str = "COSINE",
     seed: int = 42,
 ) -> tuple[DataFrame, DataFrame]:
-    """Fit KMeans(nlist) and return (assigned_vectors, centroids).
+    """Fit nlist k-means cells and return (assigned_vectors, centroids).
 
     assigned_vectors = input + centroid_id int column;
     centroids = (centroid_id, cvec array<double>).
-    """
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
 
-    ml_df = vectors.withColumn(
-        "_features", array_to_vector(V.as_double(F.col(vec_col)))
-    )
-    fit_df = ml_df.sample(sample_fraction, seed=seed) if sample_fraction < 1.0 else ml_df
-    # k must not exceed the training-point count (KMeans aborts otherwise);
-    # a config-sized nlist (e.g. the reference's 128) on a small fresh
-    # collection clamps to the data and grows on the next renew.  Index
-    # build is a batch maintenance job, so one count() here is fine.
-    nlist = max(1, min(nlist, fit_df.count()))
-    model = KMeans(
-        k=nlist, seed=seed, featuresCol="_features", predictionCol="centroid_id"
-    ).fit(fit_df)
-    assigned = model.transform(ml_df).drop("_features")
-    centers = dict(enumerate(model.clusterCenters()))
-    return assigned, _centroid_frame(vectors.sparkSession, centers)
+    The fit reads a driver sample of at most SAMPLE_PER_CENTROID * nlist
+    vectors; nlist clamps to its distinct points (none for an empty
+    input).  assign_to_centroids, the rule append, maintenance and the
+    probe share, places every vector in its ``metric``-nearest cell."""
+    sample = _sample_vectors(vectors, vec_col, SAMPLE_PER_CENTROID * nlist)
+    centers = dict(enumerate(_kmeans(sample, nlist, seed, metric).tolist()))
+    centroids = _centroid_frame(vectors.sparkSession, centers)
+    return assign_to_centroids(vectors, centroids, vec_col, metric), centroids
+
+
+def _sample_vectors(vectors: DataFrame, vec_col: str, limit: int):
+    """At most ``limit`` vectors as an (n, dim) float64 array: the first in
+    xxhash64 order of the vector, a pseudo-random sample independent of
+    partitioning, fetched by one top-k job as Arrow batches (toPandas; a
+    row-serialized collect is ~6x slower on arrays, SCALE.md "q30")."""
+    import numpy as np
+
+    pdf = vectors.select(vec_col).orderBy(F.xxhash64(vec_col)).limit(limit).toPandas()
+    # Pre-check raggedness directly rather than parsing np.stack's
+    # exception text (numpy wording is not a stable API); np.asarray
+    # conversion errors (non-numeric payloads) keep their own diagnosis
+    if len({len(v) for v in pdf[vec_col]}) > 1:
+        raise ValueError(f"ragged vectors in {vec_col!r} (mixed lengths)")
+    if not len(pdf):
+        return np.zeros((0, 0))
+    return np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
+
+
+def _kmeans(x, k: int, seed: int, metric: str = "L2"):
+    """k-means++ seeding, then 20 Lloyd's iterations over the rows of ``x``:
+    a (min(k, distinct rows), dim) center array.  For COSINE it is
+    spherical (rows and centers unit-normalized), so its squared-distance
+    argmin is the cosine argmax assign_to_centroids ranks cells by."""
+    import numpy as np
+
+    def unit(a):
+        return a / np.maximum(np.linalg.norm(a, axis=1, keepdims=True), 1e-12)
+
+    spherical = metric.upper() == "COSINE"
+    x = unit(x) if spherical else x
+    x2 = (x * x).sum(axis=1)
+
+    def sqdist(c):
+        return np.maximum(x2[:, None] - 2.0 * x @ c.T + (c * c).sum(axis=1), 0.0)
+
+    k = min(k, len(np.unique(x, axis=0)) if len(x) else 0)
+    rng = np.random.default_rng(seed)
+    centers = x[rng.integers(len(x), size=min(k, 1))]
+    near = sqdist(centers).min(axis=1, initial=np.inf)
+    # draws ~ squared distance to the nearest seed: never a seed's duplicate
+    while len(centers) < k:
+        c = x[rng.choice(len(x), p=near / near.sum())][None]
+        centers = np.vstack([centers, c])
+        near = np.minimum(near, sqdist(c)[:, 0])
+    for _ in range(20 if len(centers) else 0):
+        labels = sqdist(centers).argmin(axis=1)
+        sums = np.zeros_like(centers)
+        np.add.at(sums, labels, x)
+        counts = np.bincount(labels, minlength=len(centers))
+        hit = counts > 0  # an emptied cell keeps its previous center
+        centers[hit] = sums[hit] / counts[hit, None]
+        centers = unit(centers) if spherical else centers
+    return centers
 
 
 def _centroid_frame(spark: SparkSession, centers: dict) -> DataFrame:
@@ -85,12 +137,18 @@ def _centroid_frame(spark: SparkSession, centers: dict) -> DataFrame:
 def write_ivf(assigned: DataFrame, path: str) -> None:
     """Persist the index: parquet partitioned by centroid_id (S9's Milvus
     insert+flush; renew = overwrite)."""
-    (
-        assigned.repartition("centroid_id")
-        .write.mode("overwrite")
-        .partitionBy("centroid_id")
-        .parquet(path)
-    )
+    _write_cells(assigned, path, "overwrite")
+
+
+def _write_cells(assigned: DataFrame, path: str, mode: str) -> None:
+    assigned.repartition("centroid_id").write.mode(mode).partitionBy(
+        "centroid_id"
+    ).parquet(path)
+
+
+# Centroid sets above this many floats (nlist x dim) reach
+# assign_to_centroids' argmin as a broadcast column, not a literal.
+MAX_LITERAL_CELLS = 200_000
 
 
 def assign_to_centroids(
@@ -98,82 +156,76 @@ def assign_to_centroids(
     centroids: DataFrame,
     vec_col: str = "embedding",
     metric: str = "COSINE",
-    max_literal_cells: int = 200_000,
 ) -> DataFrame:
     """Assign each vector to its nearest FIXED centroid — a per-row
-    argmin over the centroid set embedded as a LITERAL array of structs:
-    one shuffle-free map-side projection, no join, no window, no
-    synthetic row ids.  (The previous cross-join + Window(partitionBy
-    monotonically_increasing_id) amplified every row nlist-fold and paid
-    a full exchange per ingest; it also keyed on a non-deterministic id,
-    which a stage retry can recompute differently.)
+    argmin over the centroid set as one array of (cid, cvec, norm)
+    structs: a shuffle-free map-side projection, no window, no synthetic
+    row ids.  (A cross-join + Window(partitionBy a row id) amplified every
+    row nlist-fold, paid a full exchange per ingest, and keyed on an id a
+    stage retry can recompute differently.)
 
-    Per-pair arithmetic is the SAME score_expr as before, so assignments
-    (and the q33 oracle) are bit-identical.  Ties break toward the lowest
-    centroid_id, exactly like the old (score, _cid) ordering.  Beyond
-    ``max_literal_cells`` (= nlist x dim expression literals — far above
-    any sane IVF configuration) the broadcast-join fallback keeps very
-    large centroid sets workable."""
-    cents = sorted(
-        centroids.select("centroid_id", "cvec").collect(),
-        key=lambda r: r["centroid_id"],
-    )
-    dim = len(cents[0]["cvec"]) if cents else 0
-    if not cents or len(cents) * dim > max_literal_cells:
-        return _assign_via_join(vectors, centroids, vec_col, metric)
+    The array is an expression LITERAL with one array literal per
+    centroid (per-float literals took 1.3-1.7 s to plan at nlist 32 x dim
+    64 on 4 cores, these 0.6-0.7 s).  Beyond ``MAX_LITERAL_CELLS`` floats
+    (far above any sane IVF configuration) the same array arrives as a
+    broadcast one-row column instead.  COSINE scores are V.cosine's bits
+    with each norm (V.norm's sequential fold) computed once, not once per
+    pair.  Ties break toward the lowest centroid_id."""
+    from functools import reduce
+
+    import numpy as np
+
+    def literal(r):
+        cvec = np.asarray(r["cvec"], dtype=np.float64)
+        norm = float(np.sqrt(reduce(lambda t, x: t + x * x, cvec.tolist(), 0.0)))
+        return F.struct(
+            F.lit(int(r["centroid_id"])).alias("cid"),
+            F.lit(cvec).alias("cvec"),
+            F.lit(norm).alias("n"),
+        )
+
+    cents = centroids.select("centroid_id", "cvec").collect()
+    rows = vectors
+    if cents and len(cents) * len(cents[0]["cvec"]) <= MAX_LITERAL_CELLS:
+        arr = F.array(*map(literal, cents))
+    else:
+        cvec = V.as_double(F.col("cvec"))
+        ids = F.col("centroid_id").cast("int")
+        one = F.struct(ids.alias("cid"), cvec.alias("cvec"), V.norm(cvec).alias("n"))
+        rows = vectors.crossJoin(
+            F.broadcast(centroids.agg(F.collect_list(one).alias("_cents")))
+        )
+        arr = F.col("_cents")
     desc = V.METRIC_DESCENDING[metric.upper()]
-    arr = F.array(
-        *[
-            F.struct(
-                F.lit(int(r["centroid_id"])).alias("cid"),
-                F.array(*[F.lit(float(x)) for x in r["cvec"]]).alias("cvec"),
-            )
-            for r in cents
-        ]
-    )
-    vec = V.as_double(F.col(vec_col))
-    # struct comparison orders by fields in sequence: (score, tiebreak) —
-    # for descending metrics array_max with tiebreak=-cid picks the
-    # highest score then the LOWEST cid, matching the old row_number order
-    scored = F.transform(
-        arr,
-        lambda c: F.struct(
-            V.score_expr(metric, vec, c["cvec"]).alias("s"),
-            (-c["cid"] if desc else c["cid"]).alias("t"),
-        ),
-    )
-    best = F.array_max(scored) if desc else F.array_min(scored)
-    cid = (-best["t"] if desc else best["t"]).cast("int")
-    return vectors.withColumn("centroid_id", cid)
+    cosine = metric.upper() == "COSINE"
 
+    def nearest(v, vn):
+        def score(c):
+            if cosine:
+                return V.dot(v, c["cvec"]) / F.greatest(vn * c["n"], F.lit(1e-12))
+            return V.score_expr(metric, v, c["cvec"])
 
-def _assign_via_join(
-    vectors: DataFrame,
-    centroids: DataFrame,
-    vec_col: str = "embedding",
-    metric: str = "COSINE",
-) -> DataFrame:
-    """Fallback for centroid sets too large to inline as literals:
-    broadcast join + per-row arg-best window (nlist-fold amplification +
-    one exchange — acceptable only at extreme nlist x dim)."""
-    from pyspark.sql import Window as W
+        # struct comparison orders by fields in sequence: (score, tiebreak)
+        # — for descending metrics array_max with tiebreak=-cid picks the
+        # highest score then the LOWEST cid
+        scored = F.transform(
+            arr,
+            lambda c: F.struct(
+                score(c).alias("s"), (-c["cid"] if desc else c["cid"]).alias("t")
+            ),
+        )
+        best = F.array_max(scored) if desc else F.array_min(scored)
+        return -best["t"] if desc else best["t"]
 
-    desc = V.METRIC_DESCENDING[metric.upper()]
-    cents = centroids.select(
-        F.col("centroid_id").alias("_cid"), F.col("cvec").alias("_cvec")
-    )
-    score = V.score_expr(metric, V.as_double(F.col(vec_col)), F.col("_cvec"))
-    w = W.partitionBy(F.col("_row")).orderBy(
-        score.desc() if desc else score.asc(), F.col("_cid")
-    )
-    withrow = vectors.withColumn("_row", F.monotonically_increasing_id())
-    return (
-        withrow.join(F.broadcast(cents))
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .withColumnRenamed("_cid", "centroid_id")
-        .drop("_cvec", "_rn", "_row")
-    )
+    # one-element transforms bind the row's vector and norm to lambda
+    # variables; an outer expression is re-evaluated on every lambda call
+    cid = F.transform(
+        F.array(V.as_double(F.col(vec_col))),
+        lambda v: F.transform(
+            F.array(V.norm(v) if cosine else F.lit(0.0)), lambda vn: nearest(v, vn)
+        )[0],
+    )[0]
+    return rows.withColumn("centroid_id", cid.cast("int")).drop("_cents")
 
 
 def append_to_index(
@@ -189,12 +241,7 @@ def append_to_index(
     ingest incremental — cells drift only if the data distribution does,
     at which point build_ivf refits (the standard IVF maintenance trade)."""
     assigned = assign_to_centroids(new_vectors, centroids, vec_col, metric)
-    (
-        assigned.repartition("centroid_id")
-        .write.mode("append")
-        .partitionBy("centroid_id")
-        .parquet(path)
-    )
+    _write_cells(assigned, path, "append")
 
 
 # Query batches whose optimizer size estimate is at most this many bytes
@@ -237,21 +284,8 @@ def search_ivf(
     from the 64x embeddings tier up.
     """
     collect = _estimated_bytes(queries) <= COLLECT_PROBE_MAX_BYTES
-    probe = knn_join(
-        queries,
-        centroids.select(
-            F.col("centroid_id").alias("vec_id"), F.col("cvec").alias("embedding")
-        ),
-        k=nprobe,
-        metric=metric,
-        score_decimals=None,
-        # the join side's contract is that NOTHING touches the driver and no
-        # size gate applies, however large the query batch — so its probe
-        # must take the collect-free expr engine (the arrow engine collects
-        # the query side and enforces the 64 MB gate)
-        strategy="auto" if collect else "expr",
-        force=not collect,
-    ).select(F.col("q_id"), F.col("vec_id").alias("centroid_id"))
+    # the join side's contract is that NOTHING touches the driver
+    probe = _probe(queries, centroids, nprobe, metric, collect_free=not collect)
     index = spark.read.parquet(index_path)
     if collect:
         cells: dict = {}
@@ -285,6 +319,19 @@ def search_ivf(
     return rank_top_k(scored, k, metric)
 
 
+def _probe(queries, centroids, nprobe, metric, collect_free):
+    """(q_id, centroid_id) for each query's nprobe best cells.  A
+    ``collect_free`` probe takes knn_join's expr engine: the arrow engine
+    collects the query side and caps it at 64 MB."""
+    cells = centroids.select(
+        F.col("centroid_id").alias("vec_id"), F.col("cvec").alias("embedding")
+    )
+    return knn_join(
+        queries, cells, k=nprobe, metric=metric, score_decimals=None,
+        strategy="expr" if collect_free else "auto", force=collect_free,
+    ).select("q_id", F.col("vec_id").alias("centroid_id"))
+
+
 def search_exact(
     queries: DataFrame, vectors: DataFrame, k: int = 4, metric: str = "COSINE"
 ) -> DataFrame:
@@ -307,7 +354,7 @@ def pq_train(
     subvectors of D/m dims, k-means each subspace into ``k`` codes.
 
     Returns a numpy codebook of shape (m, k, D/m).  Training runs on a
-    driver-side SAMPLE (numpy k-means, deterministic seed) — at 100 TB the
+    driver-side SAMPLE (_kmeans, deterministic seed) — at 100 TB the
     codebook is trained once on ~10k vectors and broadcast; training cost
     is O(sample), never O(corpus).  Compression: D floats -> m uint8 codes
     (e.g. 64-dim f32 = 256 B -> 4 B, 64x), which is what lets a trillion-
@@ -315,47 +362,22 @@ def pq_train(
     """
     import numpy as np
 
-    # toPandas, not collect: limit().collect()'s row-serialized
-    # CollectLimit take-ramp is the slow path for array columns (measured
-    # ~6x on knn_join's 8-row query batch, SCALE.md "q30"; this sample is
-    # thousands of rows), while toPandas streams one Arrow batch
-    pdf = vectors.select(vec_col).limit(sample_limit).toPandas()
-    # Pre-check raggedness directly rather than parsing np.stack's
-    # exception text (numpy wording is not a stable API); np.asarray
-    # conversion errors (non-numeric payloads) keep their own diagnosis
-    if len(pdf) and len({len(v) for v in pdf[vec_col]}) > 1:
-        raise ValueError(
-            f"pq_train: ragged vectors in {vec_col!r} (mixed lengths)"
-        )
-    sample = (
-        np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-        if len(pdf)
-        else np.zeros((0,))
-    )
-    if sample.ndim != 2 or sample.shape[0] == 0:
+    sample = _sample_vectors(vectors, vec_col, sample_limit)
+    if not sample.size:
         raise ValueError("pq_train: no vectors to train on")
     n, d = sample.shape
     if d % m:
         raise ValueError(f"dim {d} not divisible by m={m}")
-    # codes cannot exceed the training population (same clamp reason as
-    # build_ivf's k<=n): a fresh small collection trains a smaller
+    # codes cannot exceed the training population (the same clamp as
+    # build_ivf's cells): a fresh small collection trains a smaller
     # codebook and re-trains bigger on the next renew
-    k = max(1, min(k, n))
-    sub = d // m
-    rng = np.random.default_rng(seed)
+    k, sub = min(k, n), d // m
     codebook = np.zeros((m, k, sub))
     for j in range(m):
-        x = sample[:, j * sub : (j + 1) * sub]
-        # plain Lloyd's iterations, deterministic init from the sample
-        centers = x[rng.choice(n, size=k, replace=False)]
-        for _ in range(20):
-            d2 = ((x[:, None, :] - centers[None, :, :]) ** 2).sum(axis=2)
-            labels = d2.argmin(axis=1)
-            for c in range(k):
-                pts = x[labels == c]
-                if len(pts):
-                    centers[c] = pts.mean(axis=0)
-        codebook[j] = centers
+        centers = _kmeans(sample[:, j * sub : (j + 1) * sub], k, seed + j)
+        # a subspace with fewer distinct values than k repeats its centers:
+        # a duplicate code never beats its first copy in pq_encode's argmin
+        codebook[j] = centers[np.arange(k) % len(centers)]
     return codebook
 
 
@@ -487,21 +509,7 @@ def search_ivf_pq(
 
     m, kc, sub = codebook.shape
 
-    probe = knn_join(
-        queries,
-        centroids.select(
-            F.col("centroid_id").alias("vec_id"), F.col("cvec").alias("embedding")
-        ),
-        k=nprobe,
-        metric=metric,
-        score_decimals=None,
-        # the collect-free contract below requires the expr probe engine:
-        # the arrow engine collects the query side and enforces a 64 MB
-        # gate, which would cap/crash exactly the large batches this path
-        # exists for
-        strategy="expr",
-        force=True,
-    ).select("q_id", F.col("vec_id").alias("centroid_id"))
+    probe = _probe(queries, centroids, nprobe, metric, collect_free=True)
 
     # Keep the probed cell set DISTRIBUTED: a broadcast semi-join prunes the
     # index without funneling probe lists through the driver, so a 1e6-query
@@ -589,24 +597,28 @@ def search_ivf_pq(
 # append_to_index / streaming vector ingest grow FIXED cells; under drift
 # the hottest cells skew, and with them probe cost (a probed hot cell
 # scans ~ratio x the average) and recall-per-nprobe.  The reference's only
-# answer is drop-and-rebuild (renew, vdb.py:199-201) — O(corpus) per
-# maintenance pass.  The incremental answer here is cell-level
-# copy-on-write, the move that stays O(hot cells) at 100 TB:
+# answer is drop-and-rebuild (renew, vdb.py:199-201) — O(corpus) writes
+# per maintenance pass.  The incremental answer here is cell-level
+# copy-on-write, whose writes stay O(touched cells) at 100 TB:
 #
 #   audit      per-cell size profile (the q133 skew-profile shape applied
 #              to the index's own partitions).
-#   split      each hot cell re-trains a LOCAL k-means (build_ivf on just
-#              that cell — sample-bounded, partition-pruned scan) and its
-#              members are appended under FRESH centroid ids.  Purely
-#              additive: no live partition is touched.
-#   commit     the new centroid table (old minus hot plus sub-centroids)
-#              is the metadata pointer swap.  search_ivf probes only
-#              cells listed in the centroid table, so readers holding the
-#              OLD table never see the new cells and readers of the NEW
-#              table never probe the old hot cell — no reader ever sees a
-#              vector twice, and a crash anywhere before the centroid
-#              publish leaves the index exactly as it was (the part-built
-#              sub-cells are unreferenced bytes, not corruption).
+#   split      each hot cell's members fit a LOCAL k-means (a bounded
+#              sample of that cell, partition-pruned).  Every live row is
+#              then re-assigned against the new table by the build's rule,
+#              so rows of a neighbouring cell that a sub-centroid now
+#              attracts move too.  The hot cells and every cell that loses
+#              or gains rows are written again under FRESH centroid ids.
+#              Purely additive: no live partition is touched.
+#   commit     the new centroid table (untouched cells, sub-centroids,
+#              renamed touched cells) is the metadata pointer swap.
+#              search_ivf probes only cells listed in the centroid table,
+#              so readers holding the OLD table never see the new cells
+#              and readers of the NEW table never probe a superseded one —
+#              no reader ever sees a vector twice, and a crash anywhere
+#              before the centroid publish leaves the index exactly as it
+#              was (the part-built cells are unreferenced bytes, not
+#              corruption).
 #   vacuum     partition dirs not referenced by the centroid table are
 #              garbage — deleted post-commit, and a re-run heals any
 #              crash residue (the Iceberg/Delta orphan-file pattern).
@@ -648,16 +660,16 @@ def maintain_ivf(
 ) -> tuple[DataFrame, dict]:
     """One maintenance pass: split every cell whose size exceeds
     ``max_cell_ratio`` x the mean (and ``min_cell_rows`` — tiny indexes
-    don't thrash) into ~size/mean sub-cells via local k-means, appending
-    members under fresh centroid ids.  Returns (new_centroids, report);
-    the CALLER commits by persisting new_centroids wherever it keeps the
-    centroid table, then reclaims the superseded partitions with
-    vacuum_ivf.  No-op (same centroids object, report['splits'] empty)
-    when nothing is hot — safe to drive from scheduler.run_scheduled at
-    the refresh cadence, exactly like layout.maintain_layout: each pass
-    does bounded work (``max_splits_per_pass`` caps it; the next pass
-    picks up the rest), and an idle pass costs one partition-column scan.
-    """
+    don't thrash) into ~size/mean sub-cells via local k-means, re-place
+    every row the new table moves, and append the touched cells under
+    fresh ids (report['splits']: hot cell -> sub-cells, report['renamed']:
+    other touched cell -> new id).  Returns (new_centroids, report); the
+    CALLER commits by persisting new_centroids, then reclaims superseded
+    partitions with vacuum_ivf.  No-op (same centroids object) when
+    nothing is hot — safe to drive from scheduler.run_scheduled like
+    layout.maintain_layout: a pass splits at most ``max_splits_per_pass``
+    cells and writes only touched ones, reading every live vector once to
+    find them; an idle pass costs one partition-column scan."""
     import numpy as np
 
     # nlist rows — bounded by index configuration (same justified-collect
@@ -666,24 +678,15 @@ def maintain_ivf(
         int(r["centroid_id"]): int(r["n"])
         for r in audit_ivf_cells(spark, index_path, centroids).collect()
     }
-    report: dict = {
-        "cells_before": len(sizes),
-        "max_ratio_before": None,
-        "splits": {},
-        "rows_resharded": 0,
-    }
+    report: dict = {"cells_before": len(sizes), "max_ratio_before": None,
+                     "splits": {}, "renamed": {}, "rows_resharded": 0}
     if not sizes:
         return centroids, report
     mean = sum(sizes.values()) / len(sizes)
     report["max_ratio_before"] = round(max(sizes.values()) / mean, 2)
-    hot = sorted(
-        (
-            cid
-            for cid, n in sizes.items()
-            if n > max_cell_ratio * mean and n >= min_cell_rows
-        ),
-        key=lambda c: -sizes[c],
-    )[:max_splits_per_pass]
+    floor = max_cell_ratio * mean
+    hot = [c for c, n in sizes.items() if n > floor and n >= min_cell_rows]
+    hot = sorted(hot, key=lambda c: -sizes[c])[:max_splits_per_pass]
     if not hot:
         return centroids, report
 
@@ -691,38 +694,41 @@ def maintain_ivf(
         int(r["centroid_id"]): list(r["cvec"])
         for r in centroids.select("centroid_id", "cvec").collect()
     }
-    next_id = max(cent_rows) + 1
+    old_ids, next_id = set(cent_rows), max(cent_rows) + 1
+    index = spark.read.parquet(index_path)
     for cid in hot:
         k = int(min(max(2, round(sizes[cid] / mean)), 16))
         # partition-pruned scan: only this cell's directory is read
-        cell = (
-            spark.read.parquet(index_path)
-            .filter(F.col("centroid_id") == cid)
-            .drop("centroid_id")
-        )
-        sub_assigned, sub_cents = build_ivf(
-            cell, nlist=k, vec_col=vec_col, seed=seed
-        )
-        new_ids = list(range(next_id, next_id + k))
-        next_id += k
-        remap = F.array(*[F.lit(i) for i in new_ids])
-        (
-            sub_assigned.withColumn(
-                "centroid_id",
-                F.element_at(remap, F.col("centroid_id") + 1),
-            )
-            .repartition("centroid_id")
-            .write.mode("append")  # purely additive: fresh partition dirs
-            .partitionBy("centroid_id")
-            .parquet(index_path)
-        )
-        for sid, r in zip(
-            new_ids, sub_cents.orderBy("centroid_id").collect()
-        ):
-            cent_rows[sid] = list(r["cvec"])
+        cell = index.filter(F.col("centroid_id") == cid)
+        sample = _sample_vectors(cell, vec_col, SAMPLE_PER_CENTROID * k)
+        subs = _kmeans(sample, k, seed, metric).tolist()
+        report["splits"][cid] = list(range(next_id, next_id + len(subs)))
+        cent_rows.update(zip(report["splits"][cid], subs))
+        next_id += len(subs)
         del cent_rows[cid]
-        report["splits"][cid] = new_ids
-        report["rows_resharded"] += sizes[cid]
+    # one pass over the live rows finds the cells the new table moves rows
+    # out of or into; those are rewritten under fresh ids, the rest stay
+    placed = assign_to_centroids(
+        index.join(
+            F.broadcast(centroids.select("centroid_id")), "centroid_id", "left_semi"
+        ).withColumnRenamed("centroid_id", "_old"),
+        _centroid_frame(spark, cent_rows),
+        vec_col,
+        metric,
+    )
+    moves = placed.filter(F.col("_old") != F.col("centroid_id"))
+    moves = moves.select("_old", "centroid_id").distinct().collect()
+    touched = {c for r in moves for c in r} & old_ids
+    renamed = {c: next_id + i for i, c in enumerate(sorted(touched - set(hot)))}
+    fresh = np.arange(next_id + len(renamed))  # old id -> written id
+    for c, cid in renamed.items():
+        cent_rows[cid] = cent_rows.pop(c)
+        fresh[c] = cid
+    rewrite = placed.filter(F.col("_old").isin(sorted(touched))).withColumn(
+        "centroid_id", F.element_at(F.lit(fresh), F.col("centroid_id") + 1)
+    )
+    _write_cells(rewrite.drop("_old"), index_path, "append")  # fresh dirs only
+    report.update(renamed=renamed, rows_resharded=sum(sizes[c] for c in touched))
 
     new_centroids = _centroid_frame(spark, cent_rows)
     # post-split profile for the report (audit against the NEW table so

@@ -10,7 +10,7 @@ store.  Re-expressed Spark-first:
     window.  This is the oracle-checkable baseline (nprobe == nlist in the
     reference config means it effectively did exact search anyway —
     config.yml:81-82).
-  * IVF path    — MLlib KMeans fit on a sample -> assign centroid_id ->
+  * IVF path    — k-means fit on a driver sample -> assign centroid_id ->
     vectors table written partitioned by centroid_id; searches score the
     query against centroids first and scan only the nprobe best partitions
     (partition pruning does the cell skip Milvus does in-memory,

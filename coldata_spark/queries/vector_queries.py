@@ -497,7 +497,7 @@ def _ivf_index_cached(
         ivf.write_ivf(assigned, os.path.join(root, "index"))
         centroids.write.mode("overwrite").parquet(os.path.join(root, "centroids"))
 
-    root = build_once(f"ivf|{nlist}|{flavor}", build, sf_dir)
+    root = build_once(f"ivf-v2|{nlist}|{flavor}", build, sf_dir)
     return (
         os.path.join(root, "index"),
         spark.read.parquet(os.path.join(root, "centroids")),
@@ -537,7 +537,7 @@ def _ivf_pq_index_cached(
         with open(os.path.join(root, "meta.json"), "w") as fh:
             json.dump({"n": emb.count()}, fh)
 
-    root = build_once(f"ivfpq|{nlist}|{m}|{k_codes}", build, sf_dir)
+    root = build_once(f"ivfpq-v2|{nlist}|{m}|{k_codes}", build, sf_dir)
     with open(os.path.join(root, "meta.json")) as fh:
         n = json.load(fh)["n"]
     return (
@@ -1611,7 +1611,7 @@ def _maintained_ivf_cached(spark: SparkSession, sf_dir: str):
         ivf.vacuum_ivf(spark, path, centroids)
         centroids.write.mode("overwrite").parquet(os.path.join(root, "centroids"))
 
-    root = build_once("maintained-v1", build, sf_dir)
+    root = build_once("maintained-v2", build, sf_dir)
     return (
         os.path.join(root, "index"),
         spark.read.parquet(os.path.join(root, "centroids")),

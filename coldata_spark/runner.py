@@ -13,9 +13,9 @@ Here the same flow, Spark-first, driven by the SAME config file via
               applies), per-source politeness from the config;
   upload   -> operators.upsert.merge_append on the configured pk column
               into a parquet store named by the config's db/collection;
-  index    -> search.build_index (chunk -> embed -> KMeans cells ->
-              centroid-partitioned write) when ``vdb.milvus.renew``;
-  search   -> search.search with the config's nprobe/limit/metric.
+  index    -> search.build_index (chunk -> embed -> metric k-means cells
+              -> centroid-partitioned write) when ``vdb.milvus.renew``;
+  search   -> search.search with the config's nprobe/limit.
 
 The fetcher stays injectable (the same seam every crawl test uses): pass a
 real HTTP fetcher factory in production, a recorded/fake one in tests —
@@ -107,6 +107,7 @@ def run_once(
             id_col=pk,
             text_col="info",
             nlist=cfg.vdb.nlist,
+            metric=cfg.vdb.metric_type,
             encoder_factory=encoder_factory,
         )
         summary["index"] = index_path
@@ -118,7 +119,6 @@ def run_once(
                 search_queries,
                 k=cfg.vdb.limit,
                 nprobe=cfg.vdb.nprobe,
-                metric=cfg.vdb.metric_type,
                 id_col=pk,
                 text_col="info",
                 encoder_factory=encoder_factory,

@@ -37,11 +37,13 @@ from coldata_spark.operators.similarity import group_best, rank_top_k
 @dataclass
 class SearchIndex:
     """Handle to a built index: path of the partitioned vector table plus
-    the (tiny) centroid table, mirroring the loaded Milvus collection."""
+    the (tiny) centroid table, mirroring the loaded Milvus collection;
+    ``metric`` fitted and assigned the cells, and search() probes by it."""
 
     path: str
     centroids: DataFrame
     nlist: int
+    metric: str = "COSINE"
 
 
 def build_index(
@@ -50,9 +52,10 @@ def build_index(
     id_col: str = "doc_id",
     text_col: str = "text",
     nlist: int = 16,
+    metric: str = "COSINE",
     encoder_factory=E._default_encoder_factory,
 ) -> SearchIndex:
-    """vdb.update: chunk -> embed -> KMeans cells -> partitioned write."""
+    """vdb.update: chunk -> embed -> k-means cells -> partitioned write."""
     starts = TX.chunk_starts(F.length(text_col))
     chunks = documents.select(
         F.col(id_col).alias("parent_id"),
@@ -72,15 +75,15 @@ def build_index(
     vectors = emb.join(chunks.select("chunk_id", "parent_id"), "chunk_id").select(
         F.col("chunk_id").alias("vec_id"), "parent_id", "embedding"
     )
-    assigned, centroids = ivf.build_ivf(vectors, nlist=nlist)
+    assigned, centroids = ivf.build_ivf(vectors, nlist=nlist, metric=metric)
     ivf.write_ivf(assigned, path)
-    # EFFECTIVE nlist: build_ivf clamps k to the training-point count, so
+    # EFFECTIVE nlist: build_ivf clamps k to the distinct sample points, so
     # a small fresh collection gets fewer cells than requested — callers
     # reasoning about nprobe fractions need the real number.  The centroid
     # table is a local relation: collecting its rows runs no Spark job,
     # where count() runs two.
     nlist = len(centroids.collect())
-    return SearchIndex(path=path, centroids=centroids, nlist=nlist)
+    return SearchIndex(path=path, centroids=centroids, nlist=nlist, metric=metric)
 
 
 def search(
@@ -90,7 +93,6 @@ def search(
     queries: list[str],
     k: int = 4,
     nprobe: int | None = None,
-    metric: str = "COSINE",
     id_col: str = "doc_id",
     text_col: str = "text",
     encoder_factory=E._default_encoder_factory,
@@ -107,17 +109,15 @@ def search(
     # with no re-embed and no cache, and its exact size estimate sends
     # search_ivf to its pruned collect side
     qdf = E.embed_queries(spark, queries, encoder_factory=encoder_factory)
-    hits = ivf.search_ivf(
-        spark,
-        index.path,
-        qdf.select("q_id", "q_vec"),
-        index.centroids,
-        k=k * 4,  # over-fetch chunks so the parent collapse below can
-        # still fill k parents; if top hits concentrate on few many-chunk
-        # documents fewer than k parents can come back (raise the factor
-        # for chunk-heavy corpora)
-        nprobe=nprobe,
-        metric=metric,
+    # over-fetch k*4 chunks so the parent collapse below can still fill k
+    # parents (fewer come back when top hits crowd into few many-chunk
+    # documents); an empty store's index has no cells and no files to scan
+    hits = (
+        ivf.search_ivf(spark, index.path, qdf.select("q_id", "q_vec"),
+                       index.centroids, k=k * 4, nprobe=nprobe, metric=index.metric)
+        if index.nlist
+        else qdf.select("q_id", F.lit("").alias("vec_id"), F.lit(0.0).alias("score"))
+        .limit(0)
     )
     # parent_id = the chunk id minus its TRAILING "_<ordinal>" (build_index
     # writes chunk ids as "<parent>_<i>") — recovering it from the
@@ -130,8 +130,8 @@ def search(
     parents = hits.withColumn(
         "parent_id", F.regexp_replace("vec_id", "_[0-9]+$", "")
     )
-    best = group_best(parents, "parent_id", metric=metric)
-    ranked = rank_top_k(best, k, metric, score="best_score", tie="parent_id")
+    best = group_best(parents, "parent_id", metric=index.metric)
+    ranked = rank_top_k(best, k, index.metric, score="best_score", tie="parent_id")
     return (
         ranked.join(qdf.select("q_id", "q_text"), "q_id")
         .join(documents, ranked.parent_id == documents[id_col])

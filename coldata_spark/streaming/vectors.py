@@ -63,20 +63,14 @@ def append_batch_idempotent(
     import os
     import shutil
 
-    from coldata_spark.operators.ivf import assign_to_centroids
+    from coldata_spark.operators.ivf import assign_to_centroids, write_ivf
     from coldata_spark.streaming import foldcommit as FC
 
     base = index_path.rstrip("/")
     if FC.is_applied(base, batch_id):
         return
-    assigned = assign_to_centroids(batch_df, centroids, vec_col, metric)
     stage = f"{base}.batchstage-{batch_id}"
-    (
-        assigned.repartition("centroid_id")
-        .write.mode("overwrite")
-        .partitionBy("centroid_id")
-        .parquet(stage)
-    )
+    write_ivf(assign_to_centroids(batch_df, centroids, vec_col, metric), stage)
     for part_dir in sorted(glob.glob(os.path.join(stage, "centroid_id=*"))):
         dst_dir = os.path.join(base, os.path.basename(part_dir))
         os.makedirs(dst_dir, exist_ok=True)

@@ -160,9 +160,9 @@ def test_stream_source_throttling(spark, sf_dir, tmp_path):
     assert sum(batches) == spark.read.parquet(str(d)).count()
 
 
-def test_ivf_incremental_append(spark, sf_dir, tmp_path):
-    """Index built on half the corpus, grown by append: searches must find
-    appended vectors, and assignments must agree with the KMeans model's."""
+def _half_appended_ivf(spark, sf_dir, tmp_path):
+    """Index built on the even vec_ids, grown by appending the odd ones:
+    (path, centroids, first half's row count, second half)."""
     emb = load(spark, sf_dir, "embeddings")
     first = emb.filter(F.col("vec_id") % 2 == 0)
     second = emb.filter(F.col("vec_id") % 2 == 1)
@@ -170,8 +170,15 @@ def test_ivf_incremental_append(spark, sf_dir, tmp_path):
     path = str(tmp_path / "inc_index")
     ivf.write_ivf(assigned, path)
     n1 = spark.read.parquet(path).count()
-
     ivf.append_to_index(second, centroids, path)
+    return path, centroids, n1, second
+
+
+def test_ivf_incremental_append(spark, sf_dir, tmp_path):
+    """Index built on half the corpus, grown by append: searches must find
+    appended vectors.  (That appended rows sit in the cells the build's
+    rule picks is test_ivf_rows_sit_in_their_nearest_cell's "append".)"""
+    path, centroids, n1, second = _half_appended_ivf(spark, sf_dir, tmp_path)
     total = spark.read.parquet(path)
     assert total.count() == n1 + second.count()
 
@@ -310,10 +317,13 @@ def test_knn_zero_vector_scores_zero_not_nan(spark, tmp_path, monkeypatch):
         assert best.vec_id == 1, f"{strategy}: zero vector outranked match"
 
 
-def test_assign_to_centroids_shuffle_free_and_deterministic(spark, sf_dir):
+def test_assign_to_centroids_shuffle_free_and_deterministic(
+    spark, sf_dir, monkeypatch
+):
     """Round-4 review fix: the literal-array argmin assign has NO exchange
-    and NO window in its plan, and agrees exactly with the join-fallback
-    path (same score expression, same lowest-cid tie-break)."""
+    and NO window in its plan, and agrees exactly with the broadcast
+    fallback for centroid sets over MAX_LITERAL_CELLS (same score
+    expression, same lowest-cid tie-break)."""
     from coldata_spark.operators import ivf
 
     emb = load(spark, sf_dir, "embeddings").limit(200)
@@ -323,10 +333,50 @@ def test_assign_to_centroids_shuffle_free_and_deterministic(spark, sf_dir):
     plan = fast._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan and "Window" not in plan
 
-    slow = ivf._assign_via_join(emb, centroids)
+    monkeypatch.setattr(ivf, "MAX_LITERAL_CELLS", 0)
+    slow = ivf.assign_to_centroids(emb, centroids)
+    slow_plan = slow._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastNestedLoopJoin" in slow_plan
     got = {r.vec_id: r.centroid_id for r in fast.collect()}
     want = {r.vec_id: r.centroid_id for r in slow.collect()}
     assert got == want
+
+
+def _built_ivf(spark, sf_dir, tmp_path):
+    emb = load(spark, sf_dir, "embeddings")
+    assigned, centroids = ivf.build_ivf(emb, nlist=8)
+    path = str(tmp_path / "built_index")
+    ivf.write_ivf(assigned, path)
+    return path, centroids
+
+
+def _split_ivf(spark, sf_dir, tmp_path):
+    path, centroids, _live = _skewed_ivf(spark, sf_dir, tmp_path)
+    new_cents, report = ivf.maintain_ivf(spark, path, centroids, max_cell_ratio=3.0)
+    assert report["splits"]
+    return path, new_cents
+
+
+@pytest.mark.parametrize(
+    "make",
+    [_built_ivf, _half_appended_ivf, _split_ivf],
+    ids=["build", "append", "maintain_split"],
+)
+def test_ivf_rows_sit_in_their_nearest_cell(spark, sf_dir, tmp_path, make):
+    """Build, append and a maintenance split all place every stored row in
+    the cell assign_to_centroids picks against the published centroids —
+    the cosine rule the probe ranks cells by.  (MLlib's Euclidean fit left
+    64 of 500 sf0.001 vectors outside their cosine-nearest of 8 cells.)"""
+    path, centroids = make(spark, sf_dir, tmp_path)[:2]
+    stored = (
+        spark.read.parquet(path)
+        .join(F.broadcast(centroids.select("centroid_id")), "centroid_id", "left_semi")
+        .withColumnRenamed("centroid_id", "stored")
+    )
+    again = ivf.assign_to_centroids(stored, centroids)
+    off = again.filter(F.col("stored") != F.col("centroid_id"))
+    assert stored.count() > 0
+    assert off.count() == 0, off.select("vec_id", "stored", "centroid_id").collect()[:5]
 
 
 # ---------------------------------------------------------------------------

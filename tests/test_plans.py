@@ -132,6 +132,45 @@ def test_topk_is_take_ordered(spark, sf_dir):
     assert "TakeOrderedAndProject" in plan
 
 
+def jobs_run(spark, action) -> int:
+    """Number of Spark jobs ``action()`` starts."""
+    sc = spark.sparkContext
+    group = f"count-jobs-{id(action)}"
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # job events arrive async
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _build_ivf_and_assign(spark, sf_dir):
+    from coldata_spark.operators import ivf
+
+    emb = load(spark, sf_dir, "embeddings")
+    return lambda: (
+        ivf.build_ivf(emb, nlist=8)[0].write.format("noop").mode("overwrite").save()
+    )
+
+
+# (gate, setup(spark, sf_dir) -> the action to count, most jobs it may run)
+JOB_GATES = [
+    # the driver-sample fit's one top-k job plus the assignment's map;
+    # MLlib KMeans ran ~25 at sf0.001
+    ("build_ivf", _build_ivf_and_assign, 3),
+]
+
+
+@pytest.mark.parametrize(
+    "setup,max_jobs", [g[1:] for g in JOB_GATES], ids=[g[0] for g in JOB_GATES]
+)
+def test_job_count_gates(spark, sf_dir, setup, max_jobs):
+    action = setup(spark, sf_dir)
+    assert jobs_run(spark, action) <= max_jobs
+
+
 def _file_scans(node):
     """FileSourceScanExec nodes of an executed physical plan, descending
     through AQE wrappers and query stages."""

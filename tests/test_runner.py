@@ -72,6 +72,36 @@ def test_run_once_uncapped_and_search(spark, tmp_path):
     assert {"q_text", "rank", "score", "preview"} <= set(res.columns)
 
 
+def test_run_once_renews_an_empty_store(spark, tmp_path, monkeypatch):
+    """Renew over an empty store builds an index with no cells, and a
+    search over it returns no rows with the usual result schema (the
+    MLlib fit rejected the clamped k=1 here)."""
+    from coldata_spark import search as S
+
+    built = []
+    real_build_index = S.build_index
+
+    def spy(*a, **kw):
+        built.append(real_build_index(*a, **kw))
+        return built[-1]
+
+    monkeypatch.setattr(S, "build_index", spy)
+    cfg = CF.load(FIXTURE)
+    cfg.sources["BrainDataSciencePlatform"].crawl.query_interval = 0.0
+    runs = {
+        name: R.run_once(
+            spark, cfg, str(tmp_path / name), urls, _make_factory(),
+            search_queries=["dataset page"],
+        )
+        for name, urls in (("empty", {}), ("full", URLS))
+    }
+    assert runs["empty"]["n_total"] == 0
+    assert built[0].nlist == 0 and built[0].centroids.collect() == []
+    assert runs["empty"]["search"].collect() == []
+    assert runs["full"]["search"].collect()
+    assert runs["empty"]["search"].schema == runs["full"]["search"].schema
+
+
 def test_run_on_schedule_drives_config_cadence(spark, tmp_path):
     """The config's scheduler.period/init_run drive run_once on the
     reference's cadence: init pass immediately, then one pass per day

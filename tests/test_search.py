@@ -6,6 +6,7 @@ from pyspark.sql import functions as F
 
 from coldata_spark import search as S
 from coldata_spark.tables import load
+from tests.test_plans import jobs_run
 
 
 def test_build_and_search(spark, sf_dir, tmp_path):
@@ -194,22 +195,8 @@ def test_search_parent_ids_with_underscores(spark, sf_dir, tmp_path):
         assert t.doc_id in got, f"query {qid}: {t.doc_id} not in {got}"
 
 
-def _jobs_run(spark, action) -> int:
-    """Number of Spark jobs ``action()`` starts."""
-    sc = spark.sparkContext
-    group = f"count-jobs-{id(action)}"
-    sc.setJobGroup(group, group)
-    try:
-        action()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()  # job events arrive async
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_build_index_effective_nlist_without_spark_job(spark, sf_dir, tmp_path):
-    """build_ivf clamps nlist to the training points (3 chunks here), and
+    """build_ivf clamps nlist to the distinct sample points (3 chunks here), and
     build_index reads the effective nlist from the centroid table's local
     rows, which costs no Spark job (count() costs two)."""
     docs = (
@@ -220,8 +207,8 @@ def test_build_index_effective_nlist_without_spark_job(spark, sf_dir, tmp_path):
     )
     idx = S.build_index(docs, str(tmp_path / "tiny_idx"), nlist=16)
     assert idx.nlist == 3
-    assert _jobs_run(spark, lambda: len(idx.centroids.collect())) == 0
-    assert _jobs_run(spark, idx.centroids.count) > 0  # the counter counts
+    assert jobs_run(spark, lambda: len(idx.centroids.collect())) == 0
+    assert jobs_run(spark, idx.centroids.count) > 0  # the counter counts
 
 
 def test_pq_train_ragged_vectors_clear_error(spark):
