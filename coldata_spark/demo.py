@@ -23,6 +23,7 @@ import html as _html
 import os
 
 from coldata_spark import search as S
+from coldata_spark.operators import ivf
 from coldata_spark.session import get_spark
 from coldata_spark.tables import build_once, load
 
@@ -42,9 +43,12 @@ def load_index(spark, sf_dir: str) -> S.SearchIndex:
         idx.centroids.write.mode("overwrite").parquet(os.path.join(root, "centroids"))
 
     root = build_once(f"demo-index-v2|{NLIST}", build, sf_dir)
-    centroids = spark.read.parquet(os.path.join(root, "centroids"))
+    # read once, then held as a local relation: every search's probe
+    # collects the centroids, which costs no Spark job on a local relation
+    rows = spark.read.parquet(os.path.join(root, "centroids")).collect()
+    centroids = ivf._centroid_frame(spark, {r.centroid_id: r.cvec for r in rows})
     return S.SearchIndex(
-        path=os.path.join(root, "index"), centroids=centroids, nlist=centroids.count()
+        path=os.path.join(root, "index"), centroids=centroids, nlist=len(rows)
     )
 
 

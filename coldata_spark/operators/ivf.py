@@ -32,7 +32,9 @@ from pyspark.sql import functions as F
 from coldata_spark.functions import vector as V
 from coldata_spark.operators.similarity import (
     _estimated_bytes,
+    _fetch_queries,
     _knn_scored_arrow,
+    _score_matrix,
     knn_join,
     rank_top_k,
 )
@@ -261,41 +263,39 @@ def search_ivf(
 ) -> DataFrame:
     """ANN top-k: probe the nprobe best cells per query, exact search inside.
 
-    The centroid probe (the first knn_join) scores the queries against the
-    tiny centroid table.  The query side's size estimate then picks one of
-    two plans, which return identical rows:
+    The centroid probe scores the queries against the tiny centroid
+    table.  The query side's size estimate picks one of two plans, which
+    return identical rows:
 
-    * collect side (estimate <= ``COLLECT_PROBE_MAX_BYTES``): the probe
-      rows are collected ONCE.  Their distinct cells become a static
-      ``centroid_id IN (...)`` filter, which prunes index partitions at
-      planning; the per-query cell sets feed knn_join's Arrow kernel,
-      which masks each query to its own cells.  The scan never joins or
-      shuffles.  search.search's query batches take this side: its
-      driver-embedded local relation carries an exact estimate.
+    * collect side (estimate <= ``COLLECT_PROBE_MAX_BYTES``): the query
+      batch is fetched to the driver ONCE.  The probe scores it against
+      the collected centroids in numpy (``_probe_cells``, no Spark job);
+      the probed cells become a static ``centroid_id IN (...)`` filter,
+      which prunes index partitions at planning, and the per-query cell
+      sets feed knn_join's Arrow kernel, which masks each query to its
+      own cells.  The scan never joins or shuffles.  search.search's
+      query batches take this side: its driver-embedded local relation
+      carries an exact estimate.
     * join side (anything larger, or with no estimate, such as an RDD
-      scan): nothing touches the driver.  The probed cell set is
-      broadcast-semi-joined to the index, and in-cell scores come from
-      Catalyst expressions over a broadcast probe join.  Dynamic
-      partition pruning does not fire on this plan, so the scan reads
-      every cell (SCALE.md "IVF probe sides").
+      scan): nothing touches the driver.  The probe is knn_join's expr
+      engine, its cell set is broadcast-semi-joined to the index, and
+      in-cell scores come from Catalyst expressions over a broadcast
+      probe join.  Dynamic partition pruning does not fire on this plan,
+      so the scan reads every cell (SCALE.md "IVF probe sides").
 
     Measured (SCALE.md "IVF probe sides"): on a pre-embedded parquet
     query side the join side is faster at sf0.1 and the collect side
     from the 64x embeddings tier up.
     """
-    collect = _estimated_bytes(queries) <= COLLECT_PROBE_MAX_BYTES
-    # the join side's contract is that NOTHING touches the driver
-    probe = _probe(queries, centroids, nprobe, metric, collect_free=not collect)
     index = spark.read.parquet(index_path)
-    if collect:
-        cells: dict = {}
-        for r in probe.collect():
-            cells.setdefault(r.q_id, set()).add(r.centroid_id)
+    if _estimated_bytes(queries) <= COLLECT_PROBE_MAX_BYTES:
+        q_ids, Q = _fetch_queries(queries, "q_id", "q_vec")
+        cells = _probe_cells(q_ids, Q, centroids, nprobe, metric)
         probed = sorted(set().union(*cells.values()))
-        scored, _ = _knn_scored_arrow(
-            queries,
+        scored = _knn_scored_arrow(
+            q_ids, Q, queries.schema["q_id"].dataType,
             index.filter(F.col("centroid_id").isin(probed)),
-            k, metric, "q_id", "q_vec", "vec_id", "embedding",
+            k, metric, "q_id", "vec_id", "embedding",
             score_decimals=6, exclude_self=False, cells=cells,
         )
         scored = scored.withColumn("score", F.round(F.col("score"), 6))
@@ -303,6 +303,7 @@ def search_ivf(
         # exact distance within each query's own probed cells only: the
         # (q_id, centroid_id) probe table is tiny -> broadcast equi-join
         # keys the scan rows to exactly the queries probing that cell.
+        probe = _probe(queries, centroids, nprobe, metric)
         cell_set = probe.select("centroid_id").distinct()
         pairs = (
             index.join(F.broadcast(cell_set), "centroid_id", "left_semi")
@@ -319,16 +320,38 @@ def search_ivf(
     return rank_top_k(scored, k, metric)
 
 
-def _probe(queries, centroids, nprobe, metric, collect_free):
-    """(q_id, centroid_id) for each query's nprobe best cells.  A
-    ``collect_free`` probe takes knn_join's expr engine: the arrow engine
-    collects the query side and caps it at 64 MB."""
+def _probe_cells(q_ids, Q, centroids, nprobe, metric) -> dict:
+    """{query id: its nprobe best centroid ids}, scored on the driver
+    against the collected centroid table (no Spark job when it is a
+    local relation, as build_ivf returns).  Cells rank by score in the
+    metric's direction, ties to the lowest centroid_id: knn_join's
+    order, so this returns what ``_probe`` does."""
+    import numpy as np
+
+    rows = centroids.select("centroid_id", "cvec").collect()
+    if not rows or not q_ids:
+        return {q: [] for q in q_ids}
+    cids = np.asarray([r.centroid_id for r in rows])
+    C = np.asarray([r.cvec for r in rows], dtype=np.float64)
+    S = _score_matrix(C, Q, metric)
+    desc = V.METRIC_DESCENDING[metric.upper()]
+    top = max(nprobe, 0)
+    return {
+        q: cids[np.lexsort((cids, -S[:, j] if desc else S[:, j]))[:top]].tolist()
+        for j, q in enumerate(q_ids)
+    }
+
+
+def _probe(queries, centroids, nprobe, metric):
+    """(q_id, centroid_id) for each query's nprobe best cells, planned
+    with knn_join's expr engine so no row reaches the driver (its arrow
+    engine collects the query side and caps it at 64 MB)."""
     cells = centroids.select(
         F.col("centroid_id").alias("vec_id"), F.col("cvec").alias("embedding")
     )
     return knn_join(
         queries, cells, k=nprobe, metric=metric, score_decimals=None,
-        strategy="expr" if collect_free else "auto", force=collect_free,
+        strategy="expr", force=True,
     ).select("q_id", F.col("vec_id").alias("centroid_id"))
 
 
@@ -509,7 +532,7 @@ def search_ivf_pq(
 
     m, kc, sub = codebook.shape
 
-    probe = _probe(queries, centroids, nprobe, metric, collect_free=True)
+    probe = _probe(queries, centroids, nprobe, metric)
 
     # Keep the probed cell set DISTRIBUTED: a broadcast semi-join prunes the
     # index without funneling probe lists through the driver, so a 1e6-query

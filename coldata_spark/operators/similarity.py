@@ -117,13 +117,15 @@ def knn_join(
     if strategy not in ("auto", "arrow", "expr"):
         raise ValueError(f"unknown knn_join strategy {strategy!r}")
     if strategy in ("auto", "arrow"):
-        scored, nq = _knn_scored_arrow(
-            queries,
+        q_ids, Q = _fetch_queries(queries, query_id, query_vec)
+        scored = _knn_scored_arrow(
+            q_ids,
+            Q,
+            queries.schema[query_id].dataType,
             vectors,
             k,
             metric,
             query_id,
-            query_vec,
             vec_id,
             vec_col,
             score_decimals,
@@ -150,7 +152,7 @@ def knn_join(
         # batch on a big cluster fully parallel while an 8-query batch
         # locally merges in 8 cheap tasks.
         par = queries.sparkSession.sparkContext.defaultParallelism
-        n_merge = max(1, min(nq, par))
+        n_merge = max(1, min(len(q_ids), par))
         scored = scored.repartition(n_merge, F.col(query_id))
         return rank_top_k(scored, k, metric, by=query_id, tie=vec_id)
 
@@ -220,27 +222,71 @@ def _apply_score_range(scored: DataFrame, score_range) -> DataFrame:
     return scored
 
 
+def _fetch_queries(queries: DataFrame, query_id: str, query_vec: str):
+    """The query batch on the driver: (ids, (nq, dim) float64 matrix).
+
+    toPandas, not collect: the Arrow batch transfer returns this tiny
+    gate-bounded batch in ~40 ms where collect()'s row-serialized
+    executeTake ramp costs ~230 ms — measured at the 256x tier, it was
+    the single largest term of q30's per-run floor (SCALE.md "q30")."""
+    import numpy as np
+
+    q_pdf = queries.select(query_id, query_vec).toPandas()
+    Q = (
+        np.stack([np.asarray(v, dtype=np.float64) for v in q_pdf[query_vec]])
+        if len(q_pdf)
+        else np.zeros((0, 1))
+    )
+    return q_pdf[query_id].tolist(), Q
+
+
+def _score_matrix(X, Q, metric: str):
+    """(n, nq) scores of the rows of X against the queries Q under
+    ``metric``: the one formula the kNN kernel and the IVF driver probe
+    share, so both score identically.  eps floor on the norms: an
+    all-zero vector (missing/failed embedding) must score ~0 under
+    COSINE, not NaN — NaN silently dropped a query's whole candidate
+    batch in the kernel while ranking FIRST in the expr engine."""
+    import numpy as np
+
+    m = metric.upper()
+    if m == "COSINE":
+        S = X @ Q.T
+        S /= np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
+        S /= np.maximum(np.linalg.norm(Q, axis=1), 1e-12)[None, :]
+        return S
+    if m == "IP":
+        return X @ Q.T
+    S = np.empty((len(X), len(Q)))  # L2
+    for j in range(len(Q)):
+        d = X - Q[j]
+        S[:, j] = np.sqrt(np.einsum("ij,ij->i", d, d))
+    return S
+
+
 def _knn_scored_arrow(
-    queries: DataFrame,
+    q_ids: list,
+    Q,
+    q_type,
     vectors: DataFrame,
     k: int,
     metric: str,
     query_id: str,
-    query_vec: str,
     vec_id: str,
     vec_col: str,
     score_decimals: int | None,
     exclude_self: bool,
     score_range=None,
     cells: dict | None = None,
-) -> tuple[DataFrame, int]:
+) -> DataFrame:
     """Score (query x vector) pairs with numpy inside mapInArrow, keeping a
-    per-batch partial top-k per query.  Returns (scored, #queries) — the
-    caller sizes the merge exchange from the exact query count.
+    per-batch partial top-k per query.
 
-    The query side is collected to the driver — bounded by the same gate
-    that makes the expression path's broadcast legal — and closed over by
-    the UDF (Spark ships the closure once per task, like a broadcast var).
+    The query side arrives already on the driver (``_fetch_queries``:
+    ids, the (nq, dim) matrix, and ``q_type``, the id column's Spark
+    type) — bounded by the same gate that makes the expression path's
+    broadcast legal — and is closed over by the UDF (Spark ships the
+    closure once per task, like a broadcast var).
 
     ``cells`` ({query id: probed centroid ids}) is the IVF form: the
     vectors then carry ``centroid_id`` and each query's candidates are
@@ -257,28 +303,9 @@ def _knn_scored_arrow(
     import pyarrow as pa
     from pyspark.sql import types as T
 
-    m = metric.upper()
-    desc = V.METRIC_DESCENDING[m]
+    desc = V.METRIC_DESCENDING[metric.upper()]
     slack = (10.0 ** -score_decimals + 1e-9) if score_decimals is not None else 0.0
-
-    # toPandas, not collect: the Arrow batch transfer returns this tiny
-    # gate-bounded batch in ~40 ms where collect()'s row-serialized
-    # executeTake ramp costs ~230 ms — measured at the 256x tier, it was
-    # the single largest term of q30's per-run floor (SCALE.md "q30").
-    q_pdf = queries.select(query_id, query_vec).toPandas()
-    q_ids = q_pdf[query_id].tolist()
-    Q = (
-        np.stack([np.asarray(v, dtype=np.float64) for v in q_pdf[query_vec]])
-        if len(q_pdf)
-        else np.zeros((0, 1))
-    )
     nq = len(q_ids)
-    # eps floor: an all-zero vector (missing/failed embedding) must score
-    # ~0 under COSINE, not NaN — NaN silently dropped a query's whole
-    # candidate batch here while ranking FIRST in the expr engine
-    q_norm = (
-        np.maximum(np.linalg.norm(Q, axis=1), 1e-12) if nq else np.zeros(0)
-    )
     q_id_arr = np.asarray(q_ids)
     q_cells = (
         None
@@ -293,7 +320,7 @@ def _knn_scored_arrow(
 
     out_schema = T.StructType(
         [
-            T.StructField(query_id, queries.schema[query_id].dataType),
+            T.StructField(query_id, q_type),
             T.StructField(vec_id, vectors.schema[vec_id].dataType),
             T.StructField("score", T.DoubleType()),
         ]
@@ -320,19 +347,7 @@ def _knn_scored_arrow(
             vids = batch.column(0).to_numpy(zero_copy_only=False)
             if q_cells is not None:
                 cents = batch.column(2).to_numpy(zero_copy_only=False)
-            if m == "COSINE":
-                S = X @ Q.T
-                S /= np.maximum(
-                    np.linalg.norm(X, axis=1, keepdims=True), 1e-12
-                )
-                S /= q_norm[None, :]
-            elif m == "IP":
-                S = X @ Q.T
-            else:  # L2
-                S = np.empty((n, nq))
-                for j in range(nq):
-                    d = X - Q[j]
-                    S[:, j] = np.sqrt(np.einsum("ij,ij->i", d, d))
+            S = _score_matrix(X, Q, metric)
             sel_q, sel_v, sel_s = [], [], []
             for j in range(nq):
                 s = S[:, j]
@@ -341,7 +356,7 @@ def _knn_scored_arrow(
                 else:
                     idx = np.flatnonzero(np.isin(cents, q_cells[j]))
                 if exclude_self:
-                    idx = idx[vids != q_ids[j]]
+                    idx = idx[vids[idx] != q_ids[j]]
                 if band_lo is not None:
                     idx = idx[s[idx] >= band_lo]
                 if band_hi is not None:
@@ -372,7 +387,7 @@ def _knn_scored_arrow(
     scored = _sized_for_arrow_stage(vectors.select(*cols)).mapInArrow(
         score_batches, schema=out_schema
     )
-    return scored, nq
+    return scored
 
 
 def _sized_for_arrow_stage(

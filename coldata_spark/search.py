@@ -17,8 +17,9 @@ A search embeds its queries on the driver into a local relation
 (embed.embed_queries), like the reference's in-process query embed.  The
 batch's exact size estimate sends ivf.search_ivf to its collect side, so
 the index scan reads only the probed cells (a static ``centroid_id IN
-(...)`` partition filter).  The only Python workers a search starts are
-that side's two Arrow kernels: the centroid probe and the in-cell scoring.
+(...)`` partition filter).  That side fetches the batch once, probes the
+centroids on the driver in numpy, and starts one Python-worker stage: the
+in-cell scoring's Arrow kernel.
 """
 
 from __future__ import annotations

@@ -6,6 +6,7 @@ import urllib.parse
 import urllib.request
 
 from coldata_spark.tables import load
+from tests.test_plans import jobs_run
 
 
 def test_demo_serve_search_roundtrip(spark, sf_dir, tmp_path):
@@ -71,6 +72,9 @@ def test_load_index_hit_reuses_built_centroids(spark, sf_dir, tmp_path, monkeypa
         return sorted((r.centroid_id, list(r.cvec)) for r in idx.centroids.collect())
 
     assert cents(hit) == cents(built[0])
+    # the stored centroids come back as a local relation: each search's
+    # probe collects them without a Spark job
+    assert jobs_run(spark, lambda: len(hit.centroids.collect())) == 0
 
     docs = load(spark, copy, "documents")
     queries = [

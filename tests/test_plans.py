@@ -9,6 +9,8 @@ filter that stops reaching the parquet scan).
 
 from __future__ import annotations
 
+import uuid
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -135,7 +137,11 @@ def test_topk_is_take_ordered(spark, sf_dir):
 def jobs_run(spark, action) -> int:
     """Number of Spark jobs ``action()`` starts."""
     sc = spark.sparkContext
-    group = f"count-jobs-{id(action)}"
+    # a group no earlier call used: id(action) repeats once an earlier
+    # action is freed, and a module counter repeats too, because this
+    # module is imported twice (as test_plans and as tests.test_plans);
+    # a reused group's count includes the earlier call's jobs
+    group = f"count-jobs-{uuid.uuid4().hex}"
     sc.setJobGroup(group, group)
     try:
         action()
@@ -146,7 +152,14 @@ def jobs_run(spark, action) -> int:
     return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
-def _build_ivf_and_assign(spark, sf_dir):
+def test_jobs_run_counts_each_action_alone(spark):
+    """Two lambdas made one after the other can share an id(); the second
+    count must still hold only its own jobs."""
+    assert jobs_run(spark, lambda: spark.range(3).collect()) > 0
+    assert jobs_run(spark, lambda: None) == 0
+
+
+def _build_ivf_and_assign(spark, sf_dir, fixture):
     from coldata_spark.operators import ivf
 
     emb = load(spark, sf_dir, "embeddings")
@@ -155,19 +168,31 @@ def _build_ivf_and_assign(spark, sf_dir):
     )
 
 
-# (gate, setup(spark, sf_dir) -> the action to count, most jobs it may run)
+def _search(spark, sf_dir, fixture):
+    from coldata_spark import search as S
+
+    docs, idx = fixture("search_index")
+    texts = [r.text for r in docs.orderBy("doc_id").limit(4).collect()]
+    return lambda: S.search(spark, idx, docs, texts, k=3, nprobe=2).collect()
+
+
+# (gate, setup(spark, sf_dir, fixture) -> the action to count, most jobs it
+# may run; ``fixture`` is request.getfixturevalue)
 JOB_GATES = [
     # the driver-sample fit's one top-k job plus the assignment's map;
     # MLlib KMeans ran ~25 at sf0.001
     ("build_ivf", _build_ivf_and_assign, 3),
+    # one query fetch, the index's schema inference, the in-cell scoring
+    # and the final collect's stages; probing through knn_join ran 11
+    ("search", _search, 8),
 ]
 
 
 @pytest.mark.parametrize(
     "setup,max_jobs", [g[1:] for g in JOB_GATES], ids=[g[0] for g in JOB_GATES]
 )
-def test_job_count_gates(spark, sf_dir, setup, max_jobs):
-    action = setup(spark, sf_dir)
+def test_job_count_gates(spark, sf_dir, request, setup, max_jobs):
+    action = setup(spark, sf_dir, request.getfixturevalue)
     assert jobs_run(spark, action) <= max_jobs
 
 

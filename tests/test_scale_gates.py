@@ -51,6 +51,49 @@ def test_join_probe_matches_collect_probe(spark, sf_dir, ivf_index, monkeypatch)
         assert 20 <= len(rows["collect"]) <= 60
     finally:
         qdf.unpersist()
+    _driver_probe_matches_expr_probe(spark)
+
+
+def _driver_probe_matches_expr_probe(spark):
+    """The collect side's numpy probe on the driver picks the cells the
+    join side's knn_join expr probe picks, per metric.  Cell 2 duplicates
+    cell 0, so their tie must go to the lower id; query 11 is all-zero
+    and must score 0 (never NaN) against every cell."""
+    import numpy as np
+
+    from coldata_spark.operators.similarity import _fetch_queries, _score_matrix
+    from coldata_spark.tables import local_frame
+
+    cvecs = [[1.0, 0, 0, 0], [0, 1.0, 0, 0], [1.0, 0, 0, 0],
+             [0.5, 0.5, 0.5, 0.5], [-1.0, 0, 0, 0], [2.0, 1.0, 0, 0]]
+    nlist = len(cvecs)
+    cents = local_frame(
+        spark, {"centroid_id": list(range(nlist)), "cvec": cvecs},
+        "centroid_id bigint, cvec array<double>",
+    )
+    qdf = local_frame(
+        spark,
+        {"q_id": [10, 11, 12],
+         "q_vec": [[1.0, 0, 0, 0], [0.0, 0, 0, 0], [0.3, -0.2, 0.9, 0.1]]},
+        "q_id bigint, q_vec array<double>",
+    )
+    q_ids, Q = _fetch_queries(qdf, "q_id", "q_vec")
+    assert (_score_matrix(np.asarray(cvecs), Q, "COSINE")[:, 1] == 0).all()
+    for metric in ("COSINE", "IP", "L2"):
+        for nprobe in (0, 1, 2, nlist, nlist + 3):
+            cells = ivf._probe_cells(q_ids, Q, cents, nprobe, metric)
+            got = sorted((q, c) for q, cs in cells.items() for c in cs)
+            want = sorted(map(tuple, ivf._probe(qdf, cents, nprobe, metric).collect()))
+            assert got == want, (metric, nprobe)
+            assert len(got) == len(q_ids) * min(nprobe, nlist), (metric, nprobe)
+        # query 10 ties cells 0 and 2 for one place: the lower id wins
+        nprobe, want = {"COSINE": (1, [0]), "L2": (1, [0]), "IP": (2, [5, 0])}[metric]
+        assert ivf._probe_cells(q_ids, Q, cents, nprobe, metric)[10] == want, metric
+        # every cell ties for the zero query
+        assert ivf._probe_cells(q_ids, Q, cents, 1, metric)[11] == [0], metric
+        # probing past nlist probes every cell
+        past, every = (ivf._probe_cells(q_ids, Q, cents, n, metric) for n in (nlist + 3, nlist))
+        assert past == every, metric
 
 
 def test_join_probe_never_materializes_on_driver(spark, sf_dir, ivf_index, monkeypatch):
