@@ -248,7 +248,8 @@ def append_to_index(
 
 # Query batches whose optimizer size estimate is at most this many bytes
 # take search_ivf's collect side; larger (or unestimated) batches take the
-# join side.
+# join side.  search.search scores its driver-held query matrix in slices
+# of at most this many bytes, so the kernel's closure stays bounded.
 COLLECT_PROBE_MAX_BYTES = 1 << 20
 
 
@@ -273,9 +274,8 @@ def search_ivf(
       the probed cells become a static ``centroid_id IN (...)`` filter,
       which prunes index partitions at planning, and the per-query cell
       sets feed knn_join's Arrow kernel, which masks each query to its
-      own cells.  The scan never joins or shuffles.  search.search's
-      query batches take this side: its driver-embedded local relation
-      carries an exact estimate.
+      own cells (``_score_cells``, which search.search shares).  The
+      scan never joins or shuffles.
     * join side (anything larger, or with no estimate, such as an RDD
       scan): nothing touches the driver.  The probe is knn_join's expr
       engine, its cell set is broadcast-semi-joined to the index, and
@@ -291,14 +291,9 @@ def search_ivf(
     if _estimated_bytes(queries) <= COLLECT_PROBE_MAX_BYTES:
         q_ids, Q = _fetch_queries(queries, "q_id", "q_vec")
         cells = _probe_cells(q_ids, Q, centroids, nprobe, metric)
-        probed = sorted(set().union(*cells.values()))
-        scored = _knn_scored_arrow(
-            q_ids, Q, queries.schema["q_id"].dataType,
-            index.filter(F.col("centroid_id").isin(probed)),
-            k, metric, "q_id", "vec_id", "embedding",
-            score_decimals=6, exclude_self=False, cells=cells,
+        scored = _score_cells(
+            index, q_ids, Q, queries.schema["q_id"].dataType, cells, k, metric
         )
-        scored = scored.withColumn("score", F.round(F.col("score"), 6))
     else:
         # exact distance within each query's own probed cells only: the
         # (q_id, centroid_id) probe table is tiny -> broadcast equi-join
@@ -318,6 +313,23 @@ def search_ivf(
         )
         scored = pairs.select("q_id", "vec_id", score.alias("score"))
     return rank_top_k(scored, k, metric)
+
+
+def _score_cells(index, q_ids, Q, q_type, cells, k, metric) -> DataFrame:
+    """The collect side's scoring, shared by search_ivf and search.search:
+    the driver-held batch (``q_ids``, ``Q``, id type ``q_type``) against
+    only the probed cells of ``index`` (a static ``centroid_id IN (...)``
+    filter), each query masked to its own ``cells`` in knn_join's Arrow
+    kernel.  Returns (q_id, vec_id, score) with the score rounded to 6
+    decimals in Spark (HALF_UP), before the global per-query top-k: the
+    kernel keeps a partial top-k per batch."""
+    probed = sorted(set().union(*cells.values()))
+    scored = _knn_scored_arrow(
+        q_ids, Q, q_type, index.filter(F.col("centroid_id").isin(probed)),
+        k, metric, "q_id", "vec_id", "embedding",
+        score_decimals=6, exclude_self=False, cells=cells,
+    )
+    return scored.withColumn("score", F.round(F.col("score"), 6))
 
 
 def _probe_cells(q_ids, Q, centroids, nprobe, metric) -> dict:

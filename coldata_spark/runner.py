@@ -56,7 +56,9 @@ def run_once(
 ) -> dict:
     """One main.py pass.  Returns a summary dict with row counts, the
     store/index paths, and (when ``search_queries``) the ranked result
-    DataFrame under ``"search"``."""
+    DataFrame under ``"search"``.  That search is eager, like the
+    reference's vdb.search: its rows are computed during this call and
+    held as a local relation, so reading them later runs no Spark job."""
     from coldata_spark.streaming.foldcommit import recover
 
     path = store_path(cfg, root)

@@ -10,29 +10,49 @@ main.py):
   demo:    formatted results with rank + preview (main.py:48-58, demo.py)
 
 Spark shape: build is one batch job writing a centroid-partitioned parquet
-index; search is a small-broadcast plan over the pruned index.  Index
-"renew" (vdb.py:199-201) = overwrite, as in the reference.
+index.  Index "renew" (vdb.py:199-201) = overwrite, as in the reference.
 
-A search embeds its queries on the driver into a local relation
-(embed.embed_queries), like the reference's in-process query embed.  The
-batch's exact size estimate sends ivf.search_ivf to its collect side, so
-the index scan reads only the probed cells (a static ``centroid_id IN
-(...)`` partition filter).  That side fetches the batch once, probes the
-centroids on the driver in numpy, and starts one Python-worker stage: the
-in-cell scoring's Arrow kernel.
+Search runs two Spark jobs and finishes on the driver, as the reference
+runs only the ANN probe in Milvus and the rest in process over at most k
+hits per query (make_results, vdb.py:101-122):
+  1. the queries are embedded on the driver into a local relation
+     (embed.embed_queries) and read back with no Spark job; their
+     centroid probe runs in numpy (ivf._probe_cells);
+  2. scoring job: the index, read with a fixed schema (no inference
+     job), is scanned only in the probed cells (a static ``centroid_id
+     IN (...)`` partition filter) by the in-cell Arrow kernel, the one
+     Python-worker stage (ivf._score_cells, shared with ivf.search_ivf);
+  3. driver finish over at most 4k hits per query: global top-4k,
+     chunk -> parent, group-best, rank the top k;
+  4. lookup job: at most k x nq documents, by a static ``IN`` filter on
+     the id column, with their previews.
+The result is a local relation holding rows already computed: search()
+is eager, like the reference's vdb.search.
 """
 
 from __future__ import annotations
 
+import re
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from coldata_spark import embed as E
 from coldata_spark.functions import text as TX
+from coldata_spark.functions import vector as V
 from coldata_spark.operators import ivf
-from coldata_spark.operators.similarity import group_best, rank_top_k
+from coldata_spark.tables import local_frame
+
+# the index columns a search scans: a fixed schema, so opening the index
+# runs no schema-inference job
+_INDEX_SCAN = "vec_id string, embedding array<float>, centroid_id int"
+# chunks scored per result: the parent collapse can still fill k parents
+# when the top hits crowd into few many-chunk documents
+OVERFETCH = 4
+# build_index writes chunk ids as "<parent>_<i>"
+_CHUNK_ORDINAL = re.compile(r"_[0-9]+$")
 
 
 @dataclass
@@ -101,48 +121,102 @@ def search(
     """vdb.search + demo projection: returns one row per (query, rank) with
     the parent document's fields, best chunk score, and a text preview —
     the reference's OrderedDict-of-records result (vdb.py:101-122,
-    main.py:48-58) as a DataFrame."""
+    main.py:48-58) as a DataFrame.
+
+    Eager, like the reference's vdb.search: the rows are computed by this
+    call (two Spark jobs, module docstring) and returned, in (q_id, rank)
+    order, as a local relation, so reading the result runs no Spark job
+    and a later change to the index or the store does not alter it."""
+    import numpy as np
+
     # `is None`, not truthiness: an explicit nprobe=0 must not silently
     # become probe-all
     nprobe = index.nlist if nprobe is None else nprobe
-    # embedded once, on the driver, into a local relation: the probe, the
-    # in-cell scoring and the q_text join below all read the same rows
-    # with no re-embed and no cache, and its exact size estimate sends
-    # search_ivf to its pruned collect side
     qdf = E.embed_queries(spark, queries, encoder_factory=encoder_factory)
-    # over-fetch k*4 chunks so the parent collapse below can still fill k
-    # parents (fewer come back when top hits crowd into few many-chunk
-    # documents); an empty store's index has no cells and no files to scan
-    hits = (
-        ivf.search_ivf(spark, index.path, qdf.select("q_id", "q_vec"),
-                       index.centroids, k=k * 4, nprobe=nprobe, metric=index.metric)
-        if index.nlist
-        else qdf.select("q_id", F.lit("").alias("vec_id"), F.lit(0.0).alias("score"))
-        .limit(0)
-    )
-    # parent_id = the chunk id minus its TRAILING "_<ordinal>" (build_index
-    # writes chunk ids as "<parent>_<i>") — recovering it from the
-    # already-scanned hits avoids a SECOND, unpruned full scan of the index
-    # just to re-join one column.  Stripping only the trailing ordinal keeps
-    # arbitrary caller-supplied parent ids intact: substring_index(_, '_', 1)
-    # would truncate any parent containing '_' at its first segment, merging
-    # unrelated parents (the reference shares that split('_')[0] quirk but
-    # only ever sees sha256 hex ids — vdb.py:101-122).
-    parents = hits.withColumn(
-        "parent_id", F.regexp_replace("vec_id", "_[0-9]+$", "")
-    )
-    best = group_best(parents, "parent_id", metric=index.metric)
-    ranked = rank_top_k(best, k, index.metric, score="best_score", tie="parent_id")
-    return (
-        ranked.join(qdf.select("q_id", "q_text"), "q_id")
-        .join(documents, ranked.parent_id == documents[id_col])
-        .select(
-            "q_id",
-            "q_text",
-            "rank",
-            F.col("best_score").alias("score"),
-            F.col(id_col),
-            TX.preview(F.col(text_col), 200).alias("preview"),
-        )
-        .orderBy("q_id", "rank")
-    )
+    q_type = qdf.schema["q_id"].dataType
+    qrows = qdf.collect()  # a local relation: no Spark job
+    q_ids = [r.q_id for r in qrows]
+    hits = []
+    # an empty store's index has no cells and no files to scan
+    if q_ids and index.nlist:
+        Q = np.asarray([r.q_vec for r in qrows], dtype=np.float64)
+        cells = ivf._probe_cells(q_ids, Q, index.centroids, nprobe, index.metric)
+        scan = spark.read.schema(_INDEX_SCAN).parquet(index.path)
+        # one scoring job per slice of at most COLLECT_PROBE_MAX_BYTES of
+        # query matrix, which the kernel's closure carries to every task
+        step = max(1, ivf.COLLECT_PROBE_MAX_BYTES // Q[0].nbytes)
+        for lo in range(0, len(q_ids), step):
+            ids = q_ids[lo : lo + step]
+            part = {q: cells[q] for q in ids}
+            if not any(part.values()):
+                continue
+            pdf = ivf._score_cells(
+                scan, ids, Q[lo : lo + step], q_type, part, k * OVERFETCH,
+                index.metric,
+            ).toPandas()
+            hits += zip(pdf["q_id"].tolist(), pdf["vec_id"].tolist(),
+                        pdf["score"].tolist())
+    ranked = _rank_parents(hits, k, index.metric)
+    found = _lookup(documents, {r[3] for r in ranked}, id_col, text_col)
+    q_text = {r.q_id: r.q_text for r in qrows}
+    rows = [
+        (q, q_text[q], rank, score, doc_id, preview)
+        for q, rank, score, parent in ranked
+        for doc_id, preview in found.get(parent, ())
+    ]
+    schema = T.StructType([
+        T.StructField("q_id", q_type),
+        T.StructField("q_text", T.StringType()),
+        T.StructField("rank", T.IntegerType()),
+        T.StructField("score", T.DoubleType()),
+        T.StructField(id_col, documents.schema[id_col].dataType),
+        T.StructField("preview", T.StringType()),
+    ])
+    columns = list(zip(*rows)) or [()] * len(schema.fields)
+    return local_frame(spark, dict(zip(schema.names, columns)), schema)
+
+
+def _rank_parents(hits, k: int, metric: str) -> list[tuple]:
+    """(q_id, rank, best score, parent id) of each query's top-k parents,
+    in (q_id, rank) order, from the scored chunk ``hits`` (q_id, vec_id,
+    score).  The Spark plan ``rank_top_k(k * OVERFETCH)`` -> parent strip
+    -> ``group_best`` -> ``rank_top_k(tie="parent_id")``, over at most
+    k * OVERFETCH rows per query kept by the kernel: scores rank in the
+    metric's direction, chunk ties to the lower vec_id, parent ties to
+    the lower parent id."""
+    sign = -1.0 if V.METRIC_DESCENDING[metric.upper()] else 1.0
+    by_q: dict = {}
+    for q, vec_id, score in hits:
+        by_q.setdefault(q, []).append((sign * score, vec_id))
+    out = []
+    for q in sorted(by_q):
+        best: dict = {}
+        for key, vec_id in sorted(by_q[q])[: k * OVERFETCH]:
+            # the parent is the chunk id minus its TRAILING "_<ordinal>":
+            # a caller's parent id may hold '_' itself (the reference's
+            # split('_')[0] only ever sees sha256 hex ids, vdb.py:101-122).
+            # Hits come best first, so a parent's first hit is its best.
+            best.setdefault(_CHUNK_ORDINAL.sub("", vec_id), key)
+        top = sorted((key, parent) for parent, key in best.items())[:k]
+        out += [(q, r, sign * key, p) for r, (key, p) in enumerate(top, 1)]
+    return out
+
+
+def _lookup(documents: DataFrame, parents: set, id_col: str, text_col: str) -> dict:
+    """{parent id: [(document id, preview), ...]} for the ranked parents,
+    in one Spark job with a static ``IN`` filter on ``id_col``.  A parent
+    id is the document id cast to string (build_index's chunk ids), so
+    ids match on value whatever their type (the cast is a no-op on string
+    ids); a duplicated id yields every matching row, as an inner join
+    would."""
+    if not parents:
+        return {}
+    key = F.col(id_col).cast("string")
+    found: dict = {}
+    for k, doc_id, preview in (
+        documents.filter(key.isin(sorted(parents)))
+        .select(key, id_col, TX.preview(F.col(text_col), 200))
+        .collect()
+    ):
+        found.setdefault(k, []).append((doc_id, preview))
+    return found

@@ -235,7 +235,7 @@ def fan_out(df: DataFrame, parts: int | None = None) -> DataFrame:
     return df
 
 
-def local_frame(spark: SparkSession, columns: dict, schema: str) -> DataFrame:
+def local_frame(spark: SparkSession, columns: dict, schema) -> DataFrame:
     """A small driver-side table as a JVM-local relation (``LocalRelation``).
 
     ``createDataFrame(list)`` plans an RDD scan that a Python worker
@@ -245,7 +245,8 @@ def local_frame(spark: SparkSession, columns: dict, schema: str) -> DataFrame:
     rules such as ``ivf.COLLECT_PROBE_MAX_BYTES`` see the real bytes.
     A pyarrow Table rather than pandas, because ``createDataFrame`` falls
     back to the RDD path for an empty pandas frame; an empty table stays
-    local.  ``columns`` maps column name to values, in ``schema`` order.
+    local.  ``columns`` maps column name to values, in the order of
+    ``schema`` (a DDL string or a StructType).
     """
     import pyarrow as pa
 

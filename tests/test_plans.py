@@ -182,9 +182,10 @@ JOB_GATES = [
     # the driver-sample fit's one top-k job plus the assignment's map;
     # MLlib KMeans ran ~25 at sf0.001
     ("build_ivf", _build_ivf_and_assign, 3),
-    # one query fetch, the index's schema inference, the in-cell scoring
-    # and the final collect's stages; probing through knn_join ran 11
-    ("search", _search, 8),
+    # the in-cell scoring and the document lookup; the rest runs on the
+    # driver.  The Spark-side finish (schema inference, query fetch,
+    # group-best and rank stages, range sort) ran 8
+    ("search", _search, 2),
 ]
 
 
@@ -252,27 +253,42 @@ def search_index(spark, sf_dir, tmp_path_factory):
     return docs, idx
 
 
-def test_search_prunes_index_scan_without_python_rdd_stages(spark, search_index):
-    """search() embeds its queries on the driver into a local relation,
-    so search_ivf takes its collect side: the index scan carries a static
+def test_search_prunes_index_scan_without_python_rdd_stages(
+    spark, search_index, monkeypatch
+):
+    """search() embeds its queries on the driver and scores only the
+    probed cells: the scoring execution's index scan carries a static
     centroid_id IN (...) partition filter and reads fewer cells than the
-    index has.  The final plan has no pandas UDF, no row-at-a-time Python
-    UDF and no RDD scan, and the call leaves no RDD persisted."""
+    index has.  Its plan has no pandas UDF, no row-at-a-time Python UDF
+    and no RDD scan, the call leaves no RDD persisted, and the returned
+    rows are already computed: collecting them runs no Spark job."""
     from coldata_spark import search as S
+    from coldata_spark.operators import ivf
 
     docs, idx = search_index
     texts = [r.text for r in docs.orderBy("doc_id").limit(4).collect()]
+    scored = []
+    real_score_cells = ivf._score_cells
+
+    def spy(*a, **kw):
+        scored.append(real_score_cells(*a, **kw))
+        return scored[-1]
+
+    monkeypatch.setattr(ivf, "_score_cells", spy)
     persistent = spark.sparkContext._jsc.getPersistentRDDs
     before = persistent().size()
     out = S.search(spark, idx, docs, texts, k=3, nprobe=2)
-    assert out.collect()  # the metrics below are this execution's
+    assert jobs_run(spark, out.collect) == 0
+    assert out.collect()
     assert persistent().size() == before
-    plan = executed_plan(out)
+    # the scoring frame's own execution ran inside search()
+    (frame,) = scored
+    plan = executed_plan(frame)
     for node in ("MapInPandas", "BatchEvalPython", "ExistingRDD"):
         assert node not in plan, node
     (scan,) = [
         s
-        for s in _file_scans(out._jdf.queryExecution().executedPlan())
+        for s in _file_scans(frame._jdf.queryExecution().executedPlan())
         if "centroid_id" in s.toString()
     ]
     filters = scan.toString().split("PartitionFilters: [")[1].split("]")[0]

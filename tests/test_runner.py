@@ -75,8 +75,10 @@ def test_run_once_uncapped_and_search(spark, tmp_path):
 def test_run_once_renews_an_empty_store(spark, tmp_path, monkeypatch):
     """Renew over an empty store builds an index with no cells, and a
     search over it returns no rows with the usual result schema (the
-    MLlib fit rejected the clamped k=1 here)."""
+    MLlib fit rejected the clamped k=1 here).  search() is eager: every
+    result, an empty one too, is a local relation of computed rows."""
     from coldata_spark import search as S
+    from tests.test_plans import jobs_run
 
     built = []
     real_build_index = S.build_index
@@ -97,9 +99,19 @@ def test_run_once_renews_an_empty_store(spark, tmp_path, monkeypatch):
     }
     assert runs["empty"]["n_total"] == 0
     assert built[0].nlist == 0 and built[0].centroids.collect() == []
+    full = runs["full"]["search"]
+    no_queries = S.search(
+        spark, built[1], spark.read.parquet(runs["full"]["store"]), [],
+        id_col=cfg.store.index_field, text_col="info",
+    )
+    for res in (runs["empty"]["search"], no_queries, full):
+        plan = res._jdf.queryExecution().optimizedPlan()
+        assert plan.getClass().getSimpleName() == "LocalRelation"
+        assert jobs_run(spark, res.collect) == 0
+        assert res.schema == full.schema
     assert runs["empty"]["search"].collect() == []
-    assert runs["full"]["search"].collect()
-    assert runs["empty"]["search"].schema == runs["full"]["search"].schema
+    assert no_queries.collect() == []
+    assert full.collect()
 
 
 def test_run_on_schedule_drives_config_cadence(spark, tmp_path):

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from coldata_spark import search as S
@@ -193,6 +194,99 @@ def test_search_parent_ids_with_underscores(spark, sf_dir, tmp_path):
     for qid, t in enumerate(targets):
         got = [r.doc_id for r in rows if r.q_id == qid]
         assert t.doc_id in got, f"query {qid}: {t.doc_id} not in {got}"
+    # the driver's parent strip keeps every segment, as the composed plan's
+    for nprobe in (1, 2, idx.nlist):
+        _assert_same_as_composed(spark, idx, docs, queries, 3, nprobe)
+
+
+def _composed_search(spark, idx, docs, texts, k, nprobe, id_col="doc_id",
+                     text_col="text"):
+    """The oracle: search() as one composed Spark plan, the shape it had
+    before its driver finish (search_ivf -> group_best -> rank_top_k ->
+    inner join to the documents -> orderBy)."""
+    from coldata_spark import embed as E
+    from coldata_spark.functions import text as TX
+    from coldata_spark.operators import ivf
+    from coldata_spark.operators.similarity import group_best, rank_top_k
+
+    qdf = E.embed_queries(spark, texts)
+    hits = ivf.search_ivf(
+        spark, idx.path, qdf.select("q_id", "q_vec"), idx.centroids,
+        k=k * 4, nprobe=nprobe, metric=idx.metric,
+    )
+    parents = hits.withColumn("parent_id", F.regexp_replace("vec_id", "_[0-9]+$", ""))
+    best = group_best(parents, "parent_id", metric=idx.metric)
+    ranked = rank_top_k(best, k, idx.metric, score="best_score", tie="parent_id")
+    return (
+        ranked.join(qdf.select("q_id", "q_text"), "q_id")
+        .join(docs, ranked.parent_id == docs[id_col])
+        .select(
+            "q_id", "q_text", "rank", F.col("best_score").alias("score"),
+            F.col(id_col), TX.preview(F.col(text_col), 200).alias("preview"),
+        )
+        .orderBy("q_id", "rank")
+    )
+
+
+@pytest.fixture(scope="module")
+def metric_indexes(spark, sf_dir, tmp_path_factory):
+    docs = load(spark, sf_dir, "documents")
+    root = tmp_path_factory.mktemp("metric_indexes")
+    return docs, {
+        m: S.build_index(docs, str(root / m), nlist=8, metric=m)
+        for m in ("COSINE", "IP", "L2")
+    }
+
+
+def _assert_same_as_composed(spark, idx, docs, texts, k, nprobe, **cols):
+    got = S.search(spark, idx, docs, texts, k=k, nprobe=nprobe, **cols)
+    want = _composed_search(spark, idx, docs, texts, k, nprobe, **cols)
+    assert [(f.name, f.dataType) for f in got.schema] == [
+        (f.name, f.dataType) for f in want.schema
+    ]
+    rows = got.collect()
+    assert rows == want.collect(), (idx.metric, nprobe)
+    return rows
+
+
+@pytest.mark.parametrize("metric", ["COSINE", "IP", "L2"])
+def test_search_driver_finish_matches_composed_plan(spark, metric_indexes, metric):
+    """search()'s driver finish (global top-4k, parent strip, group-best,
+    rank with ties to parent_id, inner join to the documents) returns the
+    composed Spark plan's rows, in (q_id, rank) order.  Doc 0's text
+    scores 1.0 against docs 0 and 82 (the same first chunk), so the tie
+    goes to parent_id; a duplicated document id repeats its row."""
+    docs, indexes = metric_indexes
+    idx = indexes[metric]
+    firsts = docs.orderBy("doc_id").limit(3).collect()
+    texts = [firsts[0].text, firsts[1].text[:128], firsts[2].text[40:200],
+             "spark join window"]
+    for nprobe in (1, 2, idx.nlist):
+        rows = _assert_same_as_composed(spark, idx, docs, texts, 3, nprobe)
+        assert {r.q_id for r in rows} == {0, 1, 2, 3}
+    top = [r.doc_id for r in rows if r.q_id == 0][:2]
+    if metric == "COSINE":
+        assert top == [0, 82]
+    doubled = docs.unionByName(docs.filter(F.col("doc_id").isin(top)))
+    rows = _assert_same_as_composed(spark, idx, doubled, texts, 3, idx.nlist)
+    assert [r.doc_id for r in rows if r.q_id == 0][:4] == [top[0]] * 2 + [top[1]] * 2
+
+
+def test_search_scores_large_batches_in_slices(spark, metric_indexes, monkeypatch):
+    """A query matrix over COLLECT_PROBE_MAX_BYTES is scored in slices,
+    one scoring job each, on the same path: the rows do not change."""
+    from coldata_spark.operators import ivf
+
+    docs, indexes = metric_indexes
+    idx = indexes["COSINE"]
+    texts = [r.text[:128] for r in docs.orderBy("doc_id").limit(5).collect()]
+    whole = S.search(spark, idx, docs, texts, k=3, nprobe=2).collect()
+    monkeypatch.setattr(ivf, "COLLECT_PROBE_MAX_BYTES", 1)  # one query a slice
+    jobs = jobs_run(
+        spark, lambda: S.search(spark, idx, docs, texts, k=3, nprobe=2).collect()
+    )
+    assert jobs == len(texts) + 1  # the slices' scoring, then the lookup
+    assert S.search(spark, idx, docs, texts, k=3, nprobe=2).collect() == whole
 
 
 def test_build_index_effective_nlist_without_spark_job(spark, sf_dir, tmp_path):
