@@ -760,9 +760,9 @@ def embedding_neardup_lsh_exact(
     q182_embedding_neardup_lsh_scaled with 8-bit bands).
     """
     from coldata_spark.functions import vector as V
+    from coldata_spark.operators.joins import _estimated_bytes
     from coldata_spark.operators.similarity import (
         _UNKNOWN_STATS_FLOOR,
-        _estimated_bytes,
         _estimated_rows,
     )
     from coldata_spark.tables import fan_out
@@ -1164,7 +1164,7 @@ def _semdedup_assign(
     DRIVER-SIDE (the same arithmetic hashlib.md5 / Spark md5 / DuckDB md5
     all agree on) and inlined as n_clusters x dim integer literals:
     assignment is one map-side projection — no join, no n x k explode, no
-    per-vector window (the assign_to_centroids trick, ivf.py:79)."""
+    per-vector window."""
     import hashlib
 
     from coldata_spark.functions import vector as V
@@ -1554,10 +1554,8 @@ def semantic_dedup_incremental(
     # where the old executor-side broadcast join merely degraded.
     # Round-14 advice: when stats are unknown, enforce a driver-side ROW
     # cap with a bounded count before collecting.
-    from coldata_spark.operators.similarity import (
-        _UNKNOWN_STATS_FLOOR,
-        _estimated_bytes,
-    )
+    from coldata_spark.operators.joins import _estimated_bytes
+    from coldata_spark.operators.similarity import _UNKNOWN_STATS_FLOOR
 
     est = _estimated_bytes(batch)
     if not (0 < est < _UNKNOWN_STATS_FLOOR):

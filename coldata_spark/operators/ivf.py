@@ -30,8 +30,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from coldata_spark.functions import vector as V
+from coldata_spark.operators.joins import _estimated_bytes
 from coldata_spark.operators.similarity import (
-    _estimated_bytes,
     _fetch_queries,
     _knn_scored_arrow,
     _score_matrix,
@@ -59,8 +59,9 @@ def build_ivf(
 
     The fit reads a driver sample of at most SAMPLE_PER_CENTROID * nlist
     vectors; nlist clamps to its distinct points (none for an empty
-    input).  assign_to_centroids, the rule append, maintenance and the
-    probe share, places every vector in its ``metric``-nearest cell."""
+    input).  assign_to_centroids places every vector in its
+    ``metric``-nearest cell by _nearest_cells, the rule append,
+    maintenance and the probe share."""
     sample = _sample_vectors(vectors, vec_col, SAMPLE_PER_CENTROID * nlist)
     centers = dict(enumerate(_kmeans(sample, nlist, seed, metric).tolist()))
     centroids = _centroid_frame(vectors.sparkSession, centers)
@@ -148,86 +149,80 @@ def _write_cells(assigned: DataFrame, path: str, mode: str) -> None:
     ).parquet(path)
 
 
-# Centroid sets above this many floats (nlist x dim) reach
-# assign_to_centroids' argmin as a broadcast column, not a literal.
-MAX_LITERAL_CELLS = 200_000
-
-
 def assign_to_centroids(
     vectors: DataFrame,
     centroids: DataFrame,
     vec_col: str = "embedding",
     metric: str = "COSINE",
 ) -> DataFrame:
-    """Assign each vector to its nearest FIXED centroid — a per-row
-    argmin over the centroid set as one array of (cid, cvec, norm)
-    structs: a shuffle-free map-side projection, no window, no synthetic
-    row ids.  (A cross-join + Window(partitionBy a row id) amplified every
-    row nlist-fold, paid a full exchange per ingest, and keyed on an id a
-    stage retry can recompute differently.)
+    """Assign each vector to its nearest FIXED centroid: one shuffle-free
+    mapInArrow map that scores each Arrow batch against the collected
+    centroid matrix (``_score_matrix``) and keeps its first cell by
+    ``_nearest_cells``, the probe's rule, so ties go to the lowest
+    centroid_id.  No join, no window, no synthetic row ids: a row's cell
+    depends on its vector alone, so a stage retry recomputes it exactly.
 
-    The array is an expression LITERAL with one array literal per
-    centroid (per-float literals took 1.3-1.7 s to plan at nlist 32 x dim
-    64 on 4 cores, these 0.6-0.7 s).  Beyond ``MAX_LITERAL_CELLS`` floats
-    (far above any sane IVF configuration) the same array arrives as a
-    broadcast one-row column instead.  COSINE scores are V.cosine's bits
-    with each norm (V.norm's sequential fold) computed once, not once per
-    pair.  Ties break toward the lowest centroid_id."""
-    from functools import reduce
+    Input columns pass through; ``centroid_id`` (int) replaces an
+    existing column of that name or is appended.  A null vector, or one
+    with a null element, has no score and goes to the lowest centroid_id;
+    a vector whose length differs from the centroids' raises ValueError.
+    With no centroids every row's centroid_id is null."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    from pyspark.sql import types as T
 
+    cids, C = _centroid_matrix(centroids)
+    if not len(cids):
+        return vectors.withColumn("centroid_id", F.lit(None).cast("int"))
+    dim, names, fields = C.shape[1], vectors.columns, vectors.schema.fields
+    at = names.index("centroid_id") if "centroid_id" in names else len(names)
+    cid_field = T.StructField("centroid_id", T.IntegerType())
+    schema = T.StructType(fields[:at] + [cid_field] + fields[at + 1 :])
+    v = names.index(vec_col)
+
+    def place(batches):
+        for batch in batches:
+            vec = batch.column(v)
+            bad = set(pc.list_value_length(vec).drop_null().to_pylist()) - {dim}
+            if bad:
+                raise ValueError(
+                    f"{vec_col!r} holds a vector of length {min(bad)}, "
+                    f"the centroids {dim}"
+                )
+            # null rows and null elements read as NaN: all the row's scores
+            # are NaN, a tie, so the lowest centroid_id wins
+            X = np.full((batch.num_rows, dim), np.nan)
+            flat = pc.cast(vec.flatten(), pa.float64()).to_numpy(zero_copy_only=False)
+            X[vec.is_valid().to_numpy(zero_copy_only=False)] = flat.reshape(-1, dim)
+            best = _nearest_cells(_score_matrix(X, C, metric), cids, 1, metric)
+            cols = batch.columns
+            cols[at : at + 1] = [pa.array(best[:, 0], pa.int32())]
+            yield pa.RecordBatch.from_arrays(cols, names=schema.names)
+
+    return vectors.mapInArrow(place, schema)
+
+
+def _centroid_matrix(centroids: DataFrame):
+    """The collected centroid table as (ids ascending, (nlist, dim)
+    float64 matrix): no Spark job when it is a local relation, as
+    build_ivf returns."""
     import numpy as np
 
-    def literal(r):
-        cvec = np.asarray(r["cvec"], dtype=np.float64)
-        norm = float(np.sqrt(reduce(lambda t, x: t + x * x, cvec.tolist(), 0.0)))
-        return F.struct(
-            F.lit(int(r["centroid_id"])).alias("cid"),
-            F.lit(cvec).alias("cvec"),
-            F.lit(norm).alias("n"),
-        )
+    rows = sorted(centroids.select("centroid_id", "cvec").collect())
+    cids = np.asarray([r.centroid_id for r in rows], dtype=np.int64)
+    return cids, np.asarray([r.cvec for r in rows], dtype=np.float64)
 
-    cents = centroids.select("centroid_id", "cvec").collect()
-    rows = vectors
-    if cents and len(cents) * len(cents[0]["cvec"]) <= MAX_LITERAL_CELLS:
-        arr = F.array(*map(literal, cents))
-    else:
-        cvec = V.as_double(F.col("cvec"))
-        ids = F.col("centroid_id").cast("int")
-        one = F.struct(ids.alias("cid"), cvec.alias("cvec"), V.norm(cvec).alias("n"))
-        rows = vectors.crossJoin(
-            F.broadcast(centroids.agg(F.collect_list(one).alias("_cents")))
-        )
-        arr = F.col("_cents")
-    desc = V.METRIC_DESCENDING[metric.upper()]
-    cosine = metric.upper() == "COSINE"
 
-    def nearest(v, vn):
-        def score(c):
-            if cosine:
-                return V.dot(v, c["cvec"]) / F.greatest(vn * c["n"], F.lit(1e-12))
-            return V.score_expr(metric, v, c["cvec"])
+def _nearest_cells(S, cids, n: int, metric: str):
+    """Each row's ``n`` best cells as an (rows, n) array of ids, from its
+    (rows, cells) scores ``S`` against ``cids`` (ascending): a stable sort
+    in the metric's direction, so ties go to the lowest centroid_id.  The
+    one rule assign_to_centroids (n = 1) and _probe_cells share."""
+    import numpy as np
 
-        # struct comparison orders by fields in sequence: (score, tiebreak)
-        # — for descending metrics array_max with tiebreak=-cid picks the
-        # highest score then the LOWEST cid
-        scored = F.transform(
-            arr,
-            lambda c: F.struct(
-                score(c).alias("s"), (-c["cid"] if desc else c["cid"]).alias("t")
-            ),
-        )
-        best = F.array_max(scored) if desc else F.array_min(scored)
-        return -best["t"] if desc else best["t"]
-
-    # one-element transforms bind the row's vector and norm to lambda
-    # variables; an outer expression is re-evaluated on every lambda call
-    cid = F.transform(
-        F.array(V.as_double(F.col(vec_col))),
-        lambda v: F.transform(
-            F.array(V.norm(v) if cosine else F.lit(0.0)), lambda vn: nearest(v, vn)
-        )[0],
-    )[0]
-    return rows.withColumn("centroid_id", cid.cast("int")).drop("_cents")
+    key = -S if V.METRIC_DESCENDING[metric.upper()] else S
+    return cids[np.argsort(key, axis=1, kind="stable")[:, :n]]
 
 
 def append_to_index(
@@ -334,24 +329,15 @@ def _score_cells(index, q_ids, Q, q_type, cells, k, metric) -> DataFrame:
 
 def _probe_cells(q_ids, Q, centroids, nprobe, metric) -> dict:
     """{query id: its nprobe best centroid ids}, scored on the driver
-    against the collected centroid table (no Spark job when it is a
-    local relation, as build_ivf returns).  Cells rank by score in the
+    against the collected centroid table by ``_nearest_cells``, the rule
+    assign_to_centroids places vectors by.  Cells rank by score in the
     metric's direction, ties to the lowest centroid_id: knn_join's
     order, so this returns what ``_probe`` does."""
-    import numpy as np
-
-    rows = centroids.select("centroid_id", "cvec").collect()
-    if not rows or not q_ids:
+    cids, C = _centroid_matrix(centroids)
+    if not len(cids) or not q_ids:
         return {q: [] for q in q_ids}
-    cids = np.asarray([r.centroid_id for r in rows])
-    C = np.asarray([r.cvec for r in rows], dtype=np.float64)
-    S = _score_matrix(C, Q, metric)
-    desc = V.METRIC_DESCENDING[metric.upper()]
-    top = max(nprobe, 0)
-    return {
-        q: cids[np.lexsort((cids, -S[:, j] if desc else S[:, j]))[:top]].tolist()
-        for j, q in enumerate(q_ids)
-    }
+    S = _score_matrix(C, Q, metric).T
+    return dict(zip(q_ids, _nearest_cells(S, cids, max(nprobe, 0), metric).tolist()))
 
 
 def _probe(queries, centroids, nprobe, metric):
@@ -707,8 +693,8 @@ def maintain_ivf(
     find them; an idle pass costs one partition-column scan."""
     import numpy as np
 
-    # nlist rows — bounded by index configuration (same justified-collect
-    # class as the 128-centroid collect in _ivf_index_cached)
+    # nlist rows — bounded by index configuration (the same class as the
+    # centroid collect assign_to_centroids and the probe make)
     sizes = {
         int(r["centroid_id"]): int(r["n"])
         for r in audit_ivf_cells(spark, index_path, centroids).collect()

@@ -5,8 +5,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from coldata_spark.operators.similarity import _estimated_bytes
-
 # Broadcast the pruned build side while the RAW scan estimate is at most
 # this: past it the broadcast build itself dominates (q02 at 256x:
 # broadcast 5.1 s vs shuffle join 4.4 s).
@@ -14,6 +12,16 @@ BROADCAST_MAX_BYTES = 256 << 20
 # Hash-build per partition while estimate / shuffle partitions is at most
 # this (fits execution memory); beyond it the spill-safe sort-merge runs.
 HASH_BUILD_MAX_BYTES = 64 << 20
+
+
+def _estimated_bytes(df: DataFrame) -> int:
+    """Catalyst's size estimate for a plan (file sizes for scans)."""
+    try:
+        return int(
+            df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+        )
+    except Exception:
+        return 0
 
 
 def _shuffle_partitions(spark: SparkSession) -> int:

@@ -28,6 +28,8 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from coldata_spark.functions import vector as V
+from coldata_spark.operators.joins import _estimated_bytes
+
 # Above this optimizer size estimate, operators whose cost is quadratic in
 # (or that must broadcast) a side refuse to run unless forced: nobody should
 # ship an O(n^2) plan to a 100 TB table by accident.
@@ -469,16 +471,6 @@ def _parse_bytes(s: str) -> int:
         if s.endswith(suf):
             return int(float(s[: -len(suf)])) * m
     return int(float(s))
-
-
-def _estimated_bytes(df: DataFrame) -> int:
-    """Catalyst's size estimate for a plan (file sizes for scans)."""
-    try:
-        return int(
-            df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        )
-    except Exception:
-        return 0
 
 
 def _estimated_rows(df: DataFrame) -> int:

@@ -711,8 +711,8 @@ def q150_ann_ivf_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     probed cells only.  The Spark side runs the REAL machinery end to
     end: assign_to_centroids -> write_ivf (partitioned by cell) ->
     search_ivf's centroid probe + partition-pruned scan.  Float parity:
-    every fold is sequential on both engines (functions/vector.py dot
-    vs list_dot_product over ORDER BY i lists, ~1 ulp); selection
+    the Spark side scores in numpy (_score_matrix), the SQL side with
+    sequential folds over ORDER BY i lists, a few ulp apart; selection
     comparisons ride unrounded doubles whose gaps are macroscopic
     (cell-to-cell cosine differences), the same risk class q33's
     hash-green argmax already carries; output scores round to 6 like
@@ -1160,7 +1160,7 @@ def q151_ivf_pq_ann(spark, sf_dir):
     integer arithmetic with explicit tie-breaks, so the lossy output
     itself hash-matches the SQL replay (no 'recall curve' hedge; the
     cut IS the checked value).  The Spark side still runs the REAL
-    machinery: assign_to_centroids' literal-array argmin, pq_encode's
+    machinery: assign_to_centroids' numpy nearest-cell map, pq_encode's
     numpy mapInPandas, search_ivf_pq's expr probe + Arrow ADC scan +
     window cut + full-precision re-rank (sqrt of an exact integer,
     correctly rounded on both engines).  The float-COSINE KMeans

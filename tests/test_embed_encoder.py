@@ -103,7 +103,7 @@ def test_embed_queries_contract(spark):
     local relation whose exact size estimate fits search_ivf's collect
     side."""
     from coldata_spark.operators import ivf
-    from coldata_spark.operators.similarity import _estimated_bytes
+    from coldata_spark.operators.joins import _estimated_bytes
 
     loads = []
     queries = [f"query {i} about sensor data" for i in range(32)]

@@ -317,29 +317,69 @@ def test_knn_zero_vector_scores_zero_not_nan(spark, tmp_path, monkeypatch):
         assert best.vec_id == 1, f"{strategy}: zero vector outranked match"
 
 
-def test_assign_to_centroids_shuffle_free_and_deterministic(
-    spark, sf_dir, monkeypatch
-):
-    """Round-4 review fix: the literal-array argmin assign has NO exchange
-    and NO window in its plan, and agrees exactly with the broadcast
-    fallback for centroid sets over MAX_LITERAL_CELLS (same score
-    expression, same lowest-cid tie-break)."""
-    from coldata_spark.operators import ivf
+def _probed_cell(rows, centroids, metric="COSINE"):
+    """{vec_id: the cell _probe_cells(..., nprobe=1) picks for its vector}."""
+    ids = [r.vec_id for r in rows]
+    Q = np.asarray([r.embedding for r in rows], dtype=np.float64)
+    return {q: c[0] for q, c in ivf._probe_cells(ids, Q, centroids, 1, metric).items()}
 
-    emb = load(spark, sf_dir, "embeddings").limit(200)
+
+def test_assign_to_centroids_shuffle_free_and_deterministic(spark, sf_dir):
+    """The assignment is one map: NO exchange and NO window in its plan
+    (the input is a filter, not a limit, whose global limit would bring
+    its own exchange).  Every row lands in the cell the probe ranks first
+    for its vector, and placing the placed rows again changes nothing."""
+    from tests.test_plans import executed_plan
+
+    emb = load(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 200)
     _assigned, centroids = ivf.build_ivf(emb, nlist=4)
 
-    fast = ivf.assign_to_centroids(emb, centroids)
-    plan = fast._jdf.queryExecution().executedPlan().toString()
+    assigned = ivf.assign_to_centroids(emb, centroids)
+    plan = executed_plan(assigned)
     assert "Exchange" not in plan and "Window" not in plan
+    rows = assigned.collect()
+    assert {r.vec_id: r.centroid_id for r in rows} == _probed_cell(rows, centroids)
+    # an existing centroid_id column is replaced in place, as withColumn did
+    stale = assigned.withColumn("centroid_id", F.lit(-1))
+    again = ivf.assign_to_centroids(stale, centroids)
+    assert again.columns == assigned.columns
+    assert sorted(again.collect()) == sorted(rows)
 
-    monkeypatch.setattr(ivf, "MAX_LITERAL_CELLS", 0)
-    slow = ivf.assign_to_centroids(emb, centroids)
-    slow_plan = slow._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastNestedLoopJoin" in slow_plan
-    got = {r.vec_id: r.centroid_id for r in fast.collect()}
-    want = {r.vec_id: r.centroid_id for r in slow.collect()}
-    assert got == want
+
+@pytest.mark.parametrize("metric", ["COSINE", "IP", "L2"])
+def test_assign_to_centroids_places_null_and_zero_vectors(spark, metric):
+    """A null vector and a vector with a null element have no score and
+    go to the lowest centroid_id under every metric (ignoring the null
+    element would pick cell 2).  An all-zero vector ties every cell under
+    COSINE (it scores 0, not NaN) and IP, so it goes to the lowest id
+    too; under L2 it goes to the centroid nearest the origin."""
+    centroids = spark.createDataFrame(
+        [(0, [3.0, 4.0]), (1, [-1.0, 0.5]), (2, [0.5, -2.0])],
+        "centroid_id bigint, cvec array<double>",
+    )
+    vecs = spark.createDataFrame(
+        [(1, None), (2, [None, -1.0]), (3, [0.0, 0.0]), (4, [-2.0, 1.0])],
+        "vec_id long, embedding array<double>",
+    )
+    got = ivf.assign_to_centroids(vecs, centroids, metric=metric).collect()
+    zero = 1 if metric == "L2" else 0
+    assert {r.vec_id: r.centroid_id for r in got} == {1: 0, 2: 0, 3: zero, 4: 1}
+
+
+def test_assign_to_centroids_rejects_a_vector_of_another_length(spark):
+    """A vector whose length differs from the centroids' has no cell: the
+    assignment fails naming the column and both lengths."""
+    from pyspark.errors import PythonException
+
+    centroids = spark.createDataFrame(
+        [(0, [1.0, 0.0]), (1, [0.0, 1.0])], "centroid_id bigint, cvec array<double>"
+    )
+    vecs = spark.createDataFrame(
+        [(1, [0.0, 1.0]), (2, [1.0, 0.0, 0.0])], "vec_id long, embedding array<double>"
+    )
+    with pytest.raises(PythonException, match="ValueError") as err:
+        ivf.assign_to_centroids(vecs, centroids).collect()
+    assert "'embedding' holds a vector of length 3, the centroids 2" in str(err.value)
 
 
 def _built_ivf(spark, sf_dir, tmp_path):
@@ -364,9 +404,10 @@ def _split_ivf(spark, sf_dir, tmp_path):
 )
 def test_ivf_rows_sit_in_their_nearest_cell(spark, sf_dir, tmp_path, make):
     """Build, append and a maintenance split all place every stored row in
-    the cell assign_to_centroids picks against the published centroids —
-    the cosine rule the probe ranks cells by.  (MLlib's Euclidean fit left
-    64 of 500 sf0.001 vectors outside their cosine-nearest of 8 cells.)"""
+    the cell assign_to_centroids picks against the published centroids,
+    which is the cell the probe ranks first for that vector.  (MLlib's
+    Euclidean fit left 64 of 500 sf0.001 vectors outside their
+    cosine-nearest of 8 cells.)"""
     path, centroids = make(spark, sf_dir, tmp_path)[:2]
     stored = (
         spark.read.parquet(path)
@@ -377,6 +418,8 @@ def test_ivf_rows_sit_in_their_nearest_cell(spark, sf_dir, tmp_path, make):
     off = again.filter(F.col("stored") != F.col("centroid_id"))
     assert stored.count() > 0
     assert off.count() == 0, off.select("vec_id", "stored", "centroid_id").collect()[:5]
+    rows = stored.collect()
+    assert {r.vec_id: r.stored for r in rows} == _probed_cell(rows, centroids)
 
 
 # ---------------------------------------------------------------------------

@@ -168,6 +168,18 @@ def _build_ivf_and_assign(spark, sf_dir, fixture):
     )
 
 
+def _append_to_index(spark, sf_dir, fixture):
+    from coldata_spark.operators import ivf
+
+    emb = load(spark, sf_dir, "embeddings")
+    assigned, centroids = ivf.build_ivf(emb.filter(F.col("vec_id") % 2 == 0), nlist=8)
+    path = str(fixture("tmp_path") / "append_index")
+    ivf.write_ivf(assigned, path)
+    return lambda: ivf.append_to_index(
+        emb.filter(F.col("vec_id") % 2 == 1), centroids, path
+    )
+
+
 def _search(spark, sf_dir, fixture):
     from coldata_spark import search as S
 
@@ -182,6 +194,9 @@ JOB_GATES = [
     # the driver-sample fit's one top-k job plus the assignment's map;
     # MLlib KMeans ran ~25 at sf0.001
     ("build_ivf", _build_ivf_and_assign, 3),
+    # the placed rows' shuffle by cell and their partitioned write: the
+    # centroids are a local relation, so placing runs no job of its own
+    ("append_to_index", _append_to_index, 2),
     # the in-cell scoring and the document lookup; the rest runs on the
     # driver.  The Spark-side finish (schema inference, query fetch,
     # group-best and rank stages, range sort) ran 8
