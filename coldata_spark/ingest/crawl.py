@@ -7,11 +7,14 @@ checks existence, fetches + extracts, and inserts (e.g. uci.py:59-82).  The
 Spark-native topology:
 
   driver:    discovery (inherently sequential pagination, R5 early-exit)
-             emits a seed DataFrame of (source, url)
-  cluster:   seed -> limit per source (P6) -> anti-join existing pks (P5/J3)
-             -> repartition(parallelism) -> mapInPandas fetch+extract
-             (politeness sleep + exponential backoff INSIDE the UDF, R3/R4)
-             -> project to the document schema (P1) -> merge_append (S8)
+             emits the (source, url) seed list; the list is capped per
+             source (P6) and deduped across sources (first source wins)
+             in place, then becomes a local relation
+  cluster:   seed -> anti-join existing pks (P5/J3; pruned when the store
+             is an empty local relation) -> repartition(parallelism)
+             -> mapInPandas fetch+extract (politeness sleep + exponential
+             backoff INSIDE the UDF, R3/R4) -> project to the document
+             schema (P1) -> merge_append (S8)
 
 The fetcher is injectable (tests use recorded fixtures — no network, per
 SURVEY §5.5); a real HTTP fetcher plugs into the same signature.  Fetch
@@ -56,14 +59,51 @@ class CrawlConfig:
     fetch_parallelism: int = 8
 
 
+def capped_seeds(
+    urls_by_source: dict[str, list[str]],
+    configs: dict[str, CrawlConfig],
+    default: CrawlConfig = CrawlConfig(),
+) -> dict[str, list[str]]:
+    """The urls each source fetches, decided on the driver: its first
+    ``num_attempts`` urls in url order (P6), minus the urls an earlier
+    source in ``urls_by_source`` order already takes.  A url listed by two
+    sites is fetched once, under the first (crawler.py:40-44's
+    insert-if-absent on the url's pk)."""
+    taken: set[str] = set()
+    out: dict[str, list[str]] = {}
+    for source, urls in urls_by_source.items():
+        cap = max(0, configs.get(source, default).num_attempts)
+        out[source] = []
+        for url in sorted(urls)[:cap]:
+            if url not in taken:
+                taken.add(url)
+                out[source].append(url)
+    return out
+
+
 def seed_dataframe(
     spark: SparkSession, urls_by_source: dict[str, list[str]]
 ) -> DataFrame:
-    """Discovery output -> seed DataFrame.  Discovery itself (paginated
-    listing, S6) stays on the driver: it is sequential by nature (R5 stop
-    detection reads each page before deciding to fetch the next)."""
+    """Discovery output -> seed DataFrame (website, url), a local relation
+    (tables.local_frame: no Python worker reads it back).  Discovery itself
+    (paginated listing, S6) stays on the driver: it is sequential by nature
+    (R5 stop detection reads each page before deciding to fetch the next)."""
+    from coldata_spark.tables import local_frame
+
     rows = [(src, u) for src, urls in urls_by_source.items() for u in urls]
-    return spark.createDataFrame(rows, ["website", "url"])
+    return local_frame(
+        spark,
+        {"website": [r[0] for r in rows], "url": [r[1] for r in rows]},
+        "website string, url string",
+    )
+
+
+def no_documents(spark: SparkSession) -> DataFrame:
+    """An empty document table as a local relation: a join against it is
+    pruned at planning, and reading it runs no Spark job."""
+    from coldata_spark.tables import local_frame
+
+    return local_frame(spark, {f: [] for f in DOCUMENT_SCHEMA.names}, DOCUMENT_SCHEMA)
 
 
 def fetch_documents(
@@ -116,20 +156,12 @@ def crawl(
     fetcher_factory: FetcherFactory,
     config: CrawlConfig = CrawlConfig(),
 ) -> DataFrame:
-    """Full ingest pass: seed -> cap -> anti-join existing -> fetch -> docs.
+    """Full ingest pass: seed -> cap -> anti-join existing -> fetch -> docs,
+    one ``config`` for every source.
 
-    Returns the NEW documents (website, index, url, info) — the caller
-    appends them (operators.upsert.merge_append / Delta MERGE)."""
-    from pyspark.sql import Window as W
-
-    seeds = seed_dataframe(spark, urls_by_source)
-    # per-source cap (P6): deterministic first-n by url within each source
-    w = W.partitionBy("website").orderBy("url")
-    seeds = (
-        seeds.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= config.num_attempts)
-        .drop("_rn")
-    )
+    Returns the NEW documents (website, index, url, info), one per url —
+    the caller appends them (operators.upsert.merge_append / Delta MERGE)."""
+    seeds = seed_dataframe(spark, capped_seeds(urls_by_source, {}, config))
     # P5/J3: skip urls whose pk already exists (crawler.py:39-50)
     seeds = seeds.withColumn("index", F.sha2(F.col("url"), 256)).join(
         existing.select("index"), "index", "left_anti"
@@ -167,18 +199,21 @@ def crawl_all_sources(
     """Multi-source ingest pass with per-source configs — main.py:14-36's
     sequential eight-crawler loop as a UNION of per-source plans Spark runs
     concurrently (scheduler pools / one job), each with its own politeness
-    and cap.  Returns the union of new documents across sources, deduped on
-    pk across sources too (two sites can list the same url)."""
+    and cap.  Returns the union of new documents across sources, one per
+    url: a url two sites list is fetched once, under the first source in
+    ``urls_by_source`` order (capped_seeds; each cap applies first)."""
     configs = configs or REFERENCE_SOURCES
-    parts: list[DataFrame] = []
-    for source, urls in urls_by_source.items():
-        cfg = configs.get(source, CrawlConfig())
-        parts.append(crawl(spark, {source: urls}, existing, fetcher_factory, cfg))
+    parts = [
+        crawl(spark, {source: urls}, existing, fetcher_factory,
+              configs.get(source, CrawlConfig()))
+        for source, urls in capped_seeds(urls_by_source, configs).items()
+        if urls
+    ]
     if not parts:
         # a discovery run that found nothing (or all sources disabled) is
         # a normal empty pass, not an IndexError for the scheduler to eat
-        return spark.createDataFrame([], DOCUMENT_SCHEMA)
+        return no_documents(spark)
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)
-    return out.dropDuplicates(["index"])
+    return out

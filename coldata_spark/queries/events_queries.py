@@ -1323,7 +1323,8 @@ def q135_weekday_hour_heatmap(spark: SparkSession, sf_dir: str) -> DataFrame:
         per_user.groupBy("_cell")
         .agg(
             F.sum("_n").cast("long").alias("n_events"),
-            F.count("*").cast("long").alias("n_users"),
+            # a NULL user_id group is no user: count(DISTINCT) skips NULLs
+            F.count("user_id").cast("long").alias("n_users"),
         )
         .select(
             F.expr("cast(_cell div 24 as bigint)").alias("dow"),

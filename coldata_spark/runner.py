@@ -10,9 +10,12 @@ Here the same flow, Spark-first, driven by the SAME config file via
 
   crawl    -> ingest.crawl.crawl_all_sources over the ENABLED sources
               (the num_attempts=0 disable quirk from the reference config
-              applies), per-source politeness from the config;
+              applies), per-source politeness from the config; caps and
+              the cross-source url dedup run on the driver's seed list;
   upload   -> operators.upsert.merge_append on the configured pk column
-              into a parquet store named by the config's db/collection;
+              into a parquet store named by the config's db/collection
+              (the first pass writes the crawl as is: an absent store is
+              an empty local relation, so nothing is counted or joined);
   index    -> search.build_index (chunk -> embed -> metric k-means cells
               -> centroid-partitioned write) when ``vdb.milvus.renew``;
   search   -> search.search with the config's nprobe/limit.
@@ -27,17 +30,13 @@ from __future__ import annotations
 import os
 from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 
 from coldata_spark import embed as E
 from coldata_spark import search as S
 from coldata_spark.config import AppConfig
 from coldata_spark.ingest import crawl as C
 from coldata_spark.operators import upsert as U
-
-
-def _empty_docs(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame([], C.DOCUMENT_SCHEMA)
 
 
 def store_path(cfg: AppConfig, root: str) -> str:
@@ -64,20 +63,20 @@ def run_once(
     path = store_path(cfg, root)
     pk = cfg.store.index_field
     recover(path)  # heal crash residue before snapshotting the file listing
-    existing = (
-        spark.read.parquet(path) if os.path.isdir(path) else _empty_docs(spark)
-    )
-    n_existing = existing.count()
+    if os.path.isdir(path):
+        existing = spark.read.parquet(path)
+        n_existing = existing.count()
+    else:
+        # a local relation: the crawl's anti-join against it is pruned
+        existing, n_existing = C.no_documents(spark), 0
 
     # crawl ONLY the sources the config enables, each under its own
     # politeness/caps (main.py's eight sequential crawlers -> one unioned
-    # plan; crawl() itself anti-joins existing pks = upsert-if-absent)
+    # plan; the crawl anti-joins existing pks = upsert-if-absent, and
+    # yields one document per url, so the fold needs no dedup of its own)
     configs = cfg.crawl_configs()
     urls = {s: u for s, u in urls_by_source.items() if s in configs}
-    if urls:
-        new = C.crawl_all_sources(spark, urls, existing, fetcher_factory, configs)
-    else:
-        new = _empty_docs(spark)
+    new = C.crawl_all_sources(spark, urls, existing, fetcher_factory, configs)
     # crash-safe swap of the merged store (foldcommit sentinel protocol;
     # idempotent — re-merging the same crawl batch inserts nothing new;
     # RESERVED id keeps the marker out of stream-checkpoint id space)
@@ -85,7 +84,7 @@ def run_once(
 
     os.makedirs(os.path.dirname(path), exist_ok=True)
     fold_once(
-        new.dropDuplicates([pk]),
+        new,
         path,
         RESERVED_BATCH_ID,
         lambda existing_df, part: U.merge_append(part, existing_df, pk=pk),

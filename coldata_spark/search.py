@@ -9,8 +9,10 @@ main.py):
            sort -> join-back -> project          (vdb.search, vdb.py:88-122)
   demo:    formatted results with rank + preview (main.py:48-58, demo.py)
 
-Spark shape: build is one batch job writing a centroid-partitioned parquet
-index.  Index "renew" (vdb.py:199-201) = overwrite, as in the reference.
+Spark shape: build scans the store once, chunks and embeds each chunk once
+(the vectors are cached between the k-means sample's top-k job and the
+placement + write), and writes a centroid-partitioned parquet index.
+Index "renew" (vdb.py:199-201) = overwrite, as in the reference.
 
 Search runs two Spark jobs and finishes on the driver, as the reference
 runs only the ANN probe in Milvus and the rest in process over at most k
@@ -51,8 +53,11 @@ _INDEX_SCAN = "vec_id string, embedding array<float>, centroid_id int"
 # chunks scored per result: the parent collapse can still fill k parents
 # when the top hits crowd into few many-chunk documents
 OVERFETCH = 4
-# build_index writes chunk ids as "<parent>_<i>"
-_CHUNK_ORDINAL = re.compile(r"_[0-9]+$")
+# build_index writes chunk ids as "<parent>_<i>"; the parent is the chunk
+# id minus this TRAILING ordinal, in Spark (build_index) and on the driver
+# (_rank_parents).  A parent id may hold '_' itself (the reference's
+# split('_')[0] only ever sees sha256 hex ids, vdb.py:101-122).
+_CHUNK_ORDINAL = r"_[0-9]+$"
 
 
 @dataclass
@@ -76,14 +81,19 @@ def build_index(
     metric: str = "COSINE",
     encoder_factory=E._default_encoder_factory,
 ) -> SearchIndex:
-    """vdb.update: chunk -> embed -> k-means cells -> partitioned write."""
+    """vdb.update: chunk -> embed -> k-means cells -> partitioned write.
+
+    The store is scanned and each chunk embedded once: a vector's
+    ``parent_id`` is its chunk id minus the trailing ordinal, cast back
+    to the id column's type, so no join re-reads the store.  The vectors
+    are cached for the fit's sample and the placement + write, and
+    released before this returns, on error too."""
     starts = TX.chunk_starts(F.length(text_col))
     chunks = documents.select(
         F.col(id_col).alias("parent_id"),
         F.col(text_col),
         F.posexplode(starts).alias("_p", "i"),
     ).select(
-        "parent_id",
         F.concat_ws("_", F.col("parent_id"), F.col("i")).alias("chunk_id"),
         F.expr(
             f"substring({text_col}, 1 + i*{TX.CHUNK_STRIDE}, {TX.CHUNK_SIZE})"
@@ -93,11 +103,22 @@ def build_index(
         chunks, text_col="chunk_text", id_col="chunk_id",
         encoder_factory=encoder_factory,
     )
-    vectors = emb.join(chunks.select("chunk_id", "parent_id"), "chunk_id").select(
-        F.col("chunk_id").alias("vec_id"), "parent_id", "embedding"
+    chunk_id = F.col("chunk_id")
+    # a null id's chunks are plain "<i>" (concat_ws skips nulls): nothing
+    # to strip, and their parent stays null
+    parent = F.when(
+        chunk_id.rlike(_CHUNK_ORDINAL), F.regexp_replace(chunk_id, _CHUNK_ORDINAL, "")
     )
-    assigned, centroids = ivf.build_ivf(vectors, nlist=nlist, metric=metric)
-    ivf.write_ivf(assigned, path)
+    vectors = emb.select(
+        chunk_id.alias("vec_id"),
+        parent.cast(documents.schema[id_col].dataType).alias("parent_id"),
+        "embedding",
+    ).persist()
+    try:
+        assigned, centroids = ivf.build_ivf(vectors, nlist=nlist, metric=metric)
+        ivf.write_ivf(assigned, path)
+    finally:
+        vectors.unpersist()
     # EFFECTIVE nlist: build_ivf clamps k to the distinct sample points, so
     # a small fresh collection gets fewer cells than requested — callers
     # reasoning about nprobe fractions need the real number.  The centroid
@@ -192,11 +213,8 @@ def _rank_parents(hits, k: int, metric: str) -> list[tuple]:
     for q in sorted(by_q):
         best: dict = {}
         for key, vec_id in sorted(by_q[q])[: k * OVERFETCH]:
-            # the parent is the chunk id minus its TRAILING "_<ordinal>":
-            # a caller's parent id may hold '_' itself (the reference's
-            # split('_')[0] only ever sees sha256 hex ids, vdb.py:101-122).
-            # Hits come best first, so a parent's first hit is its best.
-            best.setdefault(_CHUNK_ORDINAL.sub("", vec_id), key)
+            # hits come best first, so a parent's first hit is its best
+            best.setdefault(re.sub(_CHUNK_ORDINAL, "", vec_id), key)
         top = sorted((key, parent) for parent, key in best.items())[:k]
         out += [(q, r, sign * key, p) for r, (key, p) in enumerate(top, 1)]
     return out

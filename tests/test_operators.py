@@ -248,7 +248,9 @@ def test_crawl_framework_no_network(spark):
 
 def test_crawl_all_sources_dedups_across_sources(spark):
     """Multi-source crawl: per-source configs apply, and a url listed by TWO
-    sources lands once (cross-source pk dedup, crawler.py:40-44 semantics)."""
+    sources is fetched once and lands once, under the first source listed
+    (cross-source pk dedup, crawler.py:40-44 semantics).  Each source's
+    cap applies before the dedup."""
     from coldata_spark.ingest.crawl import CrawlConfig, crawl_all_sources
 
     urls = {
@@ -256,16 +258,35 @@ def test_crawl_all_sources_dedups_across_sources(spark):
         "AWS": ["http://x/c", "http://x/shared"],
     }
     existing = spark.createDataFrame([("seen", )], ["index"])
-    cfgs = {s: CrawlConfig(fetch_parallelism=2) for s in urls}
-    docs = crawl_all_sources(
-        spark, urls, existing, lambda: (lambda u: f"content of {u}"), cfgs
-    )
-    rows = docs.collect()
-    got_urls = sorted(r["url"] for r in rows)
-    assert got_urls == sorted(
-        ["http://x/a", "http://x/b", "http://x/c", "http://x/shared"]
-    )
-    assert all(r["info"] == f"content of {r['url']}" for r in rows)
+
+    def run(order, caps=None):
+        fetches = spark.sparkContext.accumulator(0)
+
+        def fetcher_factory():
+            def fetch(url):
+                fetches.add(1)
+                return f"content of {url}"
+
+            return fetch
+
+        cfgs = {
+            s: CrawlConfig(num_attempts=(caps or {}).get(s, 1000), fetch_parallelism=2)
+            for s in urls
+        }
+        rows = crawl_all_sources(
+            spark, {s: urls[s] for s in order}, existing, fetcher_factory, cfgs
+        ).collect()
+        assert sorted(r["url"] for r in rows) == sorted(
+            ["http://x/a", "http://x/b", "http://x/c", "http://x/shared"]
+        )
+        assert all(r["info"] == f"content of {r['url']}" for r in rows)
+        assert fetches.value == len(rows)  # the shared url is fetched once
+        return {r["url"]: r["website"] for r in rows}["http://x/shared"]
+
+    assert run(["UCI", "AWS"]) == "UCI"
+    assert run(["AWS", "UCI"]) == "AWS"
+    # UCI's first 2 urls in url order leave "shared" out: AWS takes it
+    assert run(["UCI", "AWS"], caps={"UCI": 2}) == "AWS"
 
 
 def test_knn_zero_vector_scores_zero_not_nan(spark, tmp_path, monkeypatch):

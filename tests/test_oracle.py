@@ -28,6 +28,37 @@ def test_oracle_parity(spark, sf_dir, duck, name):
     assert not problems, f"{name}: " + "; ".join(problems)
 
 
+def test_q135_does_not_count_null_users(spark, sf_dir, tmp_path):
+    """A NULL user_id is no user: q135's n_users equals the oracle's
+    count(DISTINCT user_id) on a copy of the fixture with every 7th
+    event's user_id nulled (the clean fixtures have no NULLs)."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    for name in os.listdir(sf_dir):
+        if name.endswith(".parquet") and name != "events.parquet":
+            os.symlink(os.path.join(sf_dir, name), tmp_path / name)
+    events = pq.read_table(os.path.join(sf_dir, "events.parquet"))
+    users = events["user_id"]
+    nulled = pa.array([i % 7 == 0 for i in range(events.num_rows)])
+    events = events.set_column(
+        events.schema.get_field_index("user_id"), "user_id",
+        pc.if_else(nulled, pa.scalar(None, users.type), users),
+    )
+    pq.write_table(events, tmp_path / "events.parquet")
+    spec = ALL["q135_weekday_hour_heatmap"]
+    con = duck_connection(str(tmp_path))
+    try:
+        oracle = con.execute(spec.sql).df()
+    finally:
+        con.close()
+    problems = compare(spec.fn(spark, str(tmp_path)), oracle)
+    assert not problems, "; ".join(problems)
+
+
 def test_rows_only_queries_run(spark, sf_dir):
     for name, spec in ALL.items():
         if spec.sql is None:

@@ -188,9 +188,53 @@ def _search(spark, sf_dir, fixture):
     return lambda: S.search(spark, idx, docs, texts, k=3, nprobe=2).collect()
 
 
+def _cold_run_once(spark, sf_dir, fixture):
+    """A first run_once over two sources that share a url, renew off."""
+    from coldata_spark import config as CF
+    from coldata_spark import runner as R
+    from coldata_spark.ingest import crawl as C
+
+    cfg = CF.AppConfig()
+    for source in ("UCI", "AWS"):
+        cfg.sources[source] = CF.SourceConfig(
+            enabled=True, crawl=C.CrawlConfig(fetch_parallelism=2)
+        )
+    cfg.vdb.renew = False
+    urls = {
+        "UCI": [f"https://uci.example/{i}" for i in range(12)] + ["https://x/shared"],
+        "AWS": [f"https://aws.example/{i}" for i in range(9)] + ["https://x/shared"],
+    }
+
+    def fetcher_factory():  # nested: cloudpickle ships it by value
+        return lambda url: f"dataset page for {url} " * 8
+
+    root = str(fixture("tmp_path") / "cold")
+    return lambda: R.run_once(spark, cfg, root, urls, fetcher_factory)
+
+
+def _build_index(spark, sf_dir, fixture):
+    from coldata_spark import search as S
+
+    docs = load(spark, sf_dir, "documents")
+    path = str(fixture("tmp_path") / "build_index")
+    return lambda: S.build_index(docs, path, nlist=8)
+
+
 # (gate, setup(spark, sf_dir, fixture) -> the action to count, most jobs it
 # may run; ``fixture`` is request.getfixturevalue)
 JOB_GATES = [
+    # the two sources' fetch shuffles, the store write and the stored row
+    # count: caps and the cross-source dedup run on the driver's seed list
+    # and the anti-join against the absent store is pruned.  A row_number
+    # seed window, a count of the absent store and post-fetch dedups ran
+    # 12 to 14
+    ("run_once_cold", _cold_run_once, 6),
+    # the embed input's fan-out shuffle (the one-file fixture scans as one
+    # partition), the sample's top-k (2), then the placement's shuffle by
+    # cell and the write, over vectors embedded once and cached.  A chunk
+    # re-join, its broadcast of the embedded side and a second embed pass
+    # ran 7
+    ("build_index", _build_index, 5),
     # the driver-sample fit's one top-k job plus the assignment's map;
     # MLlib KMeans ran ~25 at sf0.001
     ("build_ivf", _build_ivf_and_assign, 3),
@@ -210,6 +254,60 @@ JOB_GATES = [
 def test_job_count_gates(spark, sf_dir, request, setup, max_jobs):
     action = setup(spark, sf_dir, request.getfixturevalue)
     assert jobs_run(spark, action) <= max_jobs
+
+
+def _cold_crawl(spark, sf_dir, fixture):
+    """The new-document frame a cold run_once crawls."""
+    from coldata_spark.ingest import crawl as C
+
+    seen = []
+    real = C.crawl_all_sources
+
+    def spy(*a, **kw):
+        seen.append(real(*a, **kw))
+        return seen[-1]
+
+    fixture("monkeypatch").setattr(C, "crawl_all_sources", spy)
+    _cold_run_once(spark, sf_dir, fixture)()
+    return seen[0]
+
+
+def _index_vectors(spark, sf_dir, fixture):
+    """The vectors build_index fits and places."""
+    from coldata_spark.operators import ivf
+
+    seen = []
+    real = ivf.build_ivf
+
+    def spy(vectors, *a, **kw):
+        seen.append(vectors)
+        return real(vectors, *a, **kw)
+
+    fixture("monkeypatch").setattr(ivf, "build_ivf", spy)
+    _build_index(spark, sf_dir, fixture)()
+    return seen[0]
+
+
+# (gate, setup(spark, sf_dir, fixture) -> a frame, {node name: how many
+# times its executed plan names it})
+PLAN_GATES = [
+    # seeds are a local relation, capped and deduped on the driver, and
+    # the anti-join against the absent store (an empty local relation) is
+    # pruned, where a row_number window, the join and RDD scans of the
+    # seeds and of the empty store were planned
+    ("run_once_cold_crawl", _cold_crawl, {"Window": 0, "Join": 0, "ExistingRDD": 0}),
+    # a vector's parent comes from its chunk id: no join, one store scan
+    # (re-joining the chunks scanned the store twice)
+    ("build_index_vectors", _index_vectors, {"Join": 0, "FileScan": 1}),
+]
+
+
+@pytest.mark.parametrize(
+    "setup,counts", [g[1:] for g in PLAN_GATES], ids=[g[0] for g in PLAN_GATES]
+)
+def test_plan_gates(spark, sf_dir, request, setup, counts):
+    plan = executed_plan(setup(spark, sf_dir, request.getfixturevalue))
+    assert {node: plan.count(node) for node in counts} == counts, plan
 
 
 def _file_scans(node):

@@ -305,6 +305,58 @@ def test_build_index_effective_nlist_without_spark_job(spark, sf_dir, tmp_path):
     assert jobs_run(spark, idx.centroids.count) > 0  # the counter counts
 
 
+@pytest.mark.parametrize("fails", [False, True], ids=["returns", "raises"])
+def test_build_index_releases_its_vector_cache(spark, sf_dir, tmp_path, monkeypatch, fails):
+    """build_index caches the embedded vectors for the fit's sample and the
+    placement + write, and releases them before it returns, on error
+    too: it leaves no RDD of its own persisted and the vectors uncached.
+    (Earlier tests in the session may hold caches of their own.)"""
+    from coldata_spark.operators import ivf
+
+    docs = load(spark, sf_dir, "documents")
+    jsc = spark.sparkContext._jsc
+
+    def persisted():
+        return set(jsc.getPersistentRDDs().keySet())
+
+    before = persisted()
+    seen = []
+    real_build_ivf = ivf.build_ivf
+
+    def spy(vectors, *a, **kw):
+        vectors.count()  # fills the cache
+        seen.append((vectors, len(persisted() - before)))
+        if fails:
+            raise RuntimeError("fit failed")
+        return real_build_ivf(vectors, *a, **kw)
+
+    monkeypatch.setattr(ivf, "build_ivf", spy)
+    if fails:
+        with pytest.raises(RuntimeError, match="fit failed"):
+            S.build_index(docs, str(tmp_path / "idx"), nlist=8)
+    else:
+        S.build_index(docs, str(tmp_path / "idx"), nlist=8)
+    ((vectors, n_cached),) = seen
+    assert n_cached == 1
+    assert persisted() <= before
+    assert not vectors._jdf.storageLevel().useMemory()
+    assert not vectors._jdf.storageLevel().useDisk()
+
+
+def test_build_index_null_id_chunks_keep_a_null_parent(spark, sf_dir, tmp_path):
+    """A document with a null id chunks into plain "<i>" ids (concat_ws
+    skips nulls); deriving parents from chunk ids must leave those chunks
+    a null parent_id, not hand them to the documents whose ids read "<i>"."""
+    base = load(spark, sf_dir, "documents").orderBy("doc_id").limit(4)
+    ids = [r.doc_id for r in base.select("doc_id").collect()]
+    docs = base.withColumn("doc_id", F.when(F.col("doc_id") != ids[-1], F.col("doc_id")))
+    idx = S.build_index(docs, str(tmp_path / "null_idx"), nlist=2)
+    rows = spark.read.parquet(idx.path).select("vec_id", "parent_id").collect()
+    orphans = [r.vec_id for r in rows if r.parent_id is None]
+    assert orphans and all("_" not in v for v in orphans)
+    assert {r.parent_id for r in rows} == set(ids[:-1]) | {None}
+
+
 def test_pq_train_ragged_vectors_clear_error(spark):
     """Round-8 ADVICE: np.stack raises numpy's bare 'all input arrays must
     have the same shape' on mixed-length vectors, losing the guarded
