@@ -13,9 +13,9 @@ nprobe cells per search (vdb.py:88-100).  Spark-native re-expression:
           mode("overwrite").
 
   search: score queries against the (tiny, collected) centroid table ->
-          pick nprobe cells per query -> scan ONLY those partitions
-          (pushed-down centroid_id IN (...) filter) -> exact distance
-          within cells -> per-query top-k window.
+          pick nprobe cells per query by the placement rule (_nearest)
+          -> scan ONLY those partitions (pushed-down centroid_id IN (...)
+          filter) -> exact distance within cells -> per-query top-k.
 
 At 100 TB: the k-means fit reads at most SAMPLE_PER_CENTROID x nlist
 vectors (not the full corpus); the assign pass is one shuffle-free map;
@@ -25,6 +25,8 @@ operating point (config.yml:81-82) — recall 1.0 by construction.
 """
 
 from __future__ import annotations
+
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -60,8 +62,8 @@ def build_ivf(
     The fit reads a driver sample of at most SAMPLE_PER_CENTROID * nlist
     vectors; nlist clamps to its distinct points (none for an empty
     input).  assign_to_centroids places every vector in its
-    ``metric``-nearest cell by _nearest_cells, the rule append,
-    maintenance and the probe share."""
+    ``metric``-nearest cell by _nearest, the rule append, maintenance
+    and every probe share."""
     sample = _sample_vectors(vectors, vec_col, SAMPLE_PER_CENTROID * nlist)
     centers = dict(enumerate(_kmeans(sample, nlist, seed, metric).tolist()))
     centroids = _centroid_frame(vectors.sparkSession, centers)
@@ -154,17 +156,18 @@ def assign_to_centroids(
     centroids: DataFrame,
     vec_col: str = "embedding",
     metric: str = "COSINE",
+    n: int = 1,
 ) -> DataFrame:
-    """Assign each vector to its nearest FIXED centroid: one shuffle-free
-    mapInArrow map that scores each Arrow batch against the collected
-    centroid matrix (``_score_matrix``) and keeps its first cell by
-    ``_nearest_cells``, the probe's rule, so ties go to the lowest
-    centroid_id.  No join, no window, no synthetic row ids: a row's cell
-    depends on its vector alone, so a stage retry recomputes it exactly.
+    """Each vector's ``n`` nearest FIXED cells (placement: 1; the probe:
+    nprobe), one output row per cell and none for ``n <= 0``: one
+    shuffle-free mapInArrow map that scores each Arrow batch against the
+    collected centroid matrix by ``_nearest``, the driver probe's rule,
+    so ties go to the lowest centroid_id.  No join, no window, no
+    synthetic row ids: a stage retry recomputes a row's cells exactly.
 
     Input columns pass through; ``centroid_id`` (int) replaces an
     existing column of that name or is appended.  A null vector, or one
-    with a null element, has no score and goes to the lowest centroid_id;
+    with a null element, has no score and goes to the lowest centroid_ids;
     a vector whose length differs from the centroids' raises ValueError.
     With no centroids every row's centroid_id is null."""
     import numpy as np
@@ -191,13 +194,15 @@ def assign_to_centroids(
                     f"the centroids {dim}"
                 )
             # null rows and null elements read as NaN: all the row's scores
-            # are NaN, a tie, so the lowest centroid_id wins
+            # are NaN, a tie, so the lowest centroid_ids win
             X = np.full((batch.num_rows, dim), np.nan)
             flat = pc.cast(vec.flatten(), pa.float64()).to_numpy(zero_copy_only=False)
             X[vec.is_valid().to_numpy(zero_copy_only=False)] = flat.reshape(-1, dim)
-            best = _nearest_cells(_score_matrix(X, C, metric), cids, 1, metric)
+            best = _nearest(X, C, cids, n, metric)
+            if best.shape[1] != 1:  # one output row per (row, cell)
+                batch = batch.take(np.repeat(np.arange(batch.num_rows), best.shape[1]))
             cols = batch.columns
-            cols[at : at + 1] = [pa.array(best[:, 0], pa.int32())]
+            cols[at : at + 1] = [pa.array(best.ravel(), pa.int32())]
             yield pa.RecordBatch.from_arrays(cols, names=schema.names)
 
     return vectors.mapInArrow(place, schema)
@@ -214,15 +219,16 @@ def _centroid_matrix(centroids: DataFrame):
     return cids, np.asarray([r.cvec for r in rows], dtype=np.float64)
 
 
-def _nearest_cells(S, cids, n: int, metric: str):
-    """Each row's ``n`` best cells as an (rows, n) array of ids, from its
-    (rows, cells) scores ``S`` against ``cids`` (ascending): a stable sort
-    in the metric's direction, so ties go to the lowest centroid_id.  The
-    one rule assign_to_centroids (n = 1) and _probe_cells share."""
+def _nearest(X, C, cids, n: int, metric: str):
+    """Each row of ``X``'s ``n`` best cells among ``C`` (ids ``cids``,
+    ascending) as an (rows, <= n) id array: a stable sort in the metric's
+    direction, ties to the lowest centroid_id.  The one rule, in one
+    orientation, assign_to_centroids and _probe_cells score by."""
     import numpy as np
 
+    S = _score_matrix(X, C, metric)
     key = -S if V.METRIC_DESCENDING[metric.upper()] else S
-    return cids[np.argsort(key, axis=1, kind="stable")[:, :n]]
+    return cids[np.argsort(key, axis=1, kind="stable")[:, : max(n, 0)]]
 
 
 def append_to_index(
@@ -241,10 +247,9 @@ def append_to_index(
     _write_cells(assigned, path, "append")
 
 
-# Query batches whose optimizer size estimate is at most this many bytes
-# take search_ivf's collect side; larger (or unestimated) batches take the
-# join side.  search.search scores its driver-held query matrix in slices
-# of at most this many bytes, so the kernel's closure stays bounded.
+# The most query-matrix bytes one scoring job carries in its kernel's
+# closure: a larger batch is scored in slices (_score_slices), and
+# search_ivf takes its collect side when its batch's estimate fits one.
 COLLECT_PROBE_MAX_BYTES = 1 << 20
 
 
@@ -259,46 +264,40 @@ def search_ivf(
 ) -> DataFrame:
     """ANN top-k: probe the nprobe best cells per query, exact search inside.
 
-    The centroid probe scores the queries against the tiny centroid
-    table.  The query side's size estimate picks one of two plans, which
-    return identical rows:
+    Both sides probe by ``_nearest``, build_ivf's placement rule.  The
+    query side's size estimate picks one of two plans, which return
+    identical rows:
 
-    * collect side (estimate <= ``COLLECT_PROBE_MAX_BYTES``): the query
-      batch is fetched to the driver ONCE.  The probe scores it against
-      the collected centroids in numpy (``_probe_cells``, no Spark job);
-      the probed cells become a static ``centroid_id IN (...)`` filter,
-      which prunes index partitions at planning, and the per-query cell
-      sets feed knn_join's Arrow kernel, which masks each query to its
-      own cells (``_score_cells``, which search.search shares).  The
-      scan never joins or shuffles.
+    * collect side (estimate <= ``COLLECT_PROBE_MAX_BYTES``, one slice):
+      the batch is fetched to the driver ONCE, then probed and scored by
+      ``_score_slices``, search.search's loop: a static ``centroid_id IN
+      (...)`` filter prunes index partitions at planning, and knn_join's
+      Arrow kernel masks each query to its own cells.  No join, no shuffle.
     * join side (anything larger, or with no estimate, such as an RDD
-      scan): nothing touches the driver.  The probe is knn_join's expr
-      engine, its cell set is broadcast-semi-joined to the index, and
-      in-cell scores come from Catalyst expressions over a broadcast
-      probe join.  Dynamic partition pruning does not fire on this plan,
-      so the scan reads every cell (SCALE.md "IVF probe sides").
-
-    Measured (SCALE.md "IVF probe sides"): on a pre-embedded parquet
-    query side the join side is faster at sf0.1 and the collect side
-    from the 64x embeddings tier up.
+      scan): nothing about the batch touches the driver.  The probe is
+      assign_to_centroids with ``n = nprobe``, whose rows carry q_vec; its
+      cells are broadcast-semi-joined to the index, and Catalyst
+      expressions score over a broadcast probe join.  Dynamic partition
+      pruning does not fire on this plan, so the scan reads every cell
+      (SCALE.md "IVF probe sides").
     """
     index = spark.read.parquet(index_path)
     if _estimated_bytes(queries) <= COLLECT_PROBE_MAX_BYTES:
         q_ids, Q = _fetch_queries(queries, "q_id", "q_vec")
-        cells = _probe_cells(q_ids, Q, centroids, nprobe, metric)
-        scored = _score_cells(
-            index, q_ids, Q, queries.schema["q_id"].dataType, cells, k, metric
-        )
+        q_type = queries.schema["q_id"].dataType
+        frames = _score_slices(index, q_ids, Q, q_type, centroids, nprobe, k, metric)
+        # nothing probed: the empty scoring frame keeps the result schema
+        frames = frames or [_score_cells(index, q_ids, Q, q_type, {}, k, metric)]
+        scored = reduce(DataFrame.union, frames)
     else:
-        # exact distance within each query's own probed cells only: the
-        # (q_id, centroid_id) probe table is tiny -> broadcast equi-join
-        # keys the scan rows to exactly the queries probing that cell.
-        probe = _probe(queries, centroids, nprobe, metric)
+        # the tiny (q_id, q_vec, centroid_id) probe table, broadcast, keys
+        # each scanned row to exactly the queries probing its cell
+        probe = assign_to_centroids(
+            queries.select("q_id", "q_vec"), centroids, "q_vec", metric, n=nprobe
+        )
         cell_set = probe.select("centroid_id").distinct()
-        pairs = (
-            index.join(F.broadcast(cell_set), "centroid_id", "left_semi")
-            .join(F.broadcast(probe), "centroid_id")
-            .join(F.broadcast(queries), "q_id")
+        pairs = index.join(F.broadcast(cell_set), "centroid_id", "left_semi").join(
+            F.broadcast(probe), "centroid_id"
         )
         score = F.round(
             V.score_expr(
@@ -310,14 +309,33 @@ def search_ivf(
     return rank_top_k(scored, k, metric)
 
 
+def _score_slices(index, q_ids, Q, q_type, centroids, nprobe, k, metric) -> list:
+    """The driver-held batch (``q_ids``, matrix ``Q``, id type ``q_type``)
+    probed by ``_probe_cells`` and scored in its cells of ``index``: one
+    (q_id, vec_id, score) frame per slice of at most
+    ``COLLECT_PROBE_MAX_BYTES`` of ``Q`` (one query at least).  A slice
+    that probes no cell has no frame, so it runs no job."""
+    cells = _probe_cells(q_ids, Q, centroids, nprobe, metric)
+    row = Q.itemsize * Q.shape[1]
+    fits = Q.nbytes <= COLLECT_PROBE_MAX_BYTES  # so an inf limit is one slice
+    step = max(1, len(Q) if fits else int(COLLECT_PROBE_MAX_BYTES // row))
+    frames = []
+    for lo in range(0, len(q_ids), step):
+        ids = q_ids[lo : lo + step]
+        part = {q: cells[q] for q in ids}
+        if any(part.values()):
+            Qs = Q[lo : lo + step]
+            frames.append(_score_cells(index, ids, Qs, q_type, part, k, metric))
+    return frames
+
+
 def _score_cells(index, q_ids, Q, q_type, cells, k, metric) -> DataFrame:
-    """The collect side's scoring, shared by search_ivf and search.search:
-    the driver-held batch (``q_ids``, ``Q``, id type ``q_type``) against
-    only the probed cells of ``index`` (a static ``centroid_id IN (...)``
-    filter), each query masked to its own ``cells`` in knn_join's Arrow
-    kernel.  Returns (q_id, vec_id, score) with the score rounded to 6
-    decimals in Spark (HALF_UP), before the global per-query top-k: the
-    kernel keeps a partial top-k per batch."""
+    """One slice's scoring: the driver-held batch against only the
+    probed cells of ``index`` (a static ``centroid_id IN (...)`` filter),
+    each query masked to its own ``cells`` in knn_join's Arrow kernel.
+    Returns (q_id, vec_id, score) with the score rounded to 6 decimals in
+    Spark (HALF_UP), before the global per-query top-k: the kernel keeps
+    a partial top-k per batch."""
     probed = sorted(set().union(*cells.values()))
     scored = _knn_scored_arrow(
         q_ids, Q, q_type, index.filter(F.col("centroid_id").isin(probed)),
@@ -328,29 +346,14 @@ def _score_cells(index, q_ids, Q, q_type, cells, k, metric) -> DataFrame:
 
 
 def _probe_cells(q_ids, Q, centroids, nprobe, metric) -> dict:
-    """{query id: its nprobe best centroid ids}, scored on the driver
-    against the collected centroid table by ``_nearest_cells``, the rule
-    assign_to_centroids places vectors by.  Cells rank by score in the
-    metric's direction, ties to the lowest centroid_id: knn_join's
-    order, so this returns what ``_probe`` does."""
+    """{query id: its nprobe best centroid ids}, on the driver: ``Q``
+    against the collected centroid table by ``_nearest``, the rule
+    assign_to_centroids places vectors by, so it returns the cells that
+    assign_to_centroids(..., n=nprobe) gives the query rows."""
     cids, C = _centroid_matrix(centroids)
     if not len(cids) or not q_ids:
         return {q: [] for q in q_ids}
-    S = _score_matrix(C, Q, metric).T
-    return dict(zip(q_ids, _nearest_cells(S, cids, max(nprobe, 0), metric).tolist()))
-
-
-def _probe(queries, centroids, nprobe, metric):
-    """(q_id, centroid_id) for each query's nprobe best cells, planned
-    with knn_join's expr engine so no row reaches the driver (its arrow
-    engine collects the query side and caps it at 64 MB)."""
-    cells = centroids.select(
-        F.col("centroid_id").alias("vec_id"), F.col("cvec").alias("embedding")
-    )
-    return knn_join(
-        queries, cells, k=nprobe, metric=metric, score_decimals=None,
-        strategy="expr", force=True,
-    ).select("q_id", F.col("vec_id").alias("centroid_id"))
+    return dict(zip(q_ids, _nearest(Q, C, cids, nprobe, metric).tolist()))
 
 
 def search_exact(
@@ -513,8 +516,8 @@ def search_ivf_pq(
     """Full production ANN path: IVF cell pruning -> PQ ADC candidate scan
     -> full-precision re-rank of k*overfetch candidates.
 
-    1. probe: score queries against the centroid table, keep nprobe cells
-       per query (tiny join; prunes index partitions at the scan);
+    1. probe: assign_to_centroids with ``n = nprobe`` (rows carry q_vec;
+       a broadcast semi-join of the cells prunes the index at the scan);
     2. ADC scan: per-query m x k lookup tables (dot-product tables for
        COSINE/IP, squared-distance for L2) broadcast to executors; each
        candidate costs m lookups over its codes — the embedding column is
@@ -530,7 +533,9 @@ def search_ivf_pq(
 
     m, kc, sub = codebook.shape
 
-    probe = _probe(queries, centroids, nprobe, metric)
+    probe = assign_to_centroids(
+        queries.select("q_id", "q_vec"), centroids, "q_vec", metric, n=nprobe
+    )
 
     # Keep the probed cell set DISTRIBUTED: a broadcast semi-join prunes the
     # index without funneling probe lists through the driver, so a 1e6-query
@@ -540,7 +545,7 @@ def search_ivf_pq(
     ).join(F.broadcast(probe), "centroid_id")
 
     # ADC lookup tables are built INSIDE the Arrow UDF from the broadcast
-    # codebook and each query's own q_vec (carried by the probe join below),
+    # codebook and each query's own q_vec (carried by the probe rows),
     # cached per task — nothing about the query batch is ever collect()ed.
     # Cost per distinct query per task is one (m, kc, D/m) einsum: trivial
     # next to the candidate scan it feeds.
@@ -548,9 +553,6 @@ def search_ivf_pq(
     norm_lut = (codebook**2).sum(axis=2)  # (m, kc)
     spark = index.sparkSession
     bc = spark.sparkContext.broadcast((codebook, norm_lut, metric.upper()))
-    with_vec = pruned.join(
-        F.broadcast(queries.select("q_id", "q_vec")), "q_id"
-    )
 
     def adc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         cb, nlut, met = bc.value
@@ -589,8 +591,8 @@ def search_ivf_pq(
     # id types derived from the inputs, like the arrow scorers do — a
     # string/int32 q_id or vec_id must survive the Arrow stage unchanged
     q_id_t = queries.schema["q_id"].dataType.simpleString()
-    vec_id_t = with_vec.schema["vec_id"].dataType.simpleString()
-    scored = with_vec.select("q_id", "vec_id", "pq_codes", "q_vec").mapInPandas(
+    vec_id_t = pruned.schema["vec_id"].dataType.simpleString()
+    scored = pruned.select("q_id", "vec_id", "pq_codes", "q_vec").mapInPandas(
         adc, schema=f"q_id {q_id_t}, vec_id {vec_id_t}, approx double"
     )
     cands = rank_top_k(

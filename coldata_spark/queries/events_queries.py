@@ -1015,14 +1015,16 @@ def q125_hourly_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
     per input row, the long `div` is one integer op, and the grouping
     key narrows; the timestamp is reconstructed AFTER the aggregate
     (at most #hours rows).  In the UTC session date_trunc('hour', ts)
-    == timestamp_seconds(3600 * (epoch div 3600)) exactly; value-gated
+    == timestamp_seconds(3600 * floor(epoch / 3600)) exactly (the floor
+    in integer ops: a truncating `div` put -1800 s in hour 0); value-gated
     identical at the 16x/64x tiers (OPTIMIZATION_r15.md ask #5,
     0.36 -> 0.26 s at 16x, flat at 64x) and oracle-parity green."""
     ev = load(spark, sf_dir, "events")
     hourly = (
         ev.groupBy(
             "event_type",
-            F.expr("cast(ts as bigint) div 3600").alias("_hr_epoch"),
+            F.expr("(cast(ts as bigint) - pmod(cast(ts as bigint), 3600)) div 3600")
+            .alias("_hr_epoch"),
         ).agg(F.count("*").cast("long").alias("n"))
     )
     stats = hourly.groupBy("event_type").agg(
@@ -1273,10 +1275,8 @@ def q131_conversion_delay_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q135_weekday_hour_heatmap",
     survey="R6,A5,W3",
     sql="""
-    SELECT CAST(((CAST(floor(epoch(ts)) AS BIGINT) // 86400) + 4) % 7 AS BIGINT)
-               AS dow,
-           CAST((CAST(floor(epoch(ts)) AS BIGINT) % 86400) // 3600 AS BIGINT)
-               AS hour_utc,
+    SELECT CAST(fmod(fdiv(floor(epoch(ts)), 86400) + 4, 7) AS BIGINT) AS dow,
+           CAST(fdiv(fmod(floor(epoch(ts)), 86400), 3600) AS BIGINT) AS hour_utc,
            CAST(count(*) AS BIGINT) AS n_events,
            CAST(count(DISTINCT user_id) AS BIGINT) AS n_users
     FROM events
@@ -1306,13 +1306,13 @@ def q135_weekday_hour_heatmap(spark: SparkSession, sf_dir: str) -> DataFrame:
     two-level form (count per (cell, user) -> sum/count per cell) keeps
     the planner from re-deriving the distinct; measured 0.84 -> 0.68 s
     at 64x, 0.43 -> 0.37 s at 16x (OPTIMIZATION_r15.md ask #5, both
-    variants value-gated identical first).  Integer `div` keeps the
-    truncation semantics of the previous cast-of-double on the
-    non-negative epochs the schema guarantees."""
+    variants value-gated identical first).  Day and hour are FLOOR
+    divisions in integer ops (pmod), so a pre-1970 event lands on its
+    own weekday and hour, not on a truncated-toward-zero one."""
     ev = load(spark, sf_dir, "events")
     cell = F.expr(
-        "cast(((((cast(ts as bigint) div 86400) + 4) % 7) * 24"
-        " + (cast(ts as bigint) % 86400) div 3600) as int)"
+        "cast(pmod((cast(ts as bigint) - pmod(cast(ts as bigint), 86400)) div 86400"
+        " + 4, 7) * 24 + pmod(cast(ts as bigint), 86400) div 3600 as int)"
     ).alias("_cell")
     per_user = (
         ev.select(cell, "user_id")

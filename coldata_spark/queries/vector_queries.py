@@ -1161,7 +1161,7 @@ def q151_ivf_pq_ann(spark, sf_dir):
     itself hash-matches the SQL replay (no 'recall curve' hedge; the
     cut IS the checked value).  The Spark side still runs the REAL
     machinery: assign_to_centroids' numpy nearest-cell map, pq_encode's
-    numpy mapInPandas, search_ivf_pq's expr probe + Arrow ADC scan +
+    numpy mapInPandas, search_ivf_pq's Arrow probe (the same map) + ADC scan +
     window cut + full-precision re-rank (sqrt of an exact integer,
     correctly rounded on both engines).  The float-COSINE KMeans
     configuration stays covered by q86 (exhaustive = provably exact)

@@ -18,12 +18,14 @@ Search runs two Spark jobs and finishes on the driver, as the reference
 runs only the ANN probe in Milvus and the rest in process over at most k
 hits per query (make_results, vdb.py:101-122):
   1. the queries are embedded on the driver into a local relation
-     (embed.embed_queries) and read back with no Spark job; their
-     centroid probe runs in numpy (ivf._probe_cells);
-  2. scoring job: the index, read with a fixed schema (no inference
-     job), is scanned only in the probed cells (a static ``centroid_id
-     IN (...)`` partition filter) by the in-cell Arrow kernel, the one
-     Python-worker stage (ivf._score_cells, shared with ivf.search_ivf);
+     (embed.embed_queries) and read back with no Spark job;
+  2. scoring job: ivf._score_slices, the loop search_ivf's collect side
+     runs too, probes the batch's cells in numpy by the placement rule
+     and scans the index, read with a fixed schema (no inference job),
+     only in the probed cells (a static ``centroid_id IN (...)``
+     partition filter) with the in-cell Arrow kernel, the one
+     Python-worker stage.  A batch over ivf.COLLECT_PROBE_MAX_BYTES of
+     query matrix is scored in slices, one job each;
   3. driver finish over at most 4k hits per query: global top-4k,
      chunk -> parent, group-best, rank the top k;
   4. lookup job: at most k x nq documents, by a static ``IN`` filter on
@@ -161,20 +163,12 @@ def search(
     # an empty store's index has no cells and no files to scan
     if q_ids and index.nlist:
         Q = np.asarray([r.q_vec for r in qrows], dtype=np.float64)
-        cells = ivf._probe_cells(q_ids, Q, index.centroids, nprobe, index.metric)
         scan = spark.read.schema(_INDEX_SCAN).parquet(index.path)
-        # one scoring job per slice of at most COLLECT_PROBE_MAX_BYTES of
-        # query matrix, which the kernel's closure carries to every task
-        step = max(1, ivf.COLLECT_PROBE_MAX_BYTES // Q[0].nbytes)
-        for lo in range(0, len(q_ids), step):
-            ids = q_ids[lo : lo + step]
-            part = {q: cells[q] for q in ids}
-            if not any(part.values()):
-                continue
-            pdf = ivf._score_cells(
-                scan, ids, Q[lo : lo + step], q_type, part, k * OVERFETCH,
-                index.metric,
-            ).toPandas()
+        for frame in ivf._score_slices(
+            scan, q_ids, Q, q_type, index.centroids, nprobe, k * OVERFETCH,
+            index.metric,
+        ):
+            pdf = frame.toPandas()
             hits += zip(pdf["q_id"].tolist(), pdf["vec_id"].tolist(),
                         pdf["score"].tolist())
     ranked = _rank_parents(hits, k, index.metric)

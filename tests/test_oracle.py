@@ -28,6 +28,26 @@ def test_oracle_parity(spark, sf_dir, duck, name):
     assert not problems, f"{name}: " + "; ".join(problems)
 
 
+def _oracle_problems(spark, sf_dir, tmp_path, events, name):
+    """``name``'s mismatches against its oracle on a copy of the fixture
+    whose events table is ``events`` (a pyarrow Table)."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    for f in os.listdir(sf_dir):
+        if f.endswith(".parquet") and f != "events.parquet":
+            os.symlink(os.path.join(sf_dir, f), tmp_path / f)
+    pq.write_table(events, tmp_path / "events.parquet")
+    spec = ALL[name]
+    con = duck_connection(str(tmp_path))
+    try:
+        oracle = con.execute(spec.sql).df()
+    finally:
+        con.close()
+    return compare(spec.fn(spark, str(tmp_path)), oracle)
+
+
 def test_q135_does_not_count_null_users(spark, sf_dir, tmp_path):
     """A NULL user_id is no user: q135's n_users equals the oracle's
     count(DISTINCT user_id) on a copy of the fixture with every 7th
@@ -38,9 +58,6 @@ def test_q135_does_not_count_null_users(spark, sf_dir, tmp_path):
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
-    for name in os.listdir(sf_dir):
-        if name.endswith(".parquet") and name != "events.parquet":
-            os.symlink(os.path.join(sf_dir, name), tmp_path / name)
     events = pq.read_table(os.path.join(sf_dir, "events.parquet"))
     users = events["user_id"]
     nulled = pa.array([i % 7 == 0 for i in range(events.num_rows)])
@@ -48,14 +65,40 @@ def test_q135_does_not_count_null_users(spark, sf_dir, tmp_path):
         events.schema.get_field_index("user_id"), "user_id",
         pc.if_else(nulled, pa.scalar(None, users.type), users),
     )
-    pq.write_table(events, tmp_path / "events.parquet")
-    spec = ALL["q135_weekday_hour_heatmap"]
-    con = duck_connection(str(tmp_path))
-    try:
-        oracle = con.execute(spec.sql).df()
-    finally:
-        con.close()
-    problems = compare(spec.fn(spark, str(tmp_path)), oracle)
+    problems = _oracle_problems(
+        spark, sf_dir, tmp_path, events, "q135_weekday_hour_heatmap"
+    )
+    assert not problems, "; ".join(problems)
+
+
+@pytest.mark.parametrize(
+    "name", ["q125_hourly_anomalies", "q135_weekday_hour_heatmap"]
+)
+def test_pre_1970_events_match_oracle(spark, sf_dir, tmp_path, name):
+    """Hours and weekdays of pre-1970 events are floor divisions of the
+    epoch: on a copy of the fixture with every 3rd event moved into
+    1969-12-31 23:29:59-23:30:00 UTC (one crowded, so anomalous, hour
+    -1800 s before the epoch, which a truncating division puts in hour
+    0) and every 3rd one after it 2e9 s earlier (1960s events on every
+    weekday and hour), both queries match their oracles."""
+    import os
+
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    events = pq.read_table(os.path.join(sf_dir, "events.parquet"))
+    ts = events["ts"]
+    per_s = {"s": 1, "ms": 10**3, "us": 10**6, "ns": 10**9}[ts.type.unit]
+    ticks = ts.cast(pa.int64()).to_numpy().copy()
+    i = np.arange(len(ticks))
+    crowded = i % 3 == 0
+    ticks[crowded] = -1800 * per_s - (i[crowded] % 1000) * (per_s // 1000)
+    ticks[i % 3 == 1] -= 2_000_000_000 * per_s
+    events = events.set_column(
+        events.schema.get_field_index("ts"), "ts", pa.array(ticks).cast(ts.type)
+    )
+    problems = _oracle_problems(spark, sf_dir, tmp_path, events, name)
     assert not problems, "; ".join(problems)
 
 

@@ -288,6 +288,30 @@ def _index_vectors(spark, sf_dir, fixture):
     return seen[0]
 
 
+def _ivf_join_side(spark, sf_dir, fixture):
+    """q35's search (cached nlist-8 index, its 8-query batch) on
+    search_ivf's join side."""
+    from coldata_spark.operators import ivf
+    from coldata_spark.queries import vector_queries as VQ
+
+    path, centroids = VQ._ivf_index_cached(spark, sf_dir, nlist=8)
+    fixture("monkeypatch").setattr(ivf, "COLLECT_PROBE_MAX_BYTES", -1)
+    return ivf.search_ivf(
+        spark, path, VQ._queries_df(spark, sf_dir), centroids, k=4, nprobe=2
+    )
+
+
+def _ivf_pq(spark, sf_dir, fixture):
+    """q86's IVF-PQ search (cached index, 5 queries) at nprobe 4."""
+    from coldata_spark.operators import ivf
+    from coldata_spark.queries import vector_queries as VQ
+
+    index, centroids, codebook, _ = VQ._ivf_pq_index_cached(spark, sf_dir)
+    return ivf.search_ivf_pq(
+        index, VQ._queries_df(spark, sf_dir, n=5), centroids, codebook, k=4, nprobe=4
+    )
+
+
 # (gate, setup(spark, sf_dir, fixture) -> a frame, {node name: how many
 # times its executed plan names it})
 PLAN_GATES = [
@@ -299,6 +323,22 @@ PLAN_GATES = [
     # a vector's parent comes from its chunk id: no join, one store scan
     # (re-joining the chunks scanned the store twice)
     ("build_index_vectors", _index_vectors, {"Join": 0, "FileScan": 1}),
+    # the probe is assign_to_centroids' Arrow map, its rows carrying q_vec:
+    # the rank_top_k window and the probe's semi and equi joins.  knn_join's
+    # expr probe plus a re-join of the queries planned 4
+    # BroadcastNestedLoopJoin, 11 Window and 3 BroadcastHashJoin
+    (
+        "search_ivf_join_side",
+        _ivf_join_side,
+        {"BroadcastNestedLoopJoin": 0, "Window": 3, "BroadcastHashJoin": 2},
+    ),
+    # the same probe; the rerank's candidate and query joins remain.  The
+    # expr probe and the with_vec re-join planned 4, 13 and 5
+    (
+        "search_ivf_pq",
+        _ivf_pq,
+        {"BroadcastNestedLoopJoin": 0, "Window": 5, "BroadcastHashJoin": 4},
+    ),
 ]
 
 

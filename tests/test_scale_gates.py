@@ -55,10 +55,11 @@ def test_join_probe_matches_collect_probe(spark, sf_dir, ivf_index, monkeypatch)
 
 
 def _driver_probe_matches_expr_probe(spark):
-    """The collect side's numpy probe on the driver picks the cells the
-    join side's knn_join expr probe picks, per metric.  Cell 2 duplicates
-    cell 0, so their tie must go to the lower id; query 11 is all-zero
-    and must score 0 (never NaN) against every cell."""
+    """Both probes, the driver's numpy one (_probe_cells) and the
+    distributed one (assign_to_centroids with n = nprobe), pick the cells
+    knn_join's zero-Python expr engine picks, per metric.  Cell 2
+    duplicates cell 0, so their tie must go to the lower id; query 11 is
+    all-zero and must score 0 (never NaN) against every cell."""
     import numpy as np
 
     from coldata_spark.operators.similarity import _fetch_queries, _score_matrix
@@ -71,6 +72,9 @@ def _driver_probe_matches_expr_probe(spark):
         spark, {"centroid_id": list(range(nlist)), "cvec": cvecs},
         "centroid_id bigint, cvec array<double>",
     )
+    cells_as_vectors = cents.select(
+        F.col("centroid_id").alias("vec_id"), F.col("cvec").alias("embedding")
+    )
     qdf = local_frame(
         spark,
         {"q_id": [10, 11, 12],
@@ -81,9 +85,15 @@ def _driver_probe_matches_expr_probe(spark):
     assert (_score_matrix(np.asarray(cvecs), Q, "COSINE")[:, 1] == 0).all()
     for metric in ("COSINE", "IP", "L2"):
         for nprobe in (0, 1, 2, nlist, nlist + 3):
+            want = sorted(map(tuple, knn_join(
+                qdf, cells_as_vectors, k=nprobe, metric=metric,
+                score_decimals=None, strategy="expr", force=True,
+            ).select("q_id", "vec_id").collect()))
             cells = ivf._probe_cells(q_ids, Q, cents, nprobe, metric)
             got = sorted((q, c) for q, cs in cells.items() for c in cs)
-            want = sorted(map(tuple, ivf._probe(qdf, cents, nprobe, metric).collect()))
+            assert got == want, (metric, nprobe)
+            placed = ivf.assign_to_centroids(qdf, cents, "q_vec", metric, n=nprobe)
+            got = sorted(map(tuple, placed.select("q_id", "centroid_id").collect()))
             assert got == want, (metric, nprobe)
             assert len(got) == len(q_ids) * min(nprobe, nlist), (metric, nprobe)
         # query 10 ties cells 0 and 2 for one place: the lower id wins
@@ -96,20 +106,35 @@ def _driver_probe_matches_expr_probe(spark):
         assert past == every, metric
 
 
+def _ban_driver_fetches(monkeypatch, frame_type, message):
+    """Fail collect() and toPandas() on frames of ``frame_type`` (the
+    class of the frames in use: PySpark 4's classic DataFrame overrides
+    both methods, so patching pyspark.sql.DataFrame bans nothing).  Only
+    driver-held data passes: a frame whose optimized plan is a
+    LocalRelation, such as build_ivf's centroid table, runs no Spark job
+    when collected."""
+    for name in ("collect", "toPandas"):
+        real = getattr(frame_type, name)
+
+        def guarded(self, *a, _real=real, **kw):
+            plan = self._jdf.queryExecution().optimizedPlan()
+            if plan.getClass().getSimpleName() != "LocalRelation":
+                raise AssertionError(message)
+            return _real(self, *a, **kw)
+
+        monkeypatch.setattr(frame_type, name, guarded)
+
+
 def test_join_probe_never_materializes_on_driver(spark, sf_dir, ivf_index, monkeypatch):
     """Building the join-side plan must not collect() anything: a 1e6-row
     query batch should plan exactly like a 10-row one."""
-    from pyspark.sql import DataFrame
-
     path, centroids = ivf_index
     qdf = _queries(spark, sf_dir, 50)
 
-    def _banned(self, *a, **kw):
-        raise AssertionError("driver-side collect during join-probe planning")
-
     _force_side(monkeypatch, "join")
-    monkeypatch.setattr(DataFrame, "collect", _banned)
-    monkeypatch.setattr(DataFrame, "toPandas", _banned)
+    _ban_driver_fetches(
+        monkeypatch, type(qdf), "driver-side collect during join-probe planning"
+    )
     out = ivf.search_ivf(spark, path, qdf, centroids, k=3, nprobe=2)
     monkeypatch.undo()
     assert out.count() > 0
@@ -117,8 +142,6 @@ def test_join_probe_never_materializes_on_driver(spark, sf_dir, ivf_index, monke
 
 def test_pq_search_builds_luts_in_executor(spark, sf_dir, monkeypatch):
     """search_ivf_pq no longer collects the query batch for ADC tables."""
-    from pyspark.sql import DataFrame
-
     emb = load(spark, sf_dir, "embeddings")
     index, centroids, codebook = ivf.build_ivf_pq(emb, nlist=8, m=8, k_codes=16)
     index = index.cache()
@@ -126,11 +149,9 @@ def test_pq_search_builds_luts_in_executor(spark, sf_dir, monkeypatch):
     qdf = _queries(spark, sf_dir, 10).cache()
     qdf.count()
     try:
-        def _banned(self, *a, **kw):
-            raise AssertionError("driver-side collect in search_ivf_pq")
-
-        monkeypatch.setattr(DataFrame, "collect", _banned)
-        monkeypatch.setattr(DataFrame, "toPandas", _banned)
+        _ban_driver_fetches(
+            monkeypatch, type(qdf), "driver-side collect in search_ivf_pq"
+        )
         out = ivf.search_ivf_pq(index, qdf, centroids, codebook, k=2, nprobe=4)
         n = out.count()
         monkeypatch.undo()
