@@ -30,26 +30,19 @@ from coldata_spark.tables import build_once, load
 NLIST = 8
 
 
-def load_index(spark, sf_dir: str) -> S.SearchIndex:
-    """Build the documents index once per fixture content and reload it
-    on later calls: the stored vectors AND the centroids that placed them
+def load_index(spark, sf_dir: str) -> ivf.SearchIndex:
+    """Build the documents index once per fixture content and open it on
+    later calls: the stored vectors AND the centroids that placed them
     (re-fitting centroids on the stored vectors would probe cells the
     vectors were never assigned to)."""
 
     def build(root):
-        idx = S.build_index(
+        S.build_index(
             load(spark, sf_dir, "documents"), os.path.join(root, "index"), nlist=NLIST
         )
-        idx.centroids.write.mode("overwrite").parquet(os.path.join(root, "centroids"))
 
-    root = build_once(f"demo-index-v2|{NLIST}", build, sf_dir)
-    # read once, then held as a local relation: every search's probe
-    # collects the centroids, which costs no Spark job on a local relation
-    rows = spark.read.parquet(os.path.join(root, "centroids")).collect()
-    centroids = ivf._centroid_frame(spark, {r.centroid_id: r.cvec for r in rows})
-    return S.SearchIndex(
-        path=os.path.join(root, "index"), centroids=centroids, nlist=len(rows)
-    )
+    root = build_once(f"demo-index-v3|{NLIST}", build, sf_dir)
+    return ivf.open_index(spark, os.path.join(root, "index"))
 
 
 def _search_rows(spark, idx, docs, query: str, k: int, nprobe):

@@ -10,7 +10,7 @@ nprobe cells per search (vdb.py:88-100).  Spark-native re-expression:
           PARTITIONED BY centroid_id.  Milvus's in-memory cell skip becomes
           parquet partition pruning — the scan literally never reads the
           cells a query doesn't probe.  Rebuild (renew, vdb.py:199-201) is
-          mode("overwrite").
+          mode("overwrite"); save_index commits it, open_index loads it.
 
   search: score queries against the (tiny, collected) centroid table ->
           pick nprobe cells per query by the placement rule (_nearest)
@@ -26,10 +26,14 @@ operating point (config.yml:81-82) — recall 1.0 by construction.
 
 from __future__ import annotations
 
+import json
+import os
+from dataclasses import dataclass
 from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from coldata_spark.functions import vector as V
 from coldata_spark.operators.joins import _estimated_bytes
@@ -151,6 +155,54 @@ def _write_cells(assigned: DataFrame, path: str, mode: str) -> None:
     ).parquet(path)
 
 
+# save_index's file in the index directory: Spark's listing skips "_" names
+INDEX_META = "_ivf.json"
+
+
+@dataclass
+class SearchIndex:
+    """One published version of an index: the ``vectors`` scan, opened once
+    so every search reuses its file listing, the centroids as a local
+    relation, ``nlist`` (build_ivf may clamp it) and the cells' ``metric``."""
+
+    path: str
+    vectors: DataFrame
+    centroids: DataFrame
+    nlist: int
+    metric: str
+
+
+def save_index(path: str, vectors: DataFrame, centroids: DataFrame, metric: str) -> None:
+    """Commit the index at ``path``: the centroids, the ``metric`` and the
+    schema of ``vectors``, the frame written there, as one INDEX_META file,
+    written aside and renamed over the old one, so a reader opens the old
+    version or the new one.  Runs no Spark job when ``centroids`` is a
+    local relation."""
+    cids, C = _centroid_matrix(centroids)
+    meta = {"metric": metric, "schema": vectors.schema.jsonValue(),
+            "cells": list(zip(cids.tolist(), C.tolist()))}
+    tmp = os.path.join(path, INDEX_META + ".tmp")
+    with open(tmp, "w") as fh:
+        json.dump(meta, fh)
+        fh.flush()
+        os.fsync(fh.fileno())
+    os.replace(tmp, os.path.join(path, INDEX_META))
+
+
+def open_index(spark: SparkSession, path: str) -> SearchIndex:
+    """The index save_index last committed at ``path``.  Raises
+    FileNotFoundError naming ``path`` when it holds no committed index."""
+    try:
+        with open(os.path.join(path, INDEX_META)) as fh:
+            meta = json.load(fh)
+    except FileNotFoundError:
+        raise FileNotFoundError(f"no IVF index at {path}: no {INDEX_META}") from None
+    cells = dict(meta["cells"])
+    vectors = spark.read.schema(T.StructType.fromJson(meta["schema"])).parquet(path)
+    centroids = _centroid_frame(spark, cells)
+    return SearchIndex(path, vectors, centroids, len(cells), meta["metric"])
+
+
 def assign_to_centroids(
     vectors: DataFrame,
     centroids: DataFrame,
@@ -173,7 +225,6 @@ def assign_to_centroids(
     import numpy as np
     import pyarrow as pa
     import pyarrow.compute as pc
-    from pyspark.sql import types as T
 
     cids, C = _centroid_matrix(centroids)
     if not len(cids):
@@ -254,15 +305,14 @@ COLLECT_PROBE_MAX_BYTES = 1 << 20
 
 
 def search_ivf(
-    spark: SparkSession,
-    index_path: str,
+    index: DataFrame,
     queries: DataFrame,
     centroids: DataFrame,
     k: int = 4,
     nprobe: int = 4,
     metric: str = "COSINE",
 ) -> DataFrame:
-    """ANN top-k: probe the nprobe best cells per query, exact search inside.
+    """ANN top-k over the opened scan ``index``: nprobe cells, exact inside.
 
     Both sides probe by ``_nearest``, build_ivf's placement rule.  The
     query side's size estimate picks one of two plans, which return
@@ -281,7 +331,6 @@ def search_ivf(
       pruning does not fire on this plan, so the scan reads every cell
       (SCALE.md "IVF probe sides").
     """
-    index = spark.read.parquet(index_path)
     if _estimated_bytes(queries) <= COLLECT_PROBE_MAX_BYTES:
         q_ids, Q = _fetch_queries(queries, "q_id", "q_vec")
         q_type = queries.schema["q_id"].dataType
@@ -633,14 +682,14 @@ def search_ivf_pq(
 #              attracts move too.  The hot cells and every cell that loses
 #              or gains rows are written again under FRESH centroid ids.
 #              Purely additive: no live partition is touched.
-#   commit     the new centroid table (untouched cells, sub-centroids,
-#              renamed touched cells) is the metadata pointer swap.
-#              search_ivf probes only cells listed in the centroid table,
-#              so readers holding the OLD table never see the new cells
-#              and readers of the NEW table never probe a superseded one —
-#              no reader ever sees a vector twice, and a crash anywhere
-#              before the centroid publish leaves the index exactly as it
-#              was (the part-built cells are unreferenced bytes, not
+#   commit     save_index of the new centroid table (untouched cells,
+#              sub-centroids, renamed touched cells) is the metadata
+#              pointer swap.  search_ivf probes only cells listed in the
+#              centroid table, so readers holding the OLD table never see
+#              the new cells and readers of the NEW table never probe a
+#              superseded one — no reader ever sees a vector twice, and a
+#              crash anywhere before the save leaves the index exactly as
+#              it was (the part-built cells are unreferenced bytes, not
 #              corruption).
 #   vacuum     partition dirs not referenced by the centroid table are
 #              garbage — deleted post-commit, and a re-run heals any
@@ -687,7 +736,7 @@ def maintain_ivf(
     every row the new table moves, and append the touched cells under
     fresh ids (report['splits']: hot cell -> sub-cells, report['renamed']:
     other touched cell -> new id).  Returns (new_centroids, report); the
-    CALLER commits by persisting new_centroids, then reclaims superseded
+    CALLER commits new_centroids with save_index, then reclaims superseded
     partitions with vacuum_ivf.  No-op (same centroids object) when
     nothing is hot — safe to drive from scheduler.run_scheduled like
     layout.maintain_layout: a pass splits at most ``max_splits_per_pass``
@@ -713,10 +762,8 @@ def maintain_ivf(
     if not hot:
         return centroids, report
 
-    cent_rows = {
-        int(r["centroid_id"]): list(r["cvec"])
-        for r in centroids.select("centroid_id", "cvec").collect()
-    }
+    cids, C = _centroid_matrix(centroids)
+    cent_rows = dict(zip(cids.tolist(), C.tolist()))
     old_ids, next_id = set(cent_rows), max(cent_rows) + 1
     index = spark.read.parquet(index_path)
     for cid in hot:
@@ -773,16 +820,13 @@ def vacuum_ivf(
     """Reclaim partition dirs not referenced by the (committed) centroid
     table: superseded hot cells after maintain_ivf, plus any part-built
     sub-cells a crashed pass left behind.  Idempotent; returns the cell
-    ids removed.  Run AFTER the new centroid table is durably published —
+    ids removed.  Run AFTER save_index has published the new table —
     a reader still holding the old table loses its probe targets once
     this runs (same reader contract as the reference's renew rebuild)."""
     import glob as _glob
-    import os
     import shutil
 
-    live = {
-        int(r["centroid_id"]) for r in centroids.select("centroid_id").collect()
-    }
+    live = set(_centroid_matrix(centroids)[0].tolist())
     removed = []
     for d in _glob.glob(os.path.join(index_path, "centroid_id=*")):
         try:

@@ -484,7 +484,7 @@ def _ivf_index_cached(
     assignment), so one cached copy per (sf_dir, nlist, flavor) serves
     every q35/q150 invocation — the old per-invocation tempfile.mkdtemp
     left a full index copy behind on EVERY driver/bench run and rebuilt
-    identical KMeans each time."""
+    identical KMeans each time.  Returns the index opened (open_index)."""
     from coldata_spark.operators import ivf
 
     def build(root):
@@ -495,13 +495,10 @@ def _ivf_index_cached(
         else:
             assigned, centroids = ivf.build_ivf(emb, nlist=nlist)
         ivf.write_ivf(assigned, os.path.join(root, "index"))
-        centroids.write.mode("overwrite").parquet(os.path.join(root, "centroids"))
+        ivf.save_index(os.path.join(root, "index"), assigned, centroids, "COSINE")
 
-    root = build_once(f"ivf-v2|{nlist}|{flavor}", build, sf_dir)
-    return (
-        os.path.join(root, "index"),
-        spark.read.parquet(os.path.join(root, "centroids")),
-    )
+    root = build_once(f"ivf-v3|{nlist}|{flavor}", build, sf_dir)
+    return ivf.open_index(spark, os.path.join(root, "index"))
 
 
 def _ivf_pq_index_cached(
@@ -509,7 +506,7 @@ def _ivf_pq_index_cached(
     k_codes: int = 16,
 ):
     """Build-or-reuse q86's IVF-PQ artifacts per fixture content —
-    (index df, centroids df, codebook ndarray, corpus count).
+    (opened index, codebook ndarray, corpus count).
 
     Round-12 verdict #2: q86 re-ran KMeans + PQ training + the full
     corpus encode on EVERY invocation, so every recorded tier number
@@ -532,17 +529,16 @@ def _ivf_pq_index_cached(
             emb, nlist=nlist, m=m, k_codes=k_codes
         )
         ivf.write_ivf(index, os.path.join(root, "index"))
-        centroids.write.mode("overwrite").parquet(os.path.join(root, "centroids"))
+        ivf.save_index(os.path.join(root, "index"), index, centroids, "COSINE")
         np.save(os.path.join(root, "codebook.npy"), codebook)
         with open(os.path.join(root, "meta.json"), "w") as fh:
             json.dump({"n": emb.count()}, fh)
 
-    root = build_once(f"ivfpq-v2|{nlist}|{m}|{k_codes}", build, sf_dir)
+    root = build_once(f"ivfpq-v3|{nlist}|{m}|{k_codes}", build, sf_dir)
     with open(os.path.join(root, "meta.json")) as fh:
         n = json.load(fh)["n"]
     return (
-        spark.read.parquet(os.path.join(root, "index")),
-        spark.read.parquet(os.path.join(root, "centroids")),
+        ivf.open_index(spark, os.path.join(root, "index")),
         np.load(os.path.join(root, "codebook.npy")),
         n,
     )
@@ -550,7 +546,7 @@ def _ivf_pq_index_cached(
 
 def _quantized_pq_index_cached(spark, sf_dir):
     """Build-or-reuse q151's deterministic IVF-PQ artifacts per fixture
-    content — (index df, centroids df, codebook ndarray).  Same rationale
+    content — (opened index, codebook ndarray).  Same rationale
     as _ivf_pq_index_cached (round-12 verdict #2): the per-call corpus
     encode (pq_encode's full mapInPandas pass) is BUILD work that the
     serve path pays once per corpus version; the deterministic codebook
@@ -582,14 +578,14 @@ def _quantized_pq_index_cached(spark, sf_dir):
         X = np.array([r["embedding"] for r in rows], dtype=np.float64)
         codebook = np.stack([X[:, j * 8 : (j + 1) * 8] for j in range(8)])
         codes = ivf.pq_encode(emb_q, codebook, id_col="vec_id")
-        ivf.write_ivf(assigned.join(codes, "vec_id"), os.path.join(root, "index"))
-        cents.write.mode("overwrite").parquet(os.path.join(root, "centroids"))
+        index = assigned.join(codes, "vec_id")
+        ivf.write_ivf(index, os.path.join(root, "index"))
+        ivf.save_index(os.path.join(root, "index"), index, cents, "L2")
         np.save(os.path.join(root, "codebook.npy"), codebook)
 
-    root = build_once("q151pq", build, sf_dir)
+    root = build_once("q151pq-v2", build, sf_dir)
     return (
-        spark.read.parquet(os.path.join(root, "index")),
-        spark.read.parquet(os.path.join(root, "centroids")),
+        ivf.open_index(spark, os.path.join(root, "index")),
         np.load(os.path.join(root, "codebook.npy")),
     )
 
@@ -629,10 +625,9 @@ def q35_ann_ivf_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     IVF_SWEEP.md recall curve."""
     from coldata_spark.operators import ivf
 
-    path, centroids = _ivf_index_cached(spark, sf_dir, nlist=8)
-    return ivf.search_ivf(
-        spark, path, _queries_df(spark, sf_dir), centroids, k=4, nprobe=8
-    )
+    idx = _ivf_index_cached(spark, sf_dir, nlist=8)
+    qs = _queries_df(spark, sf_dir)
+    return ivf.search_ivf(idx.vectors, qs, idx.centroids, k=4, nprobe=8, metric=idx.metric)
 
 
 @register(
@@ -721,12 +716,9 @@ def q150_ann_ivf_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     MACHINERY is now value-checked in its pruned configuration."""
     from coldata_spark.operators import ivf
 
-    path, centroids = _ivf_index_cached(
-        spark, sf_dir, nlist=10, flavor="labelmean"
-    )
-    return ivf.search_ivf(
-        spark, path, _queries_df(spark, sf_dir), centroids, k=5, nprobe=5
-    )
+    idx = _ivf_index_cached(spark, sf_dir, nlist=10, flavor="labelmean")
+    qs = _queries_df(spark, sf_dir)
+    return ivf.search_ivf(idx.vectors, qs, idx.centroids, k=5, nprobe=5, metric=idx.metric)
 
 
 @register(
@@ -1009,15 +1001,13 @@ def q86_ivf_pq_search(spark, sf_dir):
     from coldata_spark.operators import ivf
 
     queries = _queries_df(spark, sf_dir, n=5)
-    index, centroids, codebook, n = _ivf_pq_index_cached(
-        spark, sf_dir, nlist=8, m=8, k_codes=16
-    )
+    idx, codebook, n = _ivf_pq_index_cached(spark, sf_dir, nlist=8, m=8, k_codes=16)
     k = 4
     # cover-all overfetch: ceil(n/k) keeps every candidate through the ADC
     # cut (bounded driver scalar, like the PQ training sample)
     return ivf.search_ivf_pq(
-        index, queries, centroids, codebook, k=k, nprobe=8,
-        overfetch=-(-n // k),
+        idx.vectors, queries, idx.centroids, codebook, k=k, nprobe=8,
+        overfetch=-(-n // k), metric=idx.metric,
     )
 
 
@@ -1178,10 +1168,10 @@ def q151_ivf_pq_ann(spark, sf_dir):
     queries = emb_q.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
     )
-    index, cents, codebook = _quantized_pq_index_cached(spark, sf_dir)
+    idx, codebook = _quantized_pq_index_cached(spark, sf_dir)
     return ivf.search_ivf_pq(
-        index, queries, cents, codebook, k=4, nprobe=5, overfetch=8,
-        metric="L2",
+        idx.vectors, queries, idx.centroids, codebook, k=4, nprobe=5, overfetch=8,
+        metric=idx.metric,
     )
 
 
@@ -1586,8 +1576,8 @@ def _maintained_ivf_cached(spark: SparkSession, sf_dir: str):
     reproducible ingest stream), nlist=4 build, appends through the
     production assign path, then a maintain_ivf pass with an aggressive
     threshold (every above-average cell splits — deterministic under the
-    fixed KMeans seed) and vacuum.  Cached per fixture content by
-    tables.build_once."""
+    fixed KMeans seed), the save_index commit, then vacuum.  Cached per
+    fixture content by tables.build_once; returns the index opened."""
     from coldata_spark.operators import ivf
 
     def build(root):
@@ -1608,14 +1598,11 @@ def _maintained_ivf_cached(spark: SparkSession, sf_dir: str):
             max_cell_ratio=1.0,  # every above-average cell splits: the pass
             min_cell_rows=1,  # always exercises a real split at any sf
         )
+        ivf.save_index(path, assigned, centroids, "COSINE")
         ivf.vacuum_ivf(spark, path, centroids)
-        centroids.write.mode("overwrite").parquet(os.path.join(root, "centroids"))
 
-    root = build_once("maintained-v2", build, sf_dir)
-    return (
-        os.path.join(root, "index"),
-        spark.read.parquet(os.path.join(root, "centroids")),
-    )
+    root = build_once("maintained-v3", build, sf_dir)
+    return ivf.open_index(spark, os.path.join(root, "index"))
 
 
 @register(
@@ -1664,13 +1651,8 @@ def q173_ivf_maintained_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     answer under the same exactness bar."""
     from coldata_spark.operators import ivf
 
-    path, centroids = _maintained_ivf_cached(spark, sf_dir)
-    nlist = centroids.count()
+    idx = _maintained_ivf_cached(spark, sf_dir)
+    qs = _queries_df(spark, sf_dir)
     return ivf.search_ivf(
-        spark,
-        path,
-        _queries_df(spark, sf_dir),
-        centroids,
-        k=4,
-        nprobe=nlist,
+        idx.vectors, qs, idx.centroids, k=4, nprobe=idx.nlist, metric=idx.metric
     )

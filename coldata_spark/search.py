@@ -11,8 +11,8 @@ main.py):
 
 Spark shape: build scans the store once, chunks and embeds each chunk once
 (the vectors are cached between the k-means sample's top-k job and the
-placement + write), and writes a centroid-partitioned parquet index.
-Index "renew" (vdb.py:199-201) = overwrite, as in the reference.
+placement + write), writes a centroid-partitioned parquet index and saves
+it.  Index "renew" (vdb.py:199-201) = overwrite, as in the reference.
 
 Search runs two Spark jobs and finishes on the driver, as the reference
 runs only the ANN probe in Milvus and the rest in process over at most k
@@ -21,10 +21,10 @@ hits per query (make_results, vdb.py:101-122):
      (embed.embed_queries) and read back with no Spark job;
   2. scoring job: ivf._score_slices, the loop search_ivf's collect side
      runs too, probes the batch's cells in numpy by the placement rule
-     and scans the index, read with a fixed schema (no inference job),
-     only in the probed cells (a static ``centroid_id IN (...)``
-     partition filter) with the in-cell Arrow kernel, the one
-     Python-worker stage.  A batch over ivf.COLLECT_PROBE_MAX_BYTES of
+     and scans the index through the scan ivf.open_index holds (no
+     inference or listing job), only in the probed cells (a static
+     ``centroid_id IN (...)`` partition filter) with the in-cell Arrow
+     kernel, the one Python-worker stage.  A batch over ivf.COLLECT_PROBE_MAX_BYTES of
      query matrix is scored in slices, one job each;
   3. driver finish over at most 4k hits per query: global top-4k,
      chunk -> parent, group-best, rank the top k;
@@ -37,7 +37,6 @@ is eager, like the reference's vdb.search.
 from __future__ import annotations
 
 import re
-from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -47,11 +46,9 @@ from coldata_spark import embed as E
 from coldata_spark.functions import text as TX
 from coldata_spark.functions import vector as V
 from coldata_spark.operators import ivf
+from coldata_spark.operators.ivf import SearchIndex
 from coldata_spark.tables import local_frame
 
-# the index columns a search scans: a fixed schema, so opening the index
-# runs no schema-inference job
-_INDEX_SCAN = "vec_id string, embedding array<float>, centroid_id int"
 # chunks scored per result: the parent collapse can still fill k parents
 # when the top hits crowd into few many-chunk documents
 OVERFETCH = 4
@@ -60,18 +57,6 @@ OVERFETCH = 4
 # (_rank_parents).  A parent id may hold '_' itself (the reference's
 # split('_')[0] only ever sees sha256 hex ids, vdb.py:101-122).
 _CHUNK_ORDINAL = r"_[0-9]+$"
-
-
-@dataclass
-class SearchIndex:
-    """Handle to a built index: path of the partitioned vector table plus
-    the (tiny) centroid table, mirroring the loaded Milvus collection;
-    ``metric`` fitted and assigned the cells, and search() probes by it."""
-
-    path: str
-    centroids: DataFrame
-    nlist: int
-    metric: str = "COSINE"
 
 
 def build_index(
@@ -83,7 +68,7 @@ def build_index(
     metric: str = "COSINE",
     encoder_factory=E._default_encoder_factory,
 ) -> SearchIndex:
-    """vdb.update: chunk -> embed -> k-means cells -> partitioned write.
+    """vdb.update: chunk -> embed -> k-means cells -> write, save and open.
 
     The store is scanned and each chunk embedded once: a vector's
     ``parent_id`` is its chunk id minus the trailing ordinal, cast back
@@ -121,13 +106,8 @@ def build_index(
         ivf.write_ivf(assigned, path)
     finally:
         vectors.unpersist()
-    # EFFECTIVE nlist: build_ivf clamps k to the distinct sample points, so
-    # a small fresh collection gets fewer cells than requested — callers
-    # reasoning about nprobe fractions need the real number.  The centroid
-    # table is a local relation: collecting its rows runs no Spark job,
-    # where count() runs two.
-    nlist = len(centroids.collect())
-    return SearchIndex(path=path, centroids=centroids, nlist=nlist, metric=metric)
+    ivf.save_index(path, assigned, centroids, metric)
+    return ivf.open_index(documents.sparkSession, path)
 
 
 def search(
@@ -163,9 +143,8 @@ def search(
     # an empty store's index has no cells and no files to scan
     if q_ids and index.nlist:
         Q = np.asarray([r.q_vec for r in qrows], dtype=np.float64)
-        scan = spark.read.schema(_INDEX_SCAN).parquet(index.path)
         for frame in ivf._score_slices(
-            scan, q_ids, Q, q_type, index.centroids, nprobe, k * OVERFETCH,
+            index.vectors, q_ids, Q, q_type, index.centroids, nprobe, k * OVERFETCH,
             index.metric,
         ):
             pdf = frame.toPandas()

@@ -103,12 +103,13 @@ def test_ivf_build_search_recall(spark, sf_dir, tmp_path):
     )
     exact = ivf.search_exact(qs, emb, k=4).collect()
     # full probe == exact search (the reference's nprobe == nlist config)
-    full = ivf.search_ivf(spark, path, qs, centroids, k=4, nprobe=8).collect()
+    index = spark.read.parquet(path)
+    full = ivf.search_ivf(index, qs, centroids, k=4, nprobe=8).collect()
     exact_set = {(r.q_id, r.vec_id) for r in exact}
     full_set = {(r.q_id, r.vec_id) for r in full}
     assert exact_set == full_set
     # pruned probe: recall against exact must be reasonable on clustered data
-    pruned = ivf.search_ivf(spark, path, qs, centroids, k=4, nprobe=2).collect()
+    pruned = ivf.search_ivf(index, qs, centroids, k=4, nprobe=2).collect()
     pruned_set = {(r.q_id, r.vec_id) for r in pruned}
     recall = len(pruned_set & exact_set) / len(exact_set)
     assert recall >= 0.5, f"nprobe=2 recall {recall}"
@@ -187,7 +188,7 @@ def test_ivf_incremental_append(spark, sf_dir, tmp_path):
     qs = spark.createDataFrame(
         [(0, target.embedding)], ["q_id", "q_vec"]
     )
-    hits = ivf.search_ivf(spark, path, qs, centroids, k=1, nprobe=4).collect()
+    hits = ivf.search_ivf(total, qs, centroids, k=1, nprobe=4).collect()
     assert hits and hits[0].vec_id == target.vec_id
     assert hits[0].score == 1.0
 
@@ -316,7 +317,8 @@ def test_knn_zero_vector_scores_zero_not_nan(spark, tmp_path, monkeypatch):
 
     def ivf_side(max_bytes):
         monkeypatch.setattr(ivf, "COLLECT_PROBE_MAX_BYTES", max_bytes)
-        return ivf.search_ivf(spark, path, qs, centroids, k=3, nprobe=2).collect()
+        index = spark.read.parquet(path)
+        return ivf.search_ivf(index, qs, centroids, k=3, nprobe=2).collect()
 
     runs = {
         strategy: knn_join(qs, vecs, k=3, metric="COSINE", strategy=strategy)
@@ -512,7 +514,7 @@ def test_maintain_ivf_splits_hot_cell_and_keeps_search_exact(
     maintained = {
         (r.q_id, r.vec_id)
         for r in ivf.search_ivf(
-            spark, path, qs, new_cents, k=4, nprobe=nlist_new
+            spark.read.parquet(path), qs, new_cents, k=4, nprobe=nlist_new
         ).collect()
     }
     assert maintained == exact
@@ -523,7 +525,7 @@ def test_maintain_ivf_splits_hot_cell_and_keeps_search_exact(
     after_vacuum = {
         (r.q_id, r.vec_id)
         for r in ivf.search_ivf(
-            spark, path, qs, new_cents, k=4, nprobe=nlist_new
+            spark.read.parquet(path), qs, new_cents, k=4, nprobe=nlist_new
         ).collect()
     }
     assert after_vacuum == exact

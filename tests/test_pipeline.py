@@ -45,7 +45,7 @@ def test_full_search_pipeline(spark, sf_dir, tmp_path):
     queries = E.embed_queries(spark, [target.text]).select("q_id", "q_vec")
 
     # 5) ANN search (V4), full probe == exact
-    hits = ivf.search_ivf(spark, path, queries, centroids, k=8, nprobe=8)
+    hits = ivf.search_ivf(spark.read.parquet(path), queries, centroids, k=8, nprobe=8)
 
     # 6) group-best per parent (A2) + join-back (J2) + project (P2)
     best = group_best(hits.join(

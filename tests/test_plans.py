@@ -188,6 +188,31 @@ def _search(spark, sf_dir, fixture):
     return lambda: S.search(spark, idx, docs, texts, k=3, nprobe=2).collect()
 
 
+def _search_nlist48(spark, sf_dir, fixture):
+    """search() over an index with more cell directories than Spark lists
+    without a job (spark.sql.sources.parallelPartitionDiscovery.threshold,
+    32)."""
+    from coldata_spark import search as S
+
+    docs = load(spark, sf_dir, "documents")
+    idx = S.build_index(docs, str(fixture("tmp_path") / "wide_index"), nlist=48)
+    assert idx.nlist == 48
+    texts = [r.text for r in docs.orderBy("doc_id").limit(4).collect()]
+    return lambda: S.search(spark, idx, docs, texts, k=3, nprobe=2).collect()
+
+
+def _warm_query(name):
+    """A registry query planned and collected again, once its cached index
+    is built."""
+
+    def setup(spark, sf_dir, fixture):
+        fn = registry.specs()[name].fn
+        fn(spark, sf_dir).collect()
+        return lambda: fn(spark, sf_dir).collect()
+
+    return setup
+
+
 def _cold_run_once(spark, sf_dir, fixture):
     """A first run_once over two sources that share a url, renew off."""
     from coldata_spark import config as CF
@@ -245,6 +270,22 @@ JOB_GATES = [
     # driver.  The Spark-side finish (schema inference, query fetch,
     # group-best and rank stages, range sort) ran 8
     ("search", _search, 2),
+    # the same two past 32 cells: the index's scan is held by the handle,
+    # so its file listing is not a job per search.  Opening the index per
+    # search ran 3
+    ("search_nlist48", _search_nlist48, 2),
+    # the query fetch, the in-cell scoring and the top-k's shuffle: the
+    # opened index holds its centroids as a local relation and its stored
+    # schema.  Parquet centroids (a schema-inference job and a collect
+    # job) and schema inference on the index ran 6
+    ("q35_warm", _warm_query("q35_ann_ivf_search"), 3),
+    ("q150_warm", _warm_query("q150_ann_ivf_pruned"), 3),
+    # as q35; count() on parquet centroids for nprobe ran 8
+    ("q173_warm", _warm_query("q173_ivf_maintained_search"), 3),
+    # the IVF-PQ join plan; parquet centroids and an inferred index scan
+    # ran 10
+    ("q86_warm", _warm_query("q86_ivf_pq_search"), 7),
+    ("q151_warm", _warm_query("q151_ivf_pq_ann"), 7),
 ]
 
 
@@ -294,10 +335,10 @@ def _ivf_join_side(spark, sf_dir, fixture):
     from coldata_spark.operators import ivf
     from coldata_spark.queries import vector_queries as VQ
 
-    path, centroids = VQ._ivf_index_cached(spark, sf_dir, nlist=8)
+    idx = VQ._ivf_index_cached(spark, sf_dir, nlist=8)
     fixture("monkeypatch").setattr(ivf, "COLLECT_PROBE_MAX_BYTES", -1)
     return ivf.search_ivf(
-        spark, path, VQ._queries_df(spark, sf_dir), centroids, k=4, nprobe=2
+        idx.vectors, VQ._queries_df(spark, sf_dir), idx.centroids, k=4, nprobe=2
     )
 
 
@@ -306,9 +347,10 @@ def _ivf_pq(spark, sf_dir, fixture):
     from coldata_spark.operators import ivf
     from coldata_spark.queries import vector_queries as VQ
 
-    index, centroids, codebook, _ = VQ._ivf_pq_index_cached(spark, sf_dir)
+    idx, codebook, _ = VQ._ivf_pq_index_cached(spark, sf_dir)
     return ivf.search_ivf_pq(
-        index, VQ._queries_df(spark, sf_dir, n=5), centroids, codebook, k=4, nprobe=4
+        idx.vectors, VQ._queries_df(spark, sf_dir, n=5), idx.centroids, codebook, k=4,
+        nprobe=4,
     )
 
 
@@ -379,7 +421,7 @@ def test_partition_pruning_on_ivf_index(spark, sf_dir, tmp_path, monkeypatch):
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
     )
     monkeypatch.setattr(ivf, "COLLECT_PROBE_MAX_BYTES", float("inf"))
-    out = ivf.search_ivf(spark, path, qs, centroids, k=4, nprobe=2)
+    out = ivf.search_ivf(spark.read.parquet(path), qs, centroids, k=4, nprobe=2)
     assert out.collect()  # the metrics below are this execution's
     (scan,) = [
         s

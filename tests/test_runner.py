@@ -72,6 +72,29 @@ def test_run_once_uncapped_and_search(spark, tmp_path):
     assert {"q_text", "rank", "score", "preview"} <= set(res.columns)
 
 
+def test_run_once_index_reopens(spark, tmp_path):
+    """The index a renew builds is saved: open_index on the summary's path
+    serves the same search rows as the pass's own handle."""
+    from coldata_spark import search as S
+    from coldata_spark.operators import ivf
+
+    cfg = CF.load(FIXTURE)
+    cfg.sources["BrainDataSciencePlatform"].crawl.num_attempts = 100
+    cfg.sources["BrainDataSciencePlatform"].crawl.query_interval = 0.0
+    assert cfg.vdb.renew
+    queries = ["dataset page", "bdsp.example"]
+    out = R.run_once(
+        spark, cfg, str(tmp_path), URLS, _make_factory(), search_queries=queries
+    )
+    idx = ivf.open_index(spark, out["index"])
+    rows = S.search(
+        spark, idx, spark.read.parquet(out["store"]), queries, k=cfg.vdb.limit,
+        nprobe=cfg.vdb.nprobe, id_col=cfg.store.index_field, text_col="info",
+    ).collect()
+    assert rows and rows == out["search"].collect()
+    assert idx.metric == cfg.vdb.metric_type
+
+
 def test_run_once_renews_an_empty_store(spark, tmp_path, monkeypatch):
     """Renew over an empty store builds an index with no cells, and a
     search over it returns no rows with the usual result schema (the

@@ -44,7 +44,7 @@ def test_join_probe_matches_collect_probe(spark, sf_dir, ivf_index, monkeypatch)
         rows = {}
         for side in ("collect", "join"):
             _force_side(monkeypatch, side)
-            out = ivf.search_ivf(spark, path, qdf, centroids, k=3, nprobe=2)
+            out = ivf.search_ivf(spark.read.parquet(path), qdf, centroids, k=3, nprobe=2)
             rows[side] = sorted(map(tuple, out.collect()))
         assert rows["collect"] == rows["join"]
         # k=3 x 20 queries, sparse cells may under-fill
@@ -135,7 +135,7 @@ def test_join_probe_never_materializes_on_driver(spark, sf_dir, ivf_index, monke
     _ban_driver_fetches(
         monkeypatch, type(qdf), "driver-side collect during join-probe planning"
     )
-    out = ivf.search_ivf(spark, path, qdf, centroids, k=3, nprobe=2)
+    out = ivf.search_ivf(spark.read.parquet(path), qdf, centroids, k=3, nprobe=2)
     monkeypatch.undo()
     assert out.count() > 0
 

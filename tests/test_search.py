@@ -86,7 +86,8 @@ def test_streaming_ingest_feeds_index(spark, sf_dir, tmp_path):
     # a late-arriving document is searchable
     target = rest.orderBy("doc_id").first()
     qdf = E.embed_queries(spark, [target.text]).select("q_id", "q_vec")
-    hits = ivf.search_ivf(spark, path, qdf, centroids, k=1, nprobe=4).collect()
+    index = spark.read.parquet(path)
+    hits = ivf.search_ivf(index, qdf, centroids, k=1, nprobe=4).collect()
     assert hits and hits[0].vec_id == target.doc_id
 
 
@@ -240,7 +241,7 @@ def _composed_search(spark, idx, docs, texts, k, nprobe, id_col="doc_id",
 
     qdf = E.embed_queries(spark, texts)
     hits = ivf.search_ivf(
-        spark, idx.path, qdf.select("q_id", "q_vec"), idx.centroids,
+        idx.vectors, qdf.select("q_id", "q_vec"), idx.centroids,
         k=k * 4, nprobe=nprobe, metric=idx.metric,
     )
     parents = hits.withColumn("parent_id", F.regexp_replace("vec_id", "_[0-9]+$", ""))

@@ -314,7 +314,8 @@ def test_stream_vector_ingest_exactly_once(spark, sf_dir, tmp_path):
     qdf = spark.createDataFrame(
         [(0, [float(x) for x in target.embedding])], "q_id long, q_vec array<double>"
     )
-    hits = ivf.search_ivf(spark, index, qdf, centroids, k=1, nprobe=4).collect()
+    scan = spark.read.parquet(index)
+    hits = ivf.search_ivf(scan, qdf, centroids, k=1, nprobe=4).collect()
     assert hits and hits[0].vec_id == target.vec_id
 
 

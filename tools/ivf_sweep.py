@@ -35,6 +35,8 @@ def main() -> None:
     t0 = time.perf_counter()
     ivf.write_ivf(assigned, path)
     build_sec = time.perf_counter() - t0
+    ivf.save_index(path, assigned, centroids, "COSINE")
+    index = ivf.open_index(spark, path)
 
     qs = emb.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
@@ -49,12 +51,12 @@ def main() -> None:
     rows = []
     for nprobe in (1, 2, 4, 8, 16):
         # warm + timed
-        ivf.search_ivf(spark, path, qs, centroids, k=K, nprobe=nprobe).count()
+        ivf.search_ivf(index.vectors, qs, index.centroids, k=K, nprobe=nprobe).count()
         t0 = time.perf_counter()
         got = {
             (r.q_id, r.vec_id)
             for r in ivf.search_ivf(
-                spark, path, qs, centroids, k=K, nprobe=nprobe
+                index.vectors, qs, index.centroids, k=K, nprobe=nprobe
             ).collect()
         }
         dt = time.perf_counter() - t0
