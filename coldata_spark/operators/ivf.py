@@ -764,7 +764,11 @@ def maintain_ivf(
 
     cids, C = _centroid_matrix(centroids)
     cent_rows = dict(zip(cids.tolist(), C.tolist()))
-    old_ids, next_id = set(cent_rows), max(cent_rows) + 1
+    # above every committed id and every cell on disk: a crashed pass's
+    # residue keeps its ids until vacuum_ivf, and appending into it would
+    # commit its vectors twice
+    old_ids = set(cent_rows)
+    next_id = max(old_ids | set(_cell_dirs(index_path))) + 1
     index = spark.read.parquet(index_path)
     for cid in hot:
         k = int(min(max(2, round(sizes[cid] / mean)), 16))
@@ -823,17 +827,25 @@ def vacuum_ivf(
     ids removed.  Run AFTER save_index has published the new table —
     a reader still holding the old table loses its probe targets once
     this runs (same reader contract as the reference's renew rebuild)."""
-    import glob as _glob
     import shutil
 
     live = set(_centroid_matrix(centroids)[0].tolist())
     removed = []
-    for d in _glob.glob(os.path.join(index_path, "centroid_id=*")):
-        try:
-            cid = int(os.path.basename(d).split("=", 1)[1])
-        except ValueError:
-            continue
+    for cid, d in _cell_dirs(index_path).items():
         if cid not in live:
             shutil.rmtree(d, ignore_errors=True)
             removed.append(cid)
     return sorted(removed)
+
+
+def _cell_dirs(index_path: str) -> dict[int, str]:
+    """Cell id -> its ``centroid_id=<id>`` directory, for every cell on disk."""
+    import glob as _glob
+
+    cells = {}
+    for d in _glob.glob(os.path.join(index_path, "centroid_id=*")):
+        try:
+            cells[int(os.path.basename(d).split("=", 1)[1])] = d
+        except ValueError:
+            continue
+    return cells

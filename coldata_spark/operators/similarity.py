@@ -396,10 +396,12 @@ def _sized_for_arrow_stage(
     df: DataFrame, bytes_per_task: int = 16 << 20
 ) -> DataFrame:
     """Partition a map-only Arrow stage so each task carries enough bytes
-    to amortize its Python-worker round-trip (~10-15 ms/task): below
-    ~16 MB/task the handshake dominates the numpy work it feeds.  Never
-    exceeds the cluster's parallelism; with unknown stats falls back to
-    fan_out's under-partitioning guard (single-file fixture case)."""
+    to amortize its Python-worker round-trip (~60 ms/task on 4 cores with
+    the session's worker daemon, ~0.3 s without it: SCALE.md, "Python-
+    worker task floor"): below ~16 MB/task the handshake dominates the
+    numpy work it feeds.  Never exceeds the cluster's parallelism; with
+    unknown stats falls back to fan_out's under-partitioning guard
+    (single-file fixture case)."""
     from coldata_spark.tables import fan_out
 
     est = _estimated_bytes(df)

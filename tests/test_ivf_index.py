@@ -111,46 +111,69 @@ def test_renew_interrupted_before_save_leaves_no_index(
         ivf.open_index(spark, path)
 
 
-def test_maintenance_crash_before_save_keeps_the_old_index(spark, half_index):
-    """maintain_ivf writes its cells under fresh ids and save_index
-    publishes them.  A pass that stops in between leaves the committed
-    index as it was: open_index returns the pre-maintenance handle and
-    its exhaustive search the pre-maintenance rows.  Vacuum against the
-    committed centroids clears the pass's residue, and a completed pass
-    (maintain -> save -> vacuum) answers the same rows from its cells."""
+@pytest.fixture
+def skewed_index(spark, half_index):
+    """half_index with a copy of cell 0's vectors appended under fresh
+    ids, opened; its queries and their exhaustive rows."""
     path, assigned, centroids, emb = half_index
-    # skew the index: a copy of cell 0's vectors under fresh ids
     hot = assigned.filter(F.col("centroid_id") == 0).select(
         (F.col("vec_id") + 1_000_000).alias("vec_id"), "embedding"
     )
     ivf.append_to_index(hot, centroids, path)
     old = ivf.open_index(spark, path)
     qs = _queries(emb)
-    before = _exhaustive(old, qs)
+    return path, assigned, old, qs, _exhaustive(old, qs)
 
-    def maintenance_pass(crash: bool):
-        new_centroids, report = ivf.maintain_ivf(
-            spark, path, old.centroids, max_cell_ratio=1.0, min_cell_rows=1
-        )
-        assert report["splits"]
-        if crash:
-            raise RuntimeError("crashed before save")
-        ivf.save_index(path, assigned, new_centroids, old.metric)
-        ivf.vacuum_ivf(spark, path, new_centroids)
 
+def _maintenance_pass(spark, path, assigned, old, crash: bool):
+    """maintain -> save -> vacuum; with crash, stop before the save."""
+    new_centroids, report = ivf.maintain_ivf(
+        spark, path, old.centroids, max_cell_ratio=1.0, min_cell_rows=1
+    )
+    assert report["splits"]
+    if crash:
+        raise RuntimeError("crashed before save")
+    ivf.save_index(path, assigned, new_centroids, old.metric)
+    ivf.vacuum_ivf(spark, path, new_centroids)
+
+
+def _cells(idx):
+    return sorted((r.centroid_id, list(r.cvec)) for r in idx.centroids.collect())
+
+
+def test_maintenance_crash_before_save_keeps_the_old_index(spark, skewed_index):
+    """maintain_ivf writes its cells under fresh ids and save_index
+    publishes them.  A pass that stops in between leaves the committed
+    index as it was: open_index returns the pre-maintenance handle and
+    its exhaustive search the pre-maintenance rows.  Vacuum against the
+    committed centroids clears the pass's residue, and a completed pass
+    (maintain -> save -> vacuum) answers the same rows from its cells."""
+    path, assigned, old, qs, before = skewed_index
     with pytest.raises(RuntimeError, match="crashed before save"):
-        maintenance_pass(crash=True)
+        _maintenance_pass(spark, path, assigned, old, crash=True)
     reopened = ivf.open_index(spark, path)
     assert reopened.nlist == old.nlist
-
-    def cells(idx):
-        return sorted((r.centroid_id, list(r.cvec)) for r in idx.centroids.collect())
-
-    assert cells(reopened) == cells(old)
+    assert _cells(reopened) == _cells(old)
     assert _exhaustive(reopened, qs) == before
     assert ivf.vacuum_ivf(spark, path, reopened.centroids)  # the residue
 
-    maintenance_pass(crash=False)
+    _maintenance_pass(spark, path, assigned, old, crash=False)
     maintained = ivf.open_index(spark, path)
-    assert cells(maintained) != cells(old)
+    assert _cells(maintained) != _cells(old)
+    assert _exhaustive(maintained, qs) == before
+
+
+def test_maintenance_rerun_after_crash_writes_each_vector_once(spark, skewed_index):
+    """A pass re-run over a crashed pass's residue, with no vacuum in
+    between, numbers its cells above the residue's: the committed index
+    holds every vector once and answers the pre-maintenance rows."""
+    path, assigned, old, qs, before = skewed_index
+    vectors = old.vectors.count()
+    with pytest.raises(RuntimeError, match="crashed before save"):
+        _maintenance_pass(spark, path, assigned, old, crash=True)
+    _maintenance_pass(spark, path, assigned, old, crash=False)
+    maintained = ivf.open_index(spark, path)
+    dupes = maintained.vectors.groupBy("vec_id").count().filter("count > 1")
+    assert dupes.count() == 0
+    assert maintained.vectors.count() == vectors
     assert _exhaustive(maintained, qs) == before

@@ -8,6 +8,9 @@
 - Every tool imports without running its command-line entry (each keeps
   it behind ``if __name__ == "__main__"``): a kept tool that imports a
   deleted one fails here, not the next time someone runs it.
+- Every session is built by ``coldata_spark.session.get_spark``: no other
+  Python file calls the session builder, so no tool runs without the
+  session's defaults (its Python worker daemon among them).
 """
 
 from __future__ import annotations
@@ -22,6 +25,7 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 TOOLS = os.path.join(REPO, "tools")
 CITED = re.compile(r"tools/\w+\.py")
 CITED_PLAN = re.compile(r"\bplans/\w[\w./{},-]*")
+BUILDER = re.compile(r"SparkSession\s*\.\s*builder")
 
 
 def _sources():
@@ -80,3 +84,17 @@ def test_cited_plan_paths_exist():
 )
 def test_tool_imports_without_running_main(name):
     importlib.import_module(f"tools.{name}")
+
+
+def test_only_get_spark_builds_sessions():
+    session_py = os.path.join(REPO, "coldata_spark", "session.py")
+    builders = []
+    for root, dirs, files in os.walk(REPO):
+        dirs[:] = [d for d in dirs if not d.startswith(".")]
+        for f in files:
+            path = os.path.join(root, f)
+            if f.endswith(".py") and path != session_py:
+                with open(path, encoding="utf-8") as fh:
+                    if BUILDER.search(fh.read()):
+                        builders.append(os.path.relpath(path, REPO))
+    assert not builders, "sessions built outside get_spark:\n" + "\n".join(builders)

@@ -43,7 +43,6 @@ def main() -> None:
     unknown = [t for t in wanted if t not in TIERS]
     if unknown:
         raise SystemExit(f"unknown tier(s) {unknown}; valid: {list(TIERS)}")
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
     from coldata_spark.operators import quality as Q
@@ -51,17 +50,18 @@ def main() -> None:
     from coldata_spark.operators.drift import distribution_drift, psi_total
     from coldata_spark.operators.table import VersionedTable
     from coldata_spark.pipeline import fold_corpus_batch, curate_corpus, gate_documents
+    from coldata_spark.session import get_spark
     from coldata_spark.tables import load
 
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "24g")
-        .getOrCreate()
+    spark = get_spark(
+        master=f"local[{cpus}]",
+        extra_conf={
+            "spark.sql.shuffle.partitions": cpus,
+            "spark.ui.enabled": "false",
+            "spark.driver.memory": "24g",
+        },
     )
-    spark.sparkContext.setLogLevel("WARN")
 
     out: dict = {}
     for tier in wanted:

@@ -41,17 +41,17 @@ def duck_time(sql: str, tier_dir: str) -> float:
 
 
 def main() -> None:
-    from pyspark.sql import SparkSession
-
     from coldata_spark import registry
+    from coldata_spark.session import get_spark
 
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "24g")
-        .getOrCreate()
+    spark = get_spark(
+        master=f"local[{cpus}]",
+        extra_conf={
+            "spark.sql.shuffle.partitions": cpus,
+            "spark.ui.enabled": "false",
+            "spark.driver.memory": "24g",
+        },
     )
     specs = registry.specs()
     # warm the JVM + codegen caches so the first timed query doesn't carry

@@ -57,17 +57,17 @@ def main() -> None:
     unknown = [t for t in wanted if t not in TIERS]
     if unknown:  # fail BEFORE the ~30 s Spark startup, with the menu
         raise SystemExit(f"unknown tier(s) {unknown}; valid: {list(TIERS)}")
-    from pyspark.sql import SparkSession
-
     from coldata_spark import registry
+    from coldata_spark.session import get_spark
 
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "24g")
-        .getOrCreate()
+    spark = get_spark(
+        master=f"local[{cpus}]",
+        extra_conf={
+            "spark.sql.shuffle.partitions": cpus,
+            "spark.ui.enabled": "false",
+            "spark.driver.memory": "24g",
+        },
     )
     specs = registry.specs()
     spec = specs["q169_curation_pipeline"]
