@@ -15,7 +15,8 @@ Key map (reference src/config.yml:1-100 → here):
   mongodb.key.<env>.db_name, collection_name, index_field
                                 → table root / table name / pk column
   vdb.milvus.nlist/nprobe/limit/metric_type
-                                → operators.ivf build_ivf + ivf_search knobs
+                                → runner.run_once: search.build_index
+                                   nlist + metric, search.search k + nprobe
   vdb.milvus.batch_size         → embed Arrow batch hint; renew → rebuild
   vdb.text.chunk_size/chunk_overlap → functions.text chunk parameters
   vdb.model.*                   → embed encoder settings (model name,
@@ -28,7 +29,6 @@ Key map (reference src/config.yml:1-100 → here):
 from __future__ import annotations
 
 from dataclasses import dataclass, field
-from typing import Any
 
 from coldata_spark.ingest.crawl import CrawlConfig
 
@@ -106,16 +106,6 @@ class AppConfig:
             name: src.crawl
             for name, src in self.sources.items()
             if src.enabled
-        }
-
-    def ivf_build_kwargs(self) -> dict[str, Any]:
-        return {"nlist": self.vdb.nlist}
-
-    def ivf_search_kwargs(self) -> dict[str, Any]:
-        return {
-            "nprobe": self.vdb.nprobe,
-            "k": self.vdb.limit,
-            "metric": self.vdb.metric_type,
         }
 
     def chunk_kwargs(self) -> dict[str, int]:

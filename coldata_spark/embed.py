@@ -207,9 +207,8 @@ def embed_queries(
     but run on the driver, as the reference embeds its query batch in
     its own process (vdb.py:88-100): one encoder per call, one encode
     over the whole list.  The result is a JVM-local relation
-    (tables.local_frame), so reading it starts no Python worker and its
-    size estimate is exact: a batch that fits one scoring slice
-    (ivf.COLLECT_PROBE_MAX_BYTES) takes search_ivf's pruned collect side.
+    (tables.local_frame), so reading it starts no Python worker and runs
+    no Spark job, and its size estimate is exact.
     """
     from coldata_spark.tables import local_frame
 

@@ -10,7 +10,10 @@ nprobe cells per search (vdb.py:88-100).  Spark-native re-expression:
           PARTITIONED BY centroid_id.  Milvus's in-memory cell skip becomes
           parquet partition pruning — the scan literally never reads the
           cells a query doesn't probe.  Rebuild (renew, vdb.py:199-201) is
-          mode("overwrite"); save_index commits it, open_index loads it.
+          mode("overwrite"); save_index commits it, open_index loads it
+          as the SearchIndex handle every later operation takes: search,
+          append, maintenance, vacuum and streaming ingest read the
+          centroids, metric and path from it.
 
   search: score queries against the (tiny, collected) centroid table ->
           pick nprobe cells per query by the placement rule (_nearest)
@@ -36,7 +39,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from coldata_spark.functions import vector as V
-from coldata_spark.operators.joins import _estimated_bytes
 from coldata_spark.operators.similarity import (
     _fetch_queries,
     _knn_scored_arrow,
@@ -192,15 +194,20 @@ def save_index(path: str, vectors: DataFrame, centroids: DataFrame, metric: str)
 def open_index(spark: SparkSession, path: str) -> SearchIndex:
     """The index save_index last committed at ``path``.  Raises
     FileNotFoundError naming ``path`` when it holds no committed index."""
-    try:
-        with open(os.path.join(path, INDEX_META)) as fh:
-            meta = json.load(fh)
-    except FileNotFoundError:
-        raise FileNotFoundError(f"no IVF index at {path}: no {INDEX_META}") from None
+    meta = _committed(path)
     cells = dict(meta["cells"])
     vectors = spark.read.schema(T.StructType.fromJson(meta["schema"])).parquet(path)
     centroids = _centroid_frame(spark, cells)
     return SearchIndex(path, vectors, centroids, len(cells), meta["metric"])
+
+
+def _committed(path: str) -> dict:
+    """The INDEX_META save_index last committed at ``path``."""
+    try:
+        with open(os.path.join(path, INDEX_META)) as fh:
+            return json.load(fh)
+    except FileNotFoundError:
+        raise FileNotFoundError(f"no IVF index at {path}: no {INDEX_META}") from None
 
 
 def assign_to_centroids(
@@ -282,89 +289,54 @@ def _nearest(X, C, cids, n: int, metric: str):
     return cids[np.argsort(key, axis=1, kind="stable")[:, : max(n, 0)]]
 
 
-def append_to_index(
-    new_vectors: DataFrame,
-    centroids: DataFrame,
-    path: str,
-    vec_col: str = "embedding",
-    metric: str = "COSINE",
-) -> None:
-    """Incremental index growth: assign new vectors to the EXISTING
-    centroids and append into their partitions.  The reference can only
-    drop-and-rebuild (renew, vdb.py:199-201); partition-append makes
-    ingest incremental — cells drift only if the data distribution does,
-    at which point build_ivf refits (the standard IVF maintenance trade)."""
-    assigned = assign_to_centroids(new_vectors, centroids, vec_col, metric)
-    _write_cells(assigned, path, "append")
+def append_to_index(index: SearchIndex, new_vectors: DataFrame) -> SearchIndex:
+    """Incremental index growth: place new vectors in the index's FIXED
+    cells by its metric and append them into their partitions.  Returns
+    the index reopened, whose scan lists the appended files; ``index``
+    stays the snapshot it was.  The reference can only drop-and-rebuild
+    (renew, vdb.py:199-201); partition-append makes ingest incremental —
+    cells drift only if the data distribution does, at which point
+    maintain_ivf splits them or build_ivf refits (the standard IVF
+    maintenance trade)."""
+    _write_cells(_placed(index, new_vectors), index.path, "append")
+    return open_index(new_vectors.sparkSession, index.path)
+
+
+def _placed(index: SearchIndex, vectors: DataFrame) -> DataFrame:
+    """``vectors`` placed in ``index``'s fixed cells by its metric."""
+    return assign_to_centroids(vectors, index.centroids, metric=index.metric)
 
 
 # The most query-matrix bytes one scoring job carries in its kernel's
-# closure: a larger batch is scored in slices (_score_slices), and
-# search_ivf takes its collect side when its batch's estimate fits one.
+# closure: a larger batch is scored in slices (_score_slices).
 COLLECT_PROBE_MAX_BYTES = 1 << 20
 
 
-def search_ivf(
-    index: DataFrame,
-    queries: DataFrame,
-    centroids: DataFrame,
-    k: int = 4,
-    nprobe: int = 4,
-    metric: str = "COSINE",
-) -> DataFrame:
-    """ANN top-k over the opened scan ``index``: nprobe cells, exact inside.
+def search_ivf(index: SearchIndex, queries: DataFrame, k: int = 4, nprobe: int = 4) -> DataFrame:
+    """ANN top-k over ``index``: nprobe cells per query, exact inside.
 
-    Both sides probe by ``_nearest``, build_ivf's placement rule.  The
-    query side's size estimate picks one of two plans, which return
-    identical rows:
-
-    * collect side (estimate <= ``COLLECT_PROBE_MAX_BYTES``, one slice):
-      the batch is fetched to the driver ONCE, then probed and scored by
-      ``_score_slices``, search.search's loop: a static ``centroid_id IN
-      (...)`` filter prunes index partitions at planning, and knn_join's
-      Arrow kernel masks each query to its own cells.  No join, no shuffle.
-    * join side (anything larger, or with no estimate, such as an RDD
-      scan): nothing about the batch touches the driver.  The probe is
-      assign_to_centroids with ``n = nprobe``, whose rows carry q_vec; its
-      cells are broadcast-semi-joined to the index, and Catalyst
-      expressions score over a broadcast probe join.  Dynamic partition
-      pruning does not fire on this plan, so the scan reads every cell
-      (SCALE.md "IVF probe sides").
-    """
-    if _estimated_bytes(queries) <= COLLECT_PROBE_MAX_BYTES:
-        q_ids, Q = _fetch_queries(queries, "q_id", "q_vec")
-        q_type = queries.schema["q_id"].dataType
-        frames = _score_slices(index, q_ids, Q, q_type, centroids, nprobe, k, metric)
-        # nothing probed: the empty scoring frame keeps the result schema
-        frames = frames or [_score_cells(index, q_ids, Q, q_type, {}, k, metric)]
-        scored = reduce(DataFrame.union, frames)
-    else:
-        # the tiny (q_id, q_vec, centroid_id) probe table, broadcast, keys
-        # each scanned row to exactly the queries probing its cell
-        probe = assign_to_centroids(
-            queries.select("q_id", "q_vec"), centroids, "q_vec", metric, n=nprobe
-        )
-        cell_set = probe.select("centroid_id").distinct()
-        pairs = index.join(F.broadcast(cell_set), "centroid_id", "left_semi").join(
-            F.broadcast(probe), "centroid_id"
-        )
-        score = F.round(
-            V.score_expr(
-                metric, V.as_double(F.col("q_vec")), V.as_double(F.col("embedding"))
-            ),
-            6,
-        )
-        scored = pairs.select("q_id", "vec_id", score.alias("score"))
-    return rank_top_k(scored, k, metric)
+    The (q_id, q_vec) batch is fetched to the driver once, then probed
+    by ``_nearest``, build_ivf's placement rule, and scored by
+    ``_score_slices``, search.search's loop: a static ``centroid_id IN
+    (...)`` filter prunes index partitions at planning, and knn_join's
+    Arrow kernel masks each query to its own cells.  No join, no shuffle
+    before the per-query top-k."""
+    q_ids, Q = _fetch_queries(queries, "q_id", "q_vec")
+    q_type = queries.schema["q_id"].dataType
+    # nothing probed: the empty scoring frame keeps the result schema
+    frames = _score_slices(index, q_ids, Q, q_type, nprobe, k) or [
+        _score_cells(index, q_ids, Q, q_type, {}, k)
+    ]
+    return rank_top_k(reduce(DataFrame.union, frames), k, index.metric)
 
 
-def _score_slices(index, q_ids, Q, q_type, centroids, nprobe, k, metric) -> list:
+def _score_slices(index: SearchIndex, q_ids, Q, q_type, nprobe, k) -> list:
     """The driver-held batch (``q_ids``, matrix ``Q``, id type ``q_type``)
     probed by ``_probe_cells`` and scored in its cells of ``index``: one
     (q_id, vec_id, score) frame per slice of at most
     ``COLLECT_PROBE_MAX_BYTES`` of ``Q`` (one query at least).  A slice
     that probes no cell has no frame, so it runs no job."""
-    cells = _probe_cells(q_ids, Q, centroids, nprobe, metric)
+    cells = _probe_cells(q_ids, Q, index.centroids, nprobe, index.metric)
     row = Q.itemsize * Q.shape[1]
     fits = Q.nbytes <= COLLECT_PROBE_MAX_BYTES  # so an inf limit is one slice
     step = max(1, len(Q) if fits else int(COLLECT_PROBE_MAX_BYTES // row))
@@ -373,22 +345,21 @@ def _score_slices(index, q_ids, Q, q_type, centroids, nprobe, k, metric) -> list
         ids = q_ids[lo : lo + step]
         part = {q: cells[q] for q in ids}
         if any(part.values()):
-            Qs = Q[lo : lo + step]
-            frames.append(_score_cells(index, ids, Qs, q_type, part, k, metric))
+            frames.append(_score_cells(index, ids, Q[lo : lo + step], q_type, part, k))
     return frames
 
 
-def _score_cells(index, q_ids, Q, q_type, cells, k, metric) -> DataFrame:
+def _score_cells(index: SearchIndex, q_ids, Q, q_type, cells, k) -> DataFrame:
     """One slice's scoring: the driver-held batch against only the
-    probed cells of ``index`` (a static ``centroid_id IN (...)`` filter),
-    each query masked to its own ``cells`` in knn_join's Arrow kernel.
-    Returns (q_id, vec_id, score) with the score rounded to 6 decimals in
-    Spark (HALF_UP), before the global per-query top-k: the kernel keeps
-    a partial top-k per batch."""
+    probed cells of ``index`` (a static ``centroid_id IN (...)`` filter
+    on its scan), each query masked to its own ``cells`` in knn_join's
+    Arrow kernel.  Returns (q_id, vec_id, score) with the score rounded
+    to 6 decimals in Spark (HALF_UP), before the global per-query top-k:
+    the kernel keeps a partial top-k per batch."""
     probed = sorted(set().union(*cells.values()))
     scored = _knn_scored_arrow(
-        q_ids, Q, q_type, index.filter(F.col("centroid_id").isin(probed)),
-        k, metric, "q_id", "vec_id", "embedding",
+        q_ids, Q, q_type, index.vectors.filter(F.col("centroid_id").isin(probed)),
+        k, index.metric, "q_id", "vec_id", "embedding",
         score_decimals=6, exclude_self=False, cells=cells,
     )
     return scored.withColumn("score", F.round(F.col("score"), 6))
@@ -544,7 +515,8 @@ def build_ivf_pq(
     WHICH rows are scanned (nprobe/nlist), PQ cuts the BYTES per scanned
     row (D*4 -> m).  The full-precision vector column stays in the parquet
     (for re-ranking) but the ADC scan never reads it — column pruning
-    keeps it on disk.
+    keeps it on disk.  write_ivf, save_index and open_index make it the
+    handle search_ivf_pq takes.
     """
     assigned, centroids = build_ivf(vectors, nlist=nlist, vec_col=vec_col)
     codebook = pq_train(vectors, m=m, k=k_codes, vec_col=vec_col)
@@ -553,17 +525,16 @@ def build_ivf_pq(
 
 
 def search_ivf_pq(
-    index: DataFrame,
+    index: SearchIndex,
     queries: DataFrame,
-    centroids: DataFrame,
     codebook,
     k: int = 4,
     nprobe: int = 4,
     overfetch: int = 4,
-    metric: str = "COSINE",
 ) -> DataFrame:
-    """Full production ANN path: IVF cell pruning -> PQ ADC candidate scan
-    -> full-precision re-rank of k*overfetch candidates.
+    """Full production ANN path over ``index``, whose scan holds each
+    vector's ``pq_codes`` (build_ivf_pq): IVF cell pruning -> PQ ADC
+    candidate scan -> full-precision re-rank of k*overfetch candidates.
 
     1. probe: assign_to_centroids with ``n = nprobe`` (rows carry q_vec;
        a broadcast semi-join of the cells prunes the index at the scan);
@@ -581,15 +552,16 @@ def search_ivf_pq(
     import pandas as pd
 
     m, kc, sub = codebook.shape
+    vectors, metric = index.vectors, index.metric
 
     probe = assign_to_centroids(
-        queries.select("q_id", "q_vec"), centroids, "q_vec", metric, n=nprobe
+        queries.select("q_id", "q_vec"), index.centroids, "q_vec", metric, n=nprobe
     )
 
     # Keep the probed cell set DISTRIBUTED: a broadcast semi-join prunes the
     # index without funneling probe lists through the driver, so a 1e6-query
     # batch plans exactly like a 10-query batch.
-    pruned = index.join(
+    pruned = vectors.join(
         F.broadcast(probe.select("centroid_id").distinct()), "centroid_id", "left_semi"
     ).join(F.broadcast(probe), "centroid_id")
 
@@ -600,8 +572,7 @@ def search_ivf_pq(
     # next to the candidate scan it feeds.
     # reconstructed-vector norm table for COSINE: ||v̂||^2 = sum_j ||c_j||^2
     norm_lut = (codebook**2).sum(axis=2)  # (m, kc)
-    spark = index.sparkSession
-    bc = spark.sparkContext.broadcast((codebook, norm_lut, metric.upper()))
+    bc = vectors.sparkSession.sparkContext.broadcast((codebook, norm_lut, metric.upper()))
 
     def adc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         cb, nlut, met = bc.value
@@ -649,7 +620,7 @@ def search_ivf_pq(
     ).select("q_id", "vec_id")
 
     rerank = (
-        cands.join(index.select("vec_id", "embedding"), "vec_id")
+        cands.join(vectors.select("vec_id", "embedding"), "vec_id")
         .join(F.broadcast(queries), "q_id")
     )
     exact = F.round(
@@ -673,8 +644,8 @@ def search_ivf_pq(
 # per maintenance pass.  The incremental answer here is cell-level
 # copy-on-write, whose writes stay O(touched cells) at 100 TB:
 #
-#   audit      per-cell size profile (the q133 skew-profile shape applied
-#              to the index's own partitions).
+#   audit      per-cell size profile of the live cells (the q133
+#              skew-profile shape applied to the index's own partitions).
 #   split      each hot cell's members fit a LOCAL k-means (a bounded
 #              sample of that cell, partition-pruned).  Every live row is
 #              then re-assigned against the new table by the build's rule,
@@ -682,99 +653,94 @@ def search_ivf_pq(
 #              attracts move too.  The hot cells and every cell that loses
 #              or gains rows are written again under FRESH centroid ids.
 #              Purely additive: no live partition is touched.
-#   commit     save_index of the new centroid table (untouched cells,
-#              sub-centroids, renamed touched cells) is the metadata
-#              pointer swap.  search_ivf probes only cells listed in the
-#              centroid table, so readers holding the OLD table never see
-#              the new cells and readers of the NEW table never probe a
-#              superseded one — no reader ever sees a vector twice, and a
-#              crash anywhere before the save leaves the index exactly as
-#              it was (the part-built cells are unreferenced bytes, not
-#              corruption).
-#   vacuum     partition dirs not referenced by the centroid table are
+#   commit     maintain_ivf's own save_index of the new centroid table
+#              (untouched cells, sub-centroids, renamed touched cells) is
+#              the metadata pointer swap.  Searches probe only cells
+#              listed in their handle's centroid table, so readers holding
+#              the OLD handle never see the new cells and readers of the
+#              NEW one never probe a superseded cell — no reader ever sees
+#              a vector twice, and a crash anywhere before the save leaves
+#              the index exactly as it was (the part-built cells are
+#              unreferenced bytes, not corruption).
+#   vacuum     partition dirs not referenced by the committed table are
 #              garbage — deleted post-commit, and a re-run heals any
 #              crash residue (the Iceberg/Delta orphan-file pattern).
 # ---------------------------------------------------------------------------
 
 
-def audit_ivf_cells(
-    spark: SparkSession, index_path: str, centroids: DataFrame | None = None
-) -> DataFrame:
-    """Cell-size skew profile of a live IVF index: (centroid_id, n,
-    ratio) with ratio = n / mean-cell-size.  Scans only the partition
-    column (no data pages beyond row-group metadata).  With ``centroids``
-    given, only LIVE cells are profiled, so pre-vacuum orphan dirs from
-    an interrupted maintenance pass don't skew the audit.  The global
+def audit_ivf_cells(index: SearchIndex) -> DataFrame:
+    """Cell-size skew profile of ``index``'s live cells: (centroid_id,
+    n, ratio) with ratio = n / mean-cell-size.  Scans only the partition
+    column (no data pages beyond row-group metadata) of the cells its
+    centroid table lists, so pre-vacuum orphan dirs from an interrupted
+    or superseded maintenance pass don't skew the audit.  The global
     window is over nlist rows — bounded by configuration, not data."""
-    idx = spark.read.parquet(index_path).select("centroid_id")
-    if centroids is not None:
-        idx = idx.join(
-            F.broadcast(centroids.select("centroid_id")),
-            "centroid_id",
-            "left_semi",
-        )
-    counts = idx.groupBy("centroid_id").agg(F.count(F.lit(1)).alias("n"))
-    return counts.withColumn(
-        "ratio", F.col("n") / F.expr("avg(n) OVER ()")
-    )
+    counts = _live_vectors(index).groupBy("centroid_id").agg(F.count(F.lit(1)).alias("n"))
+    return counts.withColumn("ratio", F.col("n") / F.expr("avg(n) OVER ()"))
+
+
+def _live_vectors(index: SearchIndex) -> DataFrame:
+    """``index``'s scan pruned to the cells of its centroid table by a
+    static partition filter: superseded or part-built cells on disk are
+    never read."""
+    live = _centroid_matrix(index.centroids)[0].tolist()
+    return index.vectors.filter(F.col("centroid_id").isin(live))
+
+
+def _cell_sizes(index: SearchIndex) -> dict[int, int]:
+    # nlist rows — bounded by index configuration (the same class as the
+    # centroid collect assign_to_centroids and the probe make)
+    return {int(r["centroid_id"]): int(r["n"]) for r in audit_ivf_cells(index).collect()}
 
 
 def maintain_ivf(
-    spark: SparkSession,
-    index_path: str,
-    centroids: DataFrame,
-    vec_col: str = "embedding",
-    metric: str = "COSINE",
+    index: SearchIndex,
     max_cell_ratio: float = 4.0,
     min_cell_rows: int = 64,
     max_splits_per_pass: int = 4,
     seed: int = 42,
-) -> tuple[DataFrame, dict]:
+) -> tuple[SearchIndex, dict]:
     """One maintenance pass: split every cell whose size exceeds
     ``max_cell_ratio`` x the mean (and ``min_cell_rows`` — tiny indexes
     don't thrash) into ~size/mean sub-cells via local k-means, re-place
-    every row the new table moves, and append the touched cells under
-    fresh ids (report['splits']: hot cell -> sub-cells, report['renamed']:
-    other touched cell -> new id).  Returns (new_centroids, report); the
-    CALLER commits new_centroids with save_index, then reclaims superseded
-    partitions with vacuum_ivf.  No-op (same centroids object) when
-    nothing is hot — safe to drive from scheduler.run_scheduled like
-    layout.maintain_layout: a pass splits at most ``max_splits_per_pass``
-    cells and writes only touched ones, reading every live vector once to
-    find them; an idle pass costs one partition-column scan."""
+    every row the new table moves, append the touched cells under fresh
+    ids (report['splits']: hot cell -> sub-cells, report['renamed']:
+    other touched cell -> new id) and commit the new table with
+    save_index.  Returns (the new version, opened; report); the caller
+    reclaims superseded partitions with vacuum_ivf.  No-op (the same
+    handle) when nothing is hot — safe to drive from
+    scheduler.run_scheduled like layout.maintain_layout: a pass splits at
+    most ``max_splits_per_pass`` cells and writes only touched ones,
+    reading every live vector once to find them; an idle pass costs one
+    partition-column scan."""
     import numpy as np
 
-    # nlist rows — bounded by index configuration (the same class as the
-    # centroid collect assign_to_centroids and the probe make)
-    sizes = {
-        int(r["centroid_id"]): int(r["n"])
-        for r in audit_ivf_cells(spark, index_path, centroids).collect()
-    }
+    sizes = _cell_sizes(index)
     report: dict = {"cells_before": len(sizes), "max_ratio_before": None,
                      "splits": {}, "renamed": {}, "rows_resharded": 0}
     if not sizes:
-        return centroids, report
+        return index, report
     mean = sum(sizes.values()) / len(sizes)
     report["max_ratio_before"] = round(max(sizes.values()) / mean, 2)
     floor = max_cell_ratio * mean
     hot = [c for c, n in sizes.items() if n > floor and n >= min_cell_rows]
     hot = sorted(hot, key=lambda c: -sizes[c])[:max_splits_per_pass]
     if not hot:
-        return centroids, report
+        return index, report
 
-    cids, C = _centroid_matrix(centroids)
+    spark, metric = index.vectors.sparkSession, index.metric
+    cids, C = _centroid_matrix(index.centroids)
     cent_rows = dict(zip(cids.tolist(), C.tolist()))
     # above every committed id and every cell on disk: a crashed pass's
     # residue keeps its ids until vacuum_ivf, and appending into it would
     # commit its vectors twice
     old_ids = set(cent_rows)
-    next_id = max(old_ids | set(_cell_dirs(index_path))) + 1
-    index = spark.read.parquet(index_path)
+    next_id = max(old_ids | set(_cell_dirs(index.path))) + 1
     for cid in hot:
         k = int(min(max(2, round(sizes[cid] / mean)), 16))
         # partition-pruned scan: only this cell's directory is read
-        cell = index.filter(F.col("centroid_id") == cid)
-        sample = _sample_vectors(cell, vec_col, SAMPLE_PER_CENTROID * k)
+        cell = index.vectors.filter(F.col("centroid_id") == cid)
+        sample = _sample_vectors(cell, "embedding", SAMPLE_PER_CENTROID * k)
         subs = _kmeans(sample, k, seed, metric).tolist()
         report["splits"][cid] = list(range(next_id, next_id + len(subs)))
         cent_rows.update(zip(report["splits"][cid], subs))
@@ -783,12 +749,9 @@ def maintain_ivf(
     # one pass over the live rows finds the cells the new table moves rows
     # out of or into; those are rewritten under fresh ids, the rest stay
     placed = assign_to_centroids(
-        index.join(
-            F.broadcast(centroids.select("centroid_id")), "centroid_id", "left_semi"
-        ).withColumnRenamed("centroid_id", "_old"),
+        _live_vectors(index).withColumnRenamed("centroid_id", "_old"),
         _centroid_frame(spark, cent_rows),
-        vec_col,
-        metric,
+        metric=metric,
     )
     moves = placed.filter(F.col("_old") != F.col("centroid_id"))
     moves = moves.select("_old", "centroid_id").distinct().collect()
@@ -801,37 +764,35 @@ def maintain_ivf(
     rewrite = placed.filter(F.col("_old").isin(sorted(touched))).withColumn(
         "centroid_id", F.element_at(F.lit(fresh), F.col("centroid_id") + 1)
     )
-    _write_cells(rewrite.drop("_old"), index_path, "append")  # fresh dirs only
+    _write_cells(rewrite.drop("_old"), index.path, "append")  # fresh dirs only
     report.update(renamed=renamed, rows_resharded=sum(sizes[c] for c in touched))
 
-    new_centroids = _centroid_frame(spark, cent_rows)
-    # post-split profile for the report (audit against the NEW table so
+    save_index(index.path, index.vectors, _centroid_frame(spark, cent_rows), metric)
+    maintained = open_index(spark, index.path)
+    # post-split profile for the report (the new version's live cells, so
     # the superseded hot cells don't count)
-    after = {
-        int(r["centroid_id"]): int(r["n"])
-        for r in audit_ivf_cells(spark, index_path, new_centroids).collect()
-    }
+    after = _cell_sizes(maintained)
     if after:
         amean = sum(after.values()) / len(after)
         report["cells_after"] = len(after)
         report["max_ratio_after"] = round(max(after.values()) / amean, 2)
-    return new_centroids, report
+    return maintained, report
 
 
-def vacuum_ivf(
-    spark: SparkSession, index_path: str, centroids: DataFrame
-) -> list[int]:
-    """Reclaim partition dirs not referenced by the (committed) centroid
-    table: superseded hot cells after maintain_ivf, plus any part-built
-    sub-cells a crashed pass left behind.  Idempotent; returns the cell
-    ids removed.  Run AFTER save_index has published the new table —
-    a reader still holding the old table loses its probe targets once
-    this runs (same reader contract as the reference's renew rebuild)."""
+def vacuum_ivf(index: SearchIndex) -> list[int]:
+    """Reclaim the partition dirs in ``index``'s directory that the
+    version committed there does not reference: superseded hot cells
+    after maintain_ivf, plus any part-built sub-cells a crashed pass left
+    behind.  Reads the committed table, not the handle's, so a stale
+    handle cannot delete live cells.  Idempotent; returns the cell ids
+    removed.  A reader still holding an older version loses its probe
+    targets once this runs (same reader contract as the reference's
+    renew rebuild)."""
     import shutil
 
-    live = set(_centroid_matrix(centroids)[0].tolist())
+    live = {cid for cid, _ in _committed(index.path)["cells"]}
     removed = []
-    for cid, d in _cell_dirs(index_path).items():
+    for cid, d in _cell_dirs(index.path).items():
         if cid not in live:
             shutil.rmtree(d, ignore_errors=True)
             removed.append(cid)

@@ -627,7 +627,7 @@ def q35_ann_ivf_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     idx = _ivf_index_cached(spark, sf_dir, nlist=8)
     qs = _queries_df(spark, sf_dir)
-    return ivf.search_ivf(idx.vectors, qs, idx.centroids, k=4, nprobe=8, metric=idx.metric)
+    return ivf.search_ivf(idx, qs, k=4, nprobe=8)
 
 
 @register(
@@ -718,7 +718,7 @@ def q150_ann_ivf_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     idx = _ivf_index_cached(spark, sf_dir, nlist=10, flavor="labelmean")
     qs = _queries_df(spark, sf_dir)
-    return ivf.search_ivf(idx.vectors, qs, idx.centroids, k=5, nprobe=5, metric=idx.metric)
+    return ivf.search_ivf(idx, qs, k=5, nprobe=5)
 
 
 @register(
@@ -1005,10 +1005,7 @@ def q86_ivf_pq_search(spark, sf_dir):
     k = 4
     # cover-all overfetch: ceil(n/k) keeps every candidate through the ADC
     # cut (bounded driver scalar, like the PQ training sample)
-    return ivf.search_ivf_pq(
-        idx.vectors, queries, idx.centroids, codebook, k=k, nprobe=8,
-        overfetch=-(-n // k), metric=idx.metric,
-    )
+    return ivf.search_ivf_pq(idx, queries, codebook, k=k, nprobe=8, overfetch=-(-n // k))
 
 
 def _quantized_emb(spark, sf_dir):
@@ -1169,10 +1166,7 @@ def q151_ivf_pq_ann(spark, sf_dir):
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
     )
     idx, codebook = _quantized_pq_index_cached(spark, sf_dir)
-    return ivf.search_ivf_pq(
-        idx.vectors, queries, idx.centroids, codebook, k=4, nprobe=5, overfetch=8,
-        metric=idx.metric,
-    )
+    return ivf.search_ivf_pq(idx, queries, codebook, k=4, nprobe=5, overfetch=8)
 
 
 @register(
@@ -1576,8 +1570,8 @@ def _maintained_ivf_cached(spark: SparkSession, sf_dir: str):
     reproducible ingest stream), nlist=4 build, appends through the
     production assign path, then a maintain_ivf pass with an aggressive
     threshold (every above-average cell splits — deterministic under the
-    fixed KMeans seed), the save_index commit, then vacuum.  Cached per
-    fixture content by tables.build_once; returns the index opened."""
+    fixed KMeans seed), which commits the new cells, then vacuum.  Cached
+    per fixture content by tables.build_once; returns the index opened."""
     from coldata_spark.operators import ivf
 
     def build(root):
@@ -1585,21 +1579,20 @@ def _maintained_ivf_cached(spark: SparkSession, sf_dir: str):
         emb = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
         assigned, centroids = ivf.build_ivf(emb, nlist=4)
         ivf.write_ivf(assigned, path)
+        ivf.save_index(path, assigned, centroids, "COSINE")
+        idx = ivf.open_index(spark, path)
         seed_slice = emb.filter(F.col("vec_id") < 200)
         for i in range(1, 4):
             batch = seed_slice.select(
                 (F.col("vec_id") + 1_000_000 * i).alias("vec_id"), "embedding"
             )
-            ivf.append_to_index(batch, centroids, path)
-        centroids, _report = ivf.maintain_ivf(
-            spark,
-            path,
-            centroids,
+            idx = ivf.append_to_index(idx, batch)
+        idx, _report = ivf.maintain_ivf(
+            idx,
             max_cell_ratio=1.0,  # every above-average cell splits: the pass
             min_cell_rows=1,  # always exercises a real split at any sf
         )
-        ivf.save_index(path, assigned, centroids, "COSINE")
-        ivf.vacuum_ivf(spark, path, centroids)
+        ivf.vacuum_ivf(idx)
 
     root = build_once("maintained-v3", build, sf_dir)
     return ivf.open_index(spark, os.path.join(root, "index"))
@@ -1653,6 +1646,4 @@ def q173_ivf_maintained_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     idx = _maintained_ivf_cached(spark, sf_dir)
     qs = _queries_df(spark, sf_dir)
-    return ivf.search_ivf(
-        idx.vectors, qs, idx.centroids, k=4, nprobe=idx.nlist, metric=idx.metric
-    )
+    return ivf.search_ivf(idx, qs, k=4, nprobe=idx.nlist)

@@ -19,8 +19,7 @@ runs only the ANN probe in Milvus and the rest in process over at most k
 hits per query (make_results, vdb.py:101-122):
   1. the queries are embedded on the driver into a local relation
      (embed.embed_queries) and read back with no Spark job;
-  2. scoring job: ivf._score_slices, the loop search_ivf's collect side
-     runs too, probes the batch's cells in numpy by the placement rule
+  2. scoring job: ivf._score_slices, the loop search_ivf runs too, probes the batch's cells in numpy by the placement rule
      and scans the index through the scan ivf.open_index holds (no
      inference or listing job), only in the probed cells (a static
      ``centroid_id IN (...)`` partition filter) with the in-cell Arrow
@@ -143,10 +142,7 @@ def search(
     # an empty store's index has no cells and no files to scan
     if q_ids and index.nlist:
         Q = np.asarray([r.q_vec for r in qrows], dtype=np.float64)
-        for frame in ivf._score_slices(
-            index.vectors, q_ids, Q, q_type, index.centroids, nprobe, k * OVERFETCH,
-            index.metric,
-        ):
+        for frame in ivf._score_slices(index, q_ids, Q, q_type, nprobe, k * OVERFETCH):
             pdf = frame.toPandas()
             hits += zip(pdf["q_id"].tolist(), pdf["vec_id"].tolist(),
                         pdf["score"].tolist())

@@ -3,22 +3,27 @@
 scheduler's periodic re-crawl) re-expressed as Structured Streaming.
 
 New embedding batches land as parquet files; a file-source stream picks up
-exactly the new files each trigger and appends them into the partitioned
-IVF index via the incremental assign+append path (operators/ivf.py
-append_to_index).  Checkpointing makes ingest exactly-once across restarts:
-a replayed batch re-appends only if the batch never committed, matching the
+exactly the new files each trigger and appends them into an opened IVF
+index (operators/ivf.py SearchIndex), placed in its fixed cells by its
+metric.  Checkpointing makes ingest exactly-once across restarts: a
+replayed batch re-appends only if the batch never committed, matching the
 reference's insert-if-absent semantics at the file granularity.
 
-Scale notes: each micro-batch is one broadcast join (tiny centroid table)
-plus a partition-append write — no shuffle of the index itself, no rebuild.
-Cells drift only if the data distribution does; build_ivf refits then (the
-standard IVF maintenance trade, documented at ivf.py:102-113).
+Scale notes: each micro-batch is one shuffle-free placement map
+(ivf.assign_to_centroids scores each Arrow batch against the collected
+centroid matrix) plus a partition-append write — no shuffle of the index
+itself, no rebuild.  Cells drift only if the data distribution does;
+ivf.maintain_ivf splits the skewed ones then (the comment block above
+ivf.audit_ivf_cells), or build_ivf refits.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+
+from coldata_spark.operators import ivf
+from coldata_spark.operators.ivf import SearchIndex
 
 EMBEDDINGS_SCHEMA = T.StructType(
     [
@@ -42,73 +47,57 @@ def read_vectors_stream(
 
 
 def append_batch_idempotent(
-    batch_df: DataFrame,
-    centroids: DataFrame,
-    index_path: str,
-    batch_id: int,
-    vec_col: str = "embedding",
-    metric: str = "COSINE",
-) -> None:
+    batch_df: DataFrame, index: SearchIndex, batch_id: int
+) -> SearchIndex:
     """Exactly-once incremental index append under foreachBatch's
     at-least-once contract.  A bare ``mode("append")`` parquet write
     duplicates the batch when a crash lands between the write and the
-    checkpoint commit; here the assigned batch is staged (overwrite per
-    batch id = rebuildable), then its files are moved into the live
-    centroid partitions under DETERMINISTIC names
+    checkpoint commit; here the batch, placed in ``index``'s cells, is
+    staged (overwrite per batch id = rebuildable), then its files are
+    moved into the live centroid partitions under DETERMINISTIC names
     (``batch-<id>-<seq>.parquet``, ``os.replace``) — a replay regenerates
     the same names and overwrites in place instead of appending again —
-    and the applied marker finally makes replays pure no-ops.  Single
-    writer assumed (the availableNow scheduler cadence)."""
+    and the applied marker finally makes replays pure no-ops.  Returns
+    the index reopened.  Single writer assumed (the availableNow
+    scheduler cadence)."""
     import glob
     import os
     import shutil
 
-    from coldata_spark.operators.ivf import assign_to_centroids, write_ivf
     from coldata_spark.streaming import foldcommit as FC
 
-    base = index_path.rstrip("/")
-    if FC.is_applied(base, batch_id):
-        return
-    stage = f"{base}.batchstage-{batch_id}"
-    write_ivf(assign_to_centroids(batch_df, centroids, vec_col, metric), stage)
-    for part_dir in sorted(glob.glob(os.path.join(stage, "centroid_id=*"))):
-        dst_dir = os.path.join(base, os.path.basename(part_dir))
-        os.makedirs(dst_dir, exist_ok=True)
-        files = sorted(
-            f for f in os.listdir(part_dir) if f.endswith(".parquet")
-        )
-        for i, f in enumerate(files):
-            os.replace(
-                os.path.join(part_dir, f),
-                os.path.join(
-                    dst_dir, f"batch-{batch_id:05d}-{i:04d}.parquet"
-                ),
-            )
-    shutil.rmtree(stage, ignore_errors=True)
-    FC.mark_applied(base, batch_id)
+    base = index.path.rstrip("/")
+    if not FC.is_applied(base, batch_id):
+        stage = f"{base}.batchstage-{batch_id}"
+        ivf.write_ivf(ivf._placed(index, batch_df), stage)
+        for part_dir in sorted(glob.glob(os.path.join(stage, "centroid_id=*"))):
+            dst_dir = os.path.join(base, os.path.basename(part_dir))
+            os.makedirs(dst_dir, exist_ok=True)
+            files = sorted(f for f in os.listdir(part_dir) if f.endswith(".parquet"))
+            for i, f in enumerate(files):
+                os.replace(
+                    os.path.join(part_dir, f),
+                    os.path.join(dst_dir, f"batch-{batch_id:05d}-{i:04d}.parquet"),
+                )
+        shutil.rmtree(stage, ignore_errors=True)
+        FC.mark_applied(base, batch_id)
+    return ivf.open_index(batch_df.sparkSession, index.path)
 
 
 def stream_vector_ingest(
-    stream_df: DataFrame,
-    centroids: DataFrame,
-    index_path: str,
-    checkpoint: str,
-    vec_col: str = "embedding",
-    metric: str = "COSINE",
-):
-    """Continuously grow the IVF index: every micro-batch is assigned to
-    the existing centroids and appended into their parquet partitions
-    exactly once (append_batch_idempotent — a replayed batch cannot
-    duplicate vectors).  Runs with availableNow (process all new files,
-    then stop) so a scheduler can invoke it periodically exactly like the
-    reference's re-crawl loop.  Returns the finished StreamingQuery."""
+    stream_df: DataFrame, index: SearchIndex, checkpoint: str
+) -> SearchIndex:
+    """Continuously grow ``index``: every micro-batch is placed in its
+    fixed cells and appended into their parquet partitions exactly once
+    (append_batch_idempotent — a replayed batch cannot duplicate
+    vectors).  Runs with availableNow (process all new files, then stop)
+    so a scheduler can invoke it periodically exactly like the
+    reference's re-crawl loop.  Returns the index reopened after the
+    run."""
 
     def ingest(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        append_batch_idempotent(
-            batch_df, centroids, index_path, batch_id, vec_col, metric
-        )
+        if not batch_df.isEmpty():
+            append_batch_idempotent(batch_df, index, batch_id)
 
     q = (
         stream_df.writeStream.foreachBatch(ingest)
@@ -117,4 +106,4 @@ def stream_vector_ingest(
         .start()
     )
     q.awaitTermination()
-    return q
+    return ivf.open_index(stream_df.sparkSession, index.path)

@@ -241,8 +241,8 @@ def local_frame(spark: SparkSession, columns: dict, schema) -> DataFrame:
     ``createDataFrame(list)`` plans an RDD scan that a Python worker
     deserializes on every read, and the optimizer has no size for it.
     Going through Arrow puts the rows in the plan itself: scanning it
-    starts no Python worker, and its size estimate is exact, so search_ivf's
-    one-slice test (``ivf.COLLECT_PROBE_MAX_BYTES``) sees the real bytes.
+    starts no Python worker, and its size estimate is exact, so the
+    optimizer's join choices see the real bytes.
     A pyarrow Table rather than pandas, because ``createDataFrame`` falls
     back to the RDD path for an empty pandas frame; an empty table stays
     local.  ``columns`` maps column name to values, in the order of

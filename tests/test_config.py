@@ -52,12 +52,6 @@ def test_vdb_chunk_model_scheduler_mapping():
     assert app.vdb.nlist == 128 and app.vdb.nprobe == 128
     assert app.vdb.metric_type == "COSINE" and app.vdb.limit == 4
     assert app.vdb.batch_size == 128 and app.vdb.renew is True
-    assert app.ivf_build_kwargs() == {"nlist": 128}
-    assert app.ivf_search_kwargs() == {
-        "nprobe": 128,
-        "k": 4,
-        "metric": "COSINE",
-    }
     # chunk 128 / overlap 64 == the repo's CHUNK_SIZE / CHUNK_STRIDE
     from coldata_spark.functions import text as TX
 
@@ -82,16 +76,17 @@ def test_store_env_switch():
 
 def test_config_drives_real_components(spark):
     """The mapped knobs must be directly usable: scheduler period
-    validates, chunk kwargs produce the chunk grid, IVF kwargs match
-    build/search signatures."""
+    validates, chunk kwargs produce the chunk grid, and the vdb knobs
+    runner.run_once reads name parameters of search.build_index and
+    search.search."""
     import inspect
     from datetime import datetime
 
     from pyspark.sql import functions as F
 
     from coldata_spark import scheduler as SCH
+    from coldata_spark import search as S
     from coldata_spark.functions import text as TX
-    from coldata_spark.operators import ivf as IVF
 
     app = CF.load(FIXTURE)
     nxt = SCH.next_run(datetime(2026, 1, 1), app.scheduler.period)
@@ -105,12 +100,8 @@ def test_config_drives_real_components(spark):
     )
     assert n == 4  # ceil((300 - 128) / 64) + 1
 
-    assert set(app.ivf_build_kwargs()) <= set(
-        inspect.signature(IVF.build_ivf).parameters
-    )
-    assert set(app.ivf_search_kwargs()) <= set(
-        inspect.signature(IVF.search_ivf).parameters
-    )
+    assert {"nlist", "metric"} <= set(inspect.signature(S.build_index).parameters)
+    assert {"k", "nprobe"} <= set(inspect.signature(S.search).parameters)
 
 
 def test_empty_and_partial_configs_fall_back_to_defaults(tmp_path):

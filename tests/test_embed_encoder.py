@@ -100,8 +100,7 @@ def test_query_and_doc_paths_share_encoder(spark):
 
 def test_embed_queries_contract(spark):
     """V2 embeds on the driver: one encoder per call, and the result is a
-    local relation whose exact size estimate fits search_ivf's collect
-    side."""
+    local relation whose exact size estimate fits one IVF scoring slice."""
     from coldata_spark.operators import ivf
     from coldata_spark.operators.joins import _estimated_bytes
 

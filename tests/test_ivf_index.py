@@ -22,12 +22,17 @@ def _queries(emb, n=8):
     )
 
 
+def committed(path, assigned, centroids, metric="COSINE"):
+    """``assigned`` written, saved and opened at ``path``: the handle every
+    operation on a built index takes."""
+    ivf.write_ivf(assigned, path)
+    ivf.save_index(path, assigned, centroids, metric)
+    return ivf.open_index(assigned.sparkSession, path)
+
+
 def _exhaustive(idx, qs, k=4):
     """Every cell probed: the rows of exact search over the live cells."""
-    out = ivf.search_ivf(
-        idx.vectors, qs, idx.centroids, k=k, nprobe=idx.nlist, metric=idx.metric
-    )
-    return sorted(map(tuple, out.collect()))
+    return sorted(map(tuple, ivf.search_ivf(idx, qs, k=k, nprobe=idx.nlist).collect()))
 
 
 @pytest.fixture
@@ -65,20 +70,22 @@ def test_open_index_round_trips_the_saved_index(spark, half_index):
 
 def test_open_index_is_a_snapshot(spark, half_index):
     """A handle holds the file listing of the version it opened: vectors
-    appended after the open are not searched through it, and a fresh
-    open_index sees them."""
+    appended after the open are not searched through it.  The handle
+    append_to_index returns, and a fresh open_index, see them."""
     path, _, _, emb = half_index
     idx = ivf.open_index(spark, path)
     qs = _queries(emb)
+    odd_selves = {(q, q) for q in range(1, 8, 2)}
     before = _exhaustive(idx, qs)
-    ivf.append_to_index(emb.filter(F.col("vec_id") % 2 == 1), idx.centroids, path)
+    assert not {(r[0], r[1]) for r in before} & odd_selves
+    grown = ivf.append_to_index(idx, emb.filter(F.col("vec_id") % 2 == 1))
     assert _exhaustive(idx, qs) == before
     assert idx.vectors.count() == emb.count() // 2
+    # the odd queries now find their own vectors through the returned handle
+    assert grown.vectors.count() == emb.count()
+    assert {(r[0], r[1]) for r in _exhaustive(grown, qs)} >= odd_selves
     fresh = ivf.open_index(spark, path)
-    assert fresh.vectors.count() == emb.count()
-    # the odd queries now find their own vectors
-    found = {(r[0], r[1]) for r in _exhaustive(fresh, qs)}
-    assert found >= {(q, q) for q in range(1, 8, 2)}
+    assert _exhaustive(fresh, qs) == _exhaustive(grown, qs)
 
 
 def test_open_index_without_metadata_names_the_path(spark, half_index):
@@ -115,63 +122,73 @@ def test_renew_interrupted_before_save_leaves_no_index(
 def skewed_index(spark, half_index):
     """half_index with a copy of cell 0's vectors appended under fresh
     ids, opened; its queries and their exhaustive rows."""
-    path, assigned, centroids, emb = half_index
+    path, assigned, _, emb = half_index
     hot = assigned.filter(F.col("centroid_id") == 0).select(
         (F.col("vec_id") + 1_000_000).alias("vec_id"), "embedding"
     )
-    ivf.append_to_index(hot, centroids, path)
-    old = ivf.open_index(spark, path)
+    old = ivf.append_to_index(ivf.open_index(spark, path), hot)
     qs = _queries(emb)
-    return path, assigned, old, qs, _exhaustive(old, qs)
+    return path, old, qs, _exhaustive(old, qs)
 
 
-def _maintenance_pass(spark, path, assigned, old, crash: bool):
-    """maintain -> save -> vacuum; with crash, stop before the save."""
-    new_centroids, report = ivf.maintain_ivf(
-        spark, path, old.centroids, max_cell_ratio=1.0, min_cell_rows=1
-    )
-    assert report["splits"]
-    if crash:
+def _maintenance_pass(old, monkeypatch, crash: bool):
+    """A splitting maintain_ivf pass over ``old``: (new version, report).
+    With crash, its save_index raises, after the pass wrote its cells."""
+
+    def crashed(*a, **kw):
         raise RuntimeError("crashed before save")
-    ivf.save_index(path, assigned, new_centroids, old.metric)
-    ivf.vacuum_ivf(spark, path, new_centroids)
+
+    with monkeypatch.context() as m:
+        if crash:
+            m.setattr(ivf, "save_index", crashed)
+        new, report = ivf.maintain_ivf(old, max_cell_ratio=1.0, min_cell_rows=1)
+    assert report["splits"]
+    return new, report
 
 
 def _cells(idx):
     return sorted((r.centroid_id, list(r.cvec)) for r in idx.centroids.collect())
 
 
-def test_maintenance_crash_before_save_keeps_the_old_index(spark, skewed_index):
-    """maintain_ivf writes its cells under fresh ids and save_index
-    publishes them.  A pass that stops in between leaves the committed
+def test_maintenance_crash_before_save_keeps_the_old_index(
+    spark, skewed_index, monkeypatch
+):
+    """maintain_ivf writes its cells under fresh ids, then commits them
+    with save_index.  A pass that stops in between leaves the committed
     index as it was: open_index returns the pre-maintenance handle and
-    its exhaustive search the pre-maintenance rows.  Vacuum against the
-    committed centroids clears the pass's residue, and a completed pass
-    (maintain -> save -> vacuum) answers the same rows from its cells."""
-    path, assigned, old, qs, before = skewed_index
+    its exhaustive search the pre-maintenance rows.  Vacuum clears the
+    pass's residue, and a completed pass answers the same rows from its
+    cells.  Vacuum through the stale pre-maintenance handle reclaims only
+    the cells the committed version no longer lists."""
+    path, old, qs, before = skewed_index
     with pytest.raises(RuntimeError, match="crashed before save"):
-        _maintenance_pass(spark, path, assigned, old, crash=True)
+        _maintenance_pass(old, monkeypatch, crash=True)
     reopened = ivf.open_index(spark, path)
     assert reopened.nlist == old.nlist
     assert _cells(reopened) == _cells(old)
     assert _exhaustive(reopened, qs) == before
-    assert ivf.vacuum_ivf(spark, path, reopened.centroids)  # the residue
+    assert ivf.vacuum_ivf(reopened)  # the residue
 
-    _maintenance_pass(spark, path, assigned, old, crash=False)
-    maintained = ivf.open_index(spark, path)
+    maintained, report = _maintenance_pass(old, monkeypatch, crash=False)
     assert _cells(maintained) != _cells(old)
+    assert _cells(ivf.open_index(spark, path)) == _cells(maintained)
     assert _exhaustive(maintained, qs) == before
+    superseded = set(report["splits"]) | set(report["renamed"])
+    assert set(ivf.vacuum_ivf(old)) == superseded
+    assert _exhaustive(ivf.open_index(spark, path), qs) == before
 
 
-def test_maintenance_rerun_after_crash_writes_each_vector_once(spark, skewed_index):
+def test_maintenance_rerun_after_crash_writes_each_vector_once(
+    spark, skewed_index, monkeypatch
+):
     """A pass re-run over a crashed pass's residue, with no vacuum in
     between, numbers its cells above the residue's: the committed index
     holds every vector once and answers the pre-maintenance rows."""
-    path, assigned, old, qs, before = skewed_index
+    path, old, qs, before = skewed_index
     vectors = old.vectors.count()
     with pytest.raises(RuntimeError, match="crashed before save"):
-        _maintenance_pass(spark, path, assigned, old, crash=True)
-    _maintenance_pass(spark, path, assigned, old, crash=False)
+        _maintenance_pass(old, monkeypatch, crash=True)
+    ivf.vacuum_ivf(_maintenance_pass(old, monkeypatch, crash=False)[0])
     maintained = ivf.open_index(spark, path)
     dupes = maintained.vectors.groupBy("vec_id").count().filter("count > 1")
     assert dupes.count() == 0

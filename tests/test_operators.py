@@ -11,6 +11,7 @@ from coldata_spark import embed as E
 from coldata_spark.operators import ivf, upsert
 from coldata_spark.operators.similarity import knn_join
 from coldata_spark.tables import load
+from tests.test_ivf_index import committed
 
 
 def test_hash_embed_deterministic_and_normalized():
@@ -95,21 +96,19 @@ def test_ivf_build_search_recall(spark, sf_dir, tmp_path):
     emb = load(spark, sf_dir, "embeddings")
     assigned, centroids = ivf.build_ivf(emb, nlist=8)
     assert assigned.select("centroid_id").distinct().count() <= 8
-    path = str(tmp_path / "ivf_index")
-    ivf.write_ivf(assigned, path)
+    index = committed(str(tmp_path / "ivf_index"), assigned, centroids)
 
     qs = emb.filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
     )
     exact = ivf.search_exact(qs, emb, k=4).collect()
     # full probe == exact search (the reference's nprobe == nlist config)
-    index = spark.read.parquet(path)
-    full = ivf.search_ivf(index, qs, centroids, k=4, nprobe=8).collect()
+    full = ivf.search_ivf(index, qs, k=4, nprobe=8).collect()
     exact_set = {(r.q_id, r.vec_id) for r in exact}
     full_set = {(r.q_id, r.vec_id) for r in full}
     assert exact_set == full_set
     # pruned probe: recall against exact must be reasonable on clustered data
-    pruned = ivf.search_ivf(index, qs, centroids, k=4, nprobe=2).collect()
+    pruned = ivf.search_ivf(index, qs, k=4, nprobe=2).collect()
     pruned_set = {(r.q_id, r.vec_id) for r in pruned}
     recall = len(pruned_set & exact_set) / len(exact_set)
     assert recall >= 0.5, f"nprobe=2 recall {recall}"
@@ -163,32 +162,28 @@ def test_stream_source_throttling(spark, sf_dir, tmp_path):
 
 def _half_appended_ivf(spark, sf_dir, tmp_path):
     """Index built on the even vec_ids, grown by appending the odd ones:
-    (path, centroids, first half's row count, second half)."""
+    (the grown index, first half's row count, second half)."""
     emb = load(spark, sf_dir, "embeddings")
     first = emb.filter(F.col("vec_id") % 2 == 0)
     second = emb.filter(F.col("vec_id") % 2 == 1)
     assigned, centroids = ivf.build_ivf(first, nlist=4)
-    path = str(tmp_path / "inc_index")
-    ivf.write_ivf(assigned, path)
-    n1 = spark.read.parquet(path).count()
-    ivf.append_to_index(second, centroids, path)
-    return path, centroids, n1, second
+    half = committed(str(tmp_path / "inc_index"), assigned, centroids)
+    return ivf.append_to_index(half, second), half.vectors.count(), second
 
 
 def test_ivf_incremental_append(spark, sf_dir, tmp_path):
     """Index built on half the corpus, grown by append: searches must find
     appended vectors.  (That appended rows sit in the cells the build's
     rule picks is test_ivf_rows_sit_in_their_nearest_cell's "append".)"""
-    path, centroids, n1, second = _half_appended_ivf(spark, sf_dir, tmp_path)
-    total = spark.read.parquet(path)
-    assert total.count() == n1 + second.count()
+    total, n1, second = _half_appended_ivf(spark, sf_dir, tmp_path)
+    assert total.vectors.count() == n1 + second.count()
 
     # a query equal to an APPENDED vector must surface it at rank 1
     target = second.orderBy("vec_id").first()
     qs = spark.createDataFrame(
         [(0, target.embedding)], ["q_id", "q_vec"]
     )
-    hits = ivf.search_ivf(total, qs, centroids, k=1, nprobe=4).collect()
+    hits = ivf.search_ivf(total, qs, k=1, nprobe=4).collect()
     assert hits and hits[0].vec_id == target.vec_id
     assert hits[0].score == 1.0
 
@@ -290,12 +285,12 @@ def test_crawl_all_sources_dedups_across_sources(spark):
     assert run(["UCI", "AWS"], caps={"UCI": 2}) == "AWS"
 
 
-def test_knn_zero_vector_scores_zero_not_nan(spark, tmp_path, monkeypatch):
+def test_knn_zero_vector_scores_zero_not_nan(spark, tmp_path):
     """Round-4 review fix: an all-zero embedding under COSINE must score
     ~0 on BOTH engines — previously NaN silently dropped the query's
     candidates in the arrow path and ranked zero vectors FIRST in expr.
-    search_ivf's collect and join sides over a 2-cell index of the same
-    vectors must agree (its Arrow side once scored these NaN)."""
+    search_ivf over a 2-cell index of the same vectors must agree (its
+    Arrow side once scored these NaN)."""
     import math
 
     from coldata_spark.operators import ivf
@@ -312,21 +307,15 @@ def test_knn_zero_vector_scores_zero_not_nan(spark, tmp_path, monkeypatch):
     centroids = spark.createDataFrame(
         [(0, [1.0, 0.0]), (1, [0.0, 1.0])], "centroid_id int, cvec array<double>"
     )
-    path = str(tmp_path / "zero_ivf")
-    ivf.write_ivf(ivf.assign_to_centroids(vecs, centroids), path)
-
-    def ivf_side(max_bytes):
-        monkeypatch.setattr(ivf, "COLLECT_PROBE_MAX_BYTES", max_bytes)
-        index = spark.read.parquet(path)
-        return ivf.search_ivf(index, qs, centroids, k=3, nprobe=2).collect()
-
+    index = committed(
+        str(tmp_path / "zero_ivf"), ivf.assign_to_centroids(vecs, centroids), centroids
+    )
     runs = {
         strategy: knn_join(qs, vecs, k=3, metric="COSINE", strategy=strategy)
         .collect()
         for strategy in ("arrow", "expr")
     }
-    runs["ivf collect"] = ivf_side(math.inf)
-    runs["ivf join"] = ivf_side(-1)
+    runs["ivf"] = ivf.search_ivf(index, qs, k=3, nprobe=2).collect()
     for strategy, rows in runs.items():
         assert all(math.isfinite(r.score) for r in rows), f"{strategy}: {rows}"
         by_q = {}
@@ -408,16 +397,14 @@ def test_assign_to_centroids_rejects_a_vector_of_another_length(spark):
 def _built_ivf(spark, sf_dir, tmp_path):
     emb = load(spark, sf_dir, "embeddings")
     assigned, centroids = ivf.build_ivf(emb, nlist=8)
-    path = str(tmp_path / "built_index")
-    ivf.write_ivf(assigned, path)
-    return path, centroids
+    return (committed(str(tmp_path / "built_index"), assigned, centroids),)
 
 
 def _split_ivf(spark, sf_dir, tmp_path):
-    path, centroids, _live = _skewed_ivf(spark, sf_dir, tmp_path)
-    new_cents, report = ivf.maintain_ivf(spark, path, centroids, max_cell_ratio=3.0)
+    index, _live = _skewed_ivf(spark, sf_dir, tmp_path)
+    maintained, report = ivf.maintain_ivf(index, max_cell_ratio=3.0)
     assert report["splits"]
-    return path, new_cents
+    return (maintained,)
 
 
 @pytest.mark.parametrize(
@@ -431,9 +418,10 @@ def test_ivf_rows_sit_in_their_nearest_cell(spark, sf_dir, tmp_path, make):
     which is the cell the probe ranks first for that vector.  (MLlib's
     Euclidean fit left 64 of 500 sf0.001 vectors outside their
     cosine-nearest of 8 cells.)"""
-    path, centroids = make(spark, sf_dir, tmp_path)[:2]
+    index = make(spark, sf_dir, tmp_path)[0]
+    centroids = index.centroids
     stored = (
-        spark.read.parquet(path)
+        index.vectors
         .join(F.broadcast(centroids.select("centroid_id")), "centroid_id", "left_semi")
         .withColumnRenamed("centroid_id", "stored")
     )
@@ -456,8 +444,7 @@ def _skewed_ivf(spark, sf_dir, tmp_path, appends=10):
     landing in one region of embedding space."""
     emb = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     assigned, centroids = ivf.build_ivf(emb, nlist=4)
-    path = str(tmp_path / "maint_index")
-    ivf.write_ivf(assigned, path)
+    index = committed(str(tmp_path / "maint_index"), assigned, centroids)
     hot_cid = (
         assigned.groupBy("centroid_id").count().orderBy(F.desc("count")).first()
     ).centroid_id
@@ -469,9 +456,9 @@ def _skewed_ivf(spark, sf_dir, tmp_path, appends=10):
         batch = hot_vecs.select(
             (F.col("vec_id") + 100_000 * i).alias("vec_id"), "embedding"
         )
-        ivf.append_to_index(batch, centroids, path)
+        index = ivf.append_to_index(index, batch)
         live = live.unionByName(batch)
-    return path, centroids, live
+    return index, live
 
 
 def test_maintain_ivf_splits_hot_cell_and_keeps_search_exact(
@@ -481,23 +468,18 @@ def test_maintain_ivf_splits_hot_cell_and_keeps_search_exact(
     splits it copy-on-write, full-probe search over the maintained index
     equals exact search (q35's operating point), and vacuum reclaims the
     superseded partitions without changing results."""
-    path, centroids, live = _skewed_ivf(spark, sf_dir, tmp_path)
-    before = {
-        r.centroid_id: r.ratio
-        for r in ivf.audit_ivf_cells(spark, path, centroids).collect()
-    }
+    index, live = _skewed_ivf(spark, sf_dir, tmp_path)
+    before = {r.centroid_id: r.ratio for r in ivf.audit_ivf_cells(index).collect()}
     assert max(before.values()) > 3.0  # the audit sees the skew
 
-    new_cents, report = ivf.maintain_ivf(
-        spark, path, centroids, max_cell_ratio=3.0
-    )
+    maintained, report = ivf.maintain_ivf(index, max_cell_ratio=3.0)
     assert report["splits"], f"no split despite ratio {max(before.values())}"
     assert report["max_ratio_after"] < report["max_ratio_before"]
 
     # invariant: every vector exactly once across LIVE cells (the old hot
     # partition still exists on disk but is unreferenced)
-    live_rows = spark.read.parquet(path).join(
-        F.broadcast(new_cents.select("centroid_id")), "centroid_id", "left_semi"
+    live_rows = maintained.vectors.join(
+        F.broadcast(maintained.centroids.select("centroid_id")), "centroid_id", "left_semi"
     )
     assert live_rows.count() == live.count()
     assert live_rows.select("vec_id").distinct().count() == live.count()
@@ -506,40 +488,34 @@ def test_maintain_ivf_splits_hot_cell_and_keeps_search_exact(
     qs = live.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
     )
-    nlist_new = new_cents.count()
     exact = {
         (r.q_id, r.vec_id)
         for r in ivf.search_exact(qs, live, k=4).collect()
     }
-    maintained = {
-        (r.q_id, r.vec_id)
-        for r in ivf.search_ivf(
-            spark.read.parquet(path), qs, new_cents, k=4, nprobe=nlist_new
-        ).collect()
-    }
-    assert maintained == exact
+
+    def full_probe(idx):
+        return {
+            (r.q_id, r.vec_id)
+            for r in ivf.search_ivf(idx, qs, k=4, nprobe=idx.nlist).collect()
+        }
+
+    assert full_probe(maintained) == exact
 
     # vacuum reclaims the superseded hot cell; results unchanged
-    removed = ivf.vacuum_ivf(spark, path, new_cents)
+    removed = ivf.vacuum_ivf(maintained)
     assert set(report["splits"]) <= set(removed)
-    after_vacuum = {
-        (r.q_id, r.vec_id)
-        for r in ivf.search_ivf(
-            spark.read.parquet(path), qs, new_cents, k=4, nprobe=nlist_new
-        ).collect()
-    }
-    assert after_vacuum == exact
+    vacuumed = ivf.open_index(spark, maintained.path)
+    assert full_probe(vacuumed) == exact
     # disk now holds exactly the live cells
-    assert spark.read.parquet(path).count() == live.count()
+    assert vacuumed.vectors.count() == live.count()
 
 
 def test_maintain_ivf_noop_on_balanced_index(spark, sf_dir, tmp_path):
     emb = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     assigned, centroids = ivf.build_ivf(emb, nlist=4)
-    path = str(tmp_path / "balanced_index")
-    ivf.write_ivf(assigned, path)
-    new_cents, report = ivf.maintain_ivf(spark, path, centroids)
-    assert report["splits"] == {} and new_cents is centroids
+    index = committed(str(tmp_path / "balanced_index"), assigned, centroids)
+    same, report = ivf.maintain_ivf(index)
+    assert report["splits"] == {} and same is index
 
 
 def test_vacuum_ivf_heals_crash_residue(spark, sf_dir, tmp_path):
@@ -552,25 +528,25 @@ def test_vacuum_ivf_heals_crash_residue(spark, sf_dir, tmp_path):
     emb = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     assigned, centroids = ivf.build_ivf(emb, nlist=4)
     path = str(tmp_path / "crash_index")
-    ivf.write_ivf(assigned, path)
-    n = spark.read.parquet(path).count()
+    index = committed(path, assigned, centroids)
+    n = index.vectors.count()
     # simulate the crash residue: a part-built sub-cell under a fresh id
     orphan = assigned.filter(F.col("centroid_id") == 0).withColumn(
         "centroid_id", F.lit(99)
     )
     orphan.write.mode("append").partitionBy("centroid_id").parquet(path)
-    assert spark.read.parquet(path).count() > n
+    assert ivf.open_index(spark, path).vectors.count() > n
 
-    removed = ivf.vacuum_ivf(spark, path, centroids)
+    removed = ivf.vacuum_ivf(index)
     assert removed == [99]
     assert not os.path.exists(os.path.join(path, "centroid_id=99"))
-    assert spark.read.parquet(path).count() == n
+    assert ivf.open_index(spark, path).vectors.count() == n
 
 
 def test_maintain_ivf_drives_from_scheduler_cadence(spark, sf_dir, tmp_path):
     """The maintain_layout scheduling pattern applied to the index: a
     scheduler cadence interleaves skewed ingest passes with maintenance
-    passes (each pass: maintain_ivf -> commit centroids -> vacuum), and
+    passes (each pass: maintain_ivf, which commits its cells, -> vacuum), and
     the max cell-size ratio stays bounded across the whole run while the
     unreferenced-partition count returns to zero after every pass."""
     from datetime import datetime, timedelta
@@ -580,14 +556,14 @@ def test_maintain_ivf_drives_from_scheduler_cadence(spark, sf_dir, tmp_path):
     emb = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     assigned, centroids = ivf.build_ivf(emb, nlist=4)
     path = str(tmp_path / "sched_index")
-    ivf.write_ivf(assigned, path)
+    index = committed(path, assigned, centroids)
     hot_cid = (
         assigned.groupBy("centroid_id").count().orderBy(F.desc("count")).first()
     ).centroid_id
     seed = assigned.filter(F.col("centroid_id") == hot_cid).select(
         "vec_id", "embedding"
     )
-    state = {"centroids": centroids, "i": 0, "ratios": []}
+    state = {"index": index, "i": 0, "ratios": []}
 
     def refresh_pass():
         # one cadence tick = ingest a skewed batch, then maintain
@@ -596,13 +572,10 @@ def test_maintain_ivf_drives_from_scheduler_cadence(spark, sf_dir, tmp_path):
             (F.col("vec_id") + 1_000_000 * state["i"]).alias("vec_id"),
             "embedding",
         )
-        ivf.append_to_index(batch, state["centroids"], path)
-        new_cents, _ = ivf.maintain_ivf(
-            spark, path, state["centroids"], max_cell_ratio=2.0, min_cell_rows=8
-        )
-        state["centroids"] = new_cents
-        ivf.vacuum_ivf(spark, path, new_cents)
-        audit = ivf.audit_ivf_cells(spark, path, new_cents).collect()
+        grown = ivf.append_to_index(state["index"], batch)
+        state["index"], _ = ivf.maintain_ivf(grown, max_cell_ratio=2.0, min_cell_rows=8)
+        ivf.vacuum_ivf(state["index"])
+        audit = ivf.audit_ivf_cells(state["index"]).collect()
         state["ratios"].append(max(r.ratio for r in audit))
 
     t = {"now": datetime(2026, 1, 1, 12, 0)}
@@ -620,7 +593,7 @@ def test_maintain_ivf_drives_from_scheduler_cadence(spark, sf_dir, tmp_path):
     # vacuum after every pass: disk partitions == live cells exactly
     import glob as g
 
-    live = {r.centroid_id for r in state["centroids"].collect()}
+    live = {r.centroid_id for r in state["index"].centroids.collect()}
     on_disk = {
         int(d.split("=")[1]) for d in map(
             lambda p: p.rsplit("/", 1)[1], g.glob(f"{path}/centroid_id=*")

@@ -11,6 +11,7 @@ from coldata_spark.functions import text as TX
 from coldata_spark.operators import ivf
 from coldata_spark.operators.similarity import group_best, knn_join
 from coldata_spark.tables import load
+from tests.test_ivf_index import committed
 
 
 def test_full_search_pipeline(spark, sf_dir, tmp_path):
@@ -37,20 +38,19 @@ def test_full_search_pipeline(spark, sf_dir, tmp_path):
 
     # 3) build IVF index (V3) and persist partitioned by centroid
     assigned, centroids = ivf.build_ivf(chunk_vecs, nlist=8)
-    path = str(tmp_path / "pipeline_index")
-    ivf.write_ivf(assigned, path)
+    index = committed(str(tmp_path / "pipeline_index"), assigned, centroids)
 
     # 4) embed queries (V2) — take words from a known doc so top-1 is known
     target = docs.orderBy("doc_id").first()
     queries = E.embed_queries(spark, [target.text]).select("q_id", "q_vec")
 
     # 5) ANN search (V4), full probe == exact
-    hits = ivf.search_ivf(spark.read.parquet(path), queries, centroids, k=8, nprobe=8)
+    hits = ivf.search_ivf(index, queries, k=8, nprobe=8)
 
     # 6) group-best per parent (A2) + join-back (J2) + project (P2)
-    best = group_best(hits.join(
-        spark.read.parquet(path).select("vec_id", "parent_id"), "vec_id"
-    ), "parent_id")
+    best = group_best(
+        hits.join(index.vectors.select("vec_id", "parent_id"), "vec_id"), "parent_id"
+    )
     results = (
         best.join(docs, best.parent_id == docs.doc_id)
         .select("q_id", "parent_id", "best_score", "source")

@@ -170,14 +170,35 @@ def _build_ivf_and_assign(spark, sf_dir, fixture):
 
 def _append_to_index(spark, sf_dir, fixture):
     from coldata_spark.operators import ivf
+    from tests.test_ivf_index import committed
 
     emb = load(spark, sf_dir, "embeddings")
     assigned, centroids = ivf.build_ivf(emb.filter(F.col("vec_id") % 2 == 0), nlist=8)
-    path = str(fixture("tmp_path") / "append_index")
-    ivf.write_ivf(assigned, path)
-    return lambda: ivf.append_to_index(
-        emb.filter(F.col("vec_id") % 2 == 1), centroids, path
-    )
+    idx = committed(str(fixture("tmp_path") / "append_index"), assigned, centroids)
+    return lambda: ivf.append_to_index(idx, emb.filter(F.col("vec_id") % 2 == 1))
+
+
+def _maintain_ivf(split: bool):
+    """A maintain_ivf pass over an nlist-4 index of the embeddings: idle,
+    or, with ``split``, over cell 0's vectors appended again under fresh
+    ids with every above-average cell split."""
+
+    def setup(spark, sf_dir, fixture):
+        from coldata_spark.operators import ivf
+        from tests.test_ivf_index import committed
+
+        emb = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+        assigned, centroids = ivf.build_ivf(emb, nlist=4)
+        idx = committed(str(fixture("tmp_path") / "maintain_index"), assigned, centroids)
+        if not split:
+            return lambda: ivf.maintain_ivf(idx)
+        hot = assigned.filter(F.col("centroid_id") == 0).select(
+            (F.col("vec_id") + 1_000_000).alias("vec_id"), "embedding"
+        )
+        idx = ivf.append_to_index(idx, hot)
+        return lambda: ivf.maintain_ivf(idx, max_cell_ratio=1.0, min_cell_rows=1)
+
+    return setup
 
 
 def _search(spark, sf_dir, fixture):
@@ -266,6 +287,15 @@ JOB_GATES = [
     # the placed rows' shuffle by cell and their partitioned write: the
     # centroids are a local relation, so placing runs no job of its own
     ("append_to_index", _append_to_index, 2),
+    # the audit's scan-and-count, its window's shuffle and the collect,
+    # over the held scan pruned to the live cells by a static partition
+    # filter.  Reading the index again by path (a schema-inference job)
+    # and a broadcast semi-join against the centroids ran 5
+    ("maintain_ivf_idle", _maintain_ivf(split=False), 3),
+    # the audit, the split cell's sample, the moved-cell collect, the
+    # rewrite's shuffle and write, and the audit of the new version: the
+    # three path reads and their semi-joins ran 18
+    ("maintain_ivf_split", _maintain_ivf(split=True), 11),
     # the in-cell scoring and the document lookup; the rest runs on the
     # driver.  The Spark-side finish (schema inference, query fetch,
     # group-best and rank stages, range sort) ran 8
@@ -329,29 +359,13 @@ def _index_vectors(spark, sf_dir, fixture):
     return seen[0]
 
 
-def _ivf_join_side(spark, sf_dir, fixture):
-    """q35's search (cached nlist-8 index, its 8-query batch) on
-    search_ivf's join side."""
-    from coldata_spark.operators import ivf
-    from coldata_spark.queries import vector_queries as VQ
-
-    idx = VQ._ivf_index_cached(spark, sf_dir, nlist=8)
-    fixture("monkeypatch").setattr(ivf, "COLLECT_PROBE_MAX_BYTES", -1)
-    return ivf.search_ivf(
-        idx.vectors, VQ._queries_df(spark, sf_dir), idx.centroids, k=4, nprobe=2
-    )
-
-
 def _ivf_pq(spark, sf_dir, fixture):
     """q86's IVF-PQ search (cached index, 5 queries) at nprobe 4."""
     from coldata_spark.operators import ivf
     from coldata_spark.queries import vector_queries as VQ
 
     idx, codebook, _ = VQ._ivf_pq_index_cached(spark, sf_dir)
-    return ivf.search_ivf_pq(
-        idx.vectors, VQ._queries_df(spark, sf_dir, n=5), idx.centroids, codebook, k=4,
-        nprobe=4,
-    )
+    return ivf.search_ivf_pq(idx, VQ._queries_df(spark, sf_dir, n=5), codebook, k=4, nprobe=4)
 
 
 # (gate, setup(spark, sf_dir, fixture) -> a frame, {node name: how many
@@ -365,17 +379,10 @@ PLAN_GATES = [
     # a vector's parent comes from its chunk id: no join, one store scan
     # (re-joining the chunks scanned the store twice)
     ("build_index_vectors", _index_vectors, {"Join": 0, "FileScan": 1}),
-    # the probe is assign_to_centroids' Arrow map, its rows carrying q_vec:
-    # the rank_top_k window and the probe's semi and equi joins.  knn_join's
-    # expr probe plus a re-join of the queries planned 4
-    # BroadcastNestedLoopJoin, 11 Window and 3 BroadcastHashJoin
-    (
-        "search_ivf_join_side",
-        _ivf_join_side,
-        {"BroadcastNestedLoopJoin": 0, "Window": 3, "BroadcastHashJoin": 2},
-    ),
-    # the same probe; the rerank's candidate and query joins remain.  The
-    # expr probe and the with_vec re-join planned 4, 13 and 5
+    # the probe is assign_to_centroids' Arrow map, its rows carrying q_vec,
+    # broadcast-semi-joined and joined to the index; the rerank's candidate
+    # and query joins remain.  knn_join's expr probe and the with_vec
+    # re-join planned 4, 13 and 5
     (
         "search_ivf_pq",
         _ivf_pq,
@@ -406,22 +413,21 @@ def _file_scans(node):
     return [s for i in range(kids.size()) for s in _file_scans(kids.apply(i))]
 
 
-def test_partition_pruning_on_ivf_index(spark, sf_dir, tmp_path, monkeypatch):
-    """search_ivf's collect side must prune the index scan to the probed
-    cells: a static centroid_id IN (...) partition filter, and fewer
-    partitions read than the index has cells."""
+def test_partition_pruning_on_ivf_index(spark, sf_dir, tmp_path):
+    """search_ivf must prune the index scan to the probed cells: a static
+    centroid_id IN (...) partition filter, and fewer partitions read than
+    the index has cells."""
     from coldata_spark.operators import ivf
+    from tests.test_ivf_index import committed
 
     nlist = 8
     emb = load(spark, sf_dir, "embeddings")
     assigned, centroids = ivf.build_ivf(emb, nlist=nlist)
-    path = str(tmp_path / "prune_index")
-    ivf.write_ivf(assigned, path)
+    idx = committed(str(tmp_path / "prune_index"), assigned, centroids)
     qs = emb.filter(F.col("vec_id") < 2).select(
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
     )
-    monkeypatch.setattr(ivf, "COLLECT_PROBE_MAX_BYTES", float("inf"))
-    out = ivf.search_ivf(spark.read.parquet(path), qs, centroids, k=4, nprobe=2)
+    out = ivf.search_ivf(idx, qs, k=4, nprobe=2)
     assert out.collect()  # the metrics below are this execution's
     (scan,) = [
         s

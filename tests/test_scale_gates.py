@@ -1,5 +1,6 @@
-"""Scale-path gates: distributed IVF probe for large query batches, and
-size gates refusing accidental O(n^2) plans (round-1 verdict items 8/9).
+"""Scale-path gates: the IVF probes' one nearest-cell rule, IVF-PQ's
+executor-side lookup tables, and size gates refusing accidental O(n^2)
+plans (round-1 verdict items 8/9).
 """
 
 from __future__ import annotations
@@ -12,15 +13,7 @@ from coldata_spark.operators import dedup as DD
 from coldata_spark.operators import ivf
 from coldata_spark.operators.similarity import knn_join
 from coldata_spark.tables import load
-
-
-@pytest.fixture(scope="module")
-def ivf_index(spark, sf_dir, tmp_path_factory):
-    emb = load(spark, sf_dir, "embeddings")
-    assigned, centroids = ivf.build_ivf(emb, nlist=8)
-    path = str(tmp_path_factory.mktemp("gate_ivf") / "index")
-    ivf.write_ivf(assigned, path)
-    return path, centroids
+from tests.test_ivf_index import committed
 
 
 def _queries(spark, sf_dir, n):
@@ -31,30 +24,7 @@ def _queries(spark, sf_dir, n):
     )
 
 
-def _force_side(monkeypatch, side):
-    """Pin search_ivf's side: collect for any query batch, or join."""
-    limit = float("inf") if side == "collect" else -1
-    monkeypatch.setattr(ivf, "COLLECT_PROBE_MAX_BYTES", limit)
-
-
-def test_join_probe_matches_collect_probe(spark, sf_dir, ivf_index, monkeypatch):
-    path, centroids = ivf_index
-    qdf = _queries(spark, sf_dir, 20).cache()
-    try:
-        rows = {}
-        for side in ("collect", "join"):
-            _force_side(monkeypatch, side)
-            out = ivf.search_ivf(spark.read.parquet(path), qdf, centroids, k=3, nprobe=2)
-            rows[side] = sorted(map(tuple, out.collect()))
-        assert rows["collect"] == rows["join"]
-        # k=3 x 20 queries, sparse cells may under-fill
-        assert 20 <= len(rows["collect"]) <= 60
-    finally:
-        qdf.unpersist()
-    _driver_probe_matches_expr_probe(spark)
-
-
-def _driver_probe_matches_expr_probe(spark):
+def test_driver_probe_matches_expr_probe(spark):
     """Both probes, the driver's numpy one (_probe_cells) and the
     distributed one (assign_to_centroids with n = nprobe), pick the cells
     knn_join's zero-Python expr engine picks, per metric.  Cell 2
@@ -125,46 +95,29 @@ def _ban_driver_fetches(monkeypatch, frame_type, message):
         monkeypatch.setattr(frame_type, name, guarded)
 
 
-def test_join_probe_never_materializes_on_driver(spark, sf_dir, ivf_index, monkeypatch):
-    """Building the join-side plan must not collect() anything: a 1e6-row
-    query batch should plan exactly like a 10-row one."""
-    path, centroids = ivf_index
-    qdf = _queries(spark, sf_dir, 50)
-
-    _force_side(monkeypatch, "join")
-    _ban_driver_fetches(
-        monkeypatch, type(qdf), "driver-side collect during join-probe planning"
-    )
-    out = ivf.search_ivf(spark.read.parquet(path), qdf, centroids, k=3, nprobe=2)
-    monkeypatch.undo()
-    assert out.count() > 0
-
-
-def test_pq_search_builds_luts_in_executor(spark, sf_dir, monkeypatch):
+def test_pq_search_builds_luts_in_executor(spark, sf_dir, tmp_path, monkeypatch):
     """search_ivf_pq no longer collects the query batch for ADC tables."""
     emb = load(spark, sf_dir, "embeddings")
-    index, centroids, codebook = ivf.build_ivf_pq(emb, nlist=8, m=8, k_codes=16)
-    index = index.cache()
-    index.count()  # materialize before banning collect
+    assigned, centroids, codebook = ivf.build_ivf_pq(emb, nlist=8, m=8, k_codes=16)
+    index = committed(str(tmp_path / "pq_index"), assigned, centroids)
     qdf = _queries(spark, sf_dir, 10).cache()
     qdf.count()
     try:
         _ban_driver_fetches(
             monkeypatch, type(qdf), "driver-side collect in search_ivf_pq"
         )
-        out = ivf.search_ivf_pq(index, qdf, centroids, codebook, k=2, nprobe=4)
+        out = ivf.search_ivf_pq(index, qdf, codebook, k=2, nprobe=4)
         n = out.count()
         monkeypatch.undo()
         assert 10 <= n <= 20  # k=2 x 10 queries, sparse cells may under-fill
         # and results match the exact searcher often enough to be sane
-        exact = ivf.search_exact(qdf, index.select("vec_id", "embedding"), k=2)
+        exact = ivf.search_exact(qdf, index.vectors.select("vec_id", "embedding"), k=2)
         got = {(r.q_id, r.vec_id) for r in out.collect()}
         want = {(r.q_id, r.vec_id) for r in exact.collect()}
         # approximate path: set-overlap recall (PQ m=8 @ nprobe 4/8 — the
         # detailed recall curve lives in test_search.py / IVF_SWEEP.md)
         assert len(got & want) / len(want) >= 0.3
     finally:
-        index.unpersist()
         qdf.unpersist()
 
 

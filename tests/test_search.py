@@ -7,6 +7,7 @@ from pyspark.sql import functions as F
 
 from coldata_spark import search as S
 from coldata_spark.tables import load
+from tests.test_ivf_index import committed
 from tests.test_plans import jobs_run
 
 
@@ -58,7 +59,7 @@ def test_streaming_ingest_feeds_index(spark, sf_dir, tmp_path):
     )
     assigned, centroids = ivf.build_ivf(emb_half, nlist=4)
     path = str(tmp_path / "stream_index")
-    ivf.write_ivf(assigned, path)
+    idx = committed(path, assigned, centroids)
 
     # the other half arrives as a stream of parquet files
     in_dir = tmp_path / "incoming"
@@ -72,7 +73,7 @@ def test_streaming_ingest_feeds_index(spark, sf_dir, tmp_path):
         vecs = E.embed_documents(batch_df).select(
             F.col("doc_id").alias("vec_id"), "embedding"
         )
-        ivf.append_to_index(vecs, centroids, path)
+        ivf.append_to_index(idx, vecs)
 
     q = (
         stream.writeStream.foreachBatch(absorb)
@@ -82,12 +83,12 @@ def test_streaming_ingest_feeds_index(spark, sf_dir, tmp_path):
     )
     q.awaitTermination()
 
-    assert spark.read.parquet(path).count() == docs.count()
+    grown = ivf.open_index(spark, path)
+    assert grown.vectors.count() == docs.count()
     # a late-arriving document is searchable
     target = rest.orderBy("doc_id").first()
     qdf = E.embed_queries(spark, [target.text]).select("q_id", "q_vec")
-    index = spark.read.parquet(path)
-    hits = ivf.search_ivf(index, qdf, centroids, k=1, nprobe=4).collect()
+    hits = ivf.search_ivf(grown, qdf, k=1, nprobe=4).collect()
     assert hits and hits[0].vec_id == target.doc_id
 
 
@@ -134,7 +135,7 @@ def test_pq_encode_compresses_and_recalls(spark, sf_dir):
     assert hit >= 6, f"PQ candidates recovered only {hit}/10 exact neighbors"
 
 
-def test_ivf_pq_end_to_end_recall(spark, sf_dir):
+def test_ivf_pq_end_to_end_recall(spark, sf_dir, tmp_path):
     """IVF-PQ with full probe + re-rank must recover most of the exact
     top-4 (PQ error is confined to candidate selection; re-rank restores
     exact scores)."""
@@ -148,11 +149,9 @@ def test_ivf_pq_end_to_end_recall(spark, sf_dir):
         .select(F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec"))
     )
     index, centroids, codebook = ivf.build_ivf_pq(emb, nlist=8, m=8, k_codes=16)
+    idx = committed(str(tmp_path / "pq"), index, centroids)
 
-    got = ivf.search_ivf_pq(
-        index, queries, centroids, codebook, k=4, nprobe=8, overfetch=8,
-        metric="COSINE",
-    )
+    got = ivf.search_ivf_pq(idx, queries, codebook, k=4, nprobe=8, overfetch=8)
     exact = knn_join(queries, emb, k=4, metric="COSINE")
 
     got_pairs = {(r["q_id"], r["vec_id"]) for r in got.collect()}
@@ -167,7 +166,7 @@ def test_ivf_pq_end_to_end_recall(spark, sf_dir):
             assert abs(got_scores[key] - r["score"]) < 1e-9
 
 
-def test_ivf_pq_mean_recall_over_100_queries(spark, sf_dir):
+def test_ivf_pq_mean_recall_over_100_queries(spark, sf_dir, tmp_path):
     """IVF-PQ's mean recall@4 over every 5th of the 500 sf0.001 vectors
     (100 queries, nprobe 8 of 8 cells, overfetch 8): five queries decide
     test_ivf_pq_end_to_end_recall by one pair, this check by 16.
@@ -183,10 +182,8 @@ def test_ivf_pq_mean_recall_over_100_queries(spark, sf_dir):
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
     )
     index, centroids, codebook = ivf.build_ivf_pq(emb, nlist=8, m=8, k_codes=16)
-    got = ivf.search_ivf_pq(
-        index, queries, centroids, codebook, k=4, nprobe=8, overfetch=8,
-        metric="COSINE",
-    )
+    idx = committed(str(tmp_path / "pq"), index, centroids)
+    got = ivf.search_ivf_pq(idx, queries, codebook, k=4, nprobe=8, overfetch=8)
     exact = knn_join(queries, emb, k=4, metric="COSINE")
     got_pairs = {(r.q_id, r.vec_id) for r in got.collect()}
     exact_pairs = {(r.q_id, r.vec_id) for r in exact.collect()}
@@ -240,10 +237,7 @@ def _composed_search(spark, idx, docs, texts, k, nprobe, id_col="doc_id",
     from coldata_spark.operators.similarity import group_best, rank_top_k
 
     qdf = E.embed_queries(spark, texts)
-    hits = ivf.search_ivf(
-        idx.vectors, qdf.select("q_id", "q_vec"), idx.centroids,
-        k=k * 4, nprobe=nprobe, metric=idx.metric,
-    )
+    hits = ivf.search_ivf(idx, qdf.select("q_id", "q_vec"), k=k * 4, nprobe=nprobe)
     parents = hits.withColumn("parent_id", F.regexp_replace("vec_id", "_[0-9]+$", ""))
     best = group_best(parents, "parent_id", metric=idx.metric)
     ranked = rank_top_k(best, k, idx.metric, score="best_score", tie="parent_id")

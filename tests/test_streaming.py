@@ -273,6 +273,7 @@ def test_stream_vector_ingest_exactly_once(spark, sf_dir, tmp_path):
     from coldata_spark.operators import ivf
     from coldata_spark.streaming import vectors as SV
     from coldata_spark.tables import load
+    from tests.test_ivf_index import committed
 
     emb = load(spark, sf_dir, "embeddings")
     base = emb.filter(F.col("vec_id") % 3 != 0)
@@ -280,8 +281,7 @@ def test_stream_vector_ingest_exactly_once(spark, sf_dir, tmp_path):
     n_base, n_late = base.count(), late.count()
 
     assigned, centroids = ivf.build_ivf(base, nlist=4)
-    index = str(tmp_path / "vec_index")
-    ivf.write_ivf(assigned, index)
+    index = committed(str(tmp_path / "vec_index"), assigned, centroids)
 
     in_dir = tmp_path / "vec_incoming"
     in_dir.mkdir()
@@ -291,31 +291,28 @@ def test_stream_vector_ingest_exactly_once(spark, sf_dir, tmp_path):
     first.write.parquet(str(in_dir / "drop0"))
 
     src = str(in_dir) + "/*"
-    SV.stream_vector_ingest(
-        SV.read_vectors_stream(spark, src), centroids, index, ckpt
-    )
-    assert spark.read.parquet(index).count() == n_base + first.count()
+
+    def ingest(idx):
+        return SV.stream_vector_ingest(SV.read_vectors_stream(spark, src), idx, ckpt)
+
+    index = ingest(index)
+    assert index.vectors.count() == n_base + first.count()
 
     # restart with no new files: exactly-once means zero re-appends
-    SV.stream_vector_ingest(
-        SV.read_vectors_stream(spark, src), centroids, index, ckpt
-    )
-    assert spark.read.parquet(index).count() == n_base + first.count()
+    index = ingest(index)
+    assert index.vectors.count() == n_base + first.count()
 
     # a new drop between runs is absorbed by the next run
     second.write.parquet(str(in_dir / "drop1"))
-    SV.stream_vector_ingest(
-        SV.read_vectors_stream(spark, src), centroids, index, ckpt
-    )
-    assert spark.read.parquet(index).count() == n_base + n_late
+    index = ingest(index)
+    assert index.vectors.count() == n_base + n_late
 
     # an appended vector is immediately searchable as its own 1-NN
     target = late.orderBy("vec_id").first()
     qdf = spark.createDataFrame(
         [(0, [float(x) for x in target.embedding])], "q_id long, q_vec array<double>"
     )
-    scan = spark.read.parquet(index)
-    hits = ivf.search_ivf(scan, qdf, centroids, k=1, nprobe=4).collect()
+    hits = ivf.search_ivf(index, qdf, k=1, nprobe=4).collect()
     assert hits and hits[0].vec_id == target.vec_id
 
 
@@ -565,31 +562,31 @@ def test_vector_append_replay_does_not_duplicate(spark, sf_dir, tmp_path):
     from coldata_spark.operators import ivf
     from coldata_spark.streaming import vectors as SV
     from coldata_spark.tables import load
+    from tests.test_ivf_index import committed
 
     emb = load(spark, sf_dir, "embeddings")
     base = emb.filter(F.col("vec_id") % 3 != 0)
     batch = emb.filter(F.col("vec_id") % 3 == 0)
     assigned, centroids = ivf.build_ivf(base, nlist=4)
-    index = str(tmp_path / "idx")
-    ivf.write_ivf(assigned, index)
-    n0 = spark.read.parquet(index).count()
+    index = committed(str(tmp_path / "idx"), assigned, centroids)
+    n0 = index.vectors.count()
 
-    SV.append_batch_idempotent(batch, centroids, index, batch_id=7)
-    n1 = spark.read.parquet(index).count()
+    grown = SV.append_batch_idempotent(batch, index, batch_id=7)
+    n1 = grown.vectors.count()
     assert n1 == n0 + batch.count()
+    assert index.vectors.count() == n0  # the input handle is its snapshot
 
     # full replay (marker present): pure no-op
-    SV.append_batch_idempotent(batch, centroids, index, batch_id=7)
-    assert spark.read.parquet(index).count() == n1
+    assert SV.append_batch_idempotent(batch, index, batch_id=7).vectors.count() == n1
 
     # crash-mid-move simulation: remove the marker and re-apply — the
     # deterministic batch-file names overwrite in place, never duplicate
-    os.remove(os.path.join(index + ".applied", "batch-7"))
-    SV.append_batch_idempotent(batch, centroids, index, batch_id=7)
-    assert spark.read.parquet(index).count() == n1
+    os.remove(os.path.join(index.path + ".applied", "batch-7"))
+    SV.append_batch_idempotent(batch, index, batch_id=7)
+    assert ivf.open_index(spark, index.path).vectors.count() == n1
     batch_files = [
         f
-        for root, _d, fs in os.walk(index)
+        for root, _d, fs in os.walk(index.path)
         for f in fs
         if f.startswith("batch-00007-")
     ]

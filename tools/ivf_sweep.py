@@ -51,13 +51,11 @@ def main() -> None:
     rows = []
     for nprobe in (1, 2, 4, 8, 16):
         # warm + timed
-        ivf.search_ivf(index.vectors, qs, index.centroids, k=K, nprobe=nprobe).count()
+        ivf.search_ivf(index, qs, k=K, nprobe=nprobe).count()
         t0 = time.perf_counter()
         got = {
             (r.q_id, r.vec_id)
-            for r in ivf.search_ivf(
-                index.vectors, qs, index.centroids, k=K, nprobe=nprobe
-            ).collect()
+            for r in ivf.search_ivf(index, qs, k=K, nprobe=nprobe).collect()
         }
         dt = time.perf_counter() - t0
         recall = len(got & exact) / len(exact)

@@ -14,7 +14,8 @@ Protocol: index on sf embeddings (nlist=8), then N skewed append batches
 (each batch = copies of one seed cell's vectors under fresh ids — the
 adversarial drift).  Two arms from identical state:
   unmaintained: append only; audit max ratio after each batch.
-  maintained:   same appends; maintain_ivf (+ vacuum) every M batches.
+  maintained:   same appends; maintain_ivf (which commits its cells)
+                then vacuum_ivf every M batches.
 Recorded per batch: max cell-size ratio, live cell count, and for the
 maintained arm the rows resharded by each pass (the bounded-work claim —
 compare against corpus size).
@@ -48,6 +49,8 @@ def run_arm(spark, emb, maintained: bool, workdir: str):
     assigned, centroids = ivf.build_ivf(emb, nlist=8)
     path = os.path.join(workdir, "maintained" if maintained else "plain")
     ivf.write_ivf(assigned, path)
+    ivf.save_index(path, assigned, centroids, "COSINE")
+    index = ivf.open_index(spark, path)
     hot_cid = (
         assigned.groupBy("centroid_id").count().orderBy(F.desc("count")).first()
     ).centroid_id
@@ -60,19 +63,17 @@ def run_arm(spark, emb, maintained: bool, workdir: str):
         batch = seed.select(
             (F.col("vec_id") + 1_000_000 * i).alias("vec_id"), "embedding"
         )
-        ivf.append_to_index(batch, centroids, path)
+        index = ivf.append_to_index(index, batch)
         corpus_n += batch.count()
         resharded = 0
         t_m = 0.0
         if maintained and i % MAINT_EVERY == 0:
             t0 = time.perf_counter()
-            centroids, report = ivf.maintain_ivf(
-                spark, path, centroids, max_cell_ratio=RATIO
-            )
-            ivf.vacuum_ivf(spark, path, centroids)
+            index, report = ivf.maintain_ivf(index, max_cell_ratio=RATIO)
+            ivf.vacuum_ivf(index)
             t_m = time.perf_counter() - t0
             resharded = report["rows_resharded"]
-        audit = ivf.audit_ivf_cells(spark, path, centroids).collect()
+        audit = ivf.audit_ivf_cells(index).collect()
         maxr = max(r.ratio for r in audit)
         rows.append(
             {
