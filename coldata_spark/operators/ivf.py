@@ -43,7 +43,7 @@ from coldata_spark.operators.similarity import (
     _fetch_queries,
     _knn_scored_arrow,
     _score_matrix,
-    knn_join,
+    knn_join,  # noqa: F401  kept as ivf.knn_join: perfbench's search spans patch it
     rank_top_k,
 )
 
@@ -215,18 +215,16 @@ def assign_to_centroids(
     centroids: DataFrame,
     vec_col: str = "embedding",
     metric: str = "COSINE",
-    n: int = 1,
 ) -> DataFrame:
-    """Each vector's ``n`` nearest FIXED cells (placement: 1; the probe:
-    nprobe), one output row per cell and none for ``n <= 0``: one
-    shuffle-free mapInArrow map that scores each Arrow batch against the
-    collected centroid matrix by ``_nearest``, the driver probe's rule,
-    so ties go to the lowest centroid_id.  No join, no window, no
-    synthetic row ids: a stage retry recomputes a row's cells exactly.
+    """Each vector's nearest FIXED cell: one shuffle-free mapInArrow map
+    that scores each Arrow batch against the collected centroid matrix by
+    ``_nearest``, the driver probe's rule, so ties go to the lowest
+    centroid_id.  No join, no window, no synthetic row ids: a stage retry
+    recomputes a row's cell exactly.
 
     Input columns pass through; ``centroid_id`` (int) replaces an
     existing column of that name or is appended.  A null vector, or one
-    with a null element, has no score and goes to the lowest centroid_ids;
+    with a null element, has no score and goes to the lowest centroid_id;
     a vector whose length differs from the centroids' raises ValueError.
     With no centroids every row's centroid_id is null."""
     import numpy as np
@@ -252,15 +250,12 @@ def assign_to_centroids(
                     f"the centroids {dim}"
                 )
             # null rows and null elements read as NaN: all the row's scores
-            # are NaN, a tie, so the lowest centroid_ids win
+            # are NaN, a tie, so the lowest centroid_id wins
             X = np.full((batch.num_rows, dim), np.nan)
             flat = pc.cast(vec.flatten(), pa.float64()).to_numpy(zero_copy_only=False)
             X[vec.is_valid().to_numpy(zero_copy_only=False)] = flat.reshape(-1, dim)
-            best = _nearest(X, C, cids, n, metric)
-            if best.shape[1] != 1:  # one output row per (row, cell)
-                batch = batch.take(np.repeat(np.arange(batch.num_rows), best.shape[1]))
             cols = batch.columns
-            cols[at : at + 1] = [pa.array(best.ravel(), pa.int32())]
+            cols[at : at + 1] = [pa.array(_nearest(X, C, cids, 1, metric)[:, 0], pa.int32())]
             yield pa.RecordBatch.from_arrays(cols, names=schema.names)
 
     return vectors.mapInArrow(place, schema)
@@ -323,20 +318,22 @@ def search_ivf(index: SearchIndex, queries: DataFrame, k: int = 4, nprobe: int =
     before the per-query top-k."""
     q_ids, Q = _fetch_queries(queries, "q_id", "q_vec")
     q_type = queries.schema["q_id"].dataType
+    cells = _probe_cells(q_ids, Q, index.centroids, nprobe, index.metric)
     # nothing probed: the empty scoring frame keeps the result schema
-    frames = _score_slices(index, q_ids, Q, q_type, nprobe, k) or [
+    frames = _score_slices(index, q_ids, Q, q_type, cells, k) or [
         _score_cells(index, q_ids, Q, q_type, {}, k)
     ]
     return rank_top_k(reduce(DataFrame.union, frames), k, index.metric)
 
 
-def _score_slices(index: SearchIndex, q_ids, Q, q_type, nprobe, k) -> list:
+def _score_slices(index: SearchIndex, q_ids, Q, q_type, cells, k, codebook=None) -> list:
     """The driver-held batch (``q_ids``, matrix ``Q``, id type ``q_type``)
-    probed by ``_probe_cells`` and scored in its cells of ``index``: one
-    (q_id, vec_id, score) frame per slice of at most
-    ``COLLECT_PROBE_MAX_BYTES`` of ``Q`` (one query at least).  A slice
-    that probes no cell has no frame, so it runs no job."""
-    cells = _probe_cells(q_ids, Q, index.centroids, nprobe, index.metric)
+    scored in its ``cells`` of ``index`` ({query id: cell ids}, as
+    ``_probe_cells`` probes them): one (q_id, vec_id, score) frame per
+    slice of at most ``COLLECT_PROBE_MAX_BYTES`` of ``Q`` (one query at
+    least), scored exactly or, given a PQ ``codebook``, by ADC
+    (``_score_cells``).  A slice that probes no cell has no frame, so it
+    runs no job."""
     row = Q.itemsize * Q.shape[1]
     fits = Q.nbytes <= COLLECT_PROBE_MAX_BYTES  # so an inf limit is one slice
     step = max(1, len(Q) if fits else int(COLLECT_PROBE_MAX_BYTES // row))
@@ -345,42 +342,41 @@ def _score_slices(index: SearchIndex, q_ids, Q, q_type, nprobe, k) -> list:
         ids = q_ids[lo : lo + step]
         part = {q: cells[q] for q in ids}
         if any(part.values()):
-            frames.append(_score_cells(index, ids, Q[lo : lo + step], q_type, part, k))
+            frames.append(
+                _score_cells(index, ids, Q[lo : lo + step], q_type, part, k, codebook)
+            )
     return frames
 
 
-def _score_cells(index: SearchIndex, q_ids, Q, q_type, cells, k) -> DataFrame:
+def _score_cells(index: SearchIndex, q_ids, Q, q_type, cells, k, codebook=None) -> DataFrame:
     """One slice's scoring: the driver-held batch against only the
     probed cells of ``index`` (a static ``centroid_id IN (...)`` filter
     on its scan), each query masked to its own ``cells`` in knn_join's
-    Arrow kernel.  Returns (q_id, vec_id, score) with the score rounded
-    to 6 decimals in Spark (HALF_UP), before the global per-query top-k:
-    the kernel keeps a partial top-k per batch."""
+    Arrow kernel, which keeps a partial top-k per batch.  Returns (q_id,
+    vec_id, score), before the global per-query top-k: the exact score
+    rounded to 6 decimals in Spark (HALF_UP), or, given a PQ
+    ``codebook``, the raw ADC score of the ``pq_codes`` column
+    (``_adc_scorer``), whose scan never reads ``embedding``."""
     probed = sorted(set().union(*cells.values()))
+    adc = codebook is not None
     scored = _knn_scored_arrow(
         q_ids, Q, q_type, index.vectors.filter(F.col("centroid_id").isin(probed)),
-        k, index.metric, "q_id", "vec_id", "embedding",
-        score_decimals=6, exclude_self=False, cells=cells,
+        k, index.metric, "q_id", "vec_id", "pq_codes" if adc else "embedding",
+        score_decimals=None if adc else 6, exclude_self=False, cells=cells,
+        scorer=_adc_scorer(codebook, Q, index.metric) if adc else None,
     )
-    return scored.withColumn("score", F.round(F.col("score"), 6))
+    return scored if adc else scored.withColumn("score", F.round(F.col("score"), 6))
 
 
 def _probe_cells(q_ids, Q, centroids, nprobe, metric) -> dict:
-    """{query id: its nprobe best centroid ids}, on the driver: ``Q``
-    against the collected centroid table by ``_nearest``, the rule
-    assign_to_centroids places vectors by, so it returns the cells that
-    assign_to_centroids(..., n=nprobe) gives the query rows."""
+    """{query id: its nprobe best centroid ids, best first}, on the
+    driver: ``Q`` against the collected centroid table by ``_nearest``,
+    the rule assign_to_centroids places vectors by, so a query's first
+    cell is the one assign_to_centroids places its vector in."""
     cids, C = _centroid_matrix(centroids)
     if not len(cids) or not q_ids:
         return {q: [] for q in q_ids}
     return dict(zip(q_ids, _nearest(Q, C, cids, nprobe, metric).tolist()))
-
-
-def search_exact(
-    queries: DataFrame, vectors: DataFrame, k: int = 4, metric: str = "COSINE"
-) -> DataFrame:
-    """Brute-force baseline used for recall measurement."""
-    return knn_join(queries, vectors.select("vec_id", "embedding"), k=k, metric=metric)
 
 
 # ---------------------------------------------------------------------------
@@ -479,24 +475,54 @@ def pq_search(
     import numpy as np
     import pandas as pd
 
-    m, k, sub = codebook.shape
-    q = np.asarray(query_vec, dtype=np.float64)
-    lut = np.zeros((m, k))
-    for j in range(m):
-        diff = codebook[j] - q[j * sub : (j + 1) * sub][None, :]
-        lut[j] = (diff**2).sum(axis=1)
-    spark = codes.sparkSession
-    bc = spark.sparkContext.broadcast(lut)
+    # search_ivf_pq's ADC scorer under L2: its m x k table rides in the closure
+    adc = _adc_scorer(codebook, np.asarray(query_vec, dtype=np.float64)[None], "L2")
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        table = bc.value
         for pdf in batches:
-            c = np.stack(pdf["pq_codes"].to_numpy())
-            dist = table[np.arange(m)[None, :], c].sum(axis=1)
+            dist = adc(np.stack(pdf["pq_codes"].to_numpy()))[:, 0]
             yield pd.DataFrame({id_col: pdf[id_col], "approx_l2sq": dist})
 
-    scored = codes.mapInPandas(run, schema=f"{id_col} long, approx_l2sq double")
+    # the id type pq_encode derived from its input (string ids included)
+    id_type = codes.schema[id_col].dataType.simpleString()
+    scored = codes.mapInPandas(run, schema=f"{id_col} {id_type}, approx_l2sq double")
     return scored.orderBy(F.col("approx_l2sq").asc(), F.col(id_col)).limit(top_k)
+
+
+def _adc_scorer(codebook, Q, metric: str):
+    """The Arrow kernel's scorer (similarity._knn_scored_arrow) for PQ
+    codes: an (n, m) code matrix -> its (n, nq) ADC scores against ``Q``.
+    Each query has an m x kc lookup table, riding in the kernel's
+    closure, whose entry [j, c] scores the query's j-th subvector against
+    code c of subspace j of ``codebook`` (m, kc, D/m): the squared
+    distance under L2, the dot product under COSINE and IP.  A vector's
+    score is the sum of its m entries; under COSINE it is divided by the
+    norms of the query and of the vector the codes reconstruct, floored
+    at 1e-12 like _score_matrix."""
+    import numpy as np
+
+    m, kc, sub = codebook.shape
+    Qs = np.asarray(Q, dtype=np.float64).reshape(len(Q), m, sub)
+    if metric.upper() == "L2":
+        luts = ((codebook[None] - Qs[:, :, None, :]) ** 2).sum(axis=3)
+    else:
+        luts = np.einsum("qjs,jcs->qjc", Qs, codebook)
+    luts = luts.transpose(1, 2, 0)  # (m, kc, nq)
+    cosine = metric.upper() == "COSINE"
+    code_sq = (codebook**2).sum(axis=2)  # (m, kc): each code center's ||c||^2
+    q_norm = np.maximum(np.linalg.norm(Qs.reshape(len(Q), -1), axis=1), 1e-12)
+
+    def scorer(codes):
+        S = luts[0][codes[:, 0]]
+        for j in range(1, m):
+            S += luts[j][codes[:, j]]
+        if cosine:
+            v_sq = sum(code_sq[j][codes[:, j]] for j in range(m))
+            S /= np.maximum(np.sqrt(v_sq), 1e-12)[:, None]
+            S /= q_norm[None, :]
+        return S
+
+    return scorer
 
 
 def build_ivf_pq(
@@ -514,9 +540,10 @@ def build_ivf_pq(
     This is the production trillion-vector layout: partition pruning cuts
     WHICH rows are scanned (nprobe/nlist), PQ cuts the BYTES per scanned
     row (D*4 -> m).  The full-precision vector column stays in the parquet
-    (for re-ranking) but the ADC scan never reads it — column pruning
-    keeps it on disk.  write_ivf, save_index and open_index make it the
-    handle search_ivf_pq takes.
+    for the re-rank, which reads it only for each query's k*overfetch
+    candidates; search_ivf_pq's ADC scan reads ``pq_codes`` and never
+    ``embedding`` — column pruning keeps it on disk.  write_ivf,
+    save_index and open_index make it the handle search_ivf_pq takes.
     """
     assigned, centroids = build_ivf(vectors, nlist=nlist, vec_col=vec_col)
     codebook = pq_train(vectors, m=m, k=k_codes, vec_col=vec_col)
@@ -533,105 +560,86 @@ def search_ivf_pq(
     overfetch: int = 4,
 ) -> DataFrame:
     """Full production ANN path over ``index``, whose scan holds each
-    vector's ``pq_codes`` (build_ivf_pq): IVF cell pruning -> PQ ADC
-    candidate scan -> full-precision re-rank of k*overfetch candidates.
+    vector's ``pq_codes`` (build_ivf_pq): search_ivf's read path, with
+    ADC scoring in place of exact scoring, then a full-precision re-rank.
 
-    1. probe: assign_to_centroids with ``n = nprobe`` (rows carry q_vec;
-       a broadcast semi-join of the cells prunes the index at the scan);
-    2. ADC scan: per-query m x k lookup tables (dot-product tables for
-       COSINE/IP, squared-distance for L2) broadcast to executors; each
-       candidate costs m lookups over its codes — the embedding column is
-       never read (column pruning);
-    3. top k*overfetch per query by approximate score (window);
-    4. re-rank: join ONLY those candidates back to full vectors, exact
-       score, top-k.  PQ error affects recall, never returned scores.
-    """
-    from collections.abc import Iterator
+    1. the (q_id, q_vec) batch is fetched to the driver once and probed
+       by ``_probe_cells``, the rule of every IVF search;
+    2. ``_score_slices`` scores the probed cells with ``_adc_scorer``:
+       m x kc lookup tables per query (dot products for COSINE/IP,
+       squared distances for L2) in the kernel's closure, m lookups per
+       candidate; the scan reads ``pq_codes``, never ``embedding``;
+    3. the driver keeps each query's k*overfetch best candidates by
+       (approximate score, vec_id);
+    4. re-rank: one scan of the probed cells (a static ``centroid_id IN``
+       filter) narrowed by ``vec_id IN`` fetches the candidates' vectors;
+       each query's own are scored by ``_score_matrix``, rounded by
+       ``F.round(score, 6)`` in Spark (HALF_UP) and ranked, ties to the
+       lower vec_id.  PQ error affects recall, never returned scores.
 
+    Eager, like search.search: returns the (q_id, vec_id, score, rank)
+    rows as a local relation, after three Spark jobs for a one-slice
+    batch (query fetch, ADC scan, re-rank fetch).  The driver holds at
+    most k*overfetch*nq candidates and their vectors, the class of
+    search.search's k*nq hits; q86's cover-all overfetch makes that nq x
+    corpus, a verification setting, not a production one."""
     import numpy as np
-    import pandas as pd
 
-    m, kc, sub = codebook.shape
-    vectors, metric = index.vectors, index.metric
+    from coldata_spark.tables import local_rows
 
-    probe = assign_to_centroids(
-        queries.select("q_id", "q_vec"), index.centroids, "q_vec", metric, n=nprobe
-    )
+    spark, metric, n_cand = queries.sparkSession, index.metric, k * overfetch
+    q_ids, Q = _fetch_queries(queries, "q_id", "q_vec")
+    q_type = queries.schema["q_id"].dataType
+    cells = _probe_cells(q_ids, Q, index.centroids, nprobe, metric)
+    approx = []
+    for frame in _score_slices(index, q_ids, Q, q_type, cells, n_cand, codebook):
+        pdf = frame.toPandas()
+        approx += zip(pdf["q_id"].tolist(), pdf["vec_id"].tolist(), pdf["score"].tolist())
+    cands = {q: [v for _, v in best] for q, best in _best(approx, n_cand, metric).items()}
 
-    # Keep the probed cell set DISTRIBUTED: a broadcast semi-join prunes the
-    # index without funneling probe lists through the driver, so a 1e6-query
-    # batch plans exactly like a 10-query batch.
-    pruned = vectors.join(
-        F.broadcast(probe.select("centroid_id").distinct()), "centroid_id", "left_semi"
-    ).join(F.broadcast(probe), "centroid_id")
+    exact = []
+    wanted = sorted({v for vs in cands.values() for v in vs})
+    if wanted:
+        probed = sorted(set().union(*cells.values()))
+        pdf = (
+            index.vectors.filter(F.col("centroid_id").isin(probed))
+            .filter(F.col("vec_id").isin(wanted))
+            .select("vec_id", "embedding")
+            .toPandas()
+        )
+        at = {v: i for i, v in enumerate(pdf["vec_id"].tolist())}
+        X = np.stack([np.asarray(e, dtype=np.float64) for e in pdf["embedding"]])
+        for j, q in enumerate(q_ids):
+            ids = cands.get(q, [])
+            S = _score_matrix(X[[at[v] for v in ids]], Q[j : j + 1], metric)
+            exact += zip([q] * len(ids), ids, S[:, 0].tolist())
+    schema = T.StructType([
+        T.StructField("q_id", q_type),
+        T.StructField("vec_id", index.vectors.schema["vec_id"].dataType),
+        T.StructField("score", T.DoubleType()),
+        T.StructField("rank", T.IntegerType()),
+    ])
+    # F.round over a local relation: Spark's HALF_UP rounding, evaluated on
+    # the driver with no Spark job (the optimizer folds the projection)
+    rounded = local_rows(spark, exact, T.StructType(schema.fields[:3]))
+    rounded = rounded.withColumn("score", F.round("score", 6)).collect()
+    ranked = [
+        (q, v, s, r)
+        for q, best in _best(rounded, k, metric).items()
+        for r, (s, v) in enumerate(best, 1)
+    ]
+    return local_rows(spark, ranked, schema)
 
-    # ADC lookup tables are built INSIDE the Arrow UDF from the broadcast
-    # codebook and each query's own q_vec (carried by the probe rows),
-    # cached per task — nothing about the query batch is ever collect()ed.
-    # Cost per distinct query per task is one (m, kc, D/m) einsum: trivial
-    # next to the candidate scan it feeds.
-    # reconstructed-vector norm table for COSINE: ||v̂||^2 = sum_j ||c_j||^2
-    norm_lut = (codebook**2).sum(axis=2)  # (m, kc)
-    bc = vectors.sparkSession.sparkContext.broadcast((codebook, norm_lut, metric.upper()))
 
-    def adc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cb, nlut, met = bc.value
-        mm, kk, ss = cb.shape
-        js = np.arange(mm)
-        luts: dict[int, np.ndarray] = {}
-        qnorms: dict[int, float] = {}
-        for pdf in batches:
-            codes = np.stack(pdf["pq_codes"].to_numpy())
-            out = np.zeros(len(pdf))
-            for q_id in pdf["q_id"].unique():
-                mask = (pdf["q_id"] == q_id).to_numpy()
-                if q_id not in luts:
-                    qv = np.asarray(
-                        pdf["q_vec"][mask].iloc[0], dtype=np.float64
-                    )
-                    lut = np.zeros((mm, kk))
-                    for j in range(mm):
-                        qs = qv[j * ss : (j + 1) * ss]
-                        if met == "L2":
-                            lut[j] = ((cb[j] - qs[None, :]) ** 2).sum(axis=1)
-                        else:  # dot-product decomposition for IP/COSINE
-                            lut[j] = cb[j] @ qs
-                    luts[q_id] = lut
-                    qnorms[q_id] = float(np.linalg.norm(qv))
-                t = luts[q_id]
-                s = t[js[None, :], codes[mask]].sum(axis=1)
-                if met == "COSINE":
-                    vnorm = np.sqrt(nlut[js[None, :], codes[mask]].sum(axis=1))
-                    s = s / np.maximum(vnorm * qnorms[q_id], 1e-12)
-                out[mask] = s
-            yield pd.DataFrame(
-                {"q_id": pdf["q_id"], "vec_id": pdf["vec_id"], "approx": out}
-            )
-
-    # id types derived from the inputs, like the arrow scorers do — a
-    # string/int32 q_id or vec_id must survive the Arrow stage unchanged
-    q_id_t = queries.schema["q_id"].dataType.simpleString()
-    vec_id_t = pruned.schema["vec_id"].dataType.simpleString()
-    scored = pruned.select("q_id", "vec_id", "pq_codes", "q_vec").mapInPandas(
-        adc, schema=f"q_id {q_id_t}, vec_id {vec_id_t}, approx double"
-    )
-    cands = rank_top_k(
-        scored, k * overfetch, metric, score="approx", rank="_r"
-    ).select("q_id", "vec_id")
-
-    rerank = (
-        cands.join(vectors.select("vec_id", "embedding"), "vec_id")
-        .join(F.broadcast(queries), "q_id")
-    )
-    exact = F.round(
-        V.score_expr(
-            metric, V.as_double(F.col("q_vec")), V.as_double(F.col("embedding"))
-        ),
-        6,
-    )
-    return rank_top_k(
-        rerank.select("q_id", "vec_id", exact.alias("score")), k, metric
-    )
+def _best(hits, n: int, metric: str) -> dict:
+    """{q_id: its ``n`` best (score, vec_id), best first} of the (q_id,
+    vec_id, score) ``hits``, on the driver, in rank_top_k's order: scores
+    in ``metric``'s direction, ties to the lower vec_id."""
+    sign = -1.0 if V.METRIC_DESCENDING[metric.upper()] else 1.0
+    by_q: dict = {}
+    for q, v, s in hits:
+        by_q.setdefault(q, []).append((sign * s, v))
+    return {q: [(sign * s, v) for s, v in sorted(c)[:n]] for q, c in by_q.items()}
 
 
 # ---------------------------------------------------------------------------

@@ -5,11 +5,12 @@ embed queries -> Milvus ANN top-k per query -> collapse chunk hits to parent
 docs keeping best distance -> sort by distance -> join back to the document
 store.  Re-expressed Spark-first:
 
-  * exact path  — broadcast the (small) query side against the vector table,
-    score with a codegen'd higher-order function, rank with a per-query
-    window.  This is the oracle-checkable baseline (nprobe == nlist in the
-    reference config means it effectively did exact search anyway —
-    config.yml:81-82).
+  * exact path  — fetch the (small, gate-bounded) query batch to the
+    driver, score every scan batch against it with numpy inside one
+    mapInArrow pass that keeps a partial top-k per batch, round in Spark,
+    and merge with a per-query window.  This is the oracle-checkable
+    baseline (nprobe == nlist in the reference config means it
+    effectively did exact search anyway — config.yml:81-82).
   * IVF path    — k-means fit on a driver sample -> assign centroid_id ->
     vectors table written partitioned by centroid_id; searches score the
     query against centroids first and scan only the nprobe best partitions
@@ -57,7 +58,6 @@ def knn_join(
     exclude_self: bool = False,
     force: bool = False,
     gate_bytes: int = QUADRATIC_GATE_BYTES,
-    strategy: str = "auto",
     score_range: tuple[float | None, float | None] | None = None,
 ) -> DataFrame:
     """Exact k-NN theta-join: top-k vectors per query under ``metric``.
@@ -67,45 +67,27 @@ def knn_join(
     that are not near-duplicates" is top-k under ``hi`` excluding the
     region above it.  Either bound may be None.
 
-    Returns (query_id, vec_id, score, rank).  The query side is broadcast
-    (queries are few; vectors are huge), so the big side never shuffles —
-    the only exchange is the tiny per-query top-k merge.
+    Returns (query_id, vec_id, score, rank).  The query side is fetched to
+    the driver and shipped in the scoring closure (queries are few;
+    vectors are huge), so the big side never shuffles — the only exchange
+    is the tiny per-query top-k merge.
 
-    A query side too big to broadcast makes this plan quadratic work — the
-    size gate refuses it (use the IVF index, or batch the queries) unless
-    ``force`` is set.
+    A query side too big to ship that way makes this plan quadratic work —
+    the size gate refuses it (use the IVF index, or batch the queries)
+    unless ``force`` is set.
 
     Scores are rounded to ``score_decimals`` BEFORE ranking, with vec_id as
     tie-break, so the ranking is deterministic and engine-independent.
 
-    ``strategy`` picks the scoring engine:
-
-      * ``"arrow"`` (what ``"auto"`` resolves to) — Arrow-batched numpy
-        matmul against the (collected, gate-bounded) query matrix inside a
-        single ``mapInPandas`` pass, with a per-batch partial top-k so each
-        scan task emits only ~#queries x k candidate rows.  Same pattern as
-        the IVF-PQ in-UDF ADC LUTs (ivf.py): the big side never shuffles and
-        the per-pair cost is one fused BLAS op instead of a 64-step
-        Catalyst fold.  Raw scores are emitted and rounded by ``F.round``
-        afterwards, so the published score is bit-identical in semantics to
-        the expression path.
-      * ``"expr"`` — pure Catalyst higher-order-function scoring (the
-        oracle-parity baseline; zero Python in the plan).
-
-    WHY ``auto`` == ``arrow`` AT EVERY SIZE (measured, round 7 — see
-    SCALE.md "kNN strategy crossover"):
-    the hypothesized small-input crossover to ``expr`` does not exist for
-    this operator.  Warm-JVM best-of-3 at q30's shape (8 queries, 64-dim),
-    expr vs arrow seconds: sf0.1 0.69/0.44, 16x 0.77/0.29, 64x 1.65/0.43,
-    256x 4.85/0.52; cold-JVM single-shot runs show no expr advantage
-    either.  Two reasons: (1) ``_sized_for_arrow_stage`` already coalesces
-    the scan so the Python-worker round-trip is paid ~once, and (2) the
-    Catalyst fold costs ~25 ns per vector ELEMENT per pair, so ``expr``
-    scales with rows x queries x dim while arrow's fixed cost is flat.
-    ``expr`` is kept as the zero-Python oracle-parity baseline, not as a
-    performance path.  The residual small-tier ratio vs DuckDB is the
-    multi-job floor (query-side collect job + two-stage main job),
-    itemized in SCALE.md — not strategy-addressable.
+    Scoring is Arrow-batched numpy inside one ``mapInArrow`` pass
+    (``_knn_scored_arrow``) against the collected, gate-bounded query
+    matrix, with a per-batch partial top-k, so each scan task emits only
+    ~#queries x k candidate rows: the big side never shuffles and the
+    per-pair cost is one fused BLAS op.  Raw scores are rounded by
+    ``F.round`` (HALF_UP) in Spark afterwards.  The zero-Python
+    Catalyst-expression scorer this kernel replaced (round 7: slower at
+    every size measured, SCALE.md "kNN strategy crossover") lives on in
+    tests/oracle_utils.py as the reference the kernel is checked against.
     """
     refuse_at_scale(
         queries,
@@ -116,80 +98,40 @@ def knn_join(
         gate_bytes,
     )
 
-    if strategy not in ("auto", "arrow", "expr"):
-        raise ValueError(f"unknown knn_join strategy {strategy!r}")
-    if strategy in ("auto", "arrow"):
-        q_ids, Q = _fetch_queries(queries, query_id, query_vec)
-        scored = _knn_scored_arrow(
-            q_ids,
-            Q,
-            queries.schema[query_id].dataType,
-            vectors,
-            k,
-            metric,
-            query_id,
-            vec_id,
-            vec_col,
-            score_decimals,
-            exclude_self,
-            score_range,
-        )
-        if score_decimals is not None:
-            scored = scored.withColumn(
-                "score", F.round(F.col("score"), score_decimals)
-            )
-        scored = _apply_score_range(scored, score_range)
-        # The Arrow stage already reduced each scan task to ~#queries x k
-        # survivor rows, so the global window merges a bounded set — no
-        # salting needed regardless of input size.  Pin the merge exchange
-        # width EXPLICITLY (HashPartitioning(q_id, n) satisfies the
-        # window's clustered distribution, so no second exchange): the
-        # session's shuffle.partitions is sized for the big-side scan,
-        # and letting AQE coalesce the tiny merge instead costs an extra
-        # planning round per stage — measured ~0.3 s/run at the 256x tier
-        # (SCALE.md "q30's floor"), a third of q30's latency.  Width: one
-        # partition per query up to the cluster's parallelism — a window
-        # partitioned by q_id can never use more reducers than distinct
-        # queries, and capping at defaultParallelism keeps a 1000-query
-        # batch on a big cluster fully parallel while an 8-query batch
-        # locally merges in 8 cheap tasks.
-        par = queries.sparkSession.sparkContext.defaultParallelism
-        n_merge = max(1, min(len(q_ids), par))
-        scored = scored.repartition(n_merge, F.col(query_id))
-        return rank_top_k(scored, k, metric, by=query_id, tie=vec_id)
-
-    from coldata_spark.tables import fan_out
-
-    score = V.score_expr(
-        metric, V.as_double(F.col(query_vec)), V.as_double(F.col(vec_col))
+    q_ids, Q = _fetch_queries(queries, query_id, query_vec)
+    scored = _knn_scored_arrow(
+        q_ids,
+        Q,
+        queries.schema[query_id].dataType,
+        vectors,
+        k,
+        metric,
+        query_id,
+        vec_id,
+        vec_col,
+        score_decimals,
+        exclude_self,
+        score_range,
     )
     if score_decimals is not None:
-        score = F.round(score, score_decimals)
-
-    # distance evaluation is the CPU-heavy stage -> make sure the big side
-    # is actually parallel before the per-row 64-dim folds
-    pairs = fan_out(vectors).join(F.broadcast(queries))
-    if exclude_self:
-        pairs = pairs.filter(F.col(query_id) != F.col(vec_id))
-    scored = _apply_score_range(
-        pairs.select(query_id, vec_id, score.alias("score")), score_range
-    )
-
-    # Two-stage top-k for LARGE vector tables.  A single window on q_id
-    # funnels every scored pair into #queries reducers — with few queries
-    # that is catastrophic skew (a handful of reducers sort the whole
-    # table).  Stage 1 ranks within (q_id, salt): same bytes shuffled but
-    # spread over #queries x n_salts reducers, each sorting a bounded slice
-    # and emitting at most k rows; stage 2 merges the survivors.  For small
-    # inputs the extra exchange costs more than the skew it prevents, so
-    # gate on the optimizer's size estimate (same spirit as AQE).
-    if _estimated_bytes(vectors) > 256 * 1024 * 1024:
-        n_salts = 64
-        salt = F.pmod(F.hash(F.col(vec_id)), F.lit(n_salts))
-        scored = rank_top_k(
-            scored.withColumn("_salt", salt), k, metric,
-            by=(query_id, "_salt"), tie=vec_id, rank="_lr",
-        ).drop("_lr", "_salt")
+        scored = scored.withColumn("score", F.round(F.col("score"), score_decimals))
+    scored = _apply_score_range(scored, score_range)
+    # The Arrow stage already reduced each scan task to ~#queries x k
+    # survivor rows, so the global window merges a bounded set — no
+    # salting needed regardless of input size.  Pin the merge exchange
+    # width EXPLICITLY (HashPartitioning(q_id, n) satisfies the window's
+    # clustered distribution, so no second exchange): the session's
+    # shuffle.partitions is sized for the big-side scan, and letting AQE
+    # coalesce the tiny merge instead costs an extra planning round per
+    # stage — measured ~0.3 s/run at the 256x tier (SCALE.md "q30's
+    # floor"), a third of q30's latency.  Width: one partition per query
+    # up to the cluster's parallelism — a window partitioned by q_id can
+    # never use more reducers than distinct queries, and capping at
+    # defaultParallelism keeps a 1000-query batch on a big cluster fully
+    # parallel while an 8-query batch locally merges in 8 cheap tasks.
+    par = queries.sparkSession.sparkContext.defaultParallelism
+    n_merge = max(1, min(len(q_ids), par))
+    scored = scored.repartition(n_merge, F.col(query_id))
     return rank_top_k(scored, k, metric, by=query_id, tie=vec_id)
 
 
@@ -244,11 +186,12 @@ def _fetch_queries(queries: DataFrame, query_id: str, query_vec: str):
 
 def _score_matrix(X, Q, metric: str):
     """(n, nq) scores of the rows of X against the queries Q under
-    ``metric``: the one formula the kNN kernel and the IVF driver probe
-    share, so both score identically.  eps floor on the norms: an
-    all-zero vector (missing/failed embedding) must score ~0 under
-    COSINE, not NaN — NaN silently dropped a query's whole candidate
-    batch in the kernel while ranking FIRST in the expr engine."""
+    ``metric``: the one formula the kNN kernel, the IVF driver probe and
+    IVF-PQ's re-rank share, so all score identically.  eps floor on the
+    norms: an all-zero vector (missing/failed embedding) must score ~0
+    under COSINE, not NaN — NaN silently dropped a query's whole
+    candidate batch in the kernel while ranking FIRST in the expression
+    scorer (now tests/oracle_utils.knn_expr)."""
     import numpy as np
 
     m = metric.upper()
@@ -280,19 +223,26 @@ def _knn_scored_arrow(
     exclude_self: bool,
     score_range=None,
     cells: dict | None = None,
+    scorer=None,
 ) -> DataFrame:
     """Score (query x vector) pairs with numpy inside mapInArrow, keeping a
     per-batch partial top-k per query.
 
     The query side arrives already on the driver (``_fetch_queries``:
     ids, the (nq, dim) matrix, and ``q_type``, the id column's Spark
-    type) — bounded by the same gate that makes the expression path's
-    broadcast legal — and is closed over by the UDF (Spark ships the
-    closure once per task, like a broadcast var).
+    type) — bounded by knn_join's size gate or by the IVF searches'
+    slices — and is closed over by the UDF (Spark ships the closure once
+    per task, like a broadcast var).
 
     ``cells`` ({query id: probed centroid ids}) is the IVF form: the
     vectors then carry ``centroid_id`` and each query's candidates are
     masked to its own probed cells before the partial top-k.
+
+    ``scorer`` maps a batch's (n, width) ``vec_col`` values, as Arrow
+    hands them over, to their (n, nq) scores in ``metric``'s direction.
+    The default is the exact one: ``_score_matrix`` of the float64
+    vectors against ``Q``.  IVF-PQ's ADC scorer (ivf._adc_scorer) reads
+    PQ codes through the same loop.
 
     Correctness of the partial top-k under post-hoc rounding: F.round moves
     a score by at most ``0.5 * 10^-d``, so two rows can swap order after
@@ -304,6 +254,10 @@ def _knn_scored_arrow(
     import numpy as np
     import pyarrow as pa
     from pyspark.sql import types as T
+
+    if scorer is None:
+        def scorer(X):
+            return _score_matrix(X.astype(np.float64, copy=False), Q, metric)
 
     desc = V.METRIC_DESCENDING[metric.upper()]
     slack = (10.0 ** -score_decimals + 1e-9) if score_decimals is not None else 0.0
@@ -345,11 +299,10 @@ def _knn_scored_arrow(
                 continue
             emb = batch.column(1)
             flat = emb.flatten().to_numpy(zero_copy_only=False)
-            X = flat.reshape(n, -1).astype(np.float64, copy=False)
             vids = batch.column(0).to_numpy(zero_copy_only=False)
             if q_cells is not None:
                 cents = batch.column(2).to_numpy(zero_copy_only=False)
-            S = _score_matrix(X, Q, metric)
+            S = scorer(flat.reshape(n, -1))
             sel_q, sel_v, sel_s = [], [], []
             for j in range(nq):
                 s = S[:, j]

@@ -924,7 +924,7 @@ def q85_pq_candidates(spark, sf_dir):
     vectors' subvectors, code order = vec_id order, matching
     np.argmin's first-min tie-break), encode the corpus to 8 codes/row
     through the REAL numpy mapInPandas (ivf.pq_encode), ADC-scan for
-    vector 0's 50 nearest candidates (ivf.pq_search's broadcast-LUT
+    vector 0's 50 nearest candidates (ivf.pq_search's ADC lookup-table
     scan).  With integer-valued vectors every LUT entry and every ADC
     sum is an exact integer in float64 (max ~2.7e8 << 2^53), so the
     CANDIDATE SET ITSELF hash-checks against the SQL replay — "recall
@@ -985,12 +985,15 @@ def q85_pq_candidates(spark, sf_dir):
     """,
 )
 def q86_ivf_pq_search(spark, sf_dir):
-    """Complete IVF-PQ path (probe -> ADC scan -> full-precision re-rank)
-    in its exhaustive configuration: nprobe = nlist and overfetch sized so
-    the candidate cut keeps every scanned row.  The re-rank then scores
-    ALL vectors full-precision, so the output provably equals brute-force
-    top-k whatever the (non-SQL-expressible) KMeans cells and PQ codebook
-    did — which makes the entire pipeline value-hash-checkable.  The lossy
+    """Complete IVF-PQ path (driver probe -> ADC scan through the IVF
+    slice loop -> full-precision re-rank) in its exhaustive
+    configuration: nprobe = nlist and overfetch sized so the candidate
+    cut keeps every scanned row.  The re-rank then scores ALL vectors
+    full-precision, so the output provably equals brute-force top-k
+    whatever the (non-SQL-expressible) KMeans cells and PQ codebook did
+    — which makes the entire pipeline value-hash-checkable.  The
+    cover-all cut hands the driver nq x corpus candidates: a
+    verification setting (search_ivf_pq's docstring bounds it).  The lossy
     production configuration runs as q151_ivf_pq_ann and its recall is
     asserted in tests/test_search.py::test_ivf_pq_end_to_end_recall.
 
@@ -1148,9 +1151,9 @@ def q151_ivf_pq_ann(spark, sf_dir):
     itself hash-matches the SQL replay (no 'recall curve' hedge; the
     cut IS the checked value).  The Spark side still runs the REAL
     machinery: assign_to_centroids' numpy nearest-cell map, pq_encode's
-    numpy mapInPandas, search_ivf_pq's Arrow probe (the same map) + ADC scan +
-    window cut + full-precision re-rank (sqrt of an exact integer,
-    correctly rounded on both engines).  The float-COSINE KMeans
+    numpy mapInPandas, search_ivf_pq's driver probe (the same rule) + ADC
+    scan in the Arrow kernel + per-query cut + full-precision re-rank
+    (sqrt of an exact integer, correctly rounded on both engines).  The float-COSINE KMeans
     configuration stays covered by q86 (exhaustive = provably exact)
     and the recall assertion in tests/test_search.py.
     Reference basis: vdb.py's Milvus IVF_PQ index params.

@@ -19,12 +19,14 @@ runs only the ANN probe in Milvus and the rest in process over at most k
 hits per query (make_results, vdb.py:101-122):
   1. the queries are embedded on the driver into a local relation
      (embed.embed_queries) and read back with no Spark job;
-  2. scoring job: ivf._score_slices, the loop search_ivf runs too, probes the batch's cells in numpy by the placement rule
-     and scans the index through the scan ivf.open_index holds (no
-     inference or listing job), only in the probed cells (a static
-     ``centroid_id IN (...)`` partition filter) with the in-cell Arrow
-     kernel, the one Python-worker stage.  A batch over ivf.COLLECT_PROBE_MAX_BYTES of
-     query matrix is scored in slices, one job each;
+  2. scoring job: ivf._probe_cells probes the batch's cells in numpy by
+     the placement rule, and ivf._score_slices, the loop search_ivf and
+     search_ivf_pq run too, scans the index through the scan
+     ivf.open_index holds (no inference or listing job), only in the
+     probed cells (a static ``centroid_id IN (...)`` partition filter)
+     with the in-cell Arrow kernel, the one Python-worker stage.  A batch
+     over ivf.COLLECT_PROBE_MAX_BYTES of query matrix is scored in
+     slices, one job each;
   3. driver finish over at most 4k hits per query: global top-4k,
      chunk -> parent, group-best, rank the top k;
   4. lookup job: at most k x nq documents, by a static ``IN`` filter on
@@ -46,7 +48,7 @@ from coldata_spark.functions import text as TX
 from coldata_spark.functions import vector as V
 from coldata_spark.operators import ivf
 from coldata_spark.operators.ivf import SearchIndex
-from coldata_spark.tables import local_frame
+from coldata_spark.tables import local_rows
 
 # chunks scored per result: the parent collapse can still fill k parents
 # when the top hits crowd into few many-chunk documents
@@ -142,7 +144,8 @@ def search(
     # an empty store's index has no cells and no files to scan
     if q_ids and index.nlist:
         Q = np.asarray([r.q_vec for r in qrows], dtype=np.float64)
-        for frame in ivf._score_slices(index, q_ids, Q, q_type, nprobe, k * OVERFETCH):
+        cells = ivf._probe_cells(q_ids, Q, index.centroids, nprobe, index.metric)
+        for frame in ivf._score_slices(index, q_ids, Q, q_type, cells, k * OVERFETCH):
             pdf = frame.toPandas()
             hits += zip(pdf["q_id"].tolist(), pdf["vec_id"].tolist(),
                         pdf["score"].tolist())
@@ -162,8 +165,7 @@ def search(
         T.StructField(id_col, documents.schema[id_col].dataType),
         T.StructField("preview", T.StringType()),
     ])
-    columns = list(zip(*rows)) or [()] * len(schema.fields)
-    return local_frame(spark, dict(zip(schema.names, columns)), schema)
+    return local_rows(spark, rows, schema)
 
 
 def _rank_parents(hits, k: int, metric: str) -> list[tuple]:

@@ -253,6 +253,13 @@ def local_frame(spark: SparkSession, columns: dict, schema) -> DataFrame:
     return spark.createDataFrame(pa.table(columns), schema)
 
 
+def local_rows(spark: SparkSession, rows: list, schema) -> DataFrame:
+    """``rows``, tuples in the field order of ``schema`` (a StructType),
+    as a local relation (local_frame)."""
+    columns = list(zip(*rows)) or [()] * len(schema.fields)
+    return local_frame(spark, dict(zip(schema.names, columns)), schema)
+
+
 def register_views(spark: SparkSession, sf_dir: str, prefix: str = "") -> list[str]:
     """Register every fixture table as a temp view so the full surface is
     reachable from ``spark.sql`` — the engine is DataFrame-first, but a

@@ -71,3 +71,25 @@ def compare(spark_df, oracle_pdf: pd.DataFrame) -> list[str]:
                         f"spark={a[c][i]!r} oracle={b[c][i]!r}"
                     )
     return problems
+
+
+def knn_expr(queries, vectors, k: int, metric: str = "COSINE",
+             score_decimals: int | None = 6, exclude_self: bool = False):
+    """Exact top-k per query in Catalyst expressions alone, no Python in
+    the plan: the reference knn_join's Arrow kernel is checked against.
+    Every (q_id, q_vec) x (vec_id, embedding) pair of a broadcast cross
+    join is scored by V.score_expr, rounded to ``score_decimals`` and
+    ranked by rank_top_k, ties to the lower vec_id.  Returns (q_id,
+    vec_id, score, rank), as knn_join does."""
+    from pyspark.sql import functions as F
+
+    from coldata_spark.functions import vector as V
+    from coldata_spark.operators.similarity import rank_top_k
+
+    score = V.score_expr(metric, V.as_double(F.col("q_vec")), V.as_double(F.col("embedding")))
+    if score_decimals is not None:
+        score = F.round(score, score_decimals)
+    pairs = vectors.join(F.broadcast(queries))
+    if exclude_self:
+        pairs = pairs.filter(F.col("q_id") != F.col("vec_id"))
+    return rank_top_k(pairs.select("q_id", "vec_id", score.alias("score")), k, metric)

@@ -11,6 +11,7 @@ from coldata_spark import embed as E
 from coldata_spark.operators import ivf, upsert
 from coldata_spark.operators.similarity import knn_join
 from coldata_spark.tables import load
+from tests.oracle_utils import knn_expr
 from tests.test_ivf_index import committed
 
 
@@ -54,16 +55,16 @@ def test_metric_ordering_semantics(spark):
 
 @pytest.mark.parametrize("metric", ["COSINE", "L2", "IP"])
 def test_knn_arrow_matches_expr_strategy(spark, sf_dir, metric):
-    """The Arrow-matmul scoring path must return the exact rows+rounded
-    scores of the expression-scored baseline for every metric."""
+    """knn_join's Arrow-matmul kernel must return the exact rows+rounded
+    scores of the Catalyst-expression reference for every metric."""
     emb = load(spark, sf_dir, "embeddings")
     qs = emb.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
     )
     vs = emb.select("vec_id", "embedding")
     kw = dict(k=6, metric=metric, exclude_self=True)
-    arrow = knn_join(qs, vs, strategy="arrow", **kw).collect()
-    expr = knn_join(qs, vs, strategy="expr", **kw).collect()
+    arrow = knn_join(qs, vs, **kw).collect()
+    expr = knn_expr(qs, vs, **kw).collect()
     key = lambda r: (r.q_id, r.rank)
     a = {key(r): (r.vec_id, r.score) for r in arrow}
     e = {key(r): (r.vec_id, r.score) for r in expr}
@@ -101,7 +102,7 @@ def test_ivf_build_search_recall(spark, sf_dir, tmp_path):
     qs = emb.filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
     )
-    exact = ivf.search_exact(qs, emb, k=4).collect()
+    exact = knn_join(qs, emb.select("vec_id", "embedding"), k=4).collect()
     # full probe == exact search (the reference's nprobe == nlist config)
     full = ivf.search_ivf(index, qs, k=4, nprobe=8).collect()
     exact_set = {(r.q_id, r.vec_id) for r in exact}
@@ -287,14 +288,14 @@ def test_crawl_all_sources_dedups_across_sources(spark):
 
 def test_knn_zero_vector_scores_zero_not_nan(spark, tmp_path):
     """Round-4 review fix: an all-zero embedding under COSINE must score
-    ~0 on BOTH engines — previously NaN silently dropped the query's
-    candidates in the arrow path and ranked zero vectors FIRST in expr.
-    search_ivf over a 2-cell index of the same vectors must agree (its
-    Arrow side once scored these NaN)."""
+    ~0 in knn_join's Arrow kernel and in the expression reference —
+    previously NaN silently dropped the query's candidates in the kernel
+    and ranked zero vectors FIRST in expressions.  search_ivf over a
+    2-cell index of the same vectors must agree (its Arrow side once
+    scored these NaN)."""
     import math
 
     from coldata_spark.operators import ivf
-    from coldata_spark.operators.similarity import knn_join
 
     vecs = spark.createDataFrame(
         [(1, [1.0, 0.0]), (2, [0.0, 1.0]), (3, [0.0, 0.0])],
@@ -311,9 +312,8 @@ def test_knn_zero_vector_scores_zero_not_nan(spark, tmp_path):
         str(tmp_path / "zero_ivf"), ivf.assign_to_centroids(vecs, centroids), centroids
     )
     runs = {
-        strategy: knn_join(qs, vecs, k=3, metric="COSINE", strategy=strategy)
-        .collect()
-        for strategy in ("arrow", "expr")
+        "arrow": knn_join(qs, vecs, k=3, metric="COSINE").collect(),
+        "expr": knn_expr(qs, vecs, k=3, metric="COSINE").collect(),
     }
     runs["ivf"] = ivf.search_ivf(index, qs, k=3, nprobe=2).collect()
     for strategy, rows in runs.items():
@@ -490,7 +490,7 @@ def test_maintain_ivf_splits_hot_cell_and_keeps_search_exact(
     )
     exact = {
         (r.q_id, r.vec_id)
-        for r in ivf.search_exact(qs, live, k=4).collect()
+        for r in knn_join(qs, live.select("vec_id", "embedding"), k=4).collect()
     }
 
     def full_probe(idx):

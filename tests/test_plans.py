@@ -82,25 +82,6 @@ def test_knn_big_side_never_shuffles_before_topk(spark, sf_dir):
             assert "RoundRobinPartitioning" in detail, detail
 
 
-def test_knn_expr_strategy_broadcasts(spark, sf_dir):
-    """The expression-scored fallback keeps the broadcast-join shape."""
-    from coldata_spark.operators.similarity import knn_join
-    from coldata_spark.queries.vector_queries import _queries_df
-
-    emb = load(spark, sf_dir, "embeddings")
-    df = knn_join(
-        _queries_df(spark, sf_dir),
-        emb.select("vec_id", "embedding"),
-        k=4,
-        metric="COSINE",
-        exclude_self=True,
-        strategy="expr",
-    )
-    plan = plan_of(df)
-    assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan
-    assert "SortMergeJoin" not in plan
-
-
 def test_anti_join_used_for_not_exists(spark, sf_dir):
     q = registry.specs()["q04_customers_without_orders"]
     plan = plan_of(q.fn(spark, sf_dir))
@@ -312,10 +293,13 @@ JOB_GATES = [
     ("q150_warm", _warm_query("q150_ann_ivf_pruned"), 3),
     # as q35; count() on parquet centroids for nprobe ran 8
     ("q173_warm", _warm_query("q173_ivf_maintained_search"), 3),
-    # the IVF-PQ join plan; parquet centroids and an inferred index scan
-    # ran 10
-    ("q86_warm", _warm_query("q86_ivf_pq_search"), 7),
-    ("q151_warm", _warm_query("q151_ivf_pq_ann"), 7),
+    # the query fetch, the ADC scan and the re-rank's fetch of the
+    # candidates' vectors; the probe, the candidate cut and the ranking
+    # run on the driver.  The distributed probe plan (probe rows joined to
+    # the index, a rank window, the re-rank's joins) ran 7; parquet
+    # centroids and an inferred index scan before it ran 10
+    ("q86_warm", _warm_query("q86_ivf_pq_search"), 3),
+    ("q151_warm", _warm_query("q151_ivf_pq_ann"), 3),
 ]
 
 
@@ -359,13 +343,24 @@ def _index_vectors(spark, sf_dir, fixture):
     return seen[0]
 
 
-def _ivf_pq(spark, sf_dir, fixture):
-    """q86's IVF-PQ search (cached index, 5 queries) at nprobe 4."""
+def _ivf_pq_adc(spark, sf_dir, fixture):
+    """The ADC scoring frame of q86's IVF-PQ search (cached index, 5
+    queries) at nprobe 4: the one frame of the search that scores."""
     from coldata_spark.operators import ivf
     from coldata_spark.queries import vector_queries as VQ
 
+    scored = []
+    real_score_cells = ivf._score_cells
+
+    def spy(*a, **kw):
+        scored.append(real_score_cells(*a, **kw))
+        return scored[-1]
+
+    fixture("monkeypatch").setattr(ivf, "_score_cells", spy)
     idx, codebook, _ = VQ._ivf_pq_index_cached(spark, sf_dir)
-    return ivf.search_ivf_pq(idx, VQ._queries_df(spark, sf_dir, n=5), codebook, k=4, nprobe=4)
+    ivf.search_ivf_pq(idx, VQ._queries_df(spark, sf_dir, n=5), codebook, k=4, nprobe=4)
+    (frame,) = scored
+    return frame
 
 
 # (gate, setup(spark, sf_dir, fixture) -> a frame, {node name: how many
@@ -379,15 +374,12 @@ PLAN_GATES = [
     # a vector's parent comes from its chunk id: no join, one store scan
     # (re-joining the chunks scanned the store twice)
     ("build_index_vectors", _index_vectors, {"Join": 0, "FileScan": 1}),
-    # the probe is assign_to_centroids' Arrow map, its rows carrying q_vec,
-    # broadcast-semi-joined and joined to the index; the rerank's candidate
-    # and query joins remain.  knn_join's expr probe and the with_vec
-    # re-join planned 4, 13 and 5
-    (
-        "search_ivf_pq",
-        _ivf_pq,
-        {"BroadcastNestedLoopJoin": 0, "Window": 5, "BroadcastHashJoin": 4},
-    ),
+    # the probed cells' codes through the Arrow kernel: the probe, the
+    # candidate cut and the re-rank's ranking run on the driver.  The
+    # distributed probe (assign_to_centroids rows carrying q_vec,
+    # broadcast-semi-joined and joined to the index), its rank window and
+    # the re-rank's joins planned BroadcastHashJoin 4 and Window 5
+    ("search_ivf_pq", _ivf_pq_adc, {"Join": 0, "Window": 0}),
 ]
 
 
@@ -411,6 +403,16 @@ def _file_scans(node):
         return _file_scans(node.plan())
     kids = node.children()
     return [s for i in range(kids.size()) for s in _file_scans(kids.apply(i))]
+
+
+def test_ivf_pq_adc_scan_reads_codes_not_vectors(spark, sf_dir, request):
+    """Column pruning is build_ivf_pq's reason for PQ: search_ivf_pq's
+    ADC scan reads ``pq_codes`` and never the ``embedding`` column."""
+    frame = _ivf_pq_adc(spark, sf_dir, request.getfixturevalue)
+    (scan,) = _file_scans(frame._jdf.queryExecution().executedPlan())
+    read_schema = scan.toString().split("ReadSchema: ")[1]
+    assert "pq_codes" in read_schema, read_schema
+    assert "embedding" not in read_schema, read_schema
 
 
 def test_partition_pruning_on_ivf_index(spark, sf_dir, tmp_path):

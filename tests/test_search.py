@@ -135,6 +135,28 @@ def test_pq_encode_compresses_and_recalls(spark, sf_dir):
     assert hit >= 6, f"PQ candidates recovered only {hit}/10 exact neighbors"
 
 
+def test_pq_search_keeps_string_ids(spark, sf_dir):
+    """pq_search returns the id type pq_encode derived from its input: a
+    string item_id comes back as strings with the same ADC distances
+    (a hardcoded long id column failed its Arrow conversion)."""
+    import numpy as np
+
+    from coldata_spark.operators import ivf
+
+    emb = load(spark, sf_dir, "embeddings").withColumnRenamed("vec_id", "item_id")
+    named = emb.withColumn("item_id", F.concat(F.lit("v"), F.col("item_id").cast("string")))
+    codebook = ivf.pq_train(emb, m=8, k=16, sample_limit=200)
+    q = np.array(emb.select("embedding").first()[0], dtype=np.float64)
+    by_long, by_name = (
+        ivf.pq_search(ivf.pq_encode(df, codebook), q, codebook, top_k=10)
+        for df in (emb, named)
+    )
+    assert by_name.schema["item_id"].dataType.simpleString() == "string"
+    rows = by_name.collect()
+    assert all(r.item_id.startswith("v") for r in rows)
+    assert [r.approx_l2sq for r in rows] == [r.approx_l2sq for r in by_long.collect()]
+
+
 def test_ivf_pq_end_to_end_recall(spark, sf_dir, tmp_path):
     """IVF-PQ with full probe + re-rank must recover most of the exact
     top-4 (PQ error is confined to candidate selection; re-rank restores
@@ -311,6 +333,45 @@ def test_search_scores_large_batches_in_slices(spark, metric_indexes, monkeypatc
     )
     assert jobs == len(texts) + 1  # the slices' scoring, then the lookup
     assert S.search(spark, idx, docs, texts, k=3, nprobe=2).collect() == whole
+
+
+def test_search_ivf_pq_scores_large_batches_in_slices(spark, sf_dir, tmp_path, monkeypatch):
+    """search_ivf_pq runs search_ivf's slice loop: a query matrix over
+    COLLECT_PROBE_MAX_BYTES takes one ADC scoring job per slice, and the
+    rows do not change.  They overlap exact search by at least 0.3 (PQ
+    m=8 at nprobe 4 of 8: the recall tests above hold the curve)."""
+    from coldata_spark import embed as E
+    from coldata_spark.operators import ivf
+    from coldata_spark.operators.similarity import knn_join
+    from coldata_spark.tables import local_frame
+
+    emb = load(spark, sf_dir, "embeddings")
+    assigned, centroids, codebook = ivf.build_ivf_pq(emb, nlist=8, m=8, k_codes=16)
+    index = committed(str(tmp_path / "pq_index"), assigned, centroids)
+    docs = load(spark, sf_dir, "documents").limit(10)
+    embedded = E.embed_documents(docs).select(
+        F.col("doc_id").alias("q_id"), F.col("embedding").alias("q_vec")
+    )
+    rows = embedded.collect()
+    # a local relation, so fetching the batch is one job with no embedding
+    qdf = local_frame(
+        spark, {"q_id": [r.q_id for r in rows], "q_vec": [r.q_vec for r in rows]},
+        embedded.schema,
+    )
+
+    def run():
+        return ivf.search_ivf_pq(index, qdf, codebook, k=2, nprobe=4).collect()
+
+    whole = run()
+    assert 10 <= len(whole) <= 20  # k=2 x 10 queries, sparse cells may under-fill
+    monkeypatch.setattr(ivf, "COLLECT_PROBE_MAX_BYTES", 1)  # one query a slice
+    # the batch's fetch, one ADC scan per slice, the re-rank's fetch
+    assert jobs_run(spark, run) == 1 + len(rows) + 1
+    assert run() == whole
+    exact = knn_join(qdf, emb.select("vec_id", "embedding"), k=2).collect()
+    got = {(r.q_id, r.vec_id) for r in whole}
+    want = {(r.q_id, r.vec_id) for r in exact}
+    assert len(got & want) / len(want) >= 0.3
 
 
 def test_build_index_effective_nlist_without_spark_job(spark, sf_dir, tmp_path):

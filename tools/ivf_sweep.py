@@ -16,6 +16,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F
 
 from coldata_spark.operators import ivf
+from coldata_spark.operators.similarity import knn_join
 from coldata_spark.session import get_spark
 from coldata_spark.tables import load
 
@@ -45,7 +46,7 @@ def main() -> None:
 
     exact = {
         (r.q_id, r.vec_id)
-        for r in ivf.search_exact(qs, emb, k=K).collect()
+        for r in knn_join(qs, emb.select("vec_id", "embedding"), k=K).collect()
     }
 
     rows = []
@@ -69,6 +70,8 @@ def main() -> None:
         f.write(
             f"# IVF_FLAT nprobe sweep ({sf_dir}, {n_vec} vectors, "
             f"nlist={NLIST}, k={K}, {N_QUERIES} queries)\n\n"
+            f"Spark master {spark.sparkContext.master} on a machine with "
+            f"{os.cpu_count()} cores; one warm run before each timed one.\n"
             f"Index build+write: {build_sec:.2f}s.  Exact brute-force is the\n"
             f"recall baseline; nprobe=nlist reproduces it by construction\n"
             f"(the reference's own operating point, config.yml:81-82).\n\n"
